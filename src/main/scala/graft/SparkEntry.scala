@@ -679,14 +679,31 @@ object SparkEntry {
       graft.operators.Multimodal.getClass, graft.operators.Similarity.getClass,
       graft.operators.TextAnalysis.getClass,
       graft.operators.TextClassifier.getClass, graft.operators.TextIndex.getClass,
-      graft.functions.Adc.getClass, graft.functions.DotProduct.getClass,
+      graft.functions.Adc.getClass, graft.functions.BandHashes.getClass,
+      graft.functions.DotProduct.getClass,
       graft.functions.Exprs.getClass, graft.functions.HashedWeightSum.getClass,
       graft.functions.JpegDims.getClass, graft.functions.LshBandBuckets.getClass,
       graft.functions.MinHashSignature.getClass,
       graft.functions.NearestCentroid.getClass,
+      graft.functions.QualityCounts.getClass,
       graft.functions.ShingleHashes.getClass, graft.functions.SimHash64.getClass,
       graft.functions.SpanSketchProbe.getClass,
-      graft.functions.SpanSketchValue.getClass)
+      graft.functions.SpanSketchValue.getClass, graft.functions.Tokens.getClass,
+      // the expression classes themselves: their eval code decides the
+      // persisted values, while `X.getClass` above is the companion `X$`
+      classOf[graft.functions.AdcTable], classOf[graft.functions.AdcTableLookup],
+      classOf[graft.functions.BandHashes], classOf[graft.functions.DotProduct],
+      classOf[graft.functions.HashedWeightSum],
+      classOf[graft.functions.HashedWeightSumQ],
+      classOf[graft.functions.JpegDims], classOf[graft.functions.LshBandBuckets],
+      classOf[graft.functions.MinHashSignature],
+      classOf[graft.functions.NearestCentroid],
+      classOf[graft.functions.QualityCounts],
+      classOf[graft.functions.ShingleHashes],
+      classOf[graft.functions.ShingleHashesAll],
+      classOf[graft.functions.SimHash64],
+      classOf[graft.functions.SpanSketchProbe],
+      classOf[graft.functions.SpanSketchValue], classOf[graft.functions.Tokens])
     val md = java.security.MessageDigest.getInstance("MD5")
     md.update(FixtureEpochSalt.getBytes("UTF-8"))
     recipeClasses.sortBy(_.getName).foreach { c =>

@@ -5,8 +5,7 @@ import java.nio.ByteBuffer
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
-import org.apache.spark.sql.catalyst.expressions.{Expression, XxHash64Function}
-import org.apache.spark.sql.catalyst.util.GenericArrayData
+import org.apache.spark.sql.catalyst.expressions.{Expression, UnsafeArrayData, XXH64, XxHash64Function}
 import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
 
 /** MinHash signature as a single custom aggregate: one `Array[Long]`
@@ -16,8 +15,13 @@ import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
   * `numHashes` independent expression trees per row).
   *
   * Hash family: `XxHash64Function.hash(value, seed = i)` for
-  * i ∈ [0, numHashes) — deterministic, seed-indexed, and computed on the
-  * raw bytes once per row (the per-seed cost is just the avalanche mix).
+  * i ∈ [0, numHashes) — deterministic and seed-indexed. Each seed hashes
+  * the whole value again: xxhash64 mixes the seed in before the input, so
+  * no per-row work is shared across seeds. The child type is resolved once
+  * per instance: a `bigint` child (the hashed shingles every production
+  * caller feeds) runs a typed loop over `XXH64.hashLong(v, i)` — the same
+  * values as the generic call, without its per-call type dispatch — and
+  * any other type keeps the generic call.
   * Signature values are internal to the LSH pipeline (candidates are
   * re-verified with exact Jaccard), so the family only needs to be a
   * consistent min-wise hash, which this is.
@@ -34,17 +38,32 @@ case class MinHashSignature(
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
   override def prettyName: String = "minhash_signature"
 
-  override def createAggregationBuffer(): Array[Long] =
-    Array.fill(numHashes)(Long.MaxValue)
+  override def createAggregationBuffer(): Array[Long] = {
+    val buf = new Array[Long](numHashes)
+    java.util.Arrays.fill(buf, Long.MaxValue)
+    buf
+  }
+
+  @transient private lazy val longChild: Boolean = child.dataType == LongType
 
   override def update(buf: Array[Long], input: InternalRow): Array[Long] = {
     val v = child.eval(input)
     if (v != null) {
       var i = 0
-      while (i < numHashes) {
-        val h = XxHash64Function.hash(v, child.dataType, i.toLong)
-        if (h < buf(i)) buf(i) = h
-        i += 1
+      if (longChild) {
+        val l = v.asInstanceOf[Long]
+        while (i < numHashes) {
+          val h = XXH64.hashLong(l, i.toLong)
+          if (h < buf(i)) buf(i) = h
+          i += 1
+        }
+      } else {
+        val dt = child.dataType
+        while (i < numHashes) {
+          val h = XxHash64Function.hash(v, dt, i.toLong)
+          if (h < buf(i)) buf(i) = h
+          i += 1
+        }
       }
     }
     buf
@@ -56,17 +75,19 @@ case class MinHashSignature(
     a
   }
 
-  override def eval(buf: Array[Long]): Any = new GenericArrayData(buf)
+  // primitive array copies: no per-element boxing
+  override def eval(buf: Array[Long]): Any = UnsafeArrayData.fromPrimitiveArray(buf)
 
   override def serialize(buf: Array[Long]): Array[Byte] = {
     val bb = ByteBuffer.allocate(buf.length * 8)
-    buf.foreach(bb.putLong)
+    bb.asLongBuffer().put(buf)
     bb.array()
   }
 
   override def deserialize(bytes: Array[Byte]): Array[Long] = {
-    val bb = ByteBuffer.wrap(bytes)
-    Array.fill(bytes.length / 8)(bb.getLong)
+    val buf = new Array[Long](bytes.length / 8)
+    ByteBuffer.wrap(bytes).asLongBuffer().get(buf)
+    buf
   }
 
   override def withNewMutableAggBufferOffset(o: Int): MinHashSignature =

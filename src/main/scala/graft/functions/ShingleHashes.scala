@@ -3,8 +3,7 @@ package graft.functions
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression, XxHash64Function}
-import org.apache.spark.sql.catalyst.util.GenericArrayData
+import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression, UnsafeArrayData}
 import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -16,12 +15,12 @@ import org.apache.spark.unsafe.types.UTF8String
   * formulation evaluates interpreted lambdas per token per gram).
   *
   * Output-set-identical to the HOF chain by construction: the same
-  * tokenizer (maximal runs of non-`\s` chars — bit-matched to
-  * `TextAnalysis.tokens` and [[SimHash64]]), grams joined by a single
-  * space, hashed with Spark's `xxhash64` (seed 42), first-occurrence
-  * distinct. A document with fewer than `k` tokens contributes its whole
-  * token list as one gram (so short exact duplicates stay detectable);
-  * blank documents contribute nothing.
+  * tokenizer ([[Tokens]] — bit-matched to `TextAnalysis.tokens`), grams
+  * joined by a single space and hashed as Spark's `xxhash64` hashes a
+  * string (its UTF-8 bytes, seed 42), first-occurrence distinct over
+  * primitive longs. A document with fewer than `k` tokens contributes its
+  * whole token list as one gram (so short exact duplicates stay
+  * detectable); blank documents contribute nothing.
   */
 case class ShingleHashes(child: Expression, k: Int)
     extends UnaryExpression with CodegenFallback {
@@ -37,49 +36,9 @@ case class ShingleHashes(child: Expression, k: Int)
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
   override def prettyName: String = "shingle_hashes"
 
-  /** Exactly Java regex `\s` (see [[SimHash64.isWs]] — shared contract). */
-  @inline private def isWs(c: Char): Boolean =
-    c == ' ' || c == '\t' || c == '\n' || c == '\u000B' || c == '\f' || c == '\r'
-
-  override protected def nullSafeEval(input: Any): Any = {
-    val text = input.asInstanceOf[UTF8String].toString
-    // tokenize: maximal non-whitespace runs (== split("\\s+") minus empties)
-    val toks = scala.collection.mutable.ArrayBuffer.empty[String]
-    var start = 0
-    val n = text.length
-    while (start < n) {
-      while (start < n && isWs(text.charAt(start))) start += 1
-      var end = start
-      while (end < n && !isWs(text.charAt(end))) end += 1
-      if (end > start) toks += text.substring(start, end)
-      start = end
-    }
-    val nTok = toks.length
-    if (nTok == 0) return new GenericArrayData(Array.emptyLongArray)
-    // grams i in 0..max(nTok-k, 0): k tokens (or the whole tail when short)
-    val seen = new java.util.LinkedHashSet[java.lang.Long]()
-    val sb = new java.lang.StringBuilder
-    var i = 0
-    val last = math.max(nTok - k, 0)
-    while (i <= last) {
-      sb.setLength(0)
-      var j = i
-      val stop = math.min(i + k, nTok)
-      while (j < stop) {
-        if (j > i) sb.append(' ')
-        sb.append(toks(j))
-        j += 1
-      }
-      seen.add(XxHash64Function.hash(
-        UTF8String.fromString(sb.toString), StringType, 42L))
-      i += 1
-    }
-    val out = new Array[Long](seen.size)
-    val it = seen.iterator()
-    var p = 0
-    while (it.hasNext) { out(p) = it.next(); p += 1 }
-    new GenericArrayData(out)
-  }
+  override protected def nullSafeEval(input: Any): Any =
+    UnsafeArrayData.fromPrimitiveArray(
+      ShingleHashes.distinctInOrder(Tokens(input.asInstanceOf[UTF8String]).gramHashes(k)))
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)
@@ -87,6 +46,35 @@ case class ShingleHashes(child: Expression, k: Int)
 
 object ShingleHashes {
   import org.apache.spark.sql.graft.Bridge
+
+  /** The distinct values of `hs` in order of first occurrence, deduplicated
+    * through an open-addressing table of primitive longs (linear probing;
+    * the values are xxhash outputs, so their low bits index it directly). */
+  private[functions] def distinctInOrder(hs: Array[Long]): Array[Long] = {
+    if (hs.length < 2) return hs
+    var cap = 4
+    while (cap < 2 * hs.length) cap <<= 1
+    val mask = cap - 1
+    val slots = new Array[Long](cap)
+    val used = new Array[Boolean](cap)
+    val out = new Array[Long](hs.length)
+    var n = 0
+    var i = 0
+    while (i < hs.length) {
+      val h = hs(i)
+      var p = (h ^ (h >>> 32)).toInt & mask
+      while (used(p) && slots(p) != h) p = (p + 1) & mask
+      if (!used(p)) {
+        used(p) = true
+        slots(p) = h
+        out(n) = h
+        n += 1
+      }
+      i += 1
+    }
+    if (n == out.length) out else java.util.Arrays.copyOf(out, n)
+  }
+
   def shingleHashes(c: Column, k: Int): Column =
     Bridge.column(ShingleHashes(Bridge.expression(c), k))
 }
@@ -115,42 +103,8 @@ case class ShingleHashesAll(child: Expression, k: Int)
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
   override def prettyName: String = "shingle_hashes_all"
 
-  @inline private def isWs(c: Char): Boolean =
-    c == ' ' || c == '\t' || c == '\n' || c == '\u000B' || c == '\f' || c == '\r'
-
-  override protected def nullSafeEval(input: Any): Any = {
-    val text = input.asInstanceOf[UTF8String].toString
-    val toks = scala.collection.mutable.ArrayBuffer.empty[String]
-    var start = 0
-    val n = text.length
-    while (start < n) {
-      while (start < n && isWs(text.charAt(start))) start += 1
-      var end = start
-      while (end < n && !isWs(text.charAt(end))) end += 1
-      if (end > start) toks += text.substring(start, end)
-      start = end
-    }
-    val nTok = toks.length
-    if (nTok == 0) return new GenericArrayData(Array.emptyLongArray)
-    val last = math.max(nTok - k, 0)
-    val out = new Array[Long](last + 1)
-    val sb = new java.lang.StringBuilder
-    var i = 0
-    while (i <= last) {
-      sb.setLength(0)
-      var j = i
-      val stop = math.min(i + k, nTok)
-      while (j < stop) {
-        if (j > i) sb.append(' ')
-        sb.append(toks(j))
-        j += 1
-      }
-      out(i) = XxHash64Function.hash(
-        UTF8String.fromString(sb.toString), StringType, 42L)
-      i += 1
-    }
-    new GenericArrayData(out)
-  }
+  override protected def nullSafeEval(input: Any): Any =
+    UnsafeArrayData.fromPrimitiveArray(Tokens(input.asInstanceOf[UTF8String]).gramHashes(k))
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)

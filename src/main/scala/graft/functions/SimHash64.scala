@@ -3,14 +3,14 @@ package graft.functions
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression, XxHash64Function}
+import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.types.{DataType, LongType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** 64-bit SimHash of a text column as a single scalar expression: tokenize
-  * on whitespace, xxhash64 each token (seed 42, identical to Spark's
-  * `xxhash64`), accumulate ±1 per bit over all token instances, pack the
-  * sign vector into one long.
+  * on whitespace ([[Tokens]]), xxhash64 each token (seed 42, identical to
+  * Spark's `xxhash64`), accumulate ±1 per bit over all token instances,
+  * pack the sign vector into one long.
   *
   * Replaces the compose-from-built-ins formulation (explode tokens →
   * groupBy doc → 64 conditional-sum aggregates → bit-pack), which costs a
@@ -28,31 +28,18 @@ case class SimHash64(child: Expression)
   override def dataType: DataType = LongType
   override def prettyName: String = "simhash64"
 
-  /** Exactly the character class of Java regex `\s` — so tokenization is
-    * bit-identical to the engine's `split(text, "\\s+")` (Character
-    * .isWhitespace would additionally split on Unicode spaces). */
-  @inline private def isWs(c: Char): Boolean =
-    c == ' ' || c == '\t' || c == '\n' || c == '\u000B' || c == '\f' || c == '\r'
-
   override protected def nullSafeEval(input: Any): Any = {
-    val text = input.asInstanceOf[UTF8String].toString
+    val toks = Tokens(input.asInstanceOf[UTF8String])
     val counts = new Array[Int](64)
-    var start = 0
-    val n = text.length
-    while (start < n) {
-      while (start < n && isWs(text.charAt(start))) start += 1
-      var end = start
-      while (end < n && !isWs(text.charAt(end))) end += 1
-      if (end > start) {
-        val h = XxHash64Function.hash(
-          UTF8String.fromString(text.substring(start, end)), StringType, 42L)
-        var i = 0
-        while (i < 64) {
-          if (((h >>> i) & 1L) == 1L) counts(i) += 1 else counts(i) -= 1
-          i += 1
-        }
+    var t = 0
+    while (t < toks.count) {
+      val h = toks.hash(t)
+      var i = 0
+      while (i < 64) {
+        if (((h >>> i) & 1L) == 1L) counts(i) += 1 else counts(i) -= 1
+        i += 1
       }
-      start = end
+      t += 1
     }
     var packed = 0L
     var i = 0

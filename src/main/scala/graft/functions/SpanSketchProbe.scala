@@ -4,9 +4,9 @@ import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression, XxHash64Function}
+import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression, XXH64}
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType, LongType}
+import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
 
 /** Count of a span-hash array's elements whose count-min-sketch estimate
   * is at least `minDocs` — the serving probe of
@@ -62,7 +62,7 @@ case class SpanSketchProbe(child: Expression,
   /** xxhash64(d) at seed 42 is row-constant; computing it per span would
     * double the hash work for a value the depth loop already fixes. */
   @transient private lazy val depthSeeds: Array[Long] =
-    Array.tabulate(depth)(d => XxHash64Function.hash(d, IntegerType, 42L))
+    Array.tabulate(depth)(d => XXH64.hashInt(d, 42L))
 
   override protected def nullSafeEval(input: Any): Any = {
     val spans = input.asInstanceOf[ArrayData]
@@ -76,8 +76,7 @@ case class SpanSketchProbe(child: Expression,
       var est = Long.MaxValue
       var d = 0
       while (d < depth && est >= minDocs) {
-        val b = java.lang.Math.floorMod(
-          XxHash64Function.hash(h, LongType, depthSeeds(d)), w).toInt
+        val b = java.lang.Math.floorMod(XXH64.hashLong(h, depthSeeds(d)), w).toInt
         val c = m(d * width + b)
         if (c < est) est = c
         d += 1

@@ -4,8 +4,8 @@ import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression, XxHash64Function}
-import org.apache.spark.sql.types.{DataType, IntegerType, LongType}
+import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression, XXH64}
+import org.apache.spark.sql.types.{DataType, LongType}
 
 /** The count-min estimate of ONE span hash — [[SpanSketchProbe]]'s
   * scalar sibling: where the probe counts an ARRAY's elements passing a
@@ -48,7 +48,7 @@ case class SpanSketchValue(child: Expression,
   override def prettyName: String = "span_sketch_value"
 
   @transient private lazy val depthSeeds: Array[Long] =
-    Array.tabulate(depth)(d => XxHash64Function.hash(d, IntegerType, 42L))
+    Array.tabulate(depth)(d => XXH64.hashInt(d, 42L))
 
   override protected def nullSafeEval(input: Any): Any = {
     val h = input.asInstanceOf[Long]
@@ -57,8 +57,7 @@ case class SpanSketchValue(child: Expression,
     var est = Long.MaxValue
     var d = 0
     while (d < depth) {
-      val b = java.lang.Math.floorMod(
-        XxHash64Function.hash(h, LongType, depthSeeds(d)), w).toInt
+      val b = java.lang.Math.floorMod(XXH64.hashLong(h, depthSeeds(d)), w).toInt
       val c = m(d * width + b)
       if (c < est) est = c
       d += 1

@@ -126,8 +126,13 @@ object Dedup {
 
   /** `(sh_id, band, band_hash)` banding of a signature frame — the ONE
     * definition shared by the self-join path ([[lshCandidatePairs]]) and
-    * the index-serving path ([[dedupAgainstIndex]]), so an index built
-    * yesterday and a batch banded today collide identically. */
+    * the index-serving path ([[dedupAgainstIndex]], the persisted
+    * `<name>_bands` tables), so an index built yesterday and a batch banded
+    * today collide identically. Band `b` hashes the signature slice
+    * `[b·r, (b+1)·r)` (r = `numHashes / bands`) with the native
+    * [[graft.functions.BandHashes]] kernel, bit-identical to
+    * `xxhash64(slice(sig, b·r + 1, r), b)` — the higher-order form it
+    * replaced — so bands written by either form still collide. */
   private[graft] def bandedSignatures(sigs: DataFrame, bands: Int,
                                       numHashes: Int): DataFrame = {
     // an empty band slice would hash identically for every doc — an
@@ -136,8 +141,7 @@ object Dedup {
       s"numHashes ($numHashes) must be a positive multiple of bands ($bands)")
     val rowsPerBand = numHashes / bands
     sigs.select(col("sh_id"),
-        posexplode(transform(sequence(lit(0), lit(bands - 1)),
-          b => xxhash64(slice(col("sig"), b * rowsPerBand + 1, lit(rowsPerBand)), b))))
+        posexplode(graft.functions.BandHashes.bandHashes(col("sig"), bands, rowsPerBand)))
       .withColumnsRenamed(Map("pos" -> "band", "col" -> "band_hash"))
   }
 

@@ -10,10 +10,11 @@ import org.apache.spark.sql.functions._
 object TextAnalysis {
 
   /** Whitespace tokens — THE tokenizer definition shared by
-    * [[Dedup.wordShingles]] and bit-matched by the native
-    * [[graft.functions.SimHash64]] expression. Blank/whitespace-only text
-    * yields an empty array (a bare `split` would yield `[""]`, crediting
-    * phantom tokens and making all blank docs mutual duplicates). */
+    * [[Dedup.wordShingles]] and bit-matched by [[graft.functions.Tokens]],
+    * the byte-level tokenizer of the native text kernels.
+    * Blank/whitespace-only text yields an empty array (a bare `split`
+    * would yield `[""]`, crediting phantom tokens and making all blank
+    * docs mutual duplicates). */
   def tokens(text: Column): Column =
     filter(split(trim(text), "\\s+"), t => length(t) > 0)
 
@@ -85,28 +86,35 @@ object TextAnalysis {
 
   /** Quality-score features: length, punctuation ratio, stopword ratio,
     * mean word length — and a [0,1] composite. Deterministic closed-form
-    * (no model), so it is oracle-checkable in plain SQL. */
+    * (no model), so it is oracle-checkable in plain SQL:
+    *  - `n_tokens` = `size(tokens(text))`;
+    *  - `punct_ratio` = ASCII `\p{Punct}` characters / `length(text)`;
+    *  - `stopword_ratio` = stopword tokens / `n_tokens`;
+    *  - `mean_word_len` = summed token length / `n_tokens` — exact over
+    *    the tokens themselves; the (len − (nTok−1))/nTok shortcut
+    *    over-credits words when tokens are separated by RUNS of whitespace.
+    *
+    * All four counts come from ONE pass of the native
+    * [[graft.functions.QualityCounts]] kernel, bit-identical to the
+    * built-in forms (`size(filter(tokens, isin))`, `aggregate(tokens, …)`,
+    * `length − length(regexp_replace)`); the columns divide them with the
+    * same types and double operations, in the same order. Null text gives
+    * null features. */
   def withQuality(df: DataFrame, textCol: String,
                   stopwords: Seq[String] = DefaultStopwords): DataFrame = {
     val t = col(textCol)
-    val toks = tokens(t)
-    val nTok = size(toks)
-    val punct = length(t) - length(regexp_replace(t, "[\\p{Punct}]", ""))
+    val counts = graft.functions.QualityCounts.qualityCounts(t, stopwords)
+    val nTok = counts.getField("n_tokens")
     df.withColumn("n_tokens", nTok)
-      .withColumn("punct_ratio", punct.cast("double") / greatest(length(t), lit(1)))
+      .withColumn("punct_ratio",
+        counts.getField("punct_chars").cast("double") / greatest(length(t), lit(1)))
       .withColumn("stopword_ratio",
-        size(filter(toks, w => w.isin(stopwords.map(lit): _*)))
-          .cast("double") / greatest(nTok, lit(1)))
-      // exact mean token length, summed over the token array itself —
-      // the (len − (nTok−1))/nTok shortcut over-credits words when tokens
-      // are separated by RUNS of whitespace (every extra separator char
-      // counts toward some word's length)
+        counts.getField("n_stopwords").cast("double") / greatest(nTok, lit(1)))
       .withColumn("mean_word_len",
-        aggregate(toks, lit(0L), (acc, w) => acc + length(w)).cast("double")
-          / greatest(nTok, lit(1)))
+        counts.getField("token_chars").cast("double") / greatest(nTok, lit(1)))
       .withColumn("quality_score",
         least(greatest(
-          lit(0.4) * least(nTok.cast("double") / 64.0, lit(1.0)) +
+          lit(0.4) * least(col("n_tokens").cast("double") / 64.0, lit(1.0)) +
             lit(0.4) * least(col("stopword_ratio") * 4.0, lit(1.0)) +
             lit(0.2) * (lit(1.0) - least(col("punct_ratio") * 5.0, lit(1.0))),
           lit(0.0)), lit(1.0)))

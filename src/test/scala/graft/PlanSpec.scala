@@ -86,6 +86,32 @@ class PlanSpec extends SparkSpec {
       .filter(col("jaccard") >= 0.8)))
   }
 
+  /** Every lambda higher-order function (`transform`, `filter`,
+    * `aggregate`, …) anywhere in an executed plan: their lambdas evaluate
+    * interpreted per element, which is why the curate hot path runs native
+    * kernels instead. */
+  private def higherOrderFunctions(p: SparkPlan) =
+    flatten(p).flatMap(_.expressions.flatMap(_.collect {
+      case h: org.apache.spark.sql.catalyst.expressions.HigherOrderFunction => h
+    }))
+
+  test("Pipeline.curate: no lambda higher-order function in the executed " +
+    "plan — shingles, band hashes and quality counts stay native") {
+    import org.apache.spark.sql.functions.{col, lit, pmod}
+    val docs = spark.read.parquet(s"$sf/documents.parquet")
+    val evalDocs = docs.filter(pmod(col("doc_id"), lit(97)) === 0)
+    val p = executed(Pipeline.curate(docs, evalDocs))
+    val hofs = higherOrderFunctions(p)
+    assert(hofs.isEmpty, s"interpreted HOFs in curate: ${hofs.map(_.prettyName)}\nplan:\n$p")
+    // curate's dedup checkpoints its shingle frame, so the plan above only
+    // scans the checkpoint: check the shingling plan on its own
+    val sh = executed(operators.Dedup.hashedWordShingles(docs, "doc_id", "text"))
+    assert(higherOrderFunctions(sh).isEmpty, s"interpreted HOFs in shingling:\n$sh")
+    // detector sanity: the Column tokenizer is a filter lambda
+    assert(higherOrderFunctions(executed(
+      docs.select(operators.TextAnalysis.tokens(col("text"))))).nonEmpty)
+  }
+
   test("q_topk: sort+limit fuse into TakeOrderedAndProject — no global sort") {
     val p = executed(SparkEntry.queries("q_topk")(spark, sf))
     assert(flatten(p).exists(

@@ -2,7 +2,7 @@ package graft
 
 import org.scalacheck.Gen
 
-import graft.operators.{Dedup, MetricTransforms}
+import graft.operators.{Dedup, MetricTransforms, TextAnalysis}
 import graft.schemas.Schemas
 import graft.sources.Readers
 
@@ -1165,6 +1165,213 @@ class PropertySpec extends SparkSpec {
         val fixed = Readers.ensureColumns(subset, Schemas.mem)
         assert(fixed.schema.fieldNames.toSeq == Schemas.mem.fieldNames.toSeq)
         assert(fixed.count() == 1)
+      }
+    }
+  }
+
+  // ---- native text and MinHash kernels ≡ the built-in forms they replaced ----
+
+  /** Random texts as raw UTF-8 bytes (`None` = null): words, stopwords,
+    * punctuation, every Java-regex `\s` separator, Unicode spaces that are
+    * NOT `\s`, non-ASCII and emoji, and malformed UTF-8 (lone lead and
+    * continuation bytes, truncated and overlong sequences, encoded
+    * surrogates). */
+  private val rawText: Gen[Option[Array[Byte]]] = {
+    def utf8(s: String) = s.getBytes(java.nio.charset.StandardCharsets.UTF_8)
+    val piece = Gen.frequency(
+      6 -> Gen.oneOf("cat", "sat", "mat", "dog", "ran", "x", "long-word").map(utf8),
+      4 -> Gen.oneOf(TextAnalysis.DefaultStopwords).map(utf8),
+      2 -> Gen.oneOf(",", "!", "...", "a.b", "(x)", "#@%", "~", "`", "\"").map(utf8),
+      6 -> Gen.oneOf(" ", "  ", "\t", "\n", "\r\n", "\u000B", "\f", " \t ").map(utf8),
+      1 -> Gen.oneOf("\u00A0", "\u2003", "\u3000").map(utf8),
+      2 -> Gen.oneOf("café", "naïve", "中文", "😀", "ünï😀x").map(utf8),
+      1 -> Gen.oneOf(Seq(0xFF), Seq(0x80), Seq(0xC3), Seq(0xE2, 0x82),
+        Seq(0xC0, 0xAF), Seq(0xED, 0xA0, 0x80), Seq(0xF0, 0x9F, 0x98))
+        .map(_.map(_.toByte).toArray))
+    val text = Gen.chooseNum(0, 40).flatMap(n => Gen.listOfN(n, piece))
+      .map(ps => Some(ps.toArray.flatten): Option[Array[Byte]])
+    Gen.frequency(1 -> Gen.const(None), 12 -> text)
+  }
+
+  private val fixedTexts: Seq[Option[Array[Byte]]] =
+    (Seq(None) ++ Seq("", " ", "   ", "\t\r\n\u000B\f", "word", "the",
+      "a\u000Bb\fc\rd", " lead trail ", "😀 😀 😀").map(t =>
+      Some(t.getBytes(java.nio.charset.StandardCharsets.UTF_8)))) :+
+      Some(Array(0xFF, 0x20, 0x61).map(_.toByte))
+
+  /** `(id, text)` with text cast from the raw bytes, so malformed UTF-8
+    * reaches the kernels unrepaired (asserted). */
+  private def textFrame(texts: Seq[Option[Array[Byte]]]) = {
+    import org.apache.spark.sql.functions.{col, hex}
+    val df = texts.zipWithIndex.map { case (b, i) => (i.toLong, b.orNull) }
+      .toDF("id", "raw").select(col("id"), col("raw").cast("string").as("text"))
+    val bytes = df.select(hex(col("text").cast("binary"))).collect().map(r => Option(r.getString(0)))
+    assert(bytes.toSeq == texts.map(_.map(_.map(b => f"$b%02X").mkString)),
+      "cast must keep the raw bytes")
+    df
+  }
+
+  test("Tokens ≡ TextAnalysis.tokens on random texts with malformed UTF-8") {
+    import org.apache.spark.sql.functions.col
+    import org.apache.spark.unsafe.types.UTF8String
+    forAll(Gen.listOfN(60, rawText)) { texts =>
+      val all = fixedTexts ++ texts
+      val want = textFrame(all).orderBy("id")
+        .select(TextAnalysis.tokens(col("text"))).collect()
+        .map(r => Option(r.getSeq[String](0)))
+      all.zip(want).foreach { case (b, w) =>
+        val got = b.map { bytes =>
+          val t = graft.functions.Tokens(UTF8String.fromBytes(bytes))
+          (0 until t.count).map(i => UTF8String.fromBytes(t.text.getBytes,
+            t.start(i), t.end(i) - t.start(i)).toString)
+        }
+        assert(got == w, s"bytes ${b.map(_.toSeq)}")
+      }
+    }
+  }
+
+  test("ShingleHashes / ShingleHashesAll / SimHash64 ≡ their built-in forms " +
+    "on random texts with malformed UTF-8") {
+    import org.apache.spark.sql.functions._
+    import graft.functions.{ShingleHashes, ShingleHashesAll, SimHash64}
+    // the higher-order form the byte-level kernels replaced: xxhash64 of
+    // each k-gram of the tokens joined by one space, short docs one gram
+    def gramsHof(t: org.apache.spark.sql.Column, k: Int) = {
+      val toks = TextAnalysis.tokens(t)
+      when(t.isNull, lit(null)).when(size(toks) === 0, array().cast("array<bigint>"))
+        .otherwise(transform(sequence(lit(0), greatest(size(toks) - k, lit(0))),
+          i => xxhash64(concat_ws(" ", slice(toks, i + 1, lit(k))))))
+    }
+    forAll(Gen.listOfN(60, rawText)) { texts =>
+      val df = textFrame(fixedTexts ++ texts)
+      for (k <- Seq(1, 2, 3, 8)) {
+        val rows = df.select(col("id"),
+          ShingleHashesAll.shingleHashesAll(col("text"), k), gramsHof(col("text"), k),
+          ShingleHashes.shingleHashes(col("text"), k), array_distinct(gramsHof(col("text"), k)))
+          .collect()
+        rows.foreach { r =>
+          assert(Option(r.getSeq[Long](1)) == Option(r.getSeq[Long](2)), s"all, k=$k, id ${r.getLong(0)}")
+          assert(Option(r.getSeq[Long](3)) == Option(r.getSeq[Long](4)), s"set, k=$k, id ${r.getLong(0)}")
+        }
+      }
+      // SimHash64: per-token xxhash64 from the Column tokenizer, signs
+      // accumulated on the driver
+      df.select(col("id"), SimHash64.simhash64(col("text")),
+          transform(TextAnalysis.tokens(col("text")), w => xxhash64(w)))
+        .collect().foreach { r =>
+          if (r.isNullAt(2)) assert(r.isNullAt(1))
+          else {
+            val hs = r.getSeq[Long](2)
+            val want = (0 until 64).foldLeft(0L) { (acc, bit) =>
+              val s = hs.map(h => if (((h >>> bit) & 1L) == 1L) 1 else -1).sum
+              if (s > 0) acc | (1L << bit) else acc
+            }
+            assert(r.getLong(1) == want, s"simhash, id ${r.getLong(0)}")
+          }
+        }
+    }
+  }
+
+  /** `withQuality` as it was before [[graft.functions.QualityCounts]]:
+    * the reference the one-pass kernel must match bit for bit. */
+  private def withQualityHof(df: org.apache.spark.sql.DataFrame, textCol: String,
+                             stopwords: Seq[String]) = {
+    import org.apache.spark.sql.functions._
+    val t = col(textCol)
+    val toks = TextAnalysis.tokens(t)
+    val nTok = size(toks)
+    val punct = length(t) - length(regexp_replace(t, "[\\p{Punct}]", ""))
+    df.withColumn("n_tokens", nTok)
+      .withColumn("punct_ratio", punct.cast("double") / greatest(length(t), lit(1)))
+      .withColumn("stopword_ratio",
+        size(filter(toks, w => w.isin(stopwords.map(lit): _*)))
+          .cast("double") / greatest(nTok, lit(1)))
+      .withColumn("mean_word_len",
+        aggregate(toks, lit(0L), (acc, w) => acc + length(w)).cast("double")
+          / greatest(nTok, lit(1)))
+      .withColumn("quality_score",
+        least(greatest(
+          lit(0.4) * least(nTok.cast("double") / 64.0, lit(1.0)) +
+            lit(0.4) * least(col("stopword_ratio") * 4.0, lit(1.0)) +
+            lit(0.2) * (lit(1.0) - least(col("punct_ratio") * 5.0, lit(1.0))),
+          lit(0.0)), lit(1.0)))
+  }
+
+  test("withQuality (QualityCounts) ≡ the built-in form bit for bit on " +
+    "random texts with malformed UTF-8, default and custom stopwords") {
+    val feats = Seq("id", "n_tokens", "punct_ratio", "stopword_ratio",
+      "mean_word_len", "quality_score")
+    forAll(Gen.listOfN(60, rawText)) { texts =>
+      val df = textFrame(fixedTexts ++ texts)
+      for (sw <- Seq(TextAnalysis.DefaultStopwords, Seq("cat", "😀", "café", "a b", ""))) {
+        val got = TextAnalysis.withQuality(df, "text", sw).select(feats.head, feats.tail: _*)
+        val want = withQualityHof(df, "text", sw).select(feats.head, feats.tail: _*)
+        assert(got.schema.map(_.dataType) == want.schema.map(_.dataType))
+        val g = got.orderBy("id").collect().toSeq
+        val w = want.orderBy("id").collect().toSeq
+        g.zip(w).foreach { case (a, b) =>
+          // raw bits: == would also accept -0.0 for 0.0
+          def bits(r: org.apache.spark.sql.Row) = r.toSeq.map {
+            case d: Double => java.lang.Double.doubleToRawLongBits(d)
+            case v => v
+          }
+          assert(bits(a) == bits(b), s"$a vs $b")
+        }
+        assert(g.length == w.length)
+      }
+    }
+  }
+
+  test("BandHashes ≡ xxhash64(slice(sig, b·r+1, r), b) — null, short, long " +
+    "and null-element signatures; bandedSignatures unchanged") {
+    import org.apache.spark.sql.functions._
+    val sigGen: Gen[Option[Seq[java.lang.Long]]] = Gen.frequency(
+      1 -> Gen.const(None),
+      8 -> Gen.chooseNum(0, 40).flatMap(n => Gen.listOfN(n, Gen.frequency(
+        12 -> Gen.chooseNum(Long.MinValue, Long.MaxValue).map(l => java.lang.Long.valueOf(l)),
+        1 -> Gen.const(null: java.lang.Long)))).map(Some(_)))
+    forAll(Gen.listOfN(40, sigGen)) { sigs =>
+      val df = sigs.zipWithIndex.map { case (s, i) => (i.toLong, s.orNull) }
+        .toDF("sh_id", "sig")
+      for ((bands, r) <- Seq((1, 1), (4, 8), (8, 4), (32, 1))) {
+        val hof = transform(sequence(lit(0), lit(bands - 1)),
+          b => xxhash64(slice(col("sig"), b * r + 1, lit(r)), b))
+        df.select(graft.functions.BandHashes.bandHashes(col("sig"), bands, r), hof)
+          .collect().foreach(row => assert(row.getSeq[Long](0) == row.getSeq[Long](1),
+            s"bands=$bands r=$r: $row"))
+        // the banded frame persisted as `<name>_bands` tables
+        val want = df.select(col("sh_id"), posexplode(hof))
+          .withColumnsRenamed(Map("pos" -> "band", "col" -> "band_hash"))
+        val got = Dedup.bandedSignatures(df, bands, bands * r)
+        assert(got.schema == want.schema)
+        assert(got.collect().toSet == want.collect().toSet)
+      }
+    }
+  }
+
+  test("MinHashSignature: the bigint fast path and the generic path ≡ " +
+    "min(xxhash64(shingle, seed i)) per seed") {
+    import org.apache.spark.sql.catalyst.expressions.{XXH64, XxHash64, XxHash64Function}
+    import org.apache.spark.sql.functions._
+    import org.apache.spark.sql.graft.Bridge
+    import org.apache.spark.sql.types.LongType
+    val numHashes = 16
+    def perSeedMins(c: String) = array((0 until numHashes).map(i =>
+      min(Bridge.column(XxHash64(Seq(Bridge.expression(col(c))), i.toLong)))): _*)
+    val gen = Gen.listOfN(80, Gen.zip(Gen.chooseNum(0L, 9L),
+      Gen.chooseNum(Long.MinValue, Long.MaxValue)))
+    forAll(gen) { rows =>
+      rows.foreach { case (_, l) =>
+        (0 until numHashes).foreach(i =>
+          assert(XXH64.hashLong(l, i.toLong) == XxHash64Function.hash(l, LongType, i.toLong)))
+      }
+      val df = rows.toDF("sh_id", "shingle")
+        .withColumn("shingle_s", col("shingle").cast("string"))
+      for (c <- Seq("shingle", "shingle_s")) {
+        val got = df.groupBy("sh_id").agg(graft.functions.MinHashSignature
+          .minhashSignature(col(c), numHashes).as("sig"), perSeedMins(c).as("ref"))
+        got.collect().foreach(r =>
+          assert(r.getSeq[Long](1) == r.getSeq[Long](2), s"$c, doc ${r.getLong(0)}"))
       }
     }
   }
