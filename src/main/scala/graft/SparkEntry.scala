@@ -674,7 +674,9 @@ object SparkEntry {
     val recipeClasses: Seq[Class[_]] = Seq(
       SparkEntry.getClass,
       graft.operators.Bpe.getClass, graft.operators.Bucketing.getClass,
-      graft.operators.Dedup.getClass, graft.operators.LanguageModel.getClass,
+      graft.operators.Dedup.getClass, graft.operators.EpochLog.getClass,
+      classOf[graft.operators.EpochLog],
+      graft.operators.LanguageModel.getClass,
       graft.operators.Materialize.getClass,
       graft.operators.Multimodal.getClass, graft.operators.Similarity.getClass,
       graft.operators.TextAnalysis.getClass,

@@ -305,26 +305,16 @@ object Dedup {
     * checkpoint), never the unmaterialized signature pipeline, same
     * contract as [[dedupAgainstIndex]].
     *
-    * Crash consistency — the EPOCH COMMIT protocol, shared with
-    * [[appendToBandedIndex]]: the three writes are not atomic as a
-    * group, so every build/append stamps its rows with a fresh
-    * `build_id` epoch and records that epoch in a tiny `<name>_meta`
-    * table written LAST. Serving filters both big tables to the epochs
-    * `_meta` lists (a pushed-down predicate — parquet row-group stats
-    * skip uncommitted files wholesale, no extra shuffle), so a crash at
-    * any point leaves either (a) orphan rows at an unlisted epoch —
-    * invisible to serving, harmlessly re-written by the retry under a
-    * new epoch — or (b) for a crashed REBUILD, a stale `_meta` whose
-    * epochs the overwritten tables no longer contain, which serving
-    * refuses loudly (empty committed probe). Nothing half-built can
-    * serve, and retries are exactly-once. */
+    * Crash consistency: the three writes are not atomic as a group, so
+    * they follow the [[EpochLog]] protocol — rows stamped with a fresh
+    * `build_id`, the `<name>_meta` commit record written LAST. */
   def writeBandedIndex(index: DataFrame, name: String,
                        buckets: Int = 256, bands: Int = 32): Unit = {
     require(buckets >= 1, s"buckets must be positive, got $buckets")
     val head = index.select(size(col("sig"))).limit(1).collect()
     require(head.nonEmpty, "writeBandedIndex: empty index")
     val numHashes = head.head.getInt(0)
-    val epoch = System.nanoTime()
+    val epoch = EpochLog.newEpoch()
     // bucket-aligned repartition before EVERY bucketed write in this
     // family (build, append, compact): the planner's implicit clustering
     // for a bucketed save is AQE-adjustable, and at larger inputs AQE
@@ -347,28 +337,8 @@ object Dedup {
       .write.mode("overwrite")
       .bucketBy(buckets, "sh_id").sortBy("sh_id")
       .saveAsTable(s"${name}_sigs")
-    // the commit record — LAST, so its epochs always have complete rows.
-    // `key` is the idempotency token of [[appendToBandedIndexIdempotent]];
-    // null for builds. Every writer emits the same (build_id, key) schema.
-    metaRow(index.sparkSession, epoch, None)
-      .write.mode("overwrite").saveAsTable(s"${name}_meta")
+    EpochLog.table(index.sparkSession, name).overwrite(epoch)
   }
-
-  private def metaRow(spark: org.apache.spark.sql.SparkSession, epoch: Long,
-                      key: Option[String]): DataFrame = {
-    import spark.implicits._
-    Seq((epoch, key)).toDF("build_id", "key")
-  }
-
-  /** Epochs the `<name>_meta` commit table lists — the serving-visible
-    * builds/appends (driver-side read of a table with one row per
-    * successful build or append; bytes, not data). Distinct: after a
-    * compaction the table holds one row per surviving idempotency key,
-    * all pointing at the one merged epoch. */
-  private def committedEpochs(spark: org.apache.spark.sql.SparkSession,
-                              name: String): Seq[Long] =
-    spark.table(s"${name}_meta").select("build_id").distinct().collect()
-      .map(_.getLong(0)).toSeq
 
   /** Bucket count of an existing bucketed table, so appends write the
     * matching layout without the caller re-supplying it. */
@@ -389,9 +359,7 @@ object Dedup {
     * appended signatures are consistent by construction — the
     * mixed-`sig_k` index [[dedupAgainstIndex]] guards against cannot be
     * built through this path. Each append lands under a fresh committed
-    * epoch (see the crash-consistency note on [[writeBandedIndex]]):
-    * bands, then sigs, then the `_meta` commit row, so a crashed append
-    * never serves partially and a retried one never double-counts.
+    * epoch ([[EpochLog]]): bands, then sigs, then the commit row.
     * Appends add one file per bucket per call; the bucketed scan unions
     * a bucket's files without an exchange, so serving stays one-sided —
     * [[compactBandedIndex]] restores ~one file per bucket when the count
@@ -403,18 +371,15 @@ object Dedup {
                           textCol: String): Unit =
     doBandedAppend(newDocs, name, idCol, textCol, key = None)
 
-  /** [[appendToBandedIndex]] keyed for AT-LEAST-ONCE callers (the dedup
-    * mirror of [[graft.operators.Similarity.appendToIvfIndexIdempotent]]):
-    * a key already committed in `_meta` no-ops and returns false; a key
-    * whose first attempt crashed left only invisible orphan rows, so the
-    * retry appends again under a fresh physical epoch — rows serve
-    * exactly once either way. Key = the foreachBatch batch id (same
-    * offset range ⇒ same input rows on replay). Keys survive
-    * [[compactBandedIndex]], re-pointed at the merged epoch. */
+  /** [[appendToBandedIndex]] keyed for AT-LEAST-ONCE callers: a key
+    * already committed no-ops and returns false; otherwise the batch
+    * lands exactly once ([[EpochLog]]'s keyed-retry story). Key = the
+    * foreachBatch batch id. */
   def appendToBandedIndexIdempotent(newDocs: DataFrame, name: String,
                                     idCol: String, textCol: String,
                                     key: String): Boolean =
-    if (bandedIndexKeyCommitted(newDocs.sparkSession, name, key)) false
+    if (EpochLog.table(newDocs.sparkSession, name)
+        .keyCommitted(key, "appendToBandedIndex", "writeBandedIndex")) false
     else { doBandedAppend(newDocs, name, idCol, textCol, Some(key)); true }
 
   /** Whether `key` is already committed in `<name>_meta` — public so a
@@ -423,27 +388,23 @@ object Dedup {
     * whose curation re-run would see the index its own first run grew)
     * can gate everything on the one delivery token, not just the append. */
   def bandedIndexKeyCommitted(spark: org.apache.spark.sql.SparkSession,
-                              name: String, key: String): Boolean = {
-    val meta = spark.table(s"${name}_meta")
-    meta.columns.contains("key") &&
-      meta.filter(col("key") === key).limit(1).collect().nonEmpty
-  }
+                              name: String, key: String): Boolean =
+    EpochLog.table(spark, name)
+      .keyCommitted(key, "bandedIndexKeyCommitted", "writeBandedIndex")
 
   private def doBandedAppend(newDocs: DataFrame, name: String, idCol: String,
                              textCol: String, key: Option[String]): Unit = {
     val spark = newDocs.sparkSession
-    val committed = committedEpochs(spark, name)
-    require(committed.nonEmpty,
-      s"appendToBandedIndex: ${name}_meta lists no committed builds - run writeBandedIndex first")
-    val head = spark.table(s"${name}_sigs")
-      .filter(col("build_id").isin(committed: _*))
+    val log = EpochLog.table(spark, name)
+    val committed = log.committed("appendToBandedIndex", "writeBandedIndex")
+    val head = log.committedRows(spark.table(s"${name}_sigs"), committed)
       .select(size(col("sig")), col("sig_k"), col("n_bands")).limit(1).collect()
     require(head.nonEmpty,
       s"appendToBandedIndex: no committed rows in ${name}_sigs (crashed rebuild?) - re-run writeBandedIndex")
     val (numHashes, shingleK, bands) =
       (head.head.getInt(0), head.head.getInt(1), head.head.getInt(2))
     val buckets = tableBuckets(spark, s"${name}_sigs")
-    val epoch = System.nanoTime()
+    val epoch = EpochLog.newEpoch()
     // signatures feed both table writes — materialize once (~1 KB/doc)
     val newSigs = eagerCheckpoint(
       buildDedupIndex(newDocs, idCol, textCol, shingleK, numHashes))
@@ -462,8 +423,7 @@ object Dedup {
       .write.mode("append")
       .bucketBy(buckets, "sh_id").sortBy("sh_id")
       .saveAsTable(s"${name}_sigs")
-    metaRow(spark, epoch, key)
-      .write.mode("append").saveAsTable(s"${name}_meta")
+    log.append(epoch, key)
   }
 
   /** DELETE docs from a [[writeBandedIndex]] layout without touching the
@@ -471,56 +431,17 @@ object Dedup {
     * [[graft.operators.Similarity.deleteFromIvfIndex]]: a removal request
     * arrives as IDS (no text needed — deletion never shingles), and at
     * scale rewriting the bucketed tables per request is the cost this
-    * avoids. The ids land as tombstone rows in a tiny `<name>_tombs`
-    * table under a fresh epoch, committed by the `_meta` append LAST —
-    * same crash discipline as appends: a crashed delete leaves only
-    * invisible orphan tombstones, retries are exactly-once. Serving
-    * anti-joins committed tombstones on the SIGNATURE side (broadcast —
-    * the bucketed tables never shuffle for the check; a tombstoned doc's
-    * band rows may still surface candidates, which then die at the
-    * signature join — correctness is exact, the residual candidate
+    * avoids. The ids land as epoch-scoped [[EpochLog]] tombstones.
+    * Serving anti-joins them on the SIGNATURE side only: a tombstoned
+    * doc's band rows may still surface candidates, which then die at the
+    * signature join — correctness is exact, and the residual candidate
     * traffic is what [[compactBandedIndex]] reclaims when it drops the
-    * band rows too). Tombstones are EPOCH-SCOPED (strictly older epochs
-    * only), so deleting a doc and later re-appending it serves the new
-    * rows with no bookkeeping at append time. Compaction makes the
-    * deletion physical and drops the tombstone table. */
+    * band rows too. */
   def deleteFromBandedIndex(ids: DataFrame, name: String,
-                            idCol: String): Unit = {
-    val spark = ids.sparkSession
-    val committed = committedEpochs(spark, name)
-    require(committed.nonEmpty,
-      s"deleteFromBandedIndex: ${name}_meta lists no committed builds - run writeBandedIndex first")
-    val epoch = System.nanoTime()
-    ids.select(col(idCol).as("sh_id")).distinct()
-      .withColumn("build_id", lit(epoch))
-      .coalesce(1)
-      .write.mode("append").saveAsTable(s"${name}_tombs")
-    metaRow(spark, epoch, None)
-      .write.mode("append").saveAsTable(s"${name}_meta")
-  }
-
-  /** Committed tombstone rows of `<name>_tombs` — `(tomb_sh_id,
-    * tomb_build_id)`, None if no deletion ever ran. Uncommitted
-    * tombstones (a crashed [[deleteFromBandedIndex]]) are invisible,
-    * same epoch discipline as data rows. */
-  private def committedTombs(spark: org.apache.spark.sql.SparkSession,
-                             name: String,
-                             committed: Seq[Long]): Option[DataFrame] =
-    if (!spark.catalog.tableExists(s"${name}_tombs")) None
-    else Some(spark.table(s"${name}_tombs")
-      .filter(col("build_id").isin(committed: _*))
-      .select(col("sh_id").as("tomb_sh_id"),
-        col("build_id").as("tomb_build_id")))
-
-  /** Drop rows a committed tombstone covers (epoch-scoped: strictly
-    * older epochs only — see [[deleteFromBandedIndex]]). */
-  private def antiTomb(df: DataFrame, tombs: Option[DataFrame]): DataFrame =
-    tombs.fold(df) { t =>
-      df.join(broadcast(t),
-        df("sh_id") === t("tomb_sh_id") &&
-          df("build_id") < t("tomb_build_id"),
-        "left_anti")
-    }
+                            idCol: String): Unit =
+    EpochLog.table(ids.sparkSession, name).tombstone(
+      ids.select(col(idCol).as("sh_id")), "deleteFromBandedIndex",
+      "writeBandedIndex")
 
   /** COMPACTION of a [[writeBandedIndex]]+[[appendToBandedIndex]] layout:
     * merge every committed epoch into ONE fresh epoch by REWRITING the
@@ -533,108 +454,53 @@ object Dedup {
     * bucket-aligned), so a serve after N ingest cycles stops listing and
     * opening N files per bucket.
     *
-    * Crash story, same epoch-commit discipline as build/append: the merged
-    * rows land as an APPEND under a fresh epoch — invisible while `_meta`
-    * still lists the old epochs — and the `_meta` OVERWRITE to exactly
-    * that one epoch is the commit point. A crash before it leaves the old
-    * epochs serving untouched (the orphan merged rows are invisible, and a
-    * retry re-merges and later GC collects them); a crash during the tiny
-    * `_meta` overwrite fails serving loudly (no committed builds), never
-    * silently. After the commit, the superseded files — snapshotted
-    * BEFORE the merge was appended, so the set is exact — are deleted as
-    * pure garbage collection: their rows are already invisible to serving,
-    * and a crash mid-delete just leaves orphans for the next compaction's
-    * snapshot to collect. Uncommitted rows from crashed appends are
-    * filtered out of the merge AND live in pre-snapshot files, so
-    * compaction doubles as the garbage collector for crashed ingests.
-    * Single-writer, like rebuild: do not compact concurrently with
-    * appends (an append committing between the snapshot and the `_meta`
-    * swap would be clobbered), and in-flight serves planned against the
-    * old file set should drain first.
+    * The swap is [[EpochLog.compact]] (snapshot → merge → recommit →
+    * GC, single-writer), which also makes it the garbage collector for
+    * crashed ingests and makes [[deleteFromBandedIndex]] physical:
+    * tombstoned rows are dropped from BOTH merged tables (serving only
+    * needed the sig side, but the band rows' residual candidate traffic
+    * goes too). In-flight serves planned against the old file set should
+    * drain first.
     *
-    * The committed rows are read PATH-based (explicit file list) rather
-    * than via the catalog: the catalog caches the table's relation, and
-    * Spark's pre-write check rejects an insert whose query reads the
-    * cached relation of its own target table; the explicit list also IS
-    * the GC snapshot, so what is read and what is deleted can never
-    * diverge. Reference analogy: the appender's read-concat-replace
-    * compaction (step-1/appender.py:215-323), minus its
-    * whole-file-in-memory bound. */
+    * The committed rows are read PATH-based (the snapshot's file list)
+    * rather than via the catalog: the catalog caches the table's
+    * relation, and Spark's pre-write check rejects an insert whose query
+    * reads the cached relation of its own target table. */
   def compactBandedIndex(spark: org.apache.spark.sql.SparkSession,
                          name: String): Unit = {
-    val committed = committedEpochs(spark, name)
-    require(committed.nonEmpty,
-      s"compactBandedIndex: ${name}_meta lists no committed builds - run writeBandedIndex first")
-    val buckets = tableBuckets(spark, s"${name}_sigs")
-    import org.apache.hadoop.fs.Path
-    def location(table: String): Path =
-      new Path(spark.sessionState.catalog
-        .getTableMetadata(spark.sessionState.sqlParser.parseTableIdentifier(table))
-        .location)
-    val fs = location(s"${name}_sigs")
-      .getFileSystem(spark.sessionState.newHadoopConf())
-    // the pre-merge data-file snapshot: exactly what the merge reads and
-    // exactly what the post-commit GC deletes
-    def dataFiles(table: String): Seq[String] =
-      fs.listStatus(location(table)).toSeq
-        .filter(s => s.isFile && !s.getPath.getName.startsWith("_") &&
-          !s.getPath.getName.startsWith("."))
-        .map(_.getPath.toString)
-    val oldBands = dataFiles(s"${name}_bands")
-    val oldSigs = dataFiles(s"${name}_sigs")
-    // BOTH tables must hold committed rows before merging: after a
-    // crashed rebuild (one table overwritten, the other not, `_meta`
-    // stale) the files that exist carry only uncommitted epochs — the
-    // merge would filter them all out, commit an EMPTY epoch as the only
-    // served one, and GC the sole copies of the data. Refuse up front,
-    // with the same remediation the serving path names.
-    def committedProbe(files: Seq[String], table: String): Unit = {
-      require(files.nonEmpty,
-        s"compactBandedIndex: $table has no data files (crashed rebuild?) - re-run writeBandedIndex")
-      require(spark.read.parquet(files: _*)
-          .filter(col("build_id").isin(committed: _*))
-          .select(lit(1)).limit(1).collect().nonEmpty,
-        s"compactBandedIndex: no committed rows in $table (crashed rebuild?) - re-run writeBandedIndex")
+    val log = EpochLog.table(spark, name)
+    log.compact("compactBandedIndex", "writeBandedIndex",
+        s"${name}_bands", s"${name}_sigs") { (committed, epoch, snapshot) =>
+      val buckets = tableBuckets(spark, s"${name}_sigs")
+      val Seq(oldBands, oldSigs) = snapshot
+      // BOTH tables must hold committed rows before merging: after a
+      // crashed rebuild (one table overwritten, the other not, `_meta`
+      // stale) the files that exist carry only uncommitted epochs — the
+      // merge would filter them all out, commit an EMPTY epoch as the only
+      // served one, and GC the sole copies of the data. Refuse up front,
+      // with the same remedy the serving path names.
+      def committedProbe(files: Seq[String], table: String): Unit = {
+        require(files.nonEmpty,
+          s"compactBandedIndex: $table has no data files (crashed rebuild?) - re-run writeBandedIndex")
+        require(log.committedRows(spark.read.parquet(files: _*), committed)
+            .select(lit(1)).limit(1).collect().nonEmpty,
+          s"compactBandedIndex: no committed rows in $table (crashed rebuild?) - re-run writeBandedIndex")
+      }
+      committedProbe(oldBands, s"${name}_bands")
+      committedProbe(oldSigs, s"${name}_sigs")
+      def mergeInto(files: Seq[String], table: String, keyCol: String): Unit =
+        log.liveRows(spark.read.parquet(files: _*), "sh_id", committed)
+          .withColumn("build_id", lit(epoch))
+          // bucket-aligned repartition (same murmur3-pmod assignment as the
+          // bucketBy below): each task holds exactly one bucket's rows, so
+          // the merged epoch lands as ~one file per bucket — the point
+          .repartition(buckets, col(keyCol))
+          .write.mode("append")
+          .bucketBy(buckets, keyCol).sortBy(keyCol)
+          .saveAsTable(table)
+      mergeInto(oldBands, s"${name}_bands", "bh")
+      mergeInto(oldSigs, s"${name}_sigs", "sh_id")
     }
-    committedProbe(oldBands, s"${name}_bands")
-    committedProbe(oldSigs, s"${name}_sigs")
-    val epoch = System.nanoTime()
-    // deleteFromBandedIndex tombstones become PHYSICAL here: tombstoned
-    // rows are dropped from BOTH merged tables (serving only needed the
-    // sig side, but the band rows' residual candidate traffic goes too),
-    // and the tombstone table is dropped after the commit — its work is
-    // done, the rows it masked no longer exist in any committed epoch
-    val tombs = committedTombs(spark, name, committed)
-    def mergeInto(files: Seq[String], table: String, keyCol: String): Unit =
-      antiTomb(spark.read.parquet(files: _*)
-          .filter(col("build_id").isin(committed: _*)), tombs)
-        .withColumn("build_id", lit(epoch))
-        // bucket-aligned repartition (same murmur3-pmod assignment as the
-        // bucketBy below): each task holds exactly one bucket's rows, so
-        // the merged epoch lands as ~one file per bucket — the point
-        .repartition(buckets, col(keyCol))
-        .write.mode("append")
-        .bucketBy(buckets, keyCol).sortBy(keyCol)
-        .saveAsTable(table)
-    mergeInto(oldBands, s"${name}_bands", "bh")
-    mergeInto(oldSigs, s"${name}_sigs", "sh_id")
-    // commit point: the merged epoch becomes the ONLY served epoch.
-    // Idempotency keys SURVIVE, re-pointed at it (same rationale as the
-    // IVF compact: a foreachBatch replay from before the compaction must
-    // still read as already-delivered)
-    val metaTbl = spark.table(s"${name}_meta")
-    val keptKeys: Seq[String] =
-      if (!metaTbl.columns.contains("key")) Seq.empty
-      else metaTbl
-        .filter(col("key").isNotNull && col("build_id").isin(committed: _*))
-        .select("key").collect().map(_.getString(0)).toSeq
-    val newMeta: Seq[(Long, Option[String])] =
-      (epoch, Option.empty[String]) +: keptKeys.map(k => (epoch, Option(k)))
-    spark.createDataFrame(newMeta).toDF("build_id", "key")
-      .write.mode("overwrite").saveAsTable(s"${name}_meta")
-    // GC — the snapshot's rows are invisible now (committed ∌ their epochs)
-    (oldBands ++ oldSigs).foreach(f => fs.delete(new Path(f), false))
-    spark.sql(s"DROP TABLE IF EXISTS ${name}_tombs")
   }
 
   /** [[dedupAgainstIndex]] served from a [[writeBandedIndex]] layout:
@@ -642,20 +508,17 @@ object Dedup {
     * signatures are read bucket-aligned, only the batch (and the small
     * candidate set) ever exchanges. Geometry (shingle width, hash count,
     * bands) comes from the tables themselves. Both tables are filtered to
-    * the epochs the `_meta` commit table lists (the [[writeBandedIndex]]
-    * crash-consistency protocol): uncommitted rows from a crashed
-    * build/append are invisible, and a crashed REBUILD — stale `_meta`
-    * over overwritten tables — fails loudly instead of serving a
-    * half-written index. */
+    * the committed epochs ([[EpochLog]]): a crashed build/append's rows
+    * are invisible, and a crashed REBUILD — stale `_meta` over
+    * overwritten tables — fails loudly instead of serving a half-written
+    * index. */
   def dedupAgainstBandedIndex(newDocs: DataFrame, name: String, idCol: String,
                               textCol: String,
                               minJaccard: Double = 0.8): DataFrame = {
     val spark = newDocs.sparkSession
-    val committed = committedEpochs(spark, name)
-    require(committed.nonEmpty,
-      s"dedupAgainstBandedIndex: ${name}_meta lists no committed builds - run writeBandedIndex")
-    val sigs = spark.table(s"${name}_sigs")
-      .filter(col("build_id").isin(committed: _*))
+    val log = EpochLog.table(spark, name)
+    val committed = log.committed("dedupAgainstBandedIndex", "writeBandedIndex")
+    val sigs = log.committedRows(spark.table(s"${name}_sigs"), committed)
     val head = sigs.select(size(col("sig")), col("sig_k"), col("n_bands"))
       .limit(1).collect()
     require(head.nonEmpty,
@@ -665,8 +528,7 @@ object Dedup {
       (head.head.getInt(0), head.head.getInt(1), head.head.getInt(2))
     // a rebuild crash BETWEEN the two overwrites leaves committed sigs but
     // no committed band rows (or vice versa) — probe, don't assume
-    val bandsCommitted = spark.table(s"${name}_bands")
-      .filter(col("build_id").isin(committed: _*))
+    val bandsCommitted = log.committedRows(spark.table(s"${name}_bands"), committed)
     require(bandsCommitted.select(lit(1)).limit(1).collect().nonEmpty,
       s"dedupAgainstBandedIndex: no committed rows in ${name}_bands " +
         "(crashed writeBandedIndex rebuild?) - re-run writeBandedIndex")
@@ -692,7 +554,7 @@ object Dedup {
     // doc's band rows may still surface candidates, but every candidate
     // must pass this signature join to be estimated, so dropping the sig
     // row is sufficient and exact
-    val sigsChecked = antiTomb(sigs, committedTombs(spark, name, committed))
+    val sigsChecked = log.withoutTombstones(sigs, "sh_id", committed)
       .select(col("sh_id").as("index_id"),
       when(size(col("sig")) =!= numHashes,
         raise_error(lit("dedupAgainstBandedIndex: ragged index signature")))
@@ -1125,10 +987,8 @@ object Dedup {
 
   /** Persist a [[buildSpanIndex]] frame in the SERVING layout: one
     * bucketed table `<name>_spans` — `(shingle, span_docs, span_n,
-    * build_id)` bucketed AND sorted by the span hash — plus the tiny
-    * `<name>_meta` epoch-commit table written LAST (the exact
-    * [[writeBandedIndex]] protocol; the two index families share the
-    * `_meta` schema and the crash story).
+    * build_id)` bucketed AND sorted by the span hash — committed through
+    * the [[EpochLog]] (the `<name>_meta` record written LAST).
     *
     * Why this exists: [[spanStatsAgainstIndex]] over a plain parquet
     * frame SHUFFLES the whole index on every call — ~2 longs per distinct
@@ -1148,7 +1008,7 @@ object Dedup {
     require(buckets >= 1, s"buckets must be positive, got $buckets")
     val head = index.select("span_n").limit(1).collect()
     require(head.nonEmpty, "writeSpanIndex: empty index")
-    val epoch = System.nanoTime()
+    val epoch = EpochLog.newEpoch()
     // bucket-aligned repartition before the bucketed write, same
     // rationale as writeBandedIndex: AQE must not split a heavy shuffle
     // partition across tasks, or each task writes its own file per
@@ -1158,8 +1018,7 @@ object Dedup {
       .write.mode("overwrite")
       .bucketBy(buckets, "shingle").sortBy("shingle")
       .saveAsTable(s"${name}_spans")
-    metaRow(index.sparkSession, epoch, None)
-      .write.mode("overwrite").saveAsTable(s"${name}_meta")
+    EpochLog.table(index.sparkSession, name).overwrite(epoch)
   }
 
   /** Incremental GROWTH of a [[writeSpanIndex]] layout: the new batch's
@@ -1173,58 +1032,49 @@ object Dedup {
     * [[compactSpanIndex]], which restores ~one file per bucket AND one
     * row per span in the same pass. Span width and bucket count ride
     * with the table, so appended rows are width-consistent by
-    * construction. Crash story = [[writeBandedIndex]]'s: spans first,
-    * `_meta` commit row last; a crashed append leaves only invisible
-    * orphan rows, a retried one never double-counts. */
+    * construction. Crash story: [[EpochLog]]'s, spans first. */
   def appendToSpanIndex(newDocs: DataFrame, name: String, idCol: String,
                         textCol: String): Unit =
     doSpanIndexAppend(newDocs, name, idCol, textCol, key = None)
 
   /** [[appendToSpanIndex]] keyed for AT-LEAST-ONCE callers (the span
-    * twin of [[appendToBandedIndexIdempotent]]): a key already committed
-    * in `<name>_meta` no-ops and returns false; a crashed first attempt
-    * left only invisible orphan rows, so the retry appends again under a
-    * fresh physical epoch — counts serve exactly once either way. Key =
-    * the foreachBatch batch id (same offset range ⇒ same input rows on
-    * replay). Keys survive [[compactSpanIndex]], re-pointed at the
-    * merged epoch. */
+    * twin of [[appendToBandedIndexIdempotent]]): a committed key no-ops
+    * and returns false; otherwise the counts land exactly once. */
   def appendToSpanIndexIdempotent(newDocs: DataFrame, name: String,
                                   idCol: String, textCol: String,
                                   key: String): Boolean =
-    if (spanIndexKeyCommitted(newDocs.sparkSession, name, key)) false
+    if (EpochLog.table(newDocs.sparkSession, name)
+        .keyCommitted(key, "appendToSpanIndex", "writeSpanIndex")) false
     else { doSpanIndexAppend(newDocs, name, idCol, textCol, Some(key)); true }
 
   /** Whether `key` is committed in `<name>_meta` — the span-index twin
-    * of [[bandedIndexKeyCommitted]] (identical `_meta` schema and
-    * protocol), public for sinks whose OTHER per-batch work must also
-    * skip on replay. */
+    * of [[bandedIndexKeyCommitted]], public for sinks whose OTHER
+    * per-batch work must also skip on replay. */
   def spanIndexKeyCommitted(spark: org.apache.spark.sql.SparkSession,
                             name: String, key: String): Boolean =
-    bandedIndexKeyCommitted(spark, name, key)
+    EpochLog.table(spark, name)
+      .keyCommitted(key, "spanIndexKeyCommitted", "writeSpanIndex")
 
   private def doSpanIndexAppend(newDocs: DataFrame, name: String,
                                 idCol: String, textCol: String,
                                 key: Option[String]): Unit = {
     val spark = newDocs.sparkSession
-    val committed = committedEpochs(spark, name)
-    require(committed.nonEmpty,
-      s"appendToSpanIndex: ${name}_meta lists no committed builds - run writeSpanIndex first")
-    val head = spark.table(s"${name}_spans")
-      .filter(col("build_id").isin(committed: _*))
+    val log = EpochLog.table(spark, name)
+    val committed = log.committed("appendToSpanIndex", "writeSpanIndex")
+    val head = log.committedRows(spark.table(s"${name}_spans"), committed)
       .select("span_n").limit(1).collect()
     require(head.nonEmpty,
       s"appendToSpanIndex: no committed rows in ${name}_spans (crashed rebuild?) - re-run writeSpanIndex")
     val n = head.head.getInt(0)
     val buckets = tableBuckets(spark, s"${name}_spans")
-    val epoch = System.nanoTime()
+    val epoch = EpochLog.newEpoch()
     buildSpanIndex(newDocs, idCol, textCol, n)
       .withColumn("build_id", lit(epoch))
       .repartition(buckets, col("shingle"))
       .write.mode("append")
       .bucketBy(buckets, "shingle").sortBy("shingle")
       .saveAsTable(s"${name}_spans")
-    metaRow(spark, epoch, key)
-      .write.mode("append").saveAsTable(s"${name}_meta")
+    log.append(epoch, key)
   }
 
   /** Merge-then-compact for a [[writeSpanIndex]] layout: re-aggregate
@@ -1234,59 +1084,33 @@ object Dedup {
     * appends a bucket holds N+1 files and up to N+1 rows per hot span;
     * serving stays correct (membership needs any row) but pays the
     * listing/open tax per file — this restores build-time economics
-    * WITHOUT re-shingling a single document. Same snapshot-merge-commit-GC
-    * shape and crash guarantees as [[compactBandedIndex]]: the merge
-    * reads an explicit file snapshot, lands as an appended epoch, the
-    * `_meta` overwrite is the commit point (idempotency keys survive,
-    * re-pointed at the merged epoch), and only then does GC delete the
-    * snapshot — a crash anywhere leaves a servable index. */
+    * WITHOUT re-shingling a single document, through the same
+    * [[EpochLog.compact]] swap as [[compactBandedIndex]] — a crash
+    * anywhere leaves a servable index. */
   def compactSpanIndex(spark: org.apache.spark.sql.SparkSession,
                        name: String): Unit = {
-    val committed = committedEpochs(spark, name)
-    require(committed.nonEmpty,
-      s"compactSpanIndex: ${name}_meta lists no committed builds - run writeSpanIndex first")
-    val buckets = tableBuckets(spark, s"${name}_spans")
-    import org.apache.hadoop.fs.Path
-    val loc = new Path(spark.sessionState.catalog
-      .getTableMetadata(spark.sessionState.sqlParser
-        .parseTableIdentifier(s"${name}_spans")).location)
-    val fs = loc.getFileSystem(spark.sessionState.newHadoopConf())
-    val oldFiles = fs.listStatus(loc).toSeq
-      .filter(s => s.isFile && !s.getPath.getName.startsWith("_") &&
-        !s.getPath.getName.startsWith("."))
-      .map(_.getPath.toString)
-    require(oldFiles.nonEmpty,
-      s"compactSpanIndex: ${name}_spans has no data files (crashed rebuild?) - re-run writeSpanIndex")
-    val snapshot = spark.read.parquet(oldFiles: _*)
-      .filter(col("build_id").isin(committed: _*))
-    // same up-front committed probe as compactBandedIndex: after a
-    // crashed rebuild (table overwritten, _meta stale) the merge would
-    // commit an EMPTY epoch and GC the sole copies of the data
-    require(snapshot.select(lit(1)).limit(1).collect().nonEmpty,
-      s"compactSpanIndex: no committed rows in ${name}_spans (crashed rebuild?) - re-run writeSpanIndex")
-    val epoch = System.nanoTime()
-    snapshot.groupBy("shingle", "span_n")
-      .agg(sum("span_docs").as("span_docs"))
-      .select(col("shingle"), col("span_docs"), col("span_n"))
-      .withColumn("build_id", lit(epoch))
-      .repartition(buckets, col("shingle"))
-      .write.mode("append")
-      .bucketBy(buckets, "shingle").sortBy("shingle")
-      .saveAsTable(s"${name}_spans")
-    // commit point: the merged epoch becomes the ONLY served epoch;
-    // idempotency keys survive, re-pointed (a foreachBatch replay from
-    // before the compaction must still read as already-delivered)
-    val metaTbl = spark.table(s"${name}_meta")
-    val keptKeys: Seq[String] =
-      if (!metaTbl.columns.contains("key")) Seq.empty
-      else metaTbl
-        .filter(col("key").isNotNull && col("build_id").isin(committed: _*))
-        .select("key").collect().map(_.getString(0)).toSeq
-    val newMeta: Seq[(Long, Option[String])] =
-      (epoch, Option.empty[String]) +: keptKeys.map(k => (epoch, Option(k)))
-    spark.createDataFrame(newMeta).toDF("build_id", "key")
-      .write.mode("overwrite").saveAsTable(s"${name}_meta")
-    oldFiles.foreach(f => fs.delete(new Path(f), false))
+    val log = EpochLog.table(spark, name)
+    log.compact("compactSpanIndex", "writeSpanIndex", s"${name}_spans") {
+        (committed, epoch, snapshot) =>
+      val buckets = tableBuckets(spark, s"${name}_spans")
+      val oldFiles = snapshot.head
+      require(oldFiles.nonEmpty,
+        s"compactSpanIndex: ${name}_spans has no data files (crashed rebuild?) - re-run writeSpanIndex")
+      val rows = log.committedRows(spark.read.parquet(oldFiles: _*), committed)
+      // same up-front committed probe as compactBandedIndex: after a
+      // crashed rebuild (table overwritten, _meta stale) the merge would
+      // commit an EMPTY epoch and GC the sole copies of the data
+      require(rows.select(lit(1)).limit(1).collect().nonEmpty,
+        s"compactSpanIndex: no committed rows in ${name}_spans (crashed rebuild?) - re-run writeSpanIndex")
+      rows.groupBy("shingle", "span_n")
+        .agg(sum("span_docs").as("span_docs"))
+        .select(col("shingle"), col("span_docs"), col("span_n"))
+        .withColumn("build_id", lit(epoch))
+        .repartition(buckets, col("shingle"))
+        .write.mode("append")
+        .bucketBy(buckets, "shingle").sortBy("shingle")
+        .saveAsTable(s"${name}_spans")
+    }
   }
 
   /** [[spanStatsAgainstIndex]] served from a [[writeSpanIndex]] layout:
@@ -1296,18 +1120,16 @@ object Dedup {
     * on the bucketing column (no exchange: the aggregate keys equal the
     * bucket keys), which also collapses the one-row-per-epoch
     * multiplicity appends leave behind — a span appended in three cycles
-    * must still count as ONE indexed span. Both reads are filtered to
-    * the epochs `_meta` lists; a crashed rebuild fails loudly instead of
-    * serving a half-written index. Width rides with the table
+    * must still count as ONE indexed span. Reads are filtered to the
+    * committed epochs ([[EpochLog]]); a crashed rebuild fails loudly
+    * instead of serving a half-written index. Width rides with the table
     * (uniform by construction through this family's writers). */
   def spanStatsAgainstBucketedIndex(newDocs: DataFrame, name: String,
                                     idCol: String, textCol: String): DataFrame = {
     val spark = newDocs.sparkSession
-    val committed = committedEpochs(spark, name)
-    require(committed.nonEmpty,
-      s"spanStatsAgainstBucketedIndex: ${name}_meta lists no committed builds - run writeSpanIndex")
-    val ix = spark.table(s"${name}_spans")
-      .filter(col("build_id").isin(committed: _*))
+    val log = EpochLog.table(spark, name)
+    val committed = log.committed("spanStatsAgainstBucketedIndex", "writeSpanIndex")
+    val ix = log.committedRows(spark.table(s"${name}_spans"), committed)
     val head = ix.select("span_n").limit(1).collect()
     require(head.nonEmpty,
       s"spanStatsAgainstBucketedIndex: no committed rows in ${name}_spans " +
@@ -1952,10 +1774,9 @@ object Dedup {
   // from the banded layout. The signature being one long (vs the MinHash
   // 128-int array) only simplifies the machinery: the banding is
   // [[simhashBandJoin]]'s pigeonhole chunking, the verify is `bit_count`,
-  // and the epoch-commit / tombstone / compaction protocol carries from
-  // the MinHash layout VERBATIM (same `_bands`/`_sigs`/`_meta`/`_tombs`
-  // tables, same bucket keys), so the crash-consistency story is one
-  // story, not two. Reference anchor: the incremental-append requirement
+  // and the [[EpochLog]] protocol carries from the MinHash layout
+  // VERBATIM (same `_bands`/`_sigs` tables and bucket keys, same log), so
+  // the crash-consistency story is one story, not two. Reference anchor: the incremental-append requirement
   // (step-1/appender.py:215-323) extended to the binary-column model.
 
   /** `(bh, sh_id)` banding of a `(sh_id, simhash)` frame for the
@@ -1992,10 +1813,9 @@ object Dedup {
     * fingerprint, text simhash alike): `<name>_bands` = the pre-banded
     * collision rows bucketed AND sorted by `bh`, `<name>_sigs` = the
     * hashes themselves bucketed by `sh_id` with the band count riding as
-    * `n_bands` (geometry-with-the-data, the `sig_k` rule), `<name>_meta`
-    * = the epoch commit table written LAST. Crash story, append/delete/
-    * compaction protocol, and the bucket-aligned-repartition rationale
-    * are the [[writeBandedIndex]] ones verbatim. Null hashes are
+    * `n_bands` (geometry-with-the-data, the `sig_k` rule), committed
+    * through the [[EpochLog]]. The bucket-aligned-repartition rationale
+    * is the [[writeBandedIndex]] one verbatim. Null hashes are
     * excluded (an unhashable asset cannot be a candidate); `hashes` is
     * materialized internally, so an expensive upstream (a decode pass)
     * runs once. */
@@ -2003,7 +1823,7 @@ object Dedup {
                      buckets: Int = 256, bands: Int = MmBands): Unit = {
     require(buckets >= 1, s"buckets must be positive, got $buckets")
     val clean = cleanHashes(hashes)
-    val epoch = System.nanoTime()
+    val epoch = EpochLog.newEpoch()
     hashBandRows(clean, bands)
       .withColumn("build_id", lit(epoch))
       .repartition(buckets, col("bh"))
@@ -2016,8 +1836,7 @@ object Dedup {
       .write.mode("overwrite")
       .bucketBy(buckets, "sh_id").sortBy("sh_id")
       .saveAsTable(s"${name}_sigs")
-    metaRow(hashes.sparkSession, epoch, None)
-      .write.mode("overwrite").saveAsTable(s"${name}_meta")
+    EpochLog.table(hashes.sparkSession, name).overwrite(epoch)
   }
 
   /** Incremental GROWTH of a [[writeHashIndex]] layout — the ingest
@@ -2030,28 +1849,26 @@ object Dedup {
     doHashAppend(newHashes, name, key = None)
 
   /** [[appendToHashIndex]] keyed for AT-LEAST-ONCE callers — the
-    * multimodal mirror of [[appendToBandedIndexIdempotent]], same `_meta`
-    * key protocol (replays no-op and return false; keys survive
-    * compaction re-pointed at the merged epoch). */
+    * multimodal mirror of [[appendToBandedIndexIdempotent]] (replays
+    * no-op and return false). */
   def appendToHashIndexIdempotent(newHashes: DataFrame, name: String,
                                   key: String): Boolean =
-    if (bandedIndexKeyCommitted(newHashes.sparkSession, name, key)) false
+    if (EpochLog.table(newHashes.sparkSession, name)
+        .keyCommitted(key, "appendToHashIndex", "writeHashIndex")) false
     else { doHashAppend(newHashes, name, Some(key)); true }
 
   private def doHashAppend(newHashes: DataFrame, name: String,
                            key: Option[String]): Unit = {
     val spark = newHashes.sparkSession
-    val committed = committedEpochs(spark, name)
-    require(committed.nonEmpty,
-      s"appendToHashIndex: ${name}_meta lists no committed builds - run writeHashIndex first")
-    val head = spark.table(s"${name}_sigs")
-      .filter(col("build_id").isin(committed: _*))
+    val log = EpochLog.table(spark, name)
+    val committed = log.committed("appendToHashIndex", "writeHashIndex")
+    val head = log.committedRows(spark.table(s"${name}_sigs"), committed)
       .select(col("n_bands")).limit(1).collect()
     require(head.nonEmpty,
       s"appendToHashIndex: no committed rows in ${name}_sigs (crashed rebuild?) - re-run writeHashIndex")
     val bands = head.head.getInt(0)
     val buckets = tableBuckets(spark, s"${name}_sigs")
-    val epoch = System.nanoTime()
+    val epoch = EpochLog.newEpoch()
     val clean = cleanHashes(newHashes)
     hashBandRows(clean, bands)
       .withColumn("build_id", lit(epoch))
@@ -2065,23 +1882,19 @@ object Dedup {
       .write.mode("append")
       .bucketBy(buckets, "sh_id").sortBy("sh_id")
       .saveAsTable(s"${name}_sigs")
-    metaRow(spark, epoch, key)
-      .write.mode("append").saveAsTable(s"${name}_meta")
+    log.append(epoch, key)
   }
 
-  /** DELETE assets from a [[writeHashIndex]] layout — the tombstone
-    * protocol of [[deleteFromBandedIndex]] operates on ids and the
-    * shared `_tombs`/`_meta` tables only (deletion never hashes), so the
-    * same operation serves both layout families; see that method for
-    * the epoch-scoping and crash story. */
+  /** DELETE assets from a [[writeHashIndex]] layout — deletion never
+    * hashes, it only writes [[EpochLog]] tombstones by id, so
+    * [[deleteFromBandedIndex]] serves both layout families. */
   def deleteFromHashIndex(ids: DataFrame, name: String,
                           idCol: String): Unit =
     deleteFromBandedIndex(ids, name, idCol)
 
   /** COMPACTION of a [[writeHashIndex]] layout — [[compactBandedIndex]]
     * carries verbatim: identical table names and bucket keys (`bh`,
-    * `sh_id`), schema-agnostic merge, same epoch swap / key re-point /
-    * tombstone-physicalization / GC. */
+    * `sh_id`), schema-agnostic merge, same [[EpochLog.compact]] swap. */
   def compactHashIndex(spark: org.apache.spark.sql.SparkSession,
                        name: String): Unit =
     compactBandedIndex(spark, name)
@@ -2099,11 +1912,9 @@ object Dedup {
   def pairsAgainstHashIndex(newHashes: DataFrame, name: String,
                             maxHamming: Int = MmMaxHamming): DataFrame = {
     val spark = newHashes.sparkSession
-    val committed = committedEpochs(spark, name)
-    require(committed.nonEmpty,
-      s"pairsAgainstHashIndex: ${name}_meta lists no committed builds - run writeHashIndex")
-    val sigs = spark.table(s"${name}_sigs")
-      .filter(col("build_id").isin(committed: _*))
+    val log = EpochLog.table(spark, name)
+    val committed = log.committed("pairsAgainstHashIndex", "writeHashIndex")
+    val sigs = log.committedRows(spark.table(s"${name}_sigs"), committed)
     val head = sigs.select(col("n_bands")).limit(1).collect()
     require(head.nonEmpty,
       s"pairsAgainstHashIndex: no committed rows in ${name}_sigs " +
@@ -2111,8 +1922,7 @@ object Dedup {
     val bands = head.head.getInt(0)
     require(maxHamming <= bands - 1,
       s"$bands-band pigeonhole guarantees recall only for distance <= ${bands - 1}")
-    val bandsCommitted = spark.table(s"${name}_bands")
-      .filter(col("build_id").isin(committed: _*))
+    val bandsCommitted = log.committedRows(spark.table(s"${name}_bands"), committed)
     require(bandsCommitted.select(lit(1)).limit(1).collect().nonEmpty,
       s"pairsAgainstHashIndex: no committed rows in ${name}_bands " +
         "(crashed writeHashIndex rebuild?) - re-run writeHashIndex")
@@ -2128,7 +1938,7 @@ object Dedup {
     // tombstoned assets anti-joined on the signature side — their band
     // rows may still surface candidates, which die here; compaction
     // reclaims the residual candidate traffic
-    val sigsChecked = antiTomb(sigs, committedTombs(spark, name, committed))
+    val sigsChecked = log.withoutTombstones(sigs, "sh_id", committed)
       .select(col("sh_id").as("index_id"), col("simhash").as("sim_i"))
     cands
       .join(newClean.select(col("sh_id").as("new_id"),

@@ -1217,7 +1217,7 @@ object Similarity {
     * ROTATED space → residual-encode with rotated-space codebooks →
     * persist partitioned by cell with ALL THREE quantizers riding —
     * `_rotation` + `_centroids` + `_pq_codebooks`, each under its own
-    * `_SUCCESS`, the `_epochs` commit table written LAST. Serving
+    * `_SUCCESS`, the [[EpochLog]] record written LAST. Serving
     * ([[serveOpqIndex]]) derives everything from the path, so the
     * rotated-codes-served-unrotated mismatch class — silently garbage
     * distances — is unconstructable through this API (and
@@ -1234,7 +1234,7 @@ object Similarity {
       s"rotation must be ${cb.dims}x${cb.dims} to match the codebooks")
     require(checkCentroids(centroids) == cb.dims,
       s"centroid dims ${centroids.head.length} != codebook dims ${cb.dims}")
-    val epoch = System.nanoTime()
+    val epoch = EpochLog.newEpoch()
     val rotated = corpus
       .withColumn("__gv", guardedVec(embCol, cb.dims, "write_learned_opq_index"))
       .select(col(idCol), rotateExpr(col("__gv"), rotation).as("__rotv"))
@@ -1254,9 +1254,7 @@ object Similarity {
     rotation.zipWithIndex.map { case (r, i) => (i, r.toSeq) }.toSeq
       .toDF("i", "rowv").coalesce(1)
       .write.mode("overwrite").parquet(s"$path/_rotation")
-    Seq((epoch, Option.empty[String])).toDF("build_id", "key")
-      .coalesce(1)
-      .write.mode("overwrite").parquet(s"$path/_epochs")
+    EpochLog.directory(spark, path).overwrite(epoch)
   }
 
   /** All three riding quantizers of a [[writeLearnedOpqIndex]] path —
@@ -1266,7 +1264,7 @@ object Similarity {
   def loadOpqQuantizers(spark: org.apache.spark.sql.SparkSession,
                         path: String)
       : (Array[Array[Double]], Array[Array[Double]], PqCodebooks) = {
-    requireCommitMarker(spark, s"$path/_rotation", "load_opq_quantizers",
+    EpochLog.requireMarker(spark, s"$path/_rotation", "load_opq_quantizers",
       "no committed rotation at this path - a plain (unrotated) PQ " +
         "layout is served by servePqIndex; an OPQ layout is built by " +
         "writeLearnedOpqIndex")
@@ -1298,8 +1296,8 @@ object Similarity {
                     candidateFactor: Int = 4): DataFrame = {
     val spark = queries.sparkSession
     val (rot, cents, cb) = loadOpqQuantizers(spark, indexPath)
-    val committed = committedIvfEpochs(spark, indexPath, "serve_opq_index",
-      rebuilder = "writeLearnedOpqIndex")
+    val log = EpochLog.directory(spark, indexPath)
+    val committed = log.committed("serve_opq_index", "writeLearnedOpqIndex")
     val rotatedQ = queries
       .withColumn("__gv", guardedVec(embCol, cb.dims, "serve_opq_index"))
       .withColumn("__rotv", rotateExpr(col("__gv"), rot))
@@ -1308,11 +1306,8 @@ object Similarity {
       withProbeLabels(rotatedQ, "__rotv", cents, nprobe))
     val cells = probed.select(col("coarse")).distinct().collect().map(_.get(0))
     require(cells.nonEmpty, "serveOpqIndex: empty query batch")
-    val index = antiJoinTombstones(
-      spark.read.parquet(indexPath)
-        .filter(col("coarse").isin(cells.toSeq: _*))
-        .filter(col("build_id").isin(committed: _*)),
-      committedTombstones(spark, indexPath, committed), idCol)
+    val index = log.liveRows(spark.read.parquet(indexPath)
+      .filter(col("coarse").isin(cells.toSeq: _*)), idCol, committed)
     opqResidualServe(index, corpus, probed, idCol, embCol, cents, cb, k,
       candidateFactor)
   }
@@ -1366,31 +1361,23 @@ object Similarity {
     doOpqAppend(newRows, indexPath, idCol, embCol, key = None)
 
   /** [[appendToIvfIndexIdempotent]] for the learned-OPQ composition:
-    * the SAME key-commit/replay-no-op protocol on the same `_epochs.key`
-    * column — an at-least-once caller (`foreachBatch` after a restart)
-    * re-delivering a batch id reads it as already-committed and no-ops
-    * instead of double-indexing the rows; a key whose first attempt
-    * crashed pre-commit left only invisible orphans, so the retry lands
-    * the batch under a fresh physical epoch. Returns false on the
-    * no-op path. */
+    * the same [[EpochLog]] keyed-retry protocol — a committed key no-ops
+    * and returns false, a crashed attempt's retry lands exactly once. */
   def appendToOpqIndexIdempotent(newRows: DataFrame, indexPath: String,
                                  idCol: String, embCol: String,
-                                 key: String): Boolean = {
-    val spark = newRows.sparkSession
-    val done = spark.read.parquet(s"$indexPath/_epochs")
-    if (done.columns.contains("key") &&
-        done.filter(col("key") === key).limit(1).collect().nonEmpty) false
+                                 key: String): Boolean =
+    if (EpochLog.directory(newRows.sparkSession, indexPath)
+        .keyCommitted(key, "append_to_opq_index", "writeLearnedOpqIndex")) false
     else { doOpqAppend(newRows, indexPath, idCol, embCol, Some(key)); true }
-  }
 
   private def doOpqAppend(newRows: DataFrame, indexPath: String,
                           idCol: String, embCol: String,
                           key: Option[String]): Unit = {
     val spark = newRows.sparkSession
     val (rot, cents, cb) = loadOpqQuantizers(spark, indexPath)
-    committedIvfEpochs(spark, indexPath, "append_to_opq_index",
-      rebuilder = "writeLearnedOpqIndex")
-    val epoch = System.nanoTime()
+    val log = EpochLog.directory(spark, indexPath)
+    log.committed("append_to_opq_index", "writeLearnedOpqIndex")
+    val epoch = EpochLog.newEpoch()
     val rotated = newRows
       .withColumn("__gv", guardedVec(embCol, cb.dims, "append_to_opq_index"))
       .select(col(idCol), rotateExpr(col("__gv"), rot).as("__rotv"))
@@ -1398,10 +1385,7 @@ object Similarity {
       .withColumn("build_id", lit(epoch))
       .repartition(col("coarse"))
       .write.mode("append").partitionBy("coarse").parquet(indexPath)
-    import spark.implicits._
-    Seq((epoch, key)).toDF("build_id", "key")
-      .coalesce(1)
-      .write.mode("append").parquet(s"$indexPath/_epochs")
+    log.append(epoch, key)
   }
 
   /** See [[appendToOpqIndex]]. */
@@ -1423,8 +1407,8 @@ object Similarity {
     * ([[buildPqIndexResidual]]), written partitioned by the coarse cell,
     * and BOTH quantizers ride with the index — `_centroids` (the coarse
     * matrix) and `_pq_codebooks` (the per-subspace residual codebooks),
-    * each under its own `_SUCCESS`, with the `_epochs` commit table
-    * written LAST. Serving ([[servePqIndex]]) derives everything from
+    * each under its own `_SUCCESS`, with the [[EpochLog]] record written
+    * LAST. Serving ([[servePqIndex]]) derives everything from
     * the path, so the quantizer-mismatch class — codes decoded against
     * codebooks they were not built from, which produces silently
     * garbage distances — is unconstructable through this API. A crash
@@ -1438,7 +1422,7 @@ object Similarity {
                           cb: PqCodebooks): Unit = {
     require(checkCentroids(centroids) == cb.dims,
       s"centroid dims ${centroids.head.length} != codebook dims ${cb.dims}")
-    val epoch = System.nanoTime()
+    val epoch = EpochLog.newEpoch()
     writeIvfIndex(
       buildPqIndexResidual(corpus, idCol, embCol, centroids, cb)
         .withColumn("build_id", lit(epoch)),
@@ -1454,9 +1438,7 @@ object Similarity {
       .toDF("j", "c", "centroid")
       .coalesce(1)
       .write.mode("overwrite").parquet(s"$path/_pq_codebooks")
-    Seq((epoch, Option.empty[String])).toDF("build_id", "key")
-      .coalesce(1)
-      .write.mode("overwrite").parquet(s"$path/_epochs")
+    EpochLog.directory(spark, path).overwrite(epoch)
   }
 
   /** Both riding quantizers of a [[writeLearnedPqIndex]] path. Refuses
@@ -1467,9 +1449,7 @@ object Similarity {
     // an OPQ layout's codes live in the ROTATED space: serving them
     // through the unrotated path would compute silently-garbage ADC
     // distances — the quantizer-mismatch class this family forbids
-    val rotMarker = new org.apache.hadoop.fs.Path(s"$path/_rotation/_SUCCESS")
-    require(!rotMarker.getFileSystem(spark.sessionState.newHadoopConf())
-        .exists(rotMarker),
+    require(!EpochLog.hasMarker(spark, s"$path/_rotation"),
       s"load_pq_quantizers: $path carries a committed _rotation - this is " +
         "an OPQ layout (writeLearnedOpqIndex); serve it with serveOpqIndex")
     loadPqQuantizersAnyLayout(spark, path)
@@ -1480,12 +1460,12 @@ object Similarity {
   private def loadPqQuantizersAnyLayout(
       spark: org.apache.spark.sql.SparkSession,
       path: String): (Array[Array[Double]], PqCodebooks) = {
-    requireCommitMarker(spark, path, "load_pq_quantizers",
+    EpochLog.requireMarker(spark, path, "load_pq_quantizers",
       "re-run writeLearnedPqIndex before serving")
-    requireCommitMarker(spark, s"$path/_centroids", "load_pq_quantizers",
+    EpochLog.requireMarker(spark, s"$path/_centroids", "load_pq_quantizers",
       "the index data committed but its coarse quantizer did not - " +
         "re-run writeLearnedPqIndex")
-    requireCommitMarker(spark, s"$path/_pq_codebooks", "load_pq_quantizers",
+    EpochLog.requireMarker(spark, s"$path/_pq_codebooks", "load_pq_quantizers",
       "the index data committed but its residual codebooks did not - " +
         "re-run writeLearnedPqIndex")
     val cents = spark.read.parquet(s"$path/_centroids")
@@ -1507,7 +1487,7 @@ object Similarity {
     * nearest cells, the probed cells are partition-pruned into the
     * index read (only their files are listed and scanned — exact, not a
     * recall trade: the ADC join is on the cell), rows filter to the
-    * committed `_epochs` (a crashed [[appendToPqIndex]]'s orphans are
+    * committed epochs (a crashed [[appendToPqIndex]]'s orphans are
     * invisible), the per-cell residual ADC shortlist runs on the code
     * payload, and the shortlist re-scores exact against `corpus`'s
     * full-precision vectors. The whole production IVF-PQ serving story
@@ -1527,8 +1507,8 @@ object Similarity {
                    candidateFactor: Int = 4): DataFrame = {
     val spark = queries.sparkSession
     val (cents, cb) = loadPqQuantizers(spark, indexPath)
-    val committed = committedIvfEpochs(spark, indexPath, "serve_pq_index",
-      rebuilder = "writeLearnedPqIndex")
+    val log = EpochLog.directory(spark, indexPath)
+    val committed = log.committed("serve_pq_index", "writeLearnedPqIndex")
     // the probed frame is read twice (cells probe + serve); materialize
     // so the k·dims labeling runs once — the ivfTopKQuantizedPruned
     // rationale
@@ -1536,11 +1516,8 @@ object Similarity {
       withProbeLabels(queries, embCol, cents, nprobe))
     val cells = probed.select(col("coarse")).distinct().collect().map(_.get(0))
     require(cells.nonEmpty, "servePqIndex: empty query batch")
-    val index = antiJoinTombstones(
-      spark.read.parquet(indexPath)
-        .filter(col("coarse").isin(cells.toSeq: _*))
-        .filter(col("build_id").isin(committed: _*)),
-      committedTombstones(spark, indexPath, committed), idCol)
+    val index = log.liveRows(spark.read.parquet(indexPath)
+      .filter(col("coarse").isin(cells.toSeq: _*)), idCol, committed)
     pqResidualServe(index, corpus, probed, idCol, embCol, cents, cb, k,
       candidateFactor)
   }
@@ -1571,10 +1548,8 @@ object Similarity {
   /** Incremental growth of a [[writeLearnedPqIndex]] layout: encode the
     * new vectors with the index's OWN riding quantizers and append them
     * into the per-cell partitions under a fresh committed epoch — the
-    * [[appendToIvfIndex]] contract, residual-PQ payload. Data files land
-    * first, the `_epochs` append is the commit point: a crash before it
-    * leaves orphan rows at an unlisted epoch (invisible to
-    * [[servePqIndex]]) and a retry re-appends exactly-once. `newRows`
+    * [[appendToIvfIndex]] contract, residual-PQ payload, committed through
+    * the [[EpochLog]]. `newRows`
     * must be NEW ids (the [[appendToIvfIndex]] precondition). Appended
     * rows are consistent with the served layout by construction — codes
     * come from the committed codebooks, labels from the committed
@@ -1583,17 +1558,14 @@ object Similarity {
                       embCol: String): Unit = {
     val spark = newRows.sparkSession
     val (cents, cb) = loadPqQuantizers(spark, indexPath)
-    committedIvfEpochs(spark, indexPath, "append_to_pq_index",
-      rebuilder = "writeLearnedPqIndex")
-    val epoch = System.nanoTime()
+    val log = EpochLog.directory(spark, indexPath)
+    log.committed("append_to_pq_index", "writeLearnedPqIndex")
+    val epoch = EpochLog.newEpoch()
     buildPqIndexResidual(newRows, idCol, embCol, cents, cb)
       .withColumn("build_id", lit(epoch))
       .repartition(col("coarse"))
       .write.mode("append").partitionBy("coarse").parquet(indexPath)
-    import spark.implicits._
-    Seq((epoch, Option.empty[String])).toDF("build_id", "key")
-      .coalesce(1)
-      .write.mode("append").parquet(s"$indexPath/_epochs")
+    log.append(epoch)
   }
 
   // Asymmetric squared-L2 distance is served TABLE-DRIVEN (Jégou 2011
@@ -1797,7 +1769,7 @@ object Similarity {
                                          indexPrep: Option[DataFrame => DataFrame])
       : DataFrame = {
     val spark = queries.sparkSession
-    requireCommitMarker(spark, indexPath, "ivf_top_k_quantized_pruned",
+    EpochLog.requireMarker(spark, indexPath, "ivf_top_k_quantized_pruned",
       "re-run writeIvfIndex before serving")
     // the query frame is read THREE times per serve (cells probe, stage-1
     // quantization, exact re-score) and a withProbeLabels frame carries
@@ -1876,16 +1848,6 @@ object Similarity {
     * and whether it crossed the tolerance and triggered a rebuild. */
   final case class IvfRefresh(drift: Double, rebuilt: Boolean)
 
-  private def requireCommitMarker(spark: org.apache.spark.sql.SparkSession,
-                                  dir: String, op: String,
-                                  remedy: String): Unit = {
-    val marker = new org.apache.hadoop.fs.Path(dir, "_SUCCESS")
-    require(marker.getFileSystem(spark.sessionState.newHadoopConf())
-        .exists(marker),
-      s"$op: no _SUCCESS commit marker at $dir - the write did not " +
-        s"complete (crashed overwrite?); $remedy")
-  }
-
   /** [[writeIvfIndex]] for the LEARNED quantizer, with the centroid matrix
     * riding WITH the index: the corpus is labeled by its nearest centroid,
     * int8-quantized, written partitioned by the `coarse` cell, and the
@@ -1898,7 +1860,7 @@ object Similarity {
     * unconstructable through this API. Callers thread nothing.
     *
     * Commit order is data first (the root `_SUCCESS`), then `_centroids`
-    * (its own `_SUCCESS`), then the `_epochs` commit table LAST — and
+    * (its own `_SUCCESS`), then the [[EpochLog]] record LAST — and
     * loading requires ALL the markers, so a crash between the writes
     * refuses loudly instead of serving an index whose quantizer or commit
     * record is missing or half-written. A crashed overwrite of a
@@ -1907,20 +1869,15 @@ object Similarity {
     * wrong; deployments that need the old index live during a rebuild
     * write to a fresh path and swap a pointer.
     *
-    * Epoch protocol (shared with [[appendToIvfIndex]] /
-    * [[compactIvfIndex]], mirroring the banded dedup index): every row
-    * carries the `build_id` of the build/append that wrote it, and
-    * `_epochs` (underscore-prefixed — invisible to the data read, like
-    * `_centroids`) lists the COMMITTED epochs. The learned serving path
-    * filters to that list, so rows from a crashed append are invisible
-    * and a retry is exactly-once. The filter is a pushed-down predicate
-    * over a per-file-constant column — parquet row-group stats skip
-    * uncommitted files wholesale, no extra shuffle. */
+    * Epoch protocol: every row carries the `build_id` of the
+    * build/append that wrote it, and the directory [[EpochLog]] lists
+    * the committed ones (shared with [[appendToIvfIndex]] /
+    * [[compactIvfIndex]]). */
   def writeLearnedIvfIndex(corpus: DataFrame, idCol: String, embCol: String,
                            path: String,
                            centroids: Array[Array[Double]]): Unit = {
     checkCentroids(centroids)
-    val epoch = System.nanoTime()
+    val epoch = EpochLog.newEpoch()
     writeIvfIndex(
       buildQuantizedIndex(withCoarseLabel(corpus, embCol, centroids),
         idCol, embCol, "coarse")
@@ -1932,35 +1889,8 @@ object Similarity {
       .toDF("cid", "centroid")
       .coalesce(1)
       .write.mode("overwrite").parquet(s"$path/_centroids")
-    // the commit record — LAST, so its epochs always have complete rows
-    // and a complete quantizer beside them. `key` is the idempotency
-    // token of [[appendToIvfIndexIdempotent]]; null for builds. Every
-    // writer emits the same (build_id, key) schema so a mixed-file read
-    // of _epochs never drops the column.
-    Seq((epoch, Option.empty[String])).toDF("build_id", "key")
-      .coalesce(1)
-      .write.mode("overwrite").parquet(s"$path/_epochs")
-  }
-
-  /** Epochs the `_epochs` commit table lists — the serving-visible
-    * builds/appends of a [[writeLearnedIvfIndex]] path (driver-side read
-    * of one row per successful build/append; bytes, not data). Refuses a
-    * marker-less or empty commit table loudly: that is a crashed rebuild
-    * (or a pre-epoch layout), not an empty index. */
-  private def committedIvfEpochs(spark: org.apache.spark.sql.SparkSession,
-                                 path: String, op: String,
-                                 rebuilder: String = "writeLearnedIvfIndex")
-      : Seq[Long] = {
-    requireCommitMarker(spark, s"$path/_epochs", op,
-      "the index has no committed-epochs record (crashed rebuild, or a " +
-        s"path not written by $rebuilder) - re-run $rebuilder")
-    // distinct: after a compaction the table holds one row per surviving
-    // idempotency key, all pointing at the one merged epoch
-    val eps = spark.read.parquet(s"$path/_epochs")
-      .select("build_id").distinct().collect().map(_.getLong(0)).toSeq
-    require(eps.nonEmpty,
-      s"$op: _epochs at $path lists no committed builds - re-run $rebuilder")
-    eps
+    // the commit record LAST, so its epoch has a complete quantizer too
+    EpochLog.directory(spark, path).overwrite(epoch)
   }
 
   /** Incremental GROWTH of a [[writeLearnedIvfIndex]] layout: label the
@@ -1976,13 +1906,9 @@ object Similarity {
     * and what ossification the frozen centroids do accumulate is exactly
     * what [[assignmentDrift]] measures and [[refreshIvfIndex]] repairs.
     *
-    * Crash story (the [[writeLearnedIvfIndex]] epoch protocol): data
-    * files land first (one per touched cell — cell-hashed repartition,
-    * same small-files rationale as the build), the `_epochs` append is
-    * the commit point. A crash before it leaves orphan rows at an
-    * unlisted epoch — invisible to serving, collected by the next
-    * [[compactIvfIndex]] — and a retry re-appends under a new epoch,
-    * exactly-once. Appends add one file per cell per call; compaction
+    * Crash story: [[EpochLog]]'s. Data files land first (one per touched
+    * cell — cell-hashed repartition, same small-files rationale as the
+    * build). Appends add one file per cell per call; [[compactIvfIndex]]
     * restores ~one file per cell when the count warrants.
     *
     * `newRows` must be NEW ids: updating an already-indexed vector in
@@ -1997,41 +1923,31 @@ object Similarity {
 
   /** [[appendToIvfIndex]] keyed for AT-LEAST-ONCE callers (Structured
     * Streaming's `foreachBatch` replays a batch id after a restart): if
-    * `key` is already committed in `_epochs` the call is a NO-OP and
-    * returns false — the batch already landed. A key whose first attempt
-    * CRASHED (data written, commit record not) left only invisible
-    * orphan rows, so the retry appends the batch again under a fresh
-    * physical epoch and commits — rows serve exactly once either way.
-    * Structured Streaming replays a batch id with the same source offset
-    * range, hence the same input rows, which is what makes key = batch
-    * id the right idempotency token (same contract as
+    * `key` is already committed the call is a NO-OP and returns false;
+    * otherwise the batch lands exactly once ([[EpochLog]]'s keyed-retry
+    * story — same contract as
     * [[graft.streaming.StreamingCurate.writeBatchIdempotent]]). */
   def appendToIvfIndexIdempotent(newRows: DataFrame, indexPath: String,
                                  idCol: String, embCol: String,
-                                 key: String): Boolean = {
-    val spark = newRows.sparkSession
-    val done = spark.read.parquet(s"$indexPath/_epochs")
-    if (done.columns.contains("key") &&
-        done.filter(col("key") === key).limit(1).collect().nonEmpty) false
+                                 key: String): Boolean =
+    if (EpochLog.directory(newRows.sparkSession, indexPath)
+        .keyCommitted(key, "append_to_ivf_index", "writeLearnedIvfIndex")) false
     else { doIvfAppend(newRows, indexPath, idCol, embCol, Some(key)); true }
-  }
 
   private def doIvfAppend(newRows: DataFrame, indexPath: String, idCol: String,
                           embCol: String, key: Option[String]): Unit = {
     val spark = newRows.sparkSession
     val cents = loadIvfCentroids(spark, indexPath)
+    val log = EpochLog.directory(spark, indexPath)
     // refuse a crashed-rebuild path BEFORE writing anything into it
-    committedIvfEpochs(spark, indexPath, "append_to_ivf_index")
-    val epoch = System.nanoTime()
+    log.committed("append_to_ivf_index", "writeLearnedIvfIndex")
+    val epoch = EpochLog.newEpoch()
     buildQuantizedIndex(withCoarseLabel(newRows, embCol, cents),
         idCol, embCol, "coarse")
       .withColumn("build_id", lit(epoch))
       .repartition(col("coarse"))
       .write.mode("append").partitionBy("coarse").parquet(indexPath)
-    import spark.implicits._
-    Seq((epoch, key)).toDF("build_id", "key")
-      .coalesce(1)
-      .write.mode("append").parquet(s"$indexPath/_epochs")
+    log.append(epoch, key)
   }
 
   /** COMPACTION of a [[writeLearnedIvfIndex]]+[[appendToIvfIndex]]
@@ -2042,17 +1958,10 @@ object Similarity {
     * per cell (cell-hashed repartition), so a pruned serve after N ingest
     * cycles stops listing and opening N files per probed cell.
     *
-    * Same crash discipline as [[graft.operators.Dedup.compactBandedIndex]]:
-    * the merged rows land as an APPEND under a fresh epoch — invisible
-    * while `_epochs` still lists the old ones — and the tiny `_epochs`
-    * OVERWRITE to exactly that epoch is the commit point. A crash before
-    * it leaves the old epochs serving untouched; after it, the
-    * superseded files (snapshotted BEFORE the merge was appended, so the
-    * set is exact) are deleted as pure GC. Uncommitted rows from crashed
-    * appends live in pre-snapshot files and are filtered out of the
-    * merge, so compaction doubles as the garbage collector for crashed
-    * ingests. Single-writer: do not compact concurrently with appends or
-    * a refresh rebuild.
+    * The swap is [[EpochLog.compact]] (snapshot → merge → recommit →
+    * GC, single-writer: do not compact concurrently with appends or a
+    * refresh rebuild), so compaction doubles as the garbage collector for
+    * crashed ingests.
     *
     * The merge validates the [[appendToIvfIndex]] id-uniqueness
     * precondition — a duplicate id (the same row appended twice, or an
@@ -2061,95 +1970,41 @@ object Similarity {
     * of the row forever. [[deleteFromIvfIndex]] tombstones become
     * PHYSICAL in the same pass: tombstoned rows are dropped from the
     * merged epoch (before the uniqueness check, so delete-then-re-append
-    * compacts cleanly) and the tombstone files are GC'd with the data
-    * files they masked. */
+    * compacts cleanly). */
   def compactIvfIndex(spark: org.apache.spark.sql.SparkSession,
                       indexPath: String, idCol: String): Unit = {
-    requireCommitMarker(spark, indexPath, "compact_ivf_index",
+    EpochLog.requireMarker(spark, indexPath, "compact_ivf_index",
       "re-run writeLearnedIvfIndex before compacting")
-    val committed = committedIvfEpochs(spark, indexPath, "compact_ivf_index")
-    import org.apache.hadoop.fs.Path
-    val root = new Path(indexPath)
-    val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
-    // the pre-merge data-file snapshot: exactly what the merge reads and
-    // exactly what the post-commit GC deletes. Data files live under the
-    // coarse=N partition directories; _centroids/_epochs/_SUCCESS and
-    // dot-files are metadata, not data.
-    val snapshot = {
-      val it = fs.listFiles(root, true)
-      val buf = scala.collection.mutable.ArrayBuffer.empty[String]
-      while (it.hasNext) {
-        val s = it.next()
-        val name = s.getPath.getName
-        val parent = s.getPath.getParent.getName
-        if (s.isFile && !name.startsWith("_") && !name.startsWith(".") &&
-            !parent.startsWith("_"))
-          buf += s.getPath.toString
-      }
-      buf.toSeq
+    val log = EpochLog.directory(spark, indexPath)
+    log.compact("compact_ivf_index", "writeLearnedIvfIndex", indexPath) {
+        (committed, epoch, snapshot) =>
+      // data files live under the coarse=N partition directories
+      val files = snapshot.head
+      require(files.nonEmpty,
+        s"compact_ivf_index: no data files under $indexPath (crashed " +
+          "rebuild?) - re-run writeLearnedIvfIndex")
+      // basePath recovers the coarse partition column from the directory
+      // names of the explicit file list
+      val committedRows = log.committedRows(
+        spark.read.option("basePath", indexPath).parquet(files: _*), committed)
+      require(committedRows.select(lit(1)).limit(1).collect().nonEmpty,
+        s"compact_ivf_index: no committed rows under $indexPath (crashed " +
+          "rebuild?) - re-run writeLearnedIvfIndex")
+      val old = log.withoutTombstones(committedRows, idCol, committed)
+      // uniqueness is checked AFTER deletion is applied: delete-then-
+      // re-append is a legal lifecycle sequence, and the superseded
+      // (tombstoned) row must not read as a duplicate of its replacement
+      val dup = old.groupBy(col(idCol)).count().filter(col("count") > 1)
+        .select(col(idCol)).limit(1).collect()
+      require(dup.isEmpty,
+        s"compact_ivf_index: duplicate id ${dup.headOption.map(_.get(0))
+          .getOrElse("")} across committed epochs - appendToIvfIndex is for " +
+          "NEW ids; re-embedded rows go through refreshIvfIndex (rebuild) " +
+          "or deleteFromIvfIndex + append")
+      old.withColumn("build_id", lit(epoch))
+        .repartition(col("coarse"))
+        .write.mode("append").partitionBy("coarse").parquet(indexPath)
     }
-    require(snapshot.nonEmpty,
-      s"compact_ivf_index: no data files under $indexPath (crashed " +
-        "rebuild?) - re-run writeLearnedIvfIndex")
-    // basePath recovers the coarse partition column from the directory
-    // names of the explicit file list
-    val committedRows = spark.read.option("basePath", indexPath)
-      .parquet(snapshot: _*)
-      .filter(col("build_id").isin(committed: _*))
-    require(committedRows.select(lit(1)).limit(1).collect().nonEmpty,
-      s"compact_ivf_index: no committed rows under $indexPath (crashed " +
-        "rebuild?) - re-run writeLearnedIvfIndex")
-    // tombstone files are part of the compaction: their deletions become
-    // PHYSICAL here (tombstoned rows dropped from the merge), and their
-    // files are GC'd below with the data files they masked
-    val tombFiles = {
-      val tDir = new Path(s"$indexPath/_tombstones")
-      if (!fs.exists(tDir)) Seq.empty[String]
-      else fs.listStatus(tDir).toSeq
-        .filter(s => s.isFile && !s.getPath.getName.startsWith("_") &&
-          !s.getPath.getName.startsWith("."))
-        .map(_.getPath.toString)
-    }
-    val old = antiJoinTombstones(committedRows,
-      committedTombstones(spark, indexPath, committed), idCol)
-    // uniqueness is checked AFTER deletion is applied: delete-then-
-    // re-append is a legal lifecycle sequence, and the superseded
-    // (tombstoned) row must not read as a duplicate of its replacement
-    val dup = old.groupBy(col(idCol)).count().filter(col("count") > 1)
-      .select(col(idCol)).limit(1).collect()
-    require(dup.isEmpty,
-      s"compact_ivf_index: duplicate id ${dup.headOption.map(_.get(0))
-        .getOrElse("")} across committed epochs - appendToIvfIndex is for " +
-        "NEW ids; re-embedded rows go through refreshIvfIndex (rebuild) " +
-        "or deleteFromIvfIndex + append")
-    val epoch = System.nanoTime()
-    old.withColumn("build_id", lit(epoch))
-      .repartition(col("coarse"))
-      .write.mode("append").partitionBy("coarse").parquet(indexPath)
-    import spark.implicits._
-    // commit point: the merged epoch becomes the ONLY served epoch.
-    // Idempotency keys SURVIVE the compaction, re-pointed at the merged
-    // epoch: the batches they keyed live on in its rows, so a
-    // foreachBatch replay from before the compaction must still read as
-    // already-delivered — dropping the keys would turn such a replay
-    // into a duplicate append (caught only at the NEXT compaction's
-    // uniqueness raise, rows served twice until then).
-    val epochsTbl = spark.read.parquet(s"$indexPath/_epochs")
-    val keptKeys =
-      if (!epochsTbl.columns.contains("key")) Seq.empty
-      else epochsTbl
-        .filter(col("key").isNotNull && col("build_id").isin(committed: _*))
-        .select("key").collect().map(_.getString(0)).toSeq
-    ((epoch, Option.empty[String]) +: keptKeys.map(k => (epoch, Option(k))))
-      .toDF("build_id", "key")
-      .coalesce(1)
-      .write.mode("overwrite").parquet(s"$indexPath/_epochs")
-    // GC — the snapshot's rows are invisible now (committed ∌ their
-    // epochs), and the tombstones' work is done: the rows they masked no
-    // longer exist in any committed epoch (the whole _tombstones dir
-    // goes — an empty husk would just read as "no tombstones" anyway)
-    (snapshot ++ tombFiles).foreach(f => fs.delete(new Path(f), false))
-    fs.delete(new Path(s"$indexPath/_tombstones"), true)
   }
 
   /** The centroid matrix a [[writeLearnedIvfIndex]] path was built with
@@ -2158,9 +2013,9 @@ object Similarity {
     * partially-written index is refused here, before any serve. */
   def loadIvfCentroids(spark: org.apache.spark.sql.SparkSession,
                        path: String): Array[Array[Double]] = {
-    requireCommitMarker(spark, path, "load_ivf_centroids",
+    EpochLog.requireMarker(spark, path, "load_ivf_centroids",
       "re-run writeLearnedIvfIndex before serving")
-    requireCommitMarker(spark, s"$path/_centroids", "load_ivf_centroids",
+    EpochLog.requireMarker(spark, s"$path/_centroids", "load_ivf_centroids",
       "the index data committed but its quantizer did not - re-run " +
         "writeLearnedIvfIndex (an index written by plain writeIvfIndex " +
         "has no riding quantizer; serve it via ivfTopKQuantizedPruned " +
@@ -2182,95 +2037,36 @@ object Similarity {
     * production serving story in one call — learned quantizer, on-disk
     * pruned layout, quantized shortlist, exact answer — with nothing for
     * the caller to keep consistent: centroids, labels, and files all come
-    * from the one committed path. Rows are filtered to the epochs the
-    * `_epochs` commit table lists (the [[writeLearnedIvfIndex]] crash
-    * protocol): a crashed [[appendToIvfIndex]]'s orphan rows are
-    * invisible, and a pre-epoch or half-rebuilt path refuses loudly.
-    * Committed [[deleteFromIvfIndex]] tombstones are anti-joined out
-    * (broadcast — the index side never shuffles for the check). */
+    * from the one committed path. Rows are the [[EpochLog]]'s live rows:
+    * committed epochs only, committed [[deleteFromIvfIndex]] tombstones
+    * anti-joined out; a pre-epoch or half-rebuilt path refuses loudly. */
   def serveIvfIndex(indexPath: String, corpus: DataFrame, queries: DataFrame,
                     idCol: String, embCol: String, k: Int, nprobe: Int = 2,
                     candidateFactor: Int = 4): DataFrame = {
     val spark = queries.sparkSession
     val cents = loadIvfCentroids(spark, indexPath)
-    val committed = committedIvfEpochs(spark, indexPath, "serve_ivf_index")
+    val log = EpochLog.directory(spark, indexPath)
+    val committed = log.committed("serve_ivf_index", "writeLearnedIvfIndex")
     ivfTopKQuantizedPrunedImpl(indexPath, corpus,
       withProbeLabels(queries, embCol, cents, nprobe),
       idCol, embCol, "coarse", k, candidateFactor,
-      indexPrep = Some(ix => antiJoinTombstones(
-        ix.filter(col("build_id").isin(committed: _*)),
-        committedTombstones(spark, indexPath, committed), idCol)))
+      indexPrep = Some(ix => log.liveRows(ix, idCol, committed)))
   }
-
-  /** Committed tombstone rows of a learned index path — `(idCol,
-    * tomb_build_id)`, empty if no deletion ever ran. Uncommitted
-    * tombstones (a crashed [[deleteFromIvfIndex]]) are invisible, same
-    * epoch discipline as data rows. */
-  private def committedTombstones(spark: org.apache.spark.sql.SparkSession,
-                                  indexPath: String,
-                                  committed: Seq[Long]): Option[DataFrame] = {
-    val dir = new org.apache.hadoop.fs.Path(s"$indexPath/_tombstones")
-    val fs = dir.getFileSystem(spark.sessionState.newHadoopConf())
-    // a dir with no data files (never deleted anything, or a compaction
-    // GC'd every tombstone) reads as "no tombstones", not a schema error
-    if (!fs.exists(dir) ||
-        !fs.listStatus(dir).exists(s => s.isFile &&
-          !s.getPath.getName.startsWith("_") &&
-          !s.getPath.getName.startsWith("."))) None
-    else Some(spark.read.parquet(dir.toString)
-      .filter(col("build_id").isin(committed: _*))
-      .withColumnRenamed("build_id", "tomb_build_id"))
-  }
-
-  /** Drop index rows a committed tombstone covers. Tombstones are
-    * EPOCH-SCOPED: a tombstone kills only rows from STRICTLY OLDER
-    * epochs, so deleting an id and later re-appending it leaves the
-    * re-added row servable (its epoch postdates the tombstone) without
-    * any tombstone bookkeeping at append time. The tombstone side is by
-    * construction small relative to the index (ids, two longs a row) —
-    * Spark broadcasts it; the index side never shuffles for the check. */
-  private def antiJoinTombstones(index: DataFrame, tombs: Option[DataFrame],
-                                 idCol: String): DataFrame =
-    tombs.fold(index) { t =>
-      index.join(broadcast(t),
-        index(idCol) === t(idCol) &&
-          index("build_id") < t("tomb_build_id"),
-        "left_anti")
-    }
 
   /** DELETE ids from a [[writeLearnedIvfIndex]] path without touching the
     * index files — the takedown shape: at 100 TB, physically rewriting a
     * cell's parquet per removal request is the cost this operator exists
     * to avoid, and a removal request arrives as IDS, not vectors (no
     * embedding is needed — unlike appends, deletion never consults the
-    * quantizer). Writes the ids as tombstone rows under `_tombstones`
-    * (underscore-prefixed — invisible to the data read) stamped with a
-    * fresh epoch, committed by the `_epochs` append LAST: serving
-    * anti-joins committed tombstones (broadcast — the index side never
-    * shuffles), a crashed delete leaves only invisible orphans and a
-    * retry is exactly-once, and [[compactIvfIndex]] makes the deletion
-    * PHYSICAL — tombstoned rows dropped from the merged epoch, tombstone
-    * files GC'd with the data files they masked.
-    *
-    * Tombstones are epoch-scoped (strictly-older epochs only), so
-    * delete-then-re-append serves the re-added row: the lifecycle's
-    * operations stay freely composable. Deleting an id that was never
-    * indexed is a harmless no-op, so callers need not pre-filter. */
+    * quantizer). Writes the ids as epoch-scoped [[EpochLog]] tombstones,
+    * so delete-then-re-append serves the re-added row and the lifecycle's
+    * operations stay freely composable; [[compactIvfIndex]] makes the
+    * deletion PHYSICAL. Deleting an id that was never indexed is a
+    * harmless no-op, so callers need not pre-filter. */
   def deleteFromIvfIndex(ids: DataFrame, indexPath: String,
-                         idCol: String): Unit = {
-    val spark = ids.sparkSession
-    // refuse a crashed-rebuild or pre-epoch path BEFORE writing into it
-    committedIvfEpochs(spark, indexPath, "delete_from_ivf_index")
-    val epoch = System.nanoTime()
-    ids.select(col(idCol)).distinct()
-      .withColumn("build_id", lit(epoch))
-      .coalesce(1)
-      .write.mode("append").parquet(s"$indexPath/_tombstones")
-    import spark.implicits._
-    Seq((epoch, Option.empty[String])).toDF("build_id", "key")
-      .coalesce(1)
-      .write.mode("append").parquet(s"$indexPath/_epochs")
-  }
+                         idCol: String): Unit =
+    EpochLog.directory(ids.sparkSession, indexPath).tombstone(
+      ids.select(col(idCol)), "delete_from_ivf_index", "writeLearnedIvfIndex")
 
   /** One turn of the IVF growth cycle — the operator form of the
     * [[writeIvfIndex]] growth policy ("rebuild deliberately on drift"):
@@ -2338,17 +2134,15 @@ object Similarity {
     // reads as heavy drift — renumbered labels — and rebuilds at the
     // new granularity in one cycle)
     val storedK = loadIvfCentroids(spark, indexPath).length
-    val committed = committedIvfEpochs(spark, indexPath, "refresh_ivf_index")
+    val log = EpochLog.directory(spark, indexPath)
+    val committed = log.committed("refresh_ivf_index", "writeLearnedIvfIndex")
     val kEff = if (k == 0) storedK else k
     val cents = kmeansFit(fitInput(corpus, idCol, embCol, fitSampleRows),
       idCol, embCol, kEff, iters)
     // committed, non-tombstoned rows only: a crashed append's orphan
     // labels must not leak into the drift sample any more than into a
     // serve, and a deleted row's stale label is not drift — it is gone
-    val stored = antiJoinTombstones(
-        spark.read.parquet(indexPath)
-          .filter(col("build_id").isin(committed: _*)),
-        committedTombstones(spark, indexPath, committed), idCol)
+    val stored = log.liveRows(spark.read.parquet(indexPath), idCol, committed)
       .select(col(idCol), col("coarse"))
     val sampled = stored.join(corpus.select(col(idCol), col(embCol)),
       Seq(idCol))
@@ -2424,15 +2218,12 @@ object Similarity {
       s"m/ksub must be 0 (keep the index's geometry) or positive, got m=$m ksub=$ksub")
     val spark = corpus.sparkSession
     val (storedCents, storedCb) = loadPqQuantizers(spark, indexPath)
-    val committed = committedIvfEpochs(spark, indexPath, "refresh_pq_index",
-      rebuilder = "writeLearnedPqIndex")
+    val log = EpochLog.directory(spark, indexPath)
+    val committed = log.committed("refresh_pq_index", "writeLearnedPqIndex")
     val kEff = if (k == 0) storedCents.length else k
     val cents = kmeansFit(fitInput(corpus, idCol, embCol, fitSampleRows),
       idCol, embCol, kEff, iters)
-    val stored = antiJoinTombstones(
-        spark.read.parquet(indexPath)
-          .filter(col("build_id").isin(committed: _*)),
-        committedTombstones(spark, indexPath, committed), idCol)
+    val stored = log.liveRows(spark.read.parquet(indexPath), idCol, committed)
       .select(col(idCol), col("coarse"))
     val sampled = stored.join(corpus.select(col(idCol), col(embCol)),
       Seq(idCol))
@@ -2484,8 +2275,8 @@ object Similarity {
       s"m/ksub must be 0 (keep the index's geometry) or positive, got m=$m ksub=$ksub")
     val spark = corpus.sparkSession
     val (storedRot, storedCents, storedCb) = loadOpqQuantizers(spark, indexPath)
-    val committed = committedIvfEpochs(spark, indexPath, "refresh_opq_index",
-      rebuilder = "writeLearnedOpqIndex")
+    val log = EpochLog.directory(spark, indexPath)
+    val committed = log.committed("refresh_opq_index", "writeLearnedOpqIndex")
     // drift check in the STORED rotation's space: the stored cells are
     // only comparable to a fresh fit under the same projection
     val rotated = corpus
@@ -2496,10 +2287,7 @@ object Similarity {
     // on the bounded materialized rows
     val cents = kmeansFit(fitInput(rotated, idCol, "__rotv", fitSampleRows),
       idCol, "__rotv", if (k == 0) storedCents.length else k, iters)
-    val stored = antiJoinTombstones(
-        spark.read.parquet(indexPath)
-          .filter(col("build_id").isin(committed: _*)),
-        committedTombstones(spark, indexPath, committed), idCol)
+    val stored = log.liveRows(spark.read.parquet(indexPath), idCol, committed)
       .select(col(idCol), col("coarse"))
     val sampled = stored.join(rotated, Seq(idCol))
     val drift = assignmentDrift(sampled, idCol, "__rotv", "coarse", cents,

@@ -3,7 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.operators.Similarity
+import graft.operators.{EpochLog, Similarity}
 
 /** Streaming SEMANTIC-dedup gate — the ingest-time twin of
   * [[graft.operators.Similarity.semDedup]] (Abbas et al. 2023): every
@@ -19,11 +19,11 @@ import graft.operators.Similarity
   * .writeLearnedIvfIndex]]'s design): the centroid matrix rides at
   * `_centroids` (so batches are labeled by the SAME quantizer the kept
   * set was — the mismatch class is unconstructable), rows carry their
-  * epoch `build_id` and land partitioned by `coarse`, and the
-  * `_epochs` commit table (written LAST) lists what serving and gating
-  * may see — a crashed batch's rows are invisible and the batch-id
-  * idempotency key makes `foreachBatch` replays no-op
-  * (at-least-once → exactly-once, the [[IvfIngest]] contract). Unlike
+  * epoch `build_id` and land partitioned by `coarse`, and a directory
+  * [[graft.operators.EpochLog]] lists what serving and gating may see —
+  * a crashed batch's rows are invisible and the batch-id idempotency key
+  * makes `foreachBatch` replays no-op (at-least-once → exactly-once, the
+  * [[IvfIngest]] contract). Unlike
   * the ANN index the kept set stores FULL-PRECISION vectors: the gate
   * is a threshold test, and deciding borderline pairs on quantized
   * cosines would mis-gate exactly the pairs the threshold exists for.
@@ -72,9 +72,8 @@ object SemDedupIngest {
     require(centroids.nonEmpty && centroids.head.nonEmpty &&
       centroids.forall(_.length == centroids.head.length),
       "centroids must be non-empty vectors of one shared dimensionality")
-    val marker = new org.apache.hadoop.fs.Path(s"$path/_epochs/_SUCCESS")
-    require(!marker.getFileSystem(spark.sessionState.newHadoopConf())
-        .exists(marker),
+    val log = EpochLog.directory(spark, path)
+    require(!log.exists,
       s"sem_dedup_ingest: $path is already initialized - re-initializing " +
         "would orphan its kept set under a live checkpoint; use a fresh " +
         "path (and replay the kept set) to change the quantizer")
@@ -82,22 +81,16 @@ object SemDedupIngest {
     centroids.zipWithIndex.map { case (c, i) => (i, c.toSeq) }.toSeq
       .toDF("cid", "centroid").coalesce(1)
       .write.mode("overwrite").parquet(s"$path/_centroids")
-    spark.emptyDataset[(Long, Option[String])].toDF("build_id", "key")
-      .coalesce(1)
-      .write.mode("overwrite").parquet(s"$path/_epochs")
+    log.overwrite()
   }
 
-  private def requireMarker(spark: SparkSession, dir: String): Unit = {
-    val marker = new org.apache.hadoop.fs.Path(dir, "_SUCCESS")
-    require(marker.getFileSystem(spark.sessionState.newHadoopConf())
-        .exists(marker),
-      s"sem_dedup_ingest: no _SUCCESS marker at $dir - not an initialized " +
-        "gate state (or a crashed init); run SemDedupIngest.init first")
-  }
+  private val Op = "sem_dedup_ingest"
+  private val Init = "SemDedupIngest.init"
 
   private def centroidsOf(spark: SparkSession,
                           path: String): Array[Array[Double]] = {
-    requireMarker(spark, s"$path/_centroids")
+    EpochLog.requireMarker(spark, s"$path/_centroids", Op,
+      s"not an initialized gate state (or a crashed init); run $Init first")
     val cents = spark.read.parquet(s"$path/_centroids")
       .orderBy("cid").collect()
       .map(r => r.getSeq[Double](r.fieldIndex("centroid")).toArray)
@@ -105,33 +98,25 @@ object SemDedupIngest {
     cents
   }
 
-  /** Committed epoch ids — may legitimately be EMPTY (a fresh gate). */
-  private def committedEpochs(spark: SparkSession, path: String): Seq[Long] = {
-    requireMarker(spark, s"$path/_epochs")
-    spark.read.parquet(s"$path/_epochs")
-      .select("build_id").distinct().collect().map(_.getLong(0)).toSeq
-  }
-
   /** The kept set — the semantically-deduplicated corpus so far:
     * `(idCol, embCol, coarse)` over committed epochs only. Fails loudly
     * before any batch has landed (there is no schema to serve). */
   def keptSet(spark: SparkSession, path: String): DataFrame = {
-    val committed = committedEpochs(spark, path)
+    val log = EpochLog.directory(spark, path)
+    // may legitimately be empty (a fresh gate) — but then there is no
+    // schema to serve
+    val committed = log.committedOrEmpty(Op, Init)
     require(committed.nonEmpty,
       s"sem_dedup_ingest: no committed batches at $path yet")
-    spark.read.parquet(path)
-      .filter(col("build_id").isin(committed: _*)).drop("build_id")
+    log.committedRows(spark.read.parquet(path), committed).drop("build_id")
   }
 
   /** True iff a [[gateBatch]]/[[gateBatchWith]] under `key` already
     * committed — public so COMPOSING sinks (the streaming-curation
     * capstone) can skip their whole upstream recompute on a replay,
     * not just the gate. */
-  def keyCommitted(spark: SparkSession, path: String, key: String): Boolean = {
-    requireMarker(spark, s"$path/_epochs")
-    spark.read.parquet(s"$path/_epochs").filter(col("key") === key)
-      .limit(1).collect().nonEmpty
-  }
+  def keyCommitted(spark: SparkSession, path: String, key: String): Boolean =
+    EpochLog.directory(spark, path).keyCommitted(key, Op, Init)
 
   /** Gate one batch idempotently under `key`: returns false (no-op) if
     * the key is already committed, true after landing the batch's
@@ -147,8 +132,7 @@ object SemDedupIngest {
   /** [[gateBatch]] with a DELIVERY leg: `land` receives the batch's
     * survivors `(idCol, embCol, coarse)` — MATERIALIZED, so the
     * delivery and the state append read one computation, never two
-    * possibly-diverging evaluations — and runs BEFORE the `_epochs`
-    * commit. One delivery token covers both legs, the
+    * possibly-diverging evaluations — and runs BEFORE the commit. One delivery token covers both legs, the
     * [[StreamingCurate.idempotentCurateIngestSink]] discipline: a
     * committed key means the survivors were both delivered and added
     * to the kept set; a crash at any earlier point (including inside
@@ -163,13 +147,10 @@ object SemDedupIngest {
     require(minCosine > 0.0 && minCosine <= 1.0,
       s"minCosine must be in (0, 1], got $minCosine")
     val spark = batch.sparkSession
-    requireMarker(spark, s"$path/_epochs") // fail with the init pointer,
-    // not a bare missing-path read error, on an uninitialized state
-    val done = spark.read.parquet(s"$path/_epochs")
-    if (done.filter(col("key") === key).limit(1).collect().nonEmpty)
-      return false
+    val log = EpochLog.directory(spark, path)
+    if (log.keyCommitted(key, Op, Init)) return false
     val cents = centroidsOf(spark, path)
-    val committed = committedEpochs(spark, path)
+    val committed = log.committedOrEmpty(Op, Init)
     // within-batch semantic dedup first (deterministic id rule), so two
     // near-dup rows in ONE batch cannot both slip past a kept set that
     // contains neither
@@ -185,9 +166,8 @@ object SemDedupIngest {
           .map(_.get(0))
         if (cells.isEmpty) survivors
         else {
-          val kept = spark.read.parquet(path)
-            .filter(col("coarse").isin(cells.toSeq: _*) &&
-              col("build_id").isin(committed: _*))
+          val kept = log.committedRows(spark.read.parquet(path)
+            .filter(col("coarse").isin(cells.toSeq: _*)), committed)
           val b = Similarity.withNorm(survivors, embCol)
             .select(col("coarse"), col(idCol), col("vec").as("__bv"),
               col("norm").as("__bn"))
@@ -207,16 +187,13 @@ object SemDedupIngest {
     val survived = graft.operators.Materialize.eagerCheckpoint(
       out.select(col(idCol), col(embCol), col("coarse")))
     land(survived)
-    // data first, the tiny _epochs append LAST — the commit point
-    val epoch = System.nanoTime()
+    // data first, the commit LAST
+    val epoch = EpochLog.newEpoch()
     val landed = survived.withColumn("build_id", lit(epoch))
     if (landed.limit(1).collect().nonEmpty)
       landed.repartition(col("coarse"))
         .write.mode("append").partitionBy("coarse").parquet(path)
-    import spark.implicits._
-    Seq((epoch, Option(key))).toDF("build_id", "key")
-      .coalesce(1)
-      .write.mode("append").parquet(s"$path/_epochs")
+    log.append(epoch, Some(key))
     true
   }
 
