@@ -26,6 +26,13 @@ object Pipeline {
       Readers.csv(spark, memPath, mem))
   }
 
+  /** Row order inside every file of a [[writeDaily]] store, kept by
+    * [[compactDaily]]'s rewrite: step-2 readers get row-group locality per
+    * job and time (the reference's `sorted-*.parquet` contract, SURVEY
+    * §2.6 O4, without requiring pre-sorted input). `date` is constant
+    * within a day partition's files. */
+  private val DailySortKeys: Seq[String] = Seq("date", "Job Id", "Timestamp")
+
   /** Daily-partitioned zstd sink (SURVEY.md §2.1 S5/S7) — replaces the
     * reference's split-by-strftime + one-file-per-day writes
     * (`step-1/transformer.py:265-338`). Partitioning by date gives step-2
@@ -34,10 +41,7 @@ object Pipeline {
                  overwrite: Boolean = false): Unit = {
     val base = fresco
       .withColumn("date", to_date(col("Timestamp")))
-      // sorted files give step-2 readers row-group locality per job/time
-      // (the reference's `sorted-*.parquet` contract, SURVEY §2.6 O4,
-      // without requiring pre-sorted input)
-      .sortWithinPartitions(col("date"), col("Job Id"), col("Timestamp"))
+      .sortWithinPartitions(DailySortKeys.map(col): _*)
       .write
       .option("compression", "zstd")
       .partitionBy("date")
@@ -59,7 +63,8 @@ object Pipeline {
     * dot-prefixed sibling until the new files are fully in place — same
     * protocol as the object-store writeback, safe on s3a-style non-atomic
     * renames). Driver work is directory listings only; the rewrite is a
-    * distributed read-repartition-write per oversized partition.
+    * distributed read-coalesce-sort-write per oversized partition, which
+    * keeps [[DailySortKeys]] order inside each new file.
     *
     * Crash safety: each run first examines residue of a previously crashed
     * swap. Unambiguous states repair automatically (an original preserved
@@ -139,8 +144,10 @@ object Pipeline {
             "." + st.getPath.getName + "_graft_compact_tmp")
           val old = new org.apache.hadoop.fs.Path(base,
             "." + st.getPath.getName + "_graft_compact_old")
-          spark.read.parquet(st.getPath.toString)
-            .repartition(want)
+          val day = spark.read.parquet(st.getPath.toString)
+          // a partition directory read alone has no partition column
+          day.coalesce(want)
+            .sortWithinPartitions(DailySortKeys.filter(day.columns.contains).map(col): _*)
             .write.mode("overwrite").option("compression", "zstd")
             .parquet(tmp.toString)
           // entry-time recovery guarantees `old` does not exist here (any

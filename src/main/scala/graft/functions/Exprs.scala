@@ -132,14 +132,17 @@ object Exprs {
 
   /** Sorted comma-joined distinct non-empty values — reference
     * `step-2/consumer.py:404` (`",".join(sorted(filter(None, hosts)))`;
-    * nulls are excluded by `collect_set`, empty strings by the filter);
-    * used as an aggregate: `hostList(col("Host"))`. */
+    * nulls are excluded by `collect_set`, the empty string by
+    * `array_remove`); used as an aggregate: `hostList(col("Host"))`. Both
+    * steps are compiled expressions: `filter` and `array_sort` evaluate an
+    * interpreted lambda per element, and without nulls `sort_array` sorts
+    * the same. */
   def hostList(c: Column): Column =
-    array_join(array_sort(filter(collect_set(c), h => length(h) > 0)), ",")
+    array_join(sort_array(array_remove(collect_set(c), lit(""))), ",")
 
   /** [[hostList]] as a window function (per-window sorted distinct list). */
   def hostListOver(c: Column, w: org.apache.spark.sql.expressions.WindowSpec): Column =
-    array_join(array_sort(filter(collect_set(c).over(w), h => length(h) > 0)), ",")
+    array_join(sort_array(array_remove(collect_set(c).over(w), lit(""))), ",")
 
   /** Horizontal (row-wise) sum, nulls counted as 0 — reference
     * `step-1/data_processor.py:192-194`: Polars `sum_horizontal` ignores

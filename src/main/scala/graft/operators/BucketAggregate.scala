@@ -13,9 +13,10 @@ import graft.schemas.Schemas
   * 21-column wide output.
   *
   * The reference does this with a per-job Python loop over 1-minute windows
-  * (`step-2/consumer.py:377-508`); here it is one `groupBy().pivot().agg()`
-  * — a single shuffle keyed by (jid, Host, bucket), with partial (map-side)
-  * aggregation, which is the scalable shape at 100 TB.
+  * (`step-2/consumer.py:377-508`); here it is one `groupBy().agg()` with a
+  * conditional mean per event — a single shuffle keyed by (jid, Host,
+  * bucket), with partial (map-side) aggregation, which is the scalable
+  * shape at 100 TB.
   *
   * Buckets are aligned to each job's `start` (NOT epoch-aligned like
   * Spark's `window()`): index `k = floor((ts-start)/1min)`, bucket span
@@ -37,6 +38,10 @@ object BucketAggregate {
       * chunk's start instant (`step-3.1/old/consumer_2.py:489`). */
     case object BucketStart extends TimeMode
   }
+
+  /** Mean `Value` of one event's rows: null when it has none. */
+  private def avgOf(event: String) =
+    avg(when(col("Event") === event, col("Value"))).as(event)
 
   /** Input: output of [[IntervalJoin]] — FRESCO columns (`Host`,
     * `Timestamp`, `Event`, `Value`) + accounting columns (`jid`, `start`,
@@ -61,14 +66,16 @@ object BucketAggregate {
         col("start"), col("end"), col("submit"),
         col("user"), col("account"), col("jobname"), col("queue"),
         col("nnodes"), col("ncpus"), col("walltime"), col("exit_status"))
-      // explicit value list → stable schema even for never-seen events
-      // (consumer.py:528-548, SURVEY.md §7.4.9)
-      .pivot("Event", Schemas.frescoEvents)
-      .agg(avg(col("Value")))
+      // one column per event of the explicit list → stable schema even for
+      // never-seen events (consumer.py:528-548, SURVEY.md §7.4.9). A
+      // conditional avg per event is the pivot in ONE aggregation: Spark
+      // plans `.pivot(...).agg(avg)` as two, each with its own exchange.
+      .agg(avgOf(Schemas.frescoEvents.head),
+        Schemas.frescoEvents.tail.map(avgOf): _*)
       // host_list = sorted distinct hosts of THIS accounting record
       // (consumer.py:403-404 — keyed by (jid, start, end) so resubmitted
       // jobs sharing a normalized jid don't pool hosts). Computed AFTER the
-      // pivot: the window then shuffles one row per (job, host, bucket)
+      // aggregate: the window then shuffles one row per (job, host, bucket)
       // instead of the full metric stream, preserving map-side partial
       // aggregation and avoiding a whale-jid straggler partition.
       .withColumn("host_list",

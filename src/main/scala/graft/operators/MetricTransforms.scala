@@ -38,14 +38,12 @@ object MetricTransforms {
     * reset-and-jump (a giant bogus rate on the following sample), whereas
     * the reference's `fill_null` leaves NaN intact so it propagates
     * through the diff and both rows drop at the `delta >= 0` filter. */
-  private def prep(df: DataFrame, numericCols: Seq[String]): DataFrame = {
-    val filled = numericCols.foldLeft(df) { (d, c) =>
-      d.withColumn(c, coalesce(col(c), lit(0.0)))
-    }
-    filled.withColumn("Timestamp", parseRawTs(col("timestamp")))
+  private def prep(df: DataFrame, numericCols: Seq[String]): DataFrame =
+    // one projection: a withColumn chain re-analyses the growing plan per column
+    df.withColumns(numericCols.map(c => c -> coalesce(col(c), lit(0.0))).toMap +
+        ("Timestamp" -> parseRawTs(col("timestamp"))))
       .filter(col("Timestamp").isNotNull &&
         col("jobID").isNotNull && col("node").isNotNull)
-  }
 
   private def toFresco(df: DataFrame, event: String, units: String,
                        jidStandardize: org.apache.spark.sql.Column => org.apache.spark.sql.Column =
@@ -96,9 +94,8 @@ object MetricTransforms {
       .filter(col("device").isNotNull)
       .groupBy("jobID", "node", "Timestamp")
       .agg(sum(cols.head).as(cols.head), cols.tail.map(c => sum(c).as(c)): _*)
-    val diffed = cols.foldLeft(summed) { (df, c) =>
-      df.withColumn(s"${c}_d", col(c) - lag(col(c), 1).over(grp))
-    }
+    val diffed = summed.select(col("*") +:
+      cols.map(c => (col(c) - lag(col(c), 1).over(grp)).as(s"${c}_d")): _*)
     val total = rowSum(cols.map(c => col(s"${c}_d")))
     val rated = diffed
       .withColumn("total_d", total)

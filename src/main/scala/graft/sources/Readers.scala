@@ -46,21 +46,44 @@ object Readers {
     df.select(cols.toIndexedSeq: _*)
   }
 
+  /** Reader options of [[csv]]. univocity's default input buffer is 1M
+    * chars (2 MB) per parser, and Spark builds two parsers per file; 4k
+    * chars parse the same lines. */
+  private[graft] val CsvOptions = Map(
+    "header" -> "true", "mode" -> "PERMISSIVE", "inputBufferSize" -> "4096")
+
   /** Robust CSV read (S1): explicit schema, header, PERMISSIVE parse, null
     * sentinels `["", "NA", "NULL"]` — reference
     * `step-1/data_processor.py:53-84`. One tolerant path: every cell is
     * read as string, sentinels become null, then [[ensureColumns]]
     * `try_cast`s to the declared types (null on garbage, never an ANSI
-    * error) and back-fills missing columns as typed nulls. */
+    * error) and back-fills missing columns as typed nulls.
+    *
+    * The column names come from ONE file's header and apply to every file
+    * of the glob by position, as with any Spark CSV read: the header of
+    * the file Spark's schema inference reads first, the one holding the
+    * first split of its largest-first packing (the largest file; among
+    * files larger than a split, the first in glob order). It is read on the driver
+    * by [[org.apache.spark.sql.graft.CsvHeader]] with Spark's own line
+    * reader, parser and `makeSafeHeader`, so no inference job runs. Where
+    * that cannot answer (no match, a directory or hidden file in the
+    * match, only empty files, no non-blank line in the first split) the
+    * read falls back to Spark's inference, with its errors and its empty
+    * schema. */
   def csv(spark: SparkSession, path: String, schema: StructType): DataFrame = {
-    val raw = spark.read
-      .option("header", "true")
-      .option("mode", "PERMISSIVE")
-      .csv(path)
+    val raw = csvStrings(spark, path)
     val deSentineled = raw.select(raw.columns.map { c =>
       when(col(c).isin(Schemas.NullSentinels: _*), lit(null)).otherwise(col(c)).as(c)
     }.toIndexedSeq: _*)
     ensureColumns(deSentineled, schema)
+  }
+
+  /** [[csv]]'s raw read: every column a string, named by the header. */
+  private[graft] def csvStrings(spark: SparkSession, path: String): DataFrame = {
+    val reader = spark.read.options(CsvOptions)
+    org.apache.spark.sql.graft.CsvHeader.schema(spark, path, CsvOptions)
+      .fold(reader)(reader.schema)
+      .csv(path)
   }
 
   /** Lazy parquet scan of FRESCO metric files (S3) with case-insensitive

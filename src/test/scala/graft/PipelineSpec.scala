@@ -388,6 +388,11 @@ class PipelineSpec extends SparkSpec {
     val report = Pipeline.compactDaily(spark, out, targetBytes = 1L << 30)
     assert(report.map(_._1) == Seq("date=2013-01-01"))
     assert(report.head._2 > 1 && report.head._3 == 1 && nFiles == 1)
+    // the rewrite keeps writeDaily's contract: the file is one sorted run
+    val file = part.listFiles().filter(f => f.isFile && f.getName.endsWith(".parquet")).head
+    val keys = spark.read.parquet(file.getAbsolutePath).collect().toSeq
+      .map(r => (r.getAs[String]("Job Id"), r.getAs[java.sql.Timestamp]("Timestamp").getTime))
+    assert(keys == keys.sorted, s"compacted file is not sorted by (Job Id, Timestamp): $keys")
     // rows byte-identical, no staging residue, second pass is a no-op
     val after = spark.read.parquet(out).collect().toSeq.map(_.toString).sorted
     assert(after == before)

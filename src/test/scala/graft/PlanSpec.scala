@@ -570,4 +570,111 @@ class PlanSpec extends SparkSpec {
     // query needs (4 output + 2 filter columns)
     assert(!scan.contains("l_comment"), s"unpruned scan:\n$scan")
   }
+
+  /** Two nodes of raw step-1 CSVs (`<dir>/<node>/<family>.csv`) and an
+    * accounting CSV, the layout `runner.Main step1` reads by glob. */
+  private lazy val nodeCsvs: String = {
+    val dir = java.nio.file.Files.createTempDirectory("plan-step1").toFile
+    val t = "01/01/2013"
+    def write(rel: String, lines: String*): Unit = {
+      val f = new java.io.File(dir, rel)
+      f.getParentFile.mkdirs()
+      java.nio.file.Files.write(f.toPath, lines.mkString("", "\n", "\n").getBytes("UTF-8"))
+    }
+    for (n <- Seq("N1", "N2")) {
+      write(s"$n/block.csv", "jobID,node,timestamp,device,rd_sectors,wr_sectors",
+        s"job1,$n,$t 10:00:00,sda,0,0", s"job1,$n,$t 10:00:00,sdb,0,0",
+        s"job1,$n,$t 10:01:00,sda,1048576,0", s"job1,$n,$t 10:01:00,sdb,0,4096")
+      write(s"$n/cpu.csv", "jobID,node,timestamp,device,user,nice,system,idle,iowait,irq,softirq",
+        s"job1,$n,$t 10:00:00,cpu0,100,0,0,900,0,0,0", s"job1,$n,$t 10:00:00,cpu1,100,0,0,900,0,0,0",
+        s"job1,$n,$t 10:01:00,cpu0,200,0,0,1800,0,0,0", s"job1,$n,$t 10:01:00,cpu1,300,0,0,1700,0,0,0")
+      write(s"$n/llite.csv", "jobID,node,timestamp,read_bytes,write_bytes",
+        s"job1,$n,$t 10:00:00,0,0", s"job1,$n,$t 10:01:00,52428800,52428800")
+      write(s"$n/mem.csv", "jobID,node,timestamp,MemTotal,MemFree,MemUsed,FilePages",
+        s"job1,$n,$t 10:00:00,2147483648,1073741824,1073741824,536870912")
+    }
+    write("accounting.csv",
+      "jobID,user,account,jobname,queue,nnodes,ncpus,walltime,start,end,submit,exit_status",
+      s"job1,alice,acctA,sim,normal,2,32,3600,$t 10:00:00,$t 10:05:00,$t 09:59:00,0")
+    dir.getAbsolutePath
+  }
+
+  private def step1Args(out: String) = Seq("step1") ++
+    Seq("block", "cpu", "llite", "mem").flatMap(f => Seq(s"--$f", s"$nodeCsvs/*/$f.csv")) ++
+    Seq("--out", out)
+
+  /** Spark jobs started and queries executed while `body` runs. */
+  private def jobsAndQueries(body: => Unit): (Int, Int) = {
+    import java.util.concurrent.atomic.AtomicInteger
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    import org.apache.spark.sql.execution.QueryExecution
+    import org.apache.spark.sql.util.QueryExecutionListener
+    val (jobs, queries) = (new AtomicInteger, new AtomicInteger)
+    val jobListener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
+    }
+    val queryListener = new QueryExecutionListener {
+      def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit = queries.incrementAndGet()
+      def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = queries.incrementAndGet()
+    }
+    val drain = () => org.apache.spark.graft.ListenerBus.drain(spark.sparkContext)
+    drain()
+    spark.sparkContext.addSparkListener(jobListener)
+    spark.listenerManager.register(queryListener)
+    try { body; drain() }
+    finally {
+      spark.sparkContext.removeSparkListener(jobListener)
+      spark.listenerManager.unregister(queryListener)
+    }
+    (jobs.get, queries.get)
+  }
+
+  test("Readers.csv resolves its header on the driver: no Spark job") {
+    val glob = s"$nodeCsvs/*/block.csv"
+    assert(jobsAndQueries(sources.Readers.csv(spark, glob, schemas.Schemas.block)) == (0, 0))
+    // detector sanity: Spark's header inference runs a job
+    assert(jobsAndQueries(spark.read.option("header", "true").csv(glob))._1 >= 1)
+  }
+
+  test("a step1 append through runner.Main.run executes exactly one query") {
+    val out = java.nio.file.Files.createTempDirectory("plan-step1-out").toFile
+    val (_, queries) = jobsAndQueries(runner.Main.run(step1Args(s"$out/store"), spark))
+    assert(queries == 1, s"$queries queries")
+  }
+
+  test("block and cpu keep a partial HashAggregate below their first exchange") {
+    import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
+    import org.apache.spark.sql.catalyst.expressions.aggregate.Partial
+    def lowestExchanges(p: SparkPlan) = flatten(p).collect {
+      case e: ShuffleExchangeLike if !flatten(e.child).exists(_.isInstanceOf[ShuffleExchangeLike]) => e
+    }
+    for ((family, transform) <- Seq[(String, DataFrame => DataFrame)](
+        "block" -> operators.MetricTransforms.block, "cpu" -> operators.MetricTransforms.cpu)) {
+      val schema = if (family == "block") schemas.Schemas.block else schemas.Schemas.cpu
+      val p = executed(transform(sources.Readers.csv(spark, s"$nodeCsvs/*/$family.csv", schema)))
+      val first = lowestExchanges(p)
+      assert(first.nonEmpty && first.forall(e => flatten(e.child).exists {
+        case a: BaseAggregateExec => a.aggregateExpressions.exists(_.mode == Partial)
+        case _ => false
+      }), s"$family: no partial aggregate below the first exchange:\n$p")
+    }
+  }
+
+  test("BucketAggregate: two exchanges, the aggregate's and the host_list window's") {
+    val out = java.nio.file.Files.createTempDirectory("plan-bucket").toFile
+    runner.Main.run(step1Args(s"$out/store"), spark)
+    val joined = operators.IntervalJoin(sources.Readers.frescoMetrics(spark, s"$out/store"),
+      sources.Readers.accounting(spark, s"$nodeCsvs/accounting.csv"))
+    joined.write.parquet(s"$out/joined")
+    val p = executed(operators.BucketAggregate(spark.read.parquet(s"$out/joined")))
+    assert(countShuffles(p) == 2, s"plan:\n$p")
+  }
+
+  test("Pipeline.step2: no lambda higher-order function in the executed plan") {
+    val out = java.nio.file.Files.createTempDirectory("plan-step2").toFile
+    runner.Main.run(step1Args(s"$out/store"), spark)
+    val p = executed(Pipeline.step2(spark, s"$out/store", s"$nodeCsvs/accounting.csv"))
+    val hofs = higherOrderFunctions(p)
+    assert(hofs.isEmpty, s"interpreted HOFs in step2: ${hofs.map(_.prettyName)}\nplan:\n$p")
+  }
 }

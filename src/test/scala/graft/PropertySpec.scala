@@ -1375,4 +1375,66 @@ class PropertySpec extends SparkSpec {
       }
     }
   }
+
+  /** [[operators.BucketAggregate]]'s former shape, kept as its reference:
+    * Spark's `.pivot(...).agg(avg)` and the lambda-filtered host list. */
+  private def bucketAggregatePivot(joined: org.apache.spark.sql.DataFrame) = {
+    import org.apache.spark.sql.expressions.Window
+    import org.apache.spark.sql.functions._
+    import graft.functions.Exprs._
+    val us = operators.BucketAggregate.DefaultBucketMicros
+    joined.filter(col("Host").isNotNull && col("Host") =!= "")
+      .withColumn("bucket", bucketIndex(col("Timestamp"), col("start"), us))
+      .groupBy(col("jid"), col("Host").as("host"), col("bucket"), col("start"), col("end"),
+        col("submit"), col("user"), col("account"), col("jobname"), col("queue"),
+        col("nnodes"), col("ncpus"), col("walltime"), col("exit_status"))
+      .pivot("Event", Schemas.frescoEvents)
+      .agg(avg(col("Value")))
+      .withColumn("host_list", array_join(array_sort(filter(collect_set(col("host"))
+        .over(Window.partitionBy(col("jid"), col("start"), col("end"))), h => length(h) > 0)), ","))
+      .select(Seq(col("jid"), col("host"), col("host_list"),
+        intervalMidpoint(bucketStart(col("start"), col("bucket"), us),
+          bucketEnd(col("start"), col("bucket"), us, col("end"))).as("time")) ++
+        Schemas.frescoEvents.map(e => col(e).as(s"value_$e")): _*)
+  }
+
+  test("BucketAggregate's one-pass aggregate ≡ the pivot form bit for bit; " +
+    "hostList's array_remove ≡ its lambda filter") {
+    import org.apache.spark.sql.functions._
+    val t0 = java.sql.Timestamp.valueOf("2013-01-01 10:00:00").getTime
+    def ts(sec: Long) = new java.sql.Timestamp(t0 + sec * 1000L)
+    val row = for {
+      job <- Gen.chooseNum(0, 2)
+      host <- Gen.oneOf(null, "", "N1", "N2", "N3")
+      offset <- Gen.chooseNum(-60L, 1860L)
+      event <- Gen.oneOf(Schemas.frescoEvents ++ Seq("gpu", null))
+      value <- Gen.frequency(1 -> Gen.const(None),
+        4 -> Gen.chooseNum(-1e6, 1e6).map(v => Some(v / 7.0)))
+    } yield (job, host, offset, event, value)
+    forAll(Gen.listOfN(150, row)) { rows =>
+      // one group whose values are all null, for every event
+      val allNull = Schemas.frescoEvents.map(e => (1, "N9", 5L, e, Option.empty[Double]))
+      val joined = (rows ++ allNull).map { case (job, host, offset, event, value) =>
+        val start = 420L * job
+        (s"$job", host, ts(start + offset), event, value, ts(start), ts(start + 1800),
+          ts(start - 60), s"u$job", "acct", "name", "normal", 2L, 32L, 3600L, "0")
+      }.toDF("jid", "Host", "Timestamp", "Event", "Value", "start", "end", "submit",
+        "user", "account", "jobname", "queue", "nnodes", "ncpus", "walltime", "exit_status")
+        .filter(col("Timestamp") >= col("start") && col("Timestamp") < col("end"))
+      val want = bucketAggregatePivot(joined)
+      val got = operators.BucketAggregate(joined).select(want.columns.map(col).toSeq: _*)
+      assert(got.schema == want.schema)
+      // raw bits: == would also accept -0.0 for 0.0
+      def bits(df: org.apache.spark.sql.DataFrame) = df.collect().toSeq.map(_.toSeq.map {
+        case d: Double => java.lang.Double.doubleToRawLongBits(d)
+        case v => v
+      }.toString).sorted
+      val g = bits(got)
+      assert(g == bits(want))
+      assert(g.nonEmpty)
+      val lists = joined.groupBy("jid").agg(graft.functions.Exprs.hostList(col("Host")),
+        array_join(array_sort(filter(collect_set(col("Host")), h => length(h) > 0)), ","))
+      lists.collect().foreach(r => assert(r.getString(1) == r.getString(2), s"$r"))
+    }
+  }
 }
