@@ -687,7 +687,7 @@ object SparkEntry {
       graft.functions.JpegDims.getClass, graft.functions.LshBandBuckets.getClass,
       graft.functions.MinHashSignature.getClass,
       graft.functions.NearestCentroid.getClass,
-      graft.functions.QualityCounts.getClass,
+      graft.functions.PiiScan.getClass, graft.functions.QualityCounts.getClass,
       graft.functions.ShingleHashes.getClass, graft.functions.SimHash64.getClass,
       graft.functions.SpanSketchProbe.getClass,
       graft.functions.SpanSketchValue.getClass, graft.functions.Tokens.getClass,
@@ -700,7 +700,7 @@ object SparkEntry {
       classOf[graft.functions.JpegDims], classOf[graft.functions.LshBandBuckets],
       classOf[graft.functions.MinHashSignature],
       classOf[graft.functions.NearestCentroid],
-      classOf[graft.functions.QualityCounts],
+      classOf[graft.functions.PiiScan], classOf[graft.functions.QualityCounts],
       classOf[graft.functions.ShingleHashes],
       classOf[graft.functions.ShingleHashesAll],
       classOf[graft.functions.SimHash64],

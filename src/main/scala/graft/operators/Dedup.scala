@@ -10,12 +10,15 @@ import org.apache.spark.sql.functions._
   * UDFs. Scale design (100 TB): the LSH path is the scalable one — shingle
   * explosion and signature aggregation are map-side + one shuffle per
   * groupBy; candidate generation shuffles by (band, bandHash) so only
-  * colliding docs meet; exact verification joins only candidate pairs.
-  * The all-pairs exact path is for oracle-sized data and verification.
+  * colliding docs meet; exact verification scores only candidate pairs,
+  * each against the two documents' distinct shingle sets. The all-pairs
+  * exact path is for oracle-sized data and verification.
   *
-  * Materialization: pipelines that reuse the shingle set (`jaccardPairs`,
-  * `minhashDuplicates`) eagerly checkpoint it — lineage-truncating, and
-  * NOT registered in the CacheManager, so nothing leaks across pipelines.
+  * Materialization: pipelines that reuse a frame eagerly checkpoint it —
+  * lineage-truncating, and NOT registered in the CacheManager, so nothing
+  * leaks across pipelines. `jaccardPairs` checkpoints the shingle rows;
+  * `minhashDuplicates` checkpoints one row per document (signature,
+  * shingle set, set size), not the shingle rows.
   * Two modes, chosen by [[Materialize.ReliableCheckpointKey]] — the
   * mechanics live in [[Materialize]], shared with [[Similarity]] so the
   * durability story is uniform across the scale paths.
@@ -100,8 +103,8 @@ object Dedup {
       .filter(col("jaccard") >= minJaccard)
   }
 
-  /** Shared tail of the exact and verify paths: join per-doc set sizes to
-    * an `(id_a, id_b, inter)` frame and compute `|A∩B| / |A∪B|`. */
+  /** Tail of the exact all-pairs path: join per-doc set sizes to an
+    * `(id_a, id_b, inter)` frame and compute `|A∩B| / |A∪B|`. */
   private def attachJaccard(inter: DataFrame, sh: DataFrame): DataFrame = {
     val sizes = sh.groupBy("sh_id").agg(count(lit(1)).as("sz"))
     inter
@@ -177,30 +180,56 @@ object Dedup {
       explode(graft.functions.ShingleHashes.shingleHashes(col(textCol), k)).as("shingle"))
 
   /** Exact Jaccard for a given pair list only — the verification step of
-    * candidate-generate-verify: cost scales with |pairs|·|shingles per
-    * doc|, never with all-pairs. */
-  def jaccardFor(pairs: DataFrame, sh: DataFrame): DataFrame = {
-    val a = sh.select(col("sh_id").as("id_a"), col("shingle"))
-    val b = sh.select(col("sh_id").as("id_b"), col("shingle"))
-    val inter = pairs
-      .join(a, Seq("id_a"))
-      .join(b, Seq("id_b", "shingle")) // inner on (id_b, shingle) ⇒ |A∩B| rows per pair
-      .groupBy("id_a", "id_b").agg(count(lit(1)).as("inter"))
-    attachJaccard(inter, sh)
+    * candidate-generate-verify. Each id's DISTINCT shingles are collected
+    * into one set (`collect_set`) and each distinct pair is scored as
+    * `|A∩B| / |A∪B|` with `size(array_intersect(A, B))`: one row per
+    * distinct pair, whatever the multiplicity of the pair or shingle rows.
+    * Pairs sharing no shingle, or naming an id absent from `sh`, give no
+    * row; null shingles are not shingles. No join keys on a shingle, so
+    * verification cost scales with |pairs|·|shingles per doc|, never with
+    * the corpus' shingle rows. */
+  def jaccardFor(pairs: DataFrame, sh: DataFrame): DataFrame =
+    verifyPairs(pairs.select("id_a", "id_b").distinct(),
+      sh.groupBy("sh_id").agg(collect_set(col("shingle")).as("shingle_set"))
+        .withColumn("set_size", size(col("shingle_set")).cast("long")))
+
+  /** [[jaccardFor]]'s scoring of DISTINCT `(id_a, id_b)` pairs against a
+    * per-document `(sh_id, shingle_set, set_size)` frame — the same
+    * `inter.cast(double) / (sz_a + sz_b − inter)` over longs as
+    * [[attachJaccard]], so a frame of distinct shingle rows scores
+    * bit-identically to the shingle-join form it replaced. */
+  private def verifyPairs(pairs: DataFrame, sets: DataFrame): DataFrame = {
+    def side(s: String) = sets.select(col("sh_id").as(s"id_$s"),
+      col("shingle_set").as(s"set_$s"), col("set_size").as(s"sz_$s"))
+    pairs.join(side("a"), "id_a").join(side("b"), "id_b")
+      .withColumn("inter", size(array_intersect(col("set_a"), col("set_b"))).cast("long"))
+      .filter(col("inter") > 0)
+      .select(col("id_a"), col("id_b"),
+        (col("inter").cast("double") / (col("sz_a") + col("sz_b") - col("inter"))).as("jaccard"))
   }
 
   /** Full MinHash-LSH near-dup pipeline: candidates from signature banding,
     * verified with exact Jaccard restricted to the candidate pairs —
-    * the scalable candidate-generate-verify shape. */
+    * the scalable candidate-generate-verify shape. ONE aggregate over the
+    * shingle rows gives each document its signature, its distinct shingle
+    * set and the set's size; that per-document frame (one row per id, not
+    * one per shingle) is what gets eagerly checkpointed, and both the
+    * banding and [[jaccardFor]]'s set scoring read it. Set semantics as
+    * in [[jaccardFor]]: one row per distinct candidate pair, repeated
+    * `(id, shingle)` rows count once. */
   def minhashDuplicates(sh0: DataFrame, minJaccard: Double = 0.8,
                         numHashes: Int = 128, bands: Int = 32): DataFrame = {
     require(numHashes % bands == 0,
       s"numHashes ($numHashes) must be a multiple of bands ($bands)")
-    // the shingle set feeds signatures AND both sides of verification —
-    // materialize once or the explode+distinct shuffle runs four times
-    val sh = eagerCheckpoint(sh0)
-    val cands = lshCandidatePairs(minhashSignatures(sh, numHashes), bands, numHashes)
-    jaccardFor(cands, sh).filter(col("jaccard") >= minJaccard)
+    // the per-document frame feeds both sides of banding AND of
+    // verification — materialize once, or the shingle aggregate runs per use
+    val docs = eagerCheckpoint(sh0.groupBy("sh_id")
+      .agg(graft.functions.MinHashSignature
+        .minhashSignature(col("shingle"), numHashes).as("sig"),
+        collect_set(col("shingle")).as("shingle_set"))
+      .withColumn("set_size", size(col("shingle_set")).cast("long")))
+    val cands = lshCandidatePairs(docs.select("sh_id", "sig"), bands, numHashes)
+    verifyPairs(cands, docs.drop("sig")).filter(col("jaccard") >= minJaccard)
   }
 
   /** Persistable MinHash dedup index: one `(sh_id, sig, sig_k)` row per
@@ -636,14 +665,6 @@ object Dedup {
       .distinct()
   }
 
-  /** Eagerly materialize an edge frame AND collect its order-insensitive
-    * signature `(count, hash-xor)` in the SAME job: the signature rides as
-    * `observe()` metrics on the `localCheckpoint` action, so each CC round
-    * costs one job, not a materialize-then-rescan pair. Equal signatures
-    * across rounds ⇒ the alternation reached its fixed point. XOR (not
-    * sum: ANSI mode throws on long overflow) is safe because edges are
-    * distinct, so no pair can self-cancel; collision between DIFFERENT
-    * consecutive edge sets is ~2⁻⁶⁴, and the count must match too. */
   /** Release the persisted blocks behind a `localCheckpoint`ed frame
     * (they live on the internal `LogicalRDD`, not in the CacheManager, so
     * neither `unpersist()` nor `clearCache()` reaches them). Only safe
@@ -653,6 +674,14 @@ object Dedup {
       case l: org.apache.spark.sql.execution.LogicalRDD => l.rdd
     }.foreach(_.unpersist(blocking = false))
 
+  /** Eagerly materialize an edge frame AND collect its order-insensitive
+    * signature `(count, hash-xor)` in the SAME job: the signature rides as
+    * `observe()` metrics on the `localCheckpoint` action, so each CC round
+    * costs one job, not a materialize-then-rescan pair. Equal signatures
+    * across rounds ⇒ the alternation reached its fixed point. XOR (not
+    * sum: ANSI mode throws on long overflow) is safe because edges are
+    * distinct, so no pair can self-cancel; collision between DIFFERENT
+    * consecutive edge sets is ~2⁻⁶⁴, and the count must match too. */
   private[graft] def checkpointWithSignature(edges: DataFrame): (DataFrame, (Long, Long)) = {
     if (reliableMode(edges)) {
       // reliable checkpoint() may recompute partitions (cached-block loss is

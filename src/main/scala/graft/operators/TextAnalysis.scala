@@ -514,18 +514,15 @@ object TextAnalysis {
 
   /** The ONE definition of the redaction chain, at expression level so the
     * SQL registration (`redact_pii` in [[graft.GraftExtensions]]) and the
-    * Column API below share it verbatim — order matters (email first so
-    * its digits/dots can't be half-eaten by the narrower patterns; IP
-    * before phone — neither can match inside the other's replacement). */
+    * Column API below share it verbatim: the `redacted` field of the
+    * native [[graft.functions.PiiScan]], which applies email, then IPv4,
+    * then phone. Order matters (email first so its digits/dots can't be
+    * half-eaten by the narrower patterns; IP before phone — neither can
+    * match inside the other's replacement). */
   def redactPiiExpr(e: org.apache.spark.sql.catalyst.expressions.Expression)
-      : org.apache.spark.sql.catalyst.expressions.Expression = {
-    import org.apache.spark.sql.catalyst.expressions.{Literal, RegExpReplace}
-    RegExpReplace(
-      RegExpReplace(
-        RegExpReplace(e, Literal(EmailRe), Literal("<EMAIL>")),
-        Literal(Ipv4Re), Literal("<IP>")),
-      Literal(PhoneRe), Literal("<PHONE>"))
-  }
+      : org.apache.spark.sql.catalyst.expressions.Expression =
+    org.apache.spark.sql.catalyst.expressions.GetStructField(
+      graft.functions.PiiScan(e), 3, Some("redacted"))
 
   /** PII redaction: emails, IPv4 addresses, and NANP-style phone numbers
     * replaced with typed placeholder tokens. Narrow per-row transform; a
@@ -537,13 +534,13 @@ object TextAnalysis {
   }
 
   /** Per-type PII match counts alongside the redacted text — the audit
-    * trail (how much was scrubbed) a curation run reports. */
+    * trail (how much was scrubbed) a curation run reports. The counts are
+    * matches in the ORIGINAL text, and all four columns come from one
+    * [[graft.functions.PiiScan]] per row. */
   def withPiiRedaction(df: DataFrame, textCol: String): DataFrame = {
-    val t = col(textCol)
-    df.withColumn("n_emails", size(regexp_extract_all(t, lit(EmailRe), lit(0))))
-      .withColumn("n_ips", size(regexp_extract_all(t, lit(Ipv4Re), lit(0))))
-      .withColumn("n_phones", size(regexp_extract_all(t, lit(PhoneRe), lit(0))))
-      .withColumn("redacted", redactPii(t))
+    val scan = graft.functions.PiiScan.piiScan(col(textCol))
+    df.withColumns(scala.collection.immutable.ListMap(
+      Seq("n_emails", "n_ips", "n_phones", "redacted").map(f => f -> scan.getField(f)): _*))
   }
 
   /** Document fingerprints: `md5_fp` of whitespace-normalized lowercase

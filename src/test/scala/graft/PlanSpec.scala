@@ -112,6 +112,54 @@ class PlanSpec extends SparkSpec {
       docs.select(operators.TextAnalysis.tokens(col("text"))))).nonEmpty)
   }
 
+  /** The regex passes the native [[graft.functions.PiiScan]] replaced. */
+  private def regexPasses(p: SparkPlan) =
+    flatten(p).flatMap(_.expressions.flatMap(_.collect {
+      case e: org.apache.spark.sql.catalyst.expressions.RegExpExtractAll => e
+      case e: org.apache.spark.sql.catalyst.expressions.RegExpReplace => e
+    }))
+
+  test("Pipeline.curate: no RegExpExtractAll and no RegExpReplace in the " +
+    "executed plan — the PII counts and redaction are one native scan") {
+    import org.apache.spark.sql.functions.{col, lit, pmod, regexp_extract_all, regexp_replace}
+    val docs = spark.read.parquet(s"$sf/documents.parquet")
+    val evalDocs = docs.filter(pmod(col("doc_id"), lit(97)) === 0)
+    val p = executed(Pipeline.curate(docs, evalDocs))
+    val found = regexPasses(p)
+    assert(found.isEmpty, s"regex passes in curate: ${found.map(_.prettyName)}\nplan:\n$p")
+    // detector sanity: the built-in forms trip it
+    assert(regexPasses(executed(docs.select(
+      regexp_extract_all(col("text"), lit(operators.TextAnalysis.EmailRe), lit(0)),
+      regexp_replace(col("text"), operators.TextAnalysis.PhoneRe, "<PHONE>")))).size == 2)
+  }
+
+  test("minhashDuplicates verifies on per-document shingle sets: no join " +
+    "keyed on a shingle, no broadcast of shingle rows") {
+    import org.apache.spark.sql.execution.joins.BaseJoinExec
+    def onShingle(e: org.apache.spark.sql.catalyst.expressions.Expression) =
+      e.references.exists(_.name == "shingle")
+    def shingleJoins(p: SparkPlan) = flatten(p).collect {
+      case j: BaseJoinExec if (j.leftKeys ++ j.rightKeys).exists(onShingle) => j
+    }
+    def shingleBroadcasts(p: SparkPlan) = flatten(p).collect {
+      case b: BroadcastExchangeLike if b.child.output.exists(_.name == "shingle") => b
+    }
+    val docs = spark.read.parquet(s"$sf/documents.parquet")
+    val sh = operators.Dedup.hashedWordShingles(docs, "doc_id", "text")
+    val got = operators.Dedup.minhashDuplicates(sh, 0.5)
+    val p = executed(got)
+    assert(shingleJoins(p).isEmpty, s"join keyed on a shingle:\n$p")
+    assert(shingleBroadcasts(p).isEmpty, s"broadcast of shingle rows:\n$p")
+    // detector sanity: the shingle-join form it replaced trips both, on
+    // the same candidates (so AQE did not prune the verify joins away)
+    val old = PropertySpec.minhashDuplicatesJoin(sh, 0.5)
+    val q = executed(old)
+    val n = old.count()
+    assert(n > 0 && n == got.count())
+    assert(shingleJoins(q).nonEmpty, s"detector missed the shingle join:\n$q")
+    assert(shingleBroadcasts(q).nonEmpty, s"detector missed the shingle broadcast:\n$q")
+  }
+
   test("q_topk: sort+limit fuse into TakeOrderedAndProject — no global sort") {
     val p = executed(SparkEntry.queries("q_topk")(spark, sf))
     assert(flatten(p).exists(

@@ -1437,4 +1437,164 @@ class PropertySpec extends SparkSpec {
       lists.collect().foreach(r => assert(r.getString(1) == r.getString(2), s"$r"))
     }
   }
+
+  // ---- PII scan and set-based MinHash verification ≡ their former forms ----
+
+  /** [[TextAnalysis.withPiiRedaction]] as it was before
+    * [[graft.functions.PiiScan]]: three `regexp_extract_all` counts on the
+    * original text and the `RegExpReplace` chain. */
+  private def withPiiRedactionRegex(df: org.apache.spark.sql.DataFrame, textCol: String) = {
+    import org.apache.spark.sql.catalyst.expressions.{Literal, RegExpReplace}
+    import org.apache.spark.sql.functions._
+    import org.apache.spark.sql.graft.Bridge
+    import TextAnalysis.{EmailRe, Ipv4Re, PhoneRe}
+    val t = col(textCol)
+    val chain = RegExpReplace(RegExpReplace(RegExpReplace(Bridge.expression(t),
+      Literal(EmailRe), Literal("<EMAIL>")), Literal(Ipv4Re), Literal("<IP>")),
+      Literal(PhoneRe), Literal("<PHONE>"))
+    df.withColumn("n_emails", size(regexp_extract_all(t, lit(EmailRe), lit(0))))
+      .withColumn("n_ips", size(regexp_extract_all(t, lit(Ipv4Re), lit(0))))
+      .withColumn("n_phones", size(regexp_extract_all(t, lit(PhoneRe), lit(0))))
+      .withColumn("redacted", Bridge.column(chain))
+  }
+
+  /** Random texts for the PII patterns, as raw UTF-8 bytes: emails, IPv4s
+    * and phones, an IPv4 inside an email, digit runs touching non-ASCII
+    * letters (where JDK 17's `\b` sees no boundary), near misses, texts
+    * with no `@` or digit, and the seven malformed UTF-8 kinds of
+    * `rawText`, all glued with and without separators. */
+  private val piiText: Gen[Option[Array[Byte]]] = {
+    def utf8(s: String) = s.getBytes(java.nio.charset.StandardCharsets.UTF_8)
+    val piece = Gen.frequency(
+      4 -> Gen.oneOf("a.user+tag@sub.example.co.uk", "x@y.io", "me@host", "a@b.c",
+        "bob@10.0.0.1.com", "1.2.3.4@mail.org", "@", "@@x.io", "z@w.dev").map(utf8),
+      4 -> Gen.oneOf("10.0.0.1", "192.168.1.255", "1.2.3.4.5", "999.1.1.1", "1.2.3",
+        "01.002.3.44").map(utf8),
+      4 -> Gen.oneOf("555-123-4567", "555.123.4567", "5551234567", "555-1234",
+        "555-123-45678", "(555) 123-4567").map(utf8),
+      3 -> Gen.oneOf("é123", "123é", "中1.2.3.4", "1.2.3.4ü", "ü555-123-4567",
+        "555-123-4567ß", "١٢٣", "ａ@ｂ.ｃｏ", "x@é.io").map(utf8),
+      5 -> Gen.oneOf("mail", "call", "the", "host", ".", "-", ",", "_", "7", "42").map(utf8),
+      5 -> Gen.oneOf(" ", "  ", "\t", "\n").map(utf8),
+      1 -> Gen.oneOf(Seq(0xFF), Seq(0x80), Seq(0xC3), Seq(0xE2, 0x82),
+        Seq(0xC0, 0xAF), Seq(0xED, 0xA0, 0x80), Seq(0xF0, 0x9F, 0x98))
+        .map(_.map(_.toByte).toArray))
+    val text = Gen.chooseNum(0, 16).flatMap(n => Gen.listOfN(n, piece))
+      .map(ps => Some(ps.toArray.flatten): Option[Array[Byte]])
+    Gen.frequency(1 -> Gen.const(None), 12 -> text)
+  }
+
+  test("PiiScan ≡ size(regexp_extract_all)×3 + the RegExpReplace chain bit " +
+    "for bit, through withPiiRedaction, redactPii and SQL redact_pii") {
+    import org.apache.spark.sql.functions._
+    val out = Seq("n_emails", "n_ips", "n_phones", "redacted")
+    val fixed = (fixedTexts ++ Seq("no pii here at all", "café ünï", "中文 😀",
+      "ip in mail bob@10.0.0.1.com", "x@y.io 10.0.0.1 555-123-4567").map(t =>
+      Some(t.getBytes(java.nio.charset.StandardCharsets.UTF_8)))) ++
+      Seq(Array(0xC3, 0x40, 0x31), Array(0x35, 0x35, 0x35, 0xFF, 0x2D)).map(b =>
+        Some(b.map(_.toByte)))
+    forAll(Gen.listOfN(80, piiText)) { texts =>
+      val df = textFrame(fixed ++ texts)
+      df.createOrReplaceTempView("pii_texts")
+      def rows(d: org.apache.spark.sql.DataFrame) = d.orderBy("id")
+        .select(Seq(col("id")) ++ out.init.map(col) :+ hex(col("redacted").cast("binary")): _*)
+        .collect().toSeq
+      val got = TextAnalysis.withPiiRedaction(df, "text")
+      val want = withPiiRedactionRegex(df, "text")
+      assert(got.schema == want.schema)
+      val w = rows(want)
+      val g = rows(got)
+      assert(g.length == w.length)
+      g.zip(w).foreach { case (a, b) => assert(a == b, s"id ${b.get(0)}") }
+      val byCol = df.select(col("id"), TextAnalysis.redactPii(col("text")).as("redacted"))
+      val bySql = spark.sql("SELECT id, redact_pii(text) AS redacted FROM pii_texts")
+      for (d <- Seq(byCol, bySql))
+        assert(d.orderBy("id").select(hex(col("redacted").cast("binary"))).collect().toSeq ==
+          w.map(r => org.apache.spark.sql.Row(r.get(4))))
+      // the generator reaches every branch of the scan
+      assert(w.exists(r => !r.isNullAt(1) && r.getInt(1) > 0 && r.getInt(2) > 0))
+      assert(w.exists(r => !r.isNullAt(1) && r.getInt(3) > 0))
+      assert(w.exists(r => r.isNullAt(1)))
+    }
+    // without ANSI mode `size` of a null array may read -1: the counts of
+    // a null text follow it
+    spark.conf.set("spark.sql.ansi.enabled", "false")
+    try {
+      val df = textFrame(fixed)
+      val cols = Seq("id", "n_emails", "n_ips", "n_phones", "redacted")
+      val want = withPiiRedactionRegex(df, "text").select(cols.map(col): _*)
+      val got = TextAnalysis.withPiiRedaction(df, "text").select(cols.map(col): _*)
+      assert(got.schema == want.schema)
+      assert(got.orderBy("id").collect().toSeq == want.orderBy("id").collect().toSeq)
+    } finally spark.conf.unset("spark.sql.ansi.enabled")
+  }
+
+  test("minhashDuplicates / jaccardFor (shingle sets) ≡ the shingle-join " +
+    "form on distinct rows, at two band geometries") {
+    import org.apache.spark.sql.functions._
+    import PropertySpec.{jaccardForJoin, minhashDuplicatesJoin}
+    def bits(d: org.apache.spark.sql.DataFrame) = d.collect().toSeq.map(r =>
+      (r.getLong(0), r.getLong(1), java.lang.Double.doubleToRawLongBits(r.getDouble(2)))).sorted
+    val word = Gen.oneOf("alpha", "beta", "gamma", "delta", "eps", "zeta", "eta", "theta")
+    val base = Gen.listOfN(10, word)
+    // near-dups: a few base docs, each copied with a word or two changed
+    val corpus = Gen.listOfN(4, base).flatMap(bs => Gen.listOfN(24, for {
+      b <- Gen.oneOf(bs); i <- Gen.chooseNum(0, 9); j <- Gen.chooseNum(0, 9)
+      w <- word; v <- word; keep <- Gen.chooseNum(6, 10)
+    } yield b.updated(i, w).updated(j, v).take(keep).mkString(" ")))
+    val pair = Gen.zip(Gen.chooseNum(-2L, 26L), Gen.chooseNum(-2L, 26L))
+    forAll(Gen.zip(corpus, Gen.listOfN(40, pair))) { case (texts, pairs) =>
+      // doc 24 shares no word with the others; ids 25, 26 and the
+      // negative ones are missing from the shingle frame
+      val docs = (texts.zipWithIndex.map { case (t, i) => (i.toLong, t) } :+
+        (24L, "omega psi chi phi upsilon tau sigma rho")).toDF("doc_id", "text")
+      val fwd = pairs ++ Seq((0L, 24L), (24L, 3L), (1L, 25L), (-1L, 2L), (3L, 3L))
+      val pairList = (fwd ++ fwd.map(_.swap)).distinct
+      for (sh <- Seq(Dedup.hashedWordShingles(docs, "doc_id", "text"),
+                     Dedup.wordShingles(docs, "doc_id", "text", 2))) {
+        assert(sh.count() == sh.distinct().count(), "the reference needs distinct rows")
+        for ((numHashes, bands) <- Seq((128, 32), (60, 12)); minJ <- Seq(0.3, 0.8)) {
+          val want = bits(minhashDuplicatesJoin(sh, minJ, numHashes, bands))
+          assert(bits(Dedup.minhashDuplicates(sh, minJ, numHashes, bands)) == want,
+            s"geometry ($numHashes, $bands), minJaccard $minJ")
+          if (minJ == 0.3) assert(want.nonEmpty)
+        }
+        val want = bits(jaccardForJoin(pairList.toDF("id_a", "id_b"), sh))
+        assert(bits(Dedup.jaccardFor(pairList.toDF("id_a", "id_b"), sh)) == want)
+        assert(want.exists(w => w._1 == 3L && w._2 == 3L) && want.exists(w => w._1 > w._2))
+        assert(want.forall { case (a, b, _) => Seq(a, b).forall(i => i >= 0 && i < 24) })
+      }
+    }
+  }
+}
+
+object PropertySpec {
+  import org.apache.spark.sql.DataFrame
+  import org.apache.spark.sql.functions._
+
+  /** [[Dedup.jaccardFor]] as it was before the shingle-set verification:
+    * `|A∩B|` from a join keyed on `(id_b, shingle)`, set sizes as row
+    * counts. Exact on distinct `(id, shingle)` and pair rows only. */
+  def jaccardForJoin(pairs: DataFrame, sh: DataFrame): DataFrame = {
+    val a = sh.select(col("sh_id").as("id_a"), col("shingle"))
+    val b = sh.select(col("sh_id").as("id_b"), col("shingle"))
+    val inter = pairs.join(a, Seq("id_a")).join(b, Seq("id_b", "shingle"))
+      .groupBy("id_a", "id_b").agg(count(lit(1)).as("inter"))
+    val sizes = sh.groupBy("sh_id").agg(count(lit(1)).as("sz"))
+    inter
+      .join(sizes.withColumnRenamed("sh_id", "id_a").withColumnRenamed("sz", "sz_a"), "id_a")
+      .join(sizes.withColumnRenamed("sh_id", "id_b").withColumnRenamed("sz", "sz_b"), "id_b")
+      .withColumn("jaccard",
+        col("inter").cast("double") / (col("sz_a") + col("sz_b") - col("inter")))
+      .select("id_a", "id_b", "jaccard")
+  }
+
+  /** [[Dedup.minhashDuplicates]] as it was: the shingle rows checkpointed,
+    * candidates from their signatures, verification by [[jaccardForJoin]]. */
+  def minhashDuplicatesJoin(sh0: DataFrame, minJaccard: Double,
+                            numHashes: Int = 128, bands: Int = 32): DataFrame = {
+    val sh = sh0.localCheckpoint()
+    val cands = Dedup.lshCandidatePairs(Dedup.minhashSignatures(sh, numHashes), bands, numHashes)
+    jaccardForJoin(cands, sh).filter(col("jaccard") >= minJaccard)
+  }
 }

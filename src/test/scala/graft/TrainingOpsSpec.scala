@@ -2890,6 +2890,39 @@ class TrainingOpsSpec extends SparkSpec {
     assert(messages(eNull1).contains("hash_split"), messages(eNull1))
   }
 
+  // repeated rows used to count once per repetition: the shingle join
+  // multiplied |A∩B| and the row count inflated |A|, so Jaccard exceeded 1
+  // or its denominator reached 0 (DIVIDE_BY_ZERO under ANSI)
+  private val repText = "the quick brown fox jumps over the lazy dog near the river"
+  private val nearText = "the quick brown fox jumps over the lazy cat near the river"
+
+  private def jaccards(df: org.apache.spark.sql.DataFrame) =
+    df.collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).sorted.toSeq
+
+  test("minhashDuplicates: two ids, each repeated with the same text, give one pair at 1.0") {
+    val docs = Seq((1L, repText), (1L, repText), (2L, repText), (2L, repText))
+      .toDF("doc_id", "text")
+    assert(jaccards(Dedup.minhashDuplicates(
+      Dedup.hashedWordShingles(docs, "doc_id", "text"), 0.8)) == Seq((1L, 2L, 1.0)))
+  }
+
+  test("minhashDuplicates: one repeated id scores its duplicate at 1.0, not 2.0") {
+    val docs = Seq((1L, repText), (1L, repText), (2L, repText)).toDF("doc_id", "text")
+    assert(jaccards(Dedup.minhashDuplicates(
+      Dedup.hashedWordShingles(docs, "doc_id", "text"), 0.8)) == Seq((1L, 2L, 1.0)))
+  }
+
+  test("jaccardFor: pairs listed twice give one row per pair, scored over distinct shingles") {
+    val sh = Dedup.hashedWordShingles(
+      Seq((1L, repText), (2L, repText), (3L, nearText)).toDF("doc_id", "text"),
+      "doc_id", "text")
+    val once = jaccards(Dedup.jaccardFor(Seq((1L, 2L), (1L, 3L)).toDF("id_a", "id_b"), sh))
+    // 10 word 3-grams each; "cat" replaces "dog" in 3 of them: 7 / 13
+    assert(once == Seq((1L, 2L, 1.0), (1L, 3L, 7.0 / 13)))
+    assert(jaccards(Dedup.jaccardFor(
+      Seq((1L, 2L), (1L, 3L), (1L, 2L), (1L, 3L)).toDF("id_a", "id_b"), sh)) == once)
+  }
+
   test("redactPii: emails, IPv4s, phones replaced; counts audit the scrub") {
     val d = Seq(
       (1L, "mail a.user+tag@sub.example.co.uk or call 555-123-4567 from 10.0.0.1"),
