@@ -20,39 +20,15 @@ import org.apache.spark.sql.SparkSession
   * window. Per-query shuffle/spill totals ride alongside wall time in the
   * JSON so regressions are attributable without a profiler.
   *
-  * `SPARK_GRAFT_ONLY=q_a,q_b` restricts the run (dev loop).
-  * `SPARK_GRAFT_SCALE_SLOPE=1` instead measures the LSH dedup pipeline's
-  * wall-time slope across 1×–16× synthetic corpus replications — the
-  * empirical evidence that candidate-generate-verify scales near-
-  * linearly (a quadratic path would show a log-log slope near 2). The
-  * `_EMBED`/`_INTERVAL`/`_SIMHASH`/`_CURATE`/`_INDEX`/`_KMEANS`/`_IVF`
-  * variants measure the other scale claims the same way,
-  * `SPARK_GRAFT_SCALE_SPANS=1` measures the span-duplication profile
-  * (with exact-linearity requires on its count columns),
-  * `SPARK_GRAFT_SCALE_SPAN_INDEX=1` measures the span-index SERVING
-  * economics (flat vs bucketed vs sketch gate: per-serve shuffle across
-  * a corpus ladder, plus the append/compact file-count lifecycle), and
-  * `SPARK_GRAFT_SCALE_COMPACT=1` measures the banded-index COMPACTION
-  * lifecycle (serve cost and files-per-bucket vs append count, before and
-  * after `compactBandedIndex`), `SPARK_GRAFT_SCALE_IVF_LIFECYCLE=1`
-  * measures the learned-IVF ingest cycle the same way (serve cost and
-  * files-per-cell vs `appendToIvfIndex` count, before and after
-  * `compactIvfIndex`), and `SPARK_GRAFT_SCALE_RECALL=1`
-  * measures the served IVF's recall@10 vs nprobe (with the all-cells
-  * point isolating the quantization-only ceiling), and
-  * `SPARK_GRAFT_SCALE_OPQ=1` measures the learned OPQ composition's
-  * size ladder (encode linear, pruned serve-read flat, bytes/vector),
-  * and `SPARK_GRAFT_SCALE_LM=1` measures LM train/score economics over
-  * rotated replicas plus BPE's vocab-not-corpus merge-loop claim over
-  * plain replicas, and `SPARK_GRAFT_SCALE_BM25=1` measures the
-  * term-sorted postings layout's row-group pruning against an unsorted
-  * control — each writes its own
-  * `bench_scale_*.json`; the claims and committed values are catalogued
-  * in COVERAGE.md. */
+  * `SPARK_GRAFT_ONLY=q_a,q_b` restricts the run (dev loop). Setting one
+  * of the `SPARK_GRAFT_SCALE_*` env vars listed in [[harnesses]] runs that
+  * scale harness instead: it measures one scale claim across a replica
+  * ladder and writes its own `bench_scale*.json`; the claims and committed
+  * values are catalogued in COVERAGE.md. */
 object Bench {
 
   /** Accumulates task-level IO counters; reset per timed query. */
-  private final class TaskMetricsListener extends SparkListener {
+  private[graft] final class TaskMetricsListener extends SparkListener {
     val shuffleRead = new AtomicLong; val shuffleWrite = new AtomicLong
     val memSpill = new AtomicLong; val diskSpill = new AtomicLong
     val inputBytes = new AtomicLong
@@ -77,15 +53,19 @@ object Bench {
     df.write.format("noop").mode("overwrite").save()
 
   def main(args: Array[String]): Unit = {
-    // every JSON artifact here is built with the locale-sensitive f
+    // the query record below is built with the locale-sensitive f
     // interpolator — under a comma-decimal default locale (de_DE, …) the
-    // output would be invalid JSON. Pin the root locale once.
+    // output would be invalid JSON. Pin the root locale once. (The scale
+    // harnesses' Record formats with Locale.ROOT itself.)
     java.util.Locale.setDefault(java.util.Locale.ROOT)
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val warmupDir = sys.env.getOrElse("SPARK_GRAFT_WARMUP_DIR", "/root/testdata/sf0.001")
     val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(',').map(_.trim).toSet)
-    val spark = Sessions.local(cpus)
+    // the harness is chosen before the session exists: some need
+    // creation-time configs (the FAIR scheduler)
+    val harness = harnesses.find(h => sys.env.contains(h.env))
+    val spark = Sessions.local(cpus, harness.fold(Map.empty[String, String])(_.sessionConf))
     val listener = new TaskMetricsListener
     spark.sparkContext.addSparkListener(listener)
 
@@ -111,106 +91,12 @@ object Bench {
       System.gc(); Thread.sleep(100)
     }
 
-    if (sys.env.contains("SPARK_GRAFT_SCALE_SLOPE")) {
-      scaleSlope(spark, sfDir, () => dropPersistedState())
-      spark.stop()
-      return
-    }
-    if (sys.env.contains("SPARK_GRAFT_SCALE_SLOPE_EMBED")) {
-      scaleSlopeEmbed(spark, sfDir, () => dropPersistedState())
-      spark.stop()
-      return
-    }
-    if (sys.env.contains("SPARK_GRAFT_SCALE_SLOPE_INTERVAL")) {
-      scaleSlopeInterval(spark, sfDir, () => dropPersistedState())
-      spark.stop()
-      return
-    }
-    if (sys.env.contains("SPARK_GRAFT_SCALE_SLOPE_SIMHASH")) {
-      scaleSlopeSimhash(spark, sfDir, () => dropPersistedState())
-      spark.stop()
-      return
-    }
-    if (sys.env.contains("SPARK_GRAFT_SCALE_SLOPE_CURATE")) {
-      scaleSlopeCurate(spark, sfDir, () => dropPersistedState())
-      spark.stop()
-      return
-    }
-    if (sys.env.contains("SPARK_GRAFT_SCALE_SLOPE_INDEX")) {
-      scaleSlopeIndex(spark, sfDir, () => dropPersistedState())
-      spark.stop()
-      return
-    }
-    if (sys.env.contains("SPARK_GRAFT_SCALE_SLOPE_KMEANS")) {
-      scaleSlopeKmeans(spark, sfDir, () => dropPersistedState())
-      spark.stop()
-      return
-    }
-    if (sys.env.contains("SPARK_GRAFT_SCALE_SLOPE_IVF")) {
-      scaleSlopeIvf(spark, sfDir, () => dropPersistedState())
-      spark.stop()
-      return
-    }
-    if (sys.env.contains("SPARK_GRAFT_SCALE_SPANS")) {
-      scaleSlopeSpans(spark, sfDir, () => dropPersistedState())
-      spark.stop()
-      return
-    }
-    if (sys.env.contains("SPARK_GRAFT_SCALE_SPAN_INDEX")) {
-      scaleSpanIndexServing(spark, sfDir, () => dropPersistedState())
-      spark.stop()
-      return
-    }
-    if (sys.env.contains("SPARK_GRAFT_SCALE_COMPACT")) {
-      scaleCompaction(spark, sfDir, () => dropPersistedState())
-      spark.stop()
-      return
-    }
-    if (sys.env.contains("SPARK_GRAFT_SCALE_IVF_LIFECYCLE")) {
-      scaleIvfLifecycle(spark, sfDir, () => dropPersistedState())
-      spark.stop()
-      return
-    }
-    if (sys.env.contains("SPARK_GRAFT_SCALE_RECALL")) {
-      scaleRecallNprobe(spark, sfDir, () => dropPersistedState())
-      spark.stop()
-      return
-    }
-    if (sys.env.contains("SPARK_GRAFT_SCALE_OPQ")) {
-      scaleSlopeOpq(spark, sfDir, () => dropPersistedState())
-      spark.stop()
-      return
-    }
-    if (sys.env.contains("SPARK_GRAFT_SCALE_LM")) {
-      scaleLmBpe(spark, sfDir, () => dropPersistedState())
-      spark.stop()
-      return
-    }
-    if (sys.env.contains("SPARK_GRAFT_SCALE_BM25")) {
-      scaleBm25Serving(spark, sfDir, () => dropPersistedState())
-      spark.stop()
-      return
-    }
-    if (sys.env.contains("SPARK_GRAFT_SCALE_CURATE_STREAM")) {
-      scaleCurateStream(spark, sfDir, () => dropPersistedState())
-      spark.stop()
-      return
-    }
-    if (sys.env.contains("SPARK_GRAFT_SCALE_CONCURRENT")) {
-      // this harness needs a FAIR-scheduler context (creation-time-only
-      // config) — it stops the session it was handed and builds its own
-      scaleConcurrentServing(spark, sfDir, cpus)
-      return
-    }
-    if (sys.env.contains("SPARK_GRAFT_SCALE_QC")) {
-      scaleQualityClassifier(spark, sfDir, () => dropPersistedState())
-      spark.stop()
-      return
-    }
-    if (sys.env.contains("SPARK_GRAFT_SCALE_MM")) {
-      scaleMultimodalDedup(spark, sfDir, () => dropPersistedState())
-      spark.stop()
-      return
+    harness match {
+      case Some(h) =>
+        val ctx = new Ctx(spark, sfDir, repsFromEnv(), () => dropPersistedState(), listener)
+        try ctx.emit(h.file, h.run(ctx)) finally spark.stop()
+        return
+      case None =>
     }
 
     val all = SparkEntry.queries.toSeq.sortBy(_._1)
@@ -269,7 +155,11 @@ object Bench {
           // the r20 noop-timed quiet medians); count()-era numbers remain
           // in BENCH_r01..r19 / the r19 bench_full.json history.
           noopSink(fn(spark, sfDir))
-          runs += (((System.nanoTime() - t0) / 1e9, listener.shuffleWrite.get / mb,
+          val secs = (System.nanoTime() - t0) / 1e9
+          // the listener bus is asynchronous: drain it, after the timer,
+          // so the io columns include the query's last tasks
+          org.apache.spark.sql.graft.ListenerBus.drain(spark.sparkContext)
+          runs += ((secs, listener.shuffleWrite.get / mb,
             listener.memSpill.get / mb, listener.diskSpill.get / mb))
         } catch { case e: Throwable =>
           System.err.println(s"[bench] $name failed: ${e.getMessage}"); failed = true
@@ -803,9 +693,16 @@ object Bench {
       }
     } catch { case _: Throwable => Map.empty }
 
-  /** Log-log least-squares slope, shared by the three scale harnesses so
-    * their artifacts stay comparable by construction. */
-  private def logLogSlope(sizes: Seq[Int], ys: Seq[Double]): Double = {
+  // ---- scale harnesses: shared pieces ----
+
+  import org.apache.spark.sql.{Column, DataFrame}
+  import org.apache.spark.sql.functions._
+
+  private val MB = 1024.0 * 1024.0
+
+  /** Log-log least-squares slope, shared by every scale harness so their
+    * artifacts stay comparable by construction. */
+  private[graft] def logLogSlope(sizes: Seq[Int], ys: Seq[Double]): Double = {
     val lx = sizes.map(n => math.log(n.toDouble))
     val ly = ys.map(math.log)
     val mx = lx.sum / lx.size; val my = ly.sum / ly.size
@@ -813,14 +710,227 @@ object Bench {
       lx.map(a => (a - mx) * (a - mx)).sum
   }
 
-  private def jsonArr[A](xs: Seq[A])(f: A => Any): String =
-    xs.map(f).mkString("[", ",", "]")
+  /** Log-log slopes between consecutive ladder points — a healthy overall
+    * fit can hide a super-linear tail. */
+  private[graft] def segmentSlopes(sizes: Seq[Int], ys: Seq[Double]): Seq[Double] =
+    sizes.zip(ys).sliding(2).map { case Seq((n1, t1), (n2, t2)) =>
+      math.log(t2 / t1) / math.log(n2.toDouble / n1)
+    }.toSeq
 
   /** Try-parse SPARK_GRAFT_REPS: a malformed value degrades to the
     * default instead of crashing the run before any query executes. */
   private def repsFromEnv(default: Int = 3): Int =
     math.max(1, sys.env.get("SPARK_GRAFT_REPS")
       .flatMap(v => scala.util.Try(v.toInt).toOption).getOrElse(default))
+
+  /** Task IO of one timed rep, read after the listener bus drained. */
+  private[graft] final case class Io(shuffleMb: Double, inputMb: Double)
+
+  /** Median-of-reps timing: `secs` is the upper median (the middle rep of
+    * an odd count, the upper of the two middle reps of an even one), `io`
+    * the IO of that same rep — so secs and MB describe one run — and
+    * `last` the body's result on the final rep. */
+  private[graft] final case class Timed[A](secs: Double, min: Double, max: Double,
+                                           io: Io, last: A)
+
+  private[graft] def summarize[A](runs: Seq[(Double, Io)], last: A): Timed[A] = {
+    val byTime = runs.sortBy(_._1)
+    val (med, io) = byTime(byTime.size / 2)
+    Timed(med, byTime.head._1, byTime.last._1, io, last)
+  }
+
+  /** Runs `body` `reps` times, `before` ahead of each run and `io` after
+    * its timer stopped; only `body` is inside the timed window. */
+  private[graft] def timed[A](reps: Int, before: () => Unit, io: () => Io)(body: => A): Timed[A] = {
+    var last: Option[A] = None
+    val runs = (0 until reps).map { _ =>
+      before()
+      val t0 = System.nanoTime()
+      last = Some(body)
+      val secs = (System.nanoTime() - t0) / 1e9
+      (secs, io())
+    }
+    summarize(runs, last.get)
+  }
+
+  /** One run of `body`: its result and wall seconds. */
+  private def clock[A](body: => A): (A, Double) = {
+    val t0 = System.nanoTime()
+    val a = body
+    (a, (System.nanoTime() - t0) / 1e9)
+  }
+
+  /** One ladder point's measurements, by column name. */
+  private[graft] final class Point(val cols: Map[String, Any]) {
+    def apply(k: String): Any = cols(k)
+    def l(k: String): Long = cols(k) match { case n: Int => n.toLong; case n: Long => n }
+    def d(k: String): Double = cols(k) match {
+      case n: Double => n; case n: Int => n.toDouble; case n: Long => n.toDouble
+    }
+    def ++(kvs: (String, Any)*): Point = new Point(cols ++ kvs)
+    /** `name`, `name_min` and `name_max` of a timed measurement. */
+    def spread(name: String, t: Timed[_]): Point =
+      this ++ (name -> t.secs, s"${name}_min" -> t.min, s"${name}_max" -> t.max)
+  }
+
+  private[graft] object Point {
+    def apply(kvs: (String, Any)*): Point = new Point(kvs.toMap)
+  }
+
+  /** One JSON object, built key by key in output order. Integers,
+    * booleans, strings, sequences and nested records render as written;
+    * doubles only through an explicit format, always with a '.' decimal
+    * separator whatever the default locale. Per-point columns render as
+    * one array per column; slopes are fitted against the `sizes` column. */
+  private[graft] final class Record {
+    private val fields = collection.mutable.ArrayBuffer.empty[String]
+
+    private def add(k: String, v: String): Record = { fields += s""""$k":$v"""; this }
+    def put(k: String, v: Any): Record = add(k, Record.json(v))
+    def num(k: String, v: Double, fmt: String = "%.3f"): Record = add(k, Record.fmt(fmt, v))
+    def nums(k: String, vs: Seq[Double], fmt: String = "%.3f"): Record =
+      add(k, vs.map(Record.fmt(fmt, _)).mkString("[", ",", "]"))
+    def cols(pts: Seq[Point], ks: String*): Record =
+      ks.foldLeft(this)((r, k) => r.put(k, pts.map(_(k))))
+    def fmt(fmt: String, pts: Seq[Point], ks: String*): Record =
+      ks.foldLeft(this)((r, k) => r.nums(k, pts.map(_.d(k)), fmt))
+    def secs(pts: Seq[Point], ks: String*): Record = fmt("%.3f", pts, ks: _*)
+    def mb(pts: Seq[Point], ks: String*): Record = fmt("%.2f", pts, ks: _*)
+    /** The three columns of a [[Point.spread]]. */
+    def spread(pts: Seq[Point], name: String): Record =
+      secs(pts, name, s"${name}_min", s"${name}_max")
+    /** Log-log slope of column `y` over `sizes`; `floor` keeps a column
+      * that can legitimately read 0 (a shuffle-free serve) out of log(0). */
+    def slope(k: String, pts: Seq[Point], y: String,
+              floor: Double = Double.NegativeInfinity): Record =
+      num(k, logLogSlope(Record.sizes(pts), pts.map(p => math.max(p.d(y), floor))))
+    def segmentSlopes(k: String, pts: Seq[Point], y: String): Record =
+      nums(k, Bench.segmentSlopes(Record.sizes(pts), pts.map(_.d(y))))
+    def render: String = fields.mkString("{", ",", "}")
+  }
+
+  private[graft] object Record {
+    def metric(name: String): Record = new Record().put("metric", name)
+    def fmt(f: String, v: Double): String = f.formatLocal(java.util.Locale.ROOT, v)
+    private def sizes(pts: Seq[Point]): Seq[Int] = pts.map(_.l("sizes").toInt)
+    private def json(v: Any): String = v match {
+      case s: String => "\"" + s + "\""
+      case r: Record => r.render
+      case xs: Iterable[_] => xs.map(json).mkString("[", ",", "]")
+      case n @ (_: Int | _: Long | _: Boolean) => n.toString
+      case other => throw new IllegalArgumentException(
+        s"no JSON form for $other: format doubles with num/nums")
+    }
+  }
+
+  /** What a scale harness runs against: `main`'s session, the data dir,
+    * the rep count, `main`'s drop-and-settle barrier and its task-metrics
+    * listener. */
+  private[graft] final class Ctx(val spark: SparkSession, val sfDir: String, val reps: Int,
+                                 dropState: () => Unit, listener: TaskMetricsListener) {
+    def drop(): Unit = dropState()
+    /** Median of `reps` runs of `body`, each after [[drop]]. */
+    def timed[A](body: => A): Timed[A] = timedAfter(())(body)
+    /** [[timed]] with an untimed `prep` between the drop and the timer. */
+    def timedAfter[A](prep: => Unit)(body: => A): Timed[A] =
+      Bench.timed(reps, () => { dropState(); prep; listener.reset() }, () => readIo())(body)
+    private def readIo(): Io = {
+      org.apache.spark.sql.graft.ListenerBus.drain(spark.sparkContext)
+      Io(listener.shuffleWrite.get / MB, listener.inputBytes.get / MB)
+    }
+    def docs: DataFrame = spark.read.parquet(s"$sfDir/documents.parquet")
+      .select("doc_id", "text")
+    def embeddings: DataFrame = spark.read.parquet(s"$sfDir/embeddings.parquet")
+      .select("vec_id", "embedding")
+    /** Writes the record, closed by `sf`, to `file` and prints it. */
+    def emit(file: String, r: Record): Unit = {
+      val line = r.put("sf", sfDir).render
+      try java.nio.file.Files.write(java.nio.file.Paths.get(file),
+        (line + "\n").getBytes("UTF-8"))
+      catch { case e: Throwable => System.err.println(s"[bench] $file: ${e.getMessage}") }
+      println(line)
+    }
+  }
+
+  /** One `SPARK_GRAFT_SCALE_*` harness: the env var that selects it, the
+    * artifact it writes, the session configs it needs at creation time,
+    * and the body that measures and returns the record. */
+  private[graft] final case class Harness(env: String, file: String,
+                                          sessionConf: Map[String, String] = Map.empty)(
+      val run: Ctx => Record)
+
+  /** Every scale harness, in selection order: `main` runs the first one
+    * whose env var is set. The claims and committed values are catalogued
+    * in COVERAGE.md. */
+  private[graft] val harnesses: Seq[Harness] = Seq(
+    Harness("SPARK_GRAFT_SCALE_SLOPE", "bench_scale.json")(scaleSlope),
+    Harness("SPARK_GRAFT_SCALE_SLOPE_EMBED", "bench_scale_embed.json")(scaleSlopeEmbed),
+    Harness("SPARK_GRAFT_SCALE_SLOPE_INTERVAL", "bench_scale_interval.json")(scaleSlopeInterval),
+    Harness("SPARK_GRAFT_SCALE_SLOPE_SIMHASH", "bench_scale_simhash.json")(scaleSlopeSimhash),
+    Harness("SPARK_GRAFT_SCALE_SLOPE_CURATE", "bench_scale_curate.json")(scaleSlopeCurate),
+    Harness("SPARK_GRAFT_SCALE_SLOPE_INDEX", "bench_scale_index.json")(scaleSlopeIndex),
+    Harness("SPARK_GRAFT_SCALE_SLOPE_KMEANS", "bench_scale_kmeans.json")(scaleSlopeKmeans),
+    Harness("SPARK_GRAFT_SCALE_SLOPE_IVF", "bench_scale_ivf.json")(scaleSlopeIvf),
+    Harness("SPARK_GRAFT_SCALE_SPANS", "bench_scale_spans.json")(scaleSlopeSpans),
+    Harness("SPARK_GRAFT_SCALE_SPAN_INDEX", "bench_scale_span_index.json")(scaleSpanIndexServing),
+    Harness("SPARK_GRAFT_SCALE_COMPACT", "bench_scale_compact.json")(scaleCompaction),
+    Harness("SPARK_GRAFT_SCALE_IVF_LIFECYCLE", "bench_scale_ivf_lifecycle.json")(scaleIvfLifecycle),
+    Harness("SPARK_GRAFT_SCALE_RECALL", "bench_scale_recall.json")(scaleRecallNprobe),
+    Harness("SPARK_GRAFT_SCALE_OPQ", "bench_scale_opq.json")(scaleSlopeOpq),
+    Harness("SPARK_GRAFT_SCALE_LM", "bench_scale_lm.json")(scaleLmBpe),
+    Harness("SPARK_GRAFT_SCALE_BM25", "bench_scale_bm25.json")(scaleBm25Serving),
+    Harness("SPARK_GRAFT_SCALE_CURATE_STREAM", "bench_scale_curate_stream.json")(scaleCurateStream),
+    // spark.scheduler.mode is read only when the context is created
+    Harness("SPARK_GRAFT_SCALE_CONCURRENT", "bench_scale_concurrent.json",
+      Map("spark.scheduler.mode" -> "FAIR"))(scaleConcurrentServing),
+    Harness("SPARK_GRAFT_SCALE_QC", "bench_scale_qc.json")(scaleQualityClassifier),
+    Harness("SPARK_GRAFT_SCALE_MM", "bench_scale_multimodal.json")(scaleMultimodalDedup))
+
+  private def idSpan(df: DataFrame, c: String): Long = df.agg(max(c)).head().getLong(0) + 1
+
+  /** Replicas `0 until n`, unioned: one ladder point's corpus. */
+  private def replicas(n: Int)(replica: Int => DataFrame): DataFrame =
+    (0 until n).map(replica).reduce(_ unionByName _)
+
+  /** Exact replica linearity: each column at size k is k times its 1x value. */
+  private def requireLinear(pts: Seq[Point], what: String, ks: String*): Unit =
+    pts.foreach { p =>
+      val n = p.l("sizes")
+      require(ks.forall(k => p.l(k) == pts.head.l(k) * n),
+        s"$what at ${n}x: ${ks.mkString("/")} (${ks.map(p.l).mkString(",")}) vs 1x " +
+          s"(${ks.map(pts.head.l).mkString(",")})")
+    }
+
+  private def treeBytes(f: java.io.File, keep: java.io.File => Boolean = _ => true): Long =
+    if (f.isFile) (if (keep(f)) f.length else 0L)
+    else Option(f.listFiles).getOrElse(Array.empty).map(treeBytes(_, keep)).sum
+
+  private def parquetBytes(path: String): Long =
+    treeBytes(new java.io.File(path), _.getName.endsWith(".parquet"))
+
+  private def parquetFiles(path: String): Int =
+    Option(new java.io.File(path).listFiles).getOrElse(Array.empty).map(f =>
+      if (f.isDirectory) parquetFiles(f.getPath)
+      else if (f.getName.endsWith(".parquet")) 1 else 0).sum
+
+  /** Data files in a catalog table's location. */
+  private def tableFiles(spark: SparkSession, t: String): Int = {
+    val loc = new java.io.File(new java.net.URI(spark.sessionState.catalog
+      .getTableMetadata(spark.sessionState.sqlParser.parseTableIdentifier(t))
+      .location.toString))
+    Option(loc.listFiles()).getOrElse(Array.empty)
+      .count(f => f.isFile && !f.getName.startsWith("_") && !f.getName.startsWith("."))
+  }
+
+  private def dropTables(spark: SparkSession, prefix: String, suffixes: String*): Unit =
+    suffixes.foreach(s => spark.sql(s"DROP TABLE IF EXISTS ${prefix}_$s"))
+
+  /** A temporary directory for `body`, deleted afterwards. */
+  private def withWork[A](prefix: String)(body: String => A): A = {
+    val work = java.nio.file.Files.createTempDirectory(prefix).toString
+    try body(work)
+    finally org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(work))
+  }
 
   /** Per-replica bijective character rotation over a `(doc_id, text)`
     * frame — shared by the text scale harnesses: within-replica
@@ -832,9 +942,7 @@ object Bench {
     * assumption the exact-multiple requires below lean on is that no
     * full n-gram consists ONLY of punctuation-and-symbol tokens — such a
     * gram would be rotation-invariant and shared across replicas. */
-  private def rotatedReplica(docs: org.apache.spark.sql.DataFrame,
-                             idSpan: Long, k: Int): org.apache.spark.sql.DataFrame = {
-    import org.apache.spark.sql.functions._
+  private def rotatedReplica(docs: DataFrame, idSpan: Long, k: Int): DataFrame = {
     val alpha = "abcdefghijklmnopqrstuvwxyz"
     val digits = "0123456789"
     val rot = alpha.drop(k % 26) + alpha.take(k % 26)
@@ -847,19 +955,87 @@ object Bench {
         rot + rot.toUpperCase + drot).as("text"))
   }
 
-  /** Per-segment log-log slopes between consecutive ladder points as a
-    * JSON array — a healthy overall fit can hide a super-linear tail. */
-  private def segmentSlopesJson(sizes: Seq[Int], meds: Seq[Double]): String =
-    sizes.zip(meds).sliding(2).map { case Seq((n1, t1), (n2, t2)) =>
-      f"${math.log(t2 / t1) / math.log(n2.toDouble / n1)}%.3f"
-    }.mkString("[", ",", "]")
+  /** Replica `k` of the embeddings, ids shifted by `k·idStride`, each
+    * vector flipped by a deterministic per-(replica, dimension) ±1
+    * diagonal — an orthogonal transform: within-replica cosines are
+    * EXACTLY preserved while cross-replica cosines decorrelate. Replica 0
+    * is the identity, so the 1x point is the untransformed corpus. */
+  private def signFlipped(base: DataFrame, k: Int, idStride: Long): DataFrame = {
+    val signs =
+      if (k == 0) transform(sequence(lit(1), lit(64)), _ => lit(1.0))
+      else transform(sequence(lit(1), lit(64)),
+        i => when(pmod(xxhash64(lit(k), i), lit(2)) === 0, 1.0).otherwise(-1.0))
+    base.select((col("vec_id") + lit(k * idStride)).as("vec_id"),
+      zip_with(col("embedding").cast("array<double>"), signs, (x, s) => x * s)
+        .as("embedding"))
+  }
+
+  // ---- scale harnesses ----
+
+  /** LSH scale-slope harness: replicate the documents corpus k× with a
+    * per-replica bijective character rotation (within-replica near-dup
+    * structure preserved exactly; cross-replica shingle overlap destroyed,
+    * so pair counts grow LINEARLY in k) and time the full LSH dedup at
+    * each size. Reports log-log slopes: near 1 = the candidate-generate-
+    * verify claim holds; near 2 = something quadratic crept in.
+    *
+    * `cc_rounds`: large/small-star rounds to the fixed point per size — the
+    * empirical side of the O(log n) convergence claim (flat-ish growth
+    * across 16× replicas, never proportional to size). `cc_edge_trace`
+    * pins the per-round EDGE VOLUME alongside (monotone contraction to
+    * the star set, require-checked): rounds staying flat while an
+    * intermediate round ballooned would be a hidden quadratic — the
+    * trace makes that unconstructable silently. */
+  private def scaleSlope(c: Ctx): Record = {
+    import graft.operators.Dedup
+    val docs = c.docs
+    val span = idSpan(docs, "doc_id")
+    def replica(k: Int) = rotatedReplica(docs, span, k)
+    // untimed warmup: codegen + JIT + shuffle-machinery init, so the 1×
+    // point isn't inflated by first-run costs and slopes aren't skewed
+    Dedup.duplicateClusters(Dedup.minhashDuplicates(
+      Dedup.hashedWordShingles(replica(0), "doc_id", "text"), 0.8)).count()
+    c.drop()
+    val pts = Seq(1, 2, 4, 8, 16).map { n =>
+      // NOT checkpointed: dropState() between timings would evict the
+      // blocks mid-use; the union-of-translates re-scan is linear in n and
+      // identical across both timed runs, so slopes are unaffected
+      val corpus = replicas(n)(replica)
+      val nDocs = corpus.count()
+      def sh = Dedup.hashedWordShingles(corpus, "doc_id", "text")
+      val pairs = c.timed(Dedup.minhashDuplicates(sh, 0.8).count())
+      val e2e = c.timed {
+        val (clusters, rounds, trace) = Dedup.duplicateClustersWithTrace(
+          Dedup.minhashDuplicates(sh, 0.8))
+        (clusters.count(), rounds, trace)
+      }
+      val (nClusters, ccRounds, ccTrace) = e2e.last
+      // the trace must CONTRACT monotonically to the star edge set —
+      // an intermediate blow-up would be the hidden quadratic the
+      // rounds-flat headline could mask
+      ccTrace.sliding(2).foreach {
+        case Seq(a, b) => require(b <= a,
+          s"CC edge volume grew mid-alternation at ${n}x: $ccTrace")
+        case _ =>
+      }
+      c.drop()
+      Point("sizes" -> n, "docs" -> nDocs, "pairs" -> pairs.last, "clusters" -> nClusters,
+        "cc_rounds" -> ccRounds, "cc_edge_trace" -> ccTrace)
+        .spread("pair_secs", pairs).spread("e2e_secs", e2e)
+    }
+    Record.metric("lsh_scale_slope").put("reps", c.reps)
+      .cols(pts, "sizes", "docs", "pairs", "clusters")
+      .spread(pts, "pair_secs").spread(pts, "e2e_secs")
+      .cols(pts, "cc_rounds", "cc_edge_trace")
+      .slope("slope_pairs", pts, "pair_secs").slope("slope_e2e", pts, "e2e_secs")
+      .segmentSlopes("segment_slopes_pairs", pts, "pair_secs")
+      .segmentSlopes("segment_slopes_e2e", pts, "e2e_secs")
+  }
 
   /** Cosine-LSH scale-slope harness — the embedding twin of [[scaleSlope]]:
-    * replicate the embeddings corpus k×, flipping each replica's vectors
-    * by a per-replica deterministic ±1 diagonal (an orthogonal transform:
-    * within-replica pairwise cosines are EXACTLY preserved, so each
-    * replica contributes the same near-dup structure, while cross-replica
-    * cosines decorrelate — pair counts grow linearly in k). Planted
+    * replicate the embeddings corpus k× through [[signFlipped]], so each
+    * replica contributes the same near-dup structure while cross-replica
+    * cosines decorrelate — pair counts grow linearly in k. Planted
     * near-dups per replica follow the q_embed_lsh_pairs construction.
     *
     * Measurement discipline (the r6 audit's asks): every timed point is
@@ -872,89 +1048,49 @@ object Bench {
     * verify grow linearly, while prepare carries the geometry's
     * `bands·bits ∝ log² n` per-row work — a slope of ~1.2-1.3 on that
     * stage is the LOG-FACTOR cost of holding per-pair recall fixed as
-    * the corpus grows, not a quadratic path. Writes
-    * `bench_scale_embed.json`. */
-  private def scaleSlopeEmbed(spark: SparkSession, sfDir: String,
-                              dropState: () => Unit): Unit = {
-    import org.apache.spark.sql.functions._
+    * the corpus grows, not a quadratic path. */
+  private def scaleSlopeEmbed(c: Ctx): Record = {
     import graft.operators.{Materialize, Similarity}
-    val base = spark.read.parquet(s"$sfDir/embeddings.parquet")
-      .select("vec_id", "embedding")
-    val idSpan = base.agg(max("vec_id")).head().getLong(0) + 1
+    val base = c.embeddings
+    val span = idSpan(base, "vec_id")
     def replica(k: Int) = {
-      // deterministic per-(replica, dimension) sign; replica 0 = identity
-      // so the 1x point is the untransformed corpus
-      val signs =
-        if (k == 0) transform(sequence(lit(1), lit(64)), _ => lit(1.0))
-        else transform(sequence(lit(1), lit(64)),
-          i => when(pmod(xxhash64(lit(k), i), lit(2)) === 0, 1.0).otherwise(-1.0))
-      val flipped = zip_with(col("embedding").cast("array<double>"), signs,
-        (x, s) => x * s)
-      val withPlanted = base.select(col("vec_id"), flipped.as("v"))
-      withPlanted.select(col("vec_id"), col("v"))
-        .unionByName(withPlanted.select((col("vec_id") + idSpan).as("vec_id"),
-          concat(array(-element_at(col("v"), 1)), slice(col("v"), 2, 63)).as("v")))
-        .select((col("vec_id") + lit(k * 2 * idSpan)).as("vec_id"), col("v").as("embedding"))
+      val v = signFlipped(base, k, 0L)
+      v.unionByName(v.select((col("vec_id") + span).as("vec_id"),
+          concat(array(-element_at(col("embedding"), 1)), slice(col("embedding"), 2, 63))
+            .as("embedding")))
+        .select((col("vec_id") + lit(k * 2 * span)).as("vec_id"), col("embedding"))
     }
-    val sizes = Seq(1, 2, 4, 8, 16)
-    val reps = repsFromEnv()
     // untimed warmup (codegen/JIT/shuffle init)
     Similarity.lshCosinePairs(replica(0), "vec_id", "embedding",
       dims = 64, minCosine = 0.95).count()
-    dropState()
-    val rows = sizes.map { n =>
-      val corpus = (0 until n).map(replica).reduce(_ union _)
+    c.drop()
+    val pts = Seq(1, 2, 4, 8, 16).map { n =>
+      val corpus = replicas(n)(replica)
       val nVecs = corpus.count()
       // geometry sized to the corpus — the sizing rule under test: with
       // bits ≈ log₂ n the candidate set stays linear; the fixed default
       // 24×8 measurably goes quadratic here (slope ~2 at 32k vectors)
       val (bands, bits) = Similarity.lshGeometryFor(nVecs, 0.95)
-      var nPairs = 0L
-      val times = (0 until reps).map { _ =>
-        dropState()
-        val t0 = System.nanoTime()
-        nPairs = Similarity.lshCosinePairs(corpus, "vec_id", "embedding",
-          dims = 64, minCosine = 0.95, bands = bands, bitsPerBand = bits).count()
-        (System.nanoTime() - t0) / 1e9
-      }.sorted
-      val med = times(times.size / 2)
+      val pairs = c.timed(Similarity.lshCosinePairs(corpus, "vec_id", "embedding",
+        dims = 64, minCosine = 0.95, bands = bands, bitsPerBand = bits).count())
       // per-stage attribution pass: each stage materialized so the next
       // stage's timer measures only its own work
-      dropState()
-      val p0 = System.nanoTime()
-      val prepared = Similarity.lshPrepared(corpus, "vec_id", "embedding",
-        64, bands, bits) // eager: the call runs the materialization job
-      val prepSecs = (System.nanoTime() - p0) / 1e9
-      val c0 = System.nanoTime()
-      val cands = Materialize.eagerCheckpoint(Similarity.lshCandidates(prepared))
-      val candSecs = (System.nanoTime() - c0) / 1e9
+      c.drop()
+      val (prepared, prepSecs) = clock(Similarity.lshPrepared(corpus, "vec_id",
+        "embedding", 64, bands, bits)) // eager: the call runs the materialization job
+      val (cands, candSecs) = clock(
+        Materialize.eagerCheckpoint(Similarity.lshCandidates(prepared)))
       val nCands = cands.count()
-      val v0 = System.nanoTime()
-      Similarity.lshVerify(prepared, cands, 0.95).count()
-      val verifySecs = (System.nanoTime() - v0) / 1e9
-      dropState()
-      (n, nVecs, nPairs, nCands, bands, bits,
-        med, times.head, times.last, prepSecs, candSecs, verifySecs)
+      val (_, verifySecs) = clock(Similarity.lshVerify(prepared, cands, 0.95).count())
+      c.drop()
+      Point("sizes" -> n, "vecs" -> nVecs, "pairs" -> pairs.last, "cands" -> nCands,
+        "bands" -> bands, "bits" -> bits, "prep_secs" -> prepSecs,
+        "cand_secs" -> candSecs, "verify_secs" -> verifySecs).spread("secs", pairs)
     }
-    type R = (Int, Long, Long, Long, Int, Int, Double, Double, Double, Double, Double, Double)
-    def arr[T](f: R => T): String = jsonArr(rows)(f)
-    val meds = rows.map(_._7)
-    val segSlopes = segmentSlopesJson(sizes, meds)
-    val line =
-      f"""{"metric":"cosine_lsh_scale_slope","reps":$reps,"sizes":${arr(_._1)},""" +
-        f""""vecs":${arr(_._2)},"pairs":${arr(_._3)},"cands":${arr(_._4)},""" +
-        f""""bands":${arr(_._5)},"bits":${arr(_._6)},""" +
-        f""""secs":${arr(r => f"${r._7}%.3f")},""" +
-        f""""secs_min":${arr(r => f"${r._8}%.3f")},"secs_max":${arr(r => f"${r._9}%.3f")},""" +
-        f""""prep_secs":${arr(r => f"${r._10}%.3f")},""" +
-        f""""cand_secs":${arr(r => f"${r._11}%.3f")},""" +
-        f""""verify_secs":${arr(r => f"${r._12}%.3f")},""" +
-        f""""slope":${logLogSlope(sizes, meds)}%.3f,""" +
-        f""""segment_slopes":$segSlopes,"sf":"$sfDir"}"""
-    try java.nio.file.Files.write(java.nio.file.Paths.get("bench_scale_embed.json"),
-      (line + "\n").getBytes("UTF-8"))
-    catch { case e: Throwable => System.err.println(s"[bench] bench_scale_embed.json: ${e.getMessage}") }
-    println(line)
+    Record.metric("cosine_lsh_scale_slope").put("reps", c.reps)
+      .cols(pts, "sizes", "vecs", "pairs", "cands", "bands", "bits")
+      .spread(pts, "secs").secs(pts, "prep_secs", "cand_secs", "verify_secs")
+      .slope("slope", pts, "secs").segmentSlopes("segment_slopes", pts, "secs")
   }
 
   /** Interval-join scale-slope harness — the third measured scale path:
@@ -963,20 +1099,17 @@ object Bench {
     * derive each user's `[first, first+30min)` interval, and time the
     * BUCKETED interval join — the broadcast-free 100 TB shape — at each
     * size. The `(jid, bucket)` equi-join should be near-linear; slope
-    * near 2 would mean a per-key all-pairs blowup crept back in. Writes
-    * `bench_scale_interval.json`. */
-  private def scaleSlopeInterval(spark: SparkSession, sfDir: String,
-                                 dropState: () => Unit): Unit = {
-    import org.apache.spark.sql.functions._
+    * near 2 would mean a per-key all-pairs blowup crept back in. */
+  private def scaleSlopeInterval(c: Ctx): Record = {
     import graft.operators.IntervalJoin
     // SparkEntry.tbl normalizes whichever ts encoding this testdata
     // generation shipped (long nanos / naive NTZ / zoned) to µs TIMESTAMP
-    val ev0 = SparkEntry.tbl(spark, sfDir, "events")
+    val ev0 = SparkEntry.tbl(c.spark, c.sfDir, "events")
       .select(col("user_id"), col("ts"), col("value"))
-    val idSpan = ev0.agg(max("user_id")).head().getLong(0) + 1
+    val span = idSpan(ev0, "user_id")
     def replica(k: Int) = ev0.select(
-      (col("user_id") + lit(k * idSpan)).as("user_id"), col("ts"), col("value"))
-    def joined(ev: org.apache.spark.sql.DataFrame) = {
+      (col("user_id") + lit(k * span)).as("user_id"), col("ts"), col("value"))
+    def joined(ev: DataFrame) = {
       val acct = ev.groupBy(col("user_id").as("jid"))
         .agg(min("ts").as("start"))
         .withColumn("end", col("start") + expr("INTERVAL 30 MINUTES"))
@@ -984,181 +1117,101 @@ object Bench {
         ev.select(col("user_id").as("jid"), col("ts").as("Timestamp"), col("value")),
         acct, bucketMicros = 3600L * 1000000L)
     }
-    val sizes = Seq(1, 2, 4, 8, 16)
-    val reps = repsFromEnv()
     joined(replica(0)).count() // untimed warmup
-    dropState()
-    val rows = sizes.map { n =>
-      val ev = (0 until n).map(replica).reduce(_ unionByName _)
+    c.drop()
+    val pts = Seq(1, 2, 4, 8, 16).map { n =>
+      val ev = replicas(n)(replica)
       val nEvents = ev.count()
-      var nJoined = 0L
-      val times = (0 until reps).map { _ =>
-        dropState()
-        val t0 = System.nanoTime()
-        nJoined = joined(ev).count()
-        (System.nanoTime() - t0) / 1e9
-      }.sorted
-      dropState()
-      (n, nEvents, nJoined, times(times.size / 2), times.head, times.last)
+      val t = c.timed(joined(ev).count())
+      c.drop()
+      Point("sizes" -> n, "events" -> nEvents, "joined" -> t.last).spread("secs", t)
     }
-    def arr[T](f: ((Int, Long, Long, Double, Double, Double)) => T): String =
-      jsonArr(rows)(f)
-    val meds = rows.map(_._4)
-    val line =
-      f"""{"metric":"interval_join_scale_slope","reps":$reps,"sizes":${arr(_._1)},""" +
-        f""""events":${arr(_._2)},"joined":${arr(_._3)},""" +
-        f""""secs":${arr(r => f"${r._4}%.3f")},""" +
-        f""""secs_min":${arr(r => f"${r._5}%.3f")},"secs_max":${arr(r => f"${r._6}%.3f")},""" +
-        f""""slope":${logLogSlope(sizes, meds)}%.3f,""" +
-        f""""segment_slopes":${segmentSlopesJson(sizes, meds)},"sf":"$sfDir"}"""
-    try java.nio.file.Files.write(java.nio.file.Paths.get("bench_scale_interval.json"),
-      (line + "\n").getBytes("UTF-8"))
-    catch { case e: Throwable => System.err.println(s"[bench] bench_scale_interval.json: ${e.getMessage}") }
-    println(line)
+    Record.metric("interval_join_scale_slope").put("reps", c.reps)
+      .cols(pts, "sizes", "events", "joined").spread(pts, "secs")
+      .slope("slope", pts, "secs").segmentSlopes("segment_slopes", pts, "secs")
   }
 
   /** Curation-capstone scale-slope harness — evidence that the COMPOSED
     * production pipeline ([[graft.Pipeline.curate]]: decontaminate →
     * quality → LSH dup-removal → redact → split) scales, not just each
-    * stage: replicate the documents corpus k× with the per-replica
-    * character rotation of [[scaleSlope]] (cross-replica shingle overlap
-    * destroyed ⇒ dup pairs and contamination hits grow linearly), carve
-    * the same doc_id%97 eval set per replica, and time the full
-    * composition median-of-`reps` at each size. Slope near 1 = the
-    * composition inherits its stages' candidate-generate-verify shape;
-    * near 2 = a cross-stage interaction went quadratic. Writes
-    * `bench_scale_curate.json`. */
-  private def scaleSlopeCurate(spark: SparkSession, sfDir: String,
-                               dropState: () => Unit): Unit = {
-    import org.apache.spark.sql.functions._
-    val docs = spark.read.parquet(s"$sfDir/documents.parquet")
-      .select("doc_id", "text")
-    val idSpan = docs.agg(max("doc_id")).head().getLong(0) + 1
-    def replica(k: Int) = rotatedReplica(docs, idSpan, k)
-    def curated(corpus: org.apache.spark.sql.DataFrame) = {
+    * stage: replicate the documents corpus k× with [[rotatedReplica]]
+    * (cross-replica shingle overlap destroyed ⇒ dup pairs and
+    * contamination hits grow linearly), carve the same doc_id%97 eval set
+    * per replica, and time the full composition median-of-`reps` at each
+    * size. Slope near 1 = the composition inherits its stages'
+    * candidate-generate-verify shape; near 2 = a cross-stage interaction
+    * went quadratic. */
+  private def scaleSlopeCurate(c: Ctx): Record = {
+    val docs = c.docs
+    val span = idSpan(docs, "doc_id")
+    def replica(k: Int) = rotatedReplica(docs, span, k)
+    def curated(corpus: DataFrame) = {
       val evalSet = corpus.filter(pmod(col("doc_id"), lit(97)) === 0)
       val train = corpus.filter(pmod(col("doc_id"), lit(97)) =!= 0)
       Pipeline.curate(train, evalSet)
     }
-    val sizes = Seq(1, 2, 4, 8)
-    val reps = repsFromEnv()
     curated(replica(0)).count() // untimed warmup
-    dropState()
-    val rows = sizes.map { n =>
-      val corpus = (0 until n).map(replica).reduce(_ union _)
+    c.drop()
+    val pts = Seq(1, 2, 4, 8).map { n =>
+      val corpus = replicas(n)(replica)
       val nDocs = corpus.count()
-      var nKept = 0L
-      val times = (0 until reps).map { _ =>
-        dropState()
-        val t0 = System.nanoTime()
-        nKept = curated(corpus).count()
-        (System.nanoTime() - t0) / 1e9
-      }.sorted
-      dropState()
-      (n, nDocs, nKept, times(times.size / 2), times.head, times.last)
+      val t = c.timed(curated(corpus).count())
+      c.drop()
+      Point("sizes" -> n, "docs" -> nDocs, "kept" -> t.last).spread("secs", t)
     }
-    def arr[T](f: ((Int, Long, Long, Double, Double, Double)) => T): String =
-      jsonArr(rows)(f)
-    val meds = rows.map(_._4)
-    val segSlopes = segmentSlopesJson(sizes, meds)
-    val line =
-      f"""{"metric":"curate_scale_slope","reps":$reps,"sizes":${arr(_._1)},""" +
-        f""""docs":${arr(_._2)},"kept":${arr(_._3)},""" +
-        f""""secs":${arr(r => f"${r._4}%.3f")},""" +
-        f""""secs_min":${arr(r => f"${r._5}%.3f")},"secs_max":${arr(r => f"${r._6}%.3f")},""" +
-        f""""slope":${logLogSlope(sizes, meds)}%.3f,""" +
-        f""""segment_slopes":$segSlopes,"sf":"$sfDir"}"""
-    try java.nio.file.Files.write(java.nio.file.Paths.get("bench_scale_curate.json"),
-      (line + "\n").getBytes("UTF-8"))
-    catch { case e: Throwable => System.err.println(s"[bench] bench_scale_curate.json: ${e.getMessage}") }
-    println(line)
+    Record.metric("curate_scale_slope").put("reps", c.reps)
+      .cols(pts, "sizes", "docs", "kept").spread(pts, "secs")
+      .slope("slope", pts, "secs").segmentSlopes("segment_slopes", pts, "secs")
   }
 
   /** Span-profile scale harness — the evidence behind
     * [[graft.operators.Dedup.spanStats]]'s linear claim: replicate the
-    * documents corpus k× with the per-replica character rotation of
-    * [[rotatedReplica]] (a bijection, so WITHIN-replica span-equality
-    * structure is preserved exactly while cross-replica overlap is
-    * destroyed), time the full profile median-of-`reps` at each size, and
-    * record the span/shared-span/flagged-doc totals untimed — with
-    * replica isolation, all three must grow EXACTLY linearly in k, so the
-    * count columns double as a correctness check of the harness itself.
-    * Slope near 1 = the count-per-hash + equi-join shape stays linear in
-    * total tokens; near 2 would mean a pairwise path crept in. Writes
-    * `bench_scale_spans.json`. */
-  private def scaleSlopeSpans(spark: SparkSession, sfDir: String,
-                              dropState: () => Unit): Unit = {
-    import org.apache.spark.sql.functions._
+    * documents corpus k× with [[rotatedReplica]] (a bijection, so
+    * WITHIN-replica span-equality structure is preserved exactly while
+    * cross-replica overlap is destroyed), time the full profile
+    * median-of-`reps` at each size, and record the span/shared-span/
+    * flagged-doc totals untimed — with replica isolation, all three must
+    * grow EXACTLY linearly in k, so the count columns double as a
+    * correctness check of the harness itself. Slope near 1 = the
+    * count-per-hash + equi-join shape stays linear in total tokens; near
+    * 2 would mean a pairwise path crept in. */
+  private def scaleSlopeSpans(c: Ctx): Record = {
     import graft.operators.Dedup
-    val docs = spark.read.parquet(s"$sfDir/documents.parquet")
-      .select("doc_id", "text")
-    val idSpan = docs.agg(max("doc_id")).head().getLong(0) + 1
-    def replica(k: Int) = rotatedReplica(docs, idSpan, k)
-    val sizes = Seq(1, 2, 4, 8)
-    val reps = repsFromEnv()
+    val docs = c.docs
+    val span = idSpan(docs, "doc_id")
+    def replica(k: Int) = rotatedReplica(docs, span, k)
     Dedup.spanStats(replica(0), "doc_id", "text", n = 8).count() // warmup
-    dropState()
-    val rows = sizes.map { n =>
-      val corpus = (0 until n).map(replica).reduce(_ union _)
+    c.drop()
+    val pts = Seq(1, 2, 4, 8).map { n =>
+      val corpus = replicas(n)(replica)
       val nDocs = corpus.count()
-      val times = (0 until reps).map { _ =>
-        dropState()
-        val t0 = System.nanoTime()
-        Dedup.spanStats(corpus, "doc_id", "text", n = 8).count()
-        (System.nanoTime() - t0) / 1e9
-      }.sorted
+      val profile = c.timed(Dedup.spanStats(corpus, "doc_id", "text", n = 8).count())
       // the SURGERY path timed alongside: same linear stages plus the
       // per-doc rewrite — its removed-token total is replica-linear by
       // the same isolation argument and REQUIRED below with the rest
-      var removed = 0L
-      val trimTimes = (0 until reps).map { _ =>
-        dropState()
-        val t0 = System.nanoTime()
-        removed = Dedup.removeDuplicatedSpans(corpus, "doc_id", "text", n = 8)
-          .agg(sum("n_tokens_removed")).head().getLong(0)
-        (System.nanoTime() - t0) / 1e9
-      }.sorted
+      val trim = c.timed(Dedup.removeDuplicatedSpans(corpus, "doc_id", "text", n = 8)
+        .agg(sum("n_tokens_removed")).head().getLong(0))
       // claim columns, untimed: totals must scale exactly with k
       val t = Dedup.spanStats(corpus, "doc_id", "text", n = 8)
         .agg(sum("n_spans"), sum("n_shared_spans"),
           sum(when(col("shared_frac") > 0.5, 1L).otherwise(0L))).head()
-      dropState()
-      (n, nDocs, t.getLong(0), t.getLong(1), t.getLong(2),
-        times(times.size / 2), times.head, times.last,
-        trimTimes(trimTimes.size / 2), removed)
+      c.drop()
+      Point("sizes" -> n, "docs" -> nDocs, "spans" -> t.getLong(0),
+        "shared_spans" -> t.getLong(1), "flagged_docs" -> t.getLong(2),
+        "trim_secs" -> trim.secs, "tokens_removed" -> trim.last).spread("secs", profile)
     }
-    type R = (Int, Long, Long, Long, Long, Double, Double, Double, Double, Long)
-    def arr[T](f: R => T): String = jsonArr(rows)(f)
-    val base = rows.head
-    rows.foreach { r =>
-      require(r._3 == base._3 * r._1 && r._4 == base._4 * r._1 &&
-        r._5 == base._5 * r._1 && r._10 == base._10 * r._1,
-        s"replica isolation violated at ${r._1}x: spans/shared/flagged/removed " +
-          s"(${r._3},${r._4},${r._5},${r._10}) vs 1x " +
-          s"(${base._3},${base._4},${base._5},${base._10})")
-    }
-    val meds = rows.map(_._6)
-    val trimMeds = rows.map(_._9)
-    val line =
-      f"""{"metric":"span_profile_scale_slope","reps":$reps,"n":8,""" +
-        f""""sizes":${arr(_._1)},"docs":${arr(_._2)},"spans":${arr(_._3)},""" +
-        f""""shared_spans":${arr(_._4)},"flagged_docs":${arr(_._5)},""" +
-        f""""secs":${arr(r => f"${r._6}%.3f")},""" +
-        f""""secs_min":${arr(r => f"${r._7}%.3f")},"secs_max":${arr(r => f"${r._8}%.3f")},""" +
-        f""""trim_secs":${arr(r => f"${r._9}%.3f")},""" +
-        f""""tokens_removed":${arr(_._10)},""" +
-        f""""slope":${logLogSlope(sizes, meds)}%.3f,""" +
-        f""""trim_slope":${logLogSlope(sizes, trimMeds)}%.3f,""" +
-        f""""segment_slopes":${segmentSlopesJson(sizes, meds)},"sf":"$sfDir"}"""
-    try java.nio.file.Files.write(java.nio.file.Paths.get("bench_scale_spans.json"),
-      (line + "\n").getBytes("UTF-8"))
-    catch { case e: Throwable => System.err.println(s"[bench] bench_scale_spans.json: ${e.getMessage}") }
-    println(line)
+    requireLinear(pts, "replica isolation violated",
+      "spans", "shared_spans", "flagged_docs", "tokens_removed")
+    Record.metric("span_profile_scale_slope").put("reps", c.reps).put("n", 8)
+      .cols(pts, "sizes", "docs", "spans", "shared_spans", "flagged_docs")
+      .spread(pts, "secs").secs(pts, "trim_secs").cols(pts, "tokens_removed")
+      .slope("slope", pts, "secs").slope("trim_slope", pts, "trim_secs")
+      .segmentSlopes("segment_slopes", pts, "secs")
   }
 
-  /** LM + BPE training-economics harness — `SPARK_GRAFT_SCALE_LM` →
-    * `bench_scale_lm.json`. Two sections on DIFFERENT replication axes,
-    * because the two operators scale on different resources:
+  /** LM + BPE training-economics harness. Two sections on DIFFERENT
+    * replication axes, because the two operators scale on different
+    * resources:
     *
     * LM section (ROTATED replicas — per-replica vocabularies disjoint,
     * verified collision-free for the ladder's Caesar shifts, so the
@@ -1186,169 +1239,96 @@ object Bench {
     * replica-linear, REQUIRED exact), score one corpus scan with five
     * broadcast joins (scored rows doc-linear, REQUIRED). Train/score
     * slopes reported alongside the bigram ones. */
-  private def scaleLmBpe(spark: SparkSession, sfDir: String,
-                         dropState: () => Unit): Unit = {
-    import org.apache.spark.sql.functions._
+  private def scaleLmBpe(c: Ctx): Record = {
     import graft.operators.{Bpe, LanguageModel}
-    val docs = spark.read.parquet(s"$sfDir/documents.parquet")
-      .select("doc_id", "text")
-    val idSpan = docs.agg(max("doc_id")).head().getLong(0) + 1
-    def replica(k: Int) = rotatedReplica(docs, idSpan, k)
+    val docs = c.docs
+    val span = idSpan(docs, "doc_id")
+    def replica(k: Int) = rotatedReplica(docs, span, k)
     def plainReplica(k: Int) = docs.select(
-      (col("doc_id") + lit(k * idSpan)).as("doc_id"), col("text"))
+      (col("doc_id") + lit(k * span)).as("doc_id"), col("text"))
+    LanguageModel.train(replica(0), "text").bigrams.count() // warmup
+    c.drop()
     // 16x point (r15 verdict stretch): the KN-5 train family is one of
     // the three heaviest — the longer ladder is the strongest local
     // evidence the 100x claims extrapolate
-    val sizes = Seq(1, 2, 4, 8, 16)
-    val reps = repsFromEnv()
-    LanguageModel.train(replica(0), "text").bigrams.count() // warmup
-    dropState()
-    val rows = sizes.map { n =>
-      val corpus = (0 until n).map(replica).reduce(_ unionByName _)
+    val pts = Seq(1, 2, 4, 8, 16).map { n =>
+      val corpus = replicas(n)(replica)
       val nDocs = corpus.count()
-      var bigRows = 0L; var ctxRows = 0L; var vocab = 0L
-      val trainTimes = (0 until reps).map { _ =>
-        dropState()
-        val t0 = System.nanoTime()
+      val train = c.timed {
         val lm = LanguageModel.train(corpus, "text")
-        bigRows = lm.bigrams.count(); ctxRows = lm.contexts.count()
-        vocab = lm.vocabSize
-        (System.nanoTime() - t0) / 1e9
-      }.sorted
+        (lm.bigrams.count(), lm.contexts.count(), lm.vocabSize)
+      }
       val lm = LanguageModel.train(corpus, "text")
-      var scored = 0L
-      val scoreTimes = (0 until reps).map { _ =>
-        dropState()
-        val t0 = System.nanoTime()
-        scored = LanguageModel.crossEntropy(corpus, "doc_id", "text", lm).count()
-        (System.nanoTime() - t0) / 1e9
-      }.sorted
+      val score = c.timed(LanguageModel.crossEntropy(corpus, "doc_id", "text", lm).count())
       // trigram Kneser-Ney twin columns: same replica corpus, so the
       // rotation-isolation invariants below apply verbatim (trigram
       // types and scored docs must be replica-linear). Measured on the
       // SERVING path — the generic KN-N cascade at order 3 (r15 unified;
       // the bespoke KN3 survives only as the spec's bit-identity witness)
-      var triRows = 0L
-      val kn3TrainTimes = (0 until reps).map { _ =>
-        dropState()
-        val t0 = System.nanoTime()
-        triRows = LanguageModel.trainKneserNeyN(corpus, "text", order = 3)
-          .grams.count()
-        (System.nanoTime() - t0) / 1e9
-      }.sorted
+      val kn3Train = c.timed(LanguageModel.trainKneserNeyN(corpus, "text", order = 3)
+        .grams.count())
       val kn3 = LanguageModel.trainKneserNeyN(corpus, "text", order = 3)
-      var kn3Scored = 0L
-      val kn3ScoreTimes = (0 until reps).map { _ =>
-        dropState()
-        val t0 = System.nanoTime()
-        kn3Scored = LanguageModel
-          .crossEntropyKneserNeyN(corpus, "doc_id", "text", kn3).count()
-        (System.nanoTime() - t0) / 1e9
-      }.sorted
+      val kn3Score = c.timed(LanguageModel
+        .crossEntropyKneserNeyN(corpus, "doc_id", "text", kn3).count())
       // ORDER-5 train twin (r15 verdict stretch: "kn5 train" is one of
       // the named heaviest families — ladder the deployment order
       // itself, not just its order-3 proxy). Train-only: the score
       // scan's scaling is pinned by the kn3 twin (order changes the
       // cascade depth, never the one-corpus-scan shape).
-      var gram5Rows = 0L
-      val kn5TrainTimes = (0 until reps).map { _ =>
-        dropState()
-        val t0 = System.nanoTime()
-        gram5Rows = LanguageModel.trainKneserNeyN(corpus, "text", order = 5)
-          .largestRows
-        (System.nanoTime() - t0) / 1e9
-      }.sorted
-      val plain = (0 until n).map(plainReplica).reduce(_ unionByName _)
-      var merges: Seq[Bpe.Merge] = Nil
-      val bpeTimes = (0 until reps).map { _ =>
-        dropState()
-        val t0 = System.nanoTime()
-        merges = Bpe.train(plain, "text", numMerges = 16)
-        (System.nanoTime() - t0) / 1e9
-      }.sorted
-      var encTokens = 0L
-      val encTimes = (0 until reps).map { _ =>
-        dropState()
-        val t0 = System.nanoTime()
-        encTokens = Bpe.encode(plain, "doc_id", "text", merges)
-          .agg(sum("n_bpe_tokens")).head().getLong(0)
-        (System.nanoTime() - t0) / 1e9
-      }.sorted
-      dropState()
-      (n, nDocs, vocab, bigRows, ctxRows, scored,
-        trainTimes(trainTimes.size / 2), scoreTimes(scoreTimes.size / 2),
-        bpeTimes(bpeTimes.size / 2), encTimes(encTimes.size / 2),
-        merges, encTokens, triRows, kn3Scored,
-        kn3TrainTimes(kn3TrainTimes.size / 2),
-        kn3ScoreTimes(kn3ScoreTimes.size / 2),
-        gram5Rows, kn5TrainTimes(kn5TrainTimes.size / 2))
+      val kn5Train = c.timed(LanguageModel.trainKneserNeyN(corpus, "text", order = 5)
+        .largestRows)
+      val plain = replicas(n)(plainReplica)
+      val bpe = c.timed(Bpe.train(plain, "text", numMerges = 16))
+      val enc = c.timed(Bpe.encode(plain, "doc_id", "text", bpe.last)
+        .agg(sum("n_bpe_tokens")).head().getLong(0))
+      c.drop()
+      val (bigRows, ctxRows, vocab) = train.last
+      Point("sizes" -> n, "docs" -> nDocs, "vocab" -> vocab, "bigram_rows" -> bigRows,
+        "context_rows" -> ctxRows, "scored_docs" -> score.last,
+        "encoded_tokens" -> enc.last, "lm_train_secs" -> train.secs,
+        "lm_score_secs" -> score.secs, "bpe_train_secs" -> bpe.secs,
+        "bpe_encode_secs" -> enc.secs, "merges" -> bpe.last,
+        "trigram_rows" -> kn3Train.last, "kn3_scored_docs" -> kn3Score.last,
+        "kn3_train_secs" -> kn3Train.secs, "kn3_score_secs" -> kn3Score.secs,
+        "gram5_rows" -> kn5Train.last, "kn5_train_secs" -> kn5Train.secs)
     }
-    val base = rows.head
-    rows.foreach { r =>
-      require(r._3 == base._3 * r._1 && r._4 == base._4 * r._1 &&
-        r._5 == base._5 * r._1,
-        s"rotation isolation violated at ${r._1}x: vocab/bigrams/contexts " +
-          s"(${r._3},${r._4},${r._5}) vs 1x (${base._3},${base._4},${base._5})")
-      require(r._6 == base._6 * r._1,
-        s"scored rows must be doc-linear at ${r._1}x: ${r._6} vs 1x ${base._6}")
-      require(r._11.map(m => (m.lhs, m.rhs)) == base._11.map(m => (m.lhs, m.rhs)),
-        s"BPE merge sequence must be replication-invariant at ${r._1}x")
-      require(r._11.map(_.count) == base._11.map(_.count * r._1),
-        s"BPE merge counts must scale exactly with replication at ${r._1}x")
-      require(r._12 == base._12 * r._1,
-        s"encoded token total must be replica-linear at ${r._1}x: " +
-          s"${r._12} vs 1x ${base._12}")
-      require(r._13 == base._13 * r._1,
-        s"trigram types must be replica-linear at ${r._1}x (rotation " +
-          s"isolation): ${r._13} vs 1x ${base._13}")
-      require(r._14 == base._14 * r._1,
-        s"KN3-scored rows must be doc-linear at ${r._1}x: ${r._14} vs 1x ${base._14}")
-      require(r._17 == base._17 * r._1,
-        s"5-gram types must be replica-linear at ${r._1}x (rotation " +
-          s"isolation): ${r._17} vs 1x ${base._17}")
+    // rotation isolation: vocab, bigram/trigram/5-gram types and contexts;
+    // scored rows and encoded tokens are doc-linear
+    requireLinear(pts, "replica linearity violated", "vocab", "bigram_rows",
+      "context_rows", "scored_docs", "encoded_tokens", "trigram_rows",
+      "kn3_scored_docs", "gram5_rows")
+    def merges(p: Point) = p("merges").asInstanceOf[Seq[Bpe.Merge]]
+    pts.foreach { p =>
+      require(merges(p).map(m => (m.lhs, m.rhs)) == merges(pts.head).map(m => (m.lhs, m.rhs)),
+        s"BPE merge sequence must be replication-invariant at ${p("sizes")}x")
+      require(merges(p).map(_.count) == merges(pts.head).map(_.count * p.l("sizes")),
+        s"BPE merge counts must scale exactly with replication at ${p("sizes")}x")
     }
-    type R = (Int, Long, Long, Long, Long, Long, Double, Double, Double,
-      Double, Seq[Bpe.Merge], Long, Long, Long, Double, Double, Long, Double)
-    def arr[T](f: R => T): String = jsonArr(rows)(f)
-    val line =
-      f"""{"metric":"lm_bpe_scale","reps":$reps,"bpe_merges":16,""" +
-        f""""sizes":${arr(_._1)},"docs":${arr(_._2)},"vocab":${arr(_._3)},""" +
-        f""""bigram_rows":${arr(_._4)},"context_rows":${arr(_._5)},""" +
-        f""""scored_docs":${arr(_._6)},"encoded_tokens":${arr(_._12)},""" +
-        f""""lm_train_secs":${arr(r => f"${r._7}%.3f")},""" +
-        f""""lm_score_secs":${arr(r => f"${r._8}%.3f")},""" +
-        f""""bpe_train_secs":${arr(r => f"${r._9}%.3f")},""" +
-        f""""bpe_encode_secs":${arr(r => f"${r._10}%.3f")},""" +
-        f""""lm_train_slope":${logLogSlope(sizes, rows.map(_._7))}%.3f,""" +
-        f""""lm_score_slope":${logLogSlope(sizes, rows.map(_._8))}%.3f,""" +
-        f""""bpe_train_slope":${logLogSlope(sizes, rows.map(_._9))}%.3f,""" +
-        f""""bpe_encode_slope":${logLogSlope(sizes, rows.map(_._10))}%.3f,""" +
-        f""""lm_train_segment_slopes":${segmentSlopesJson(sizes, rows.map(_._7))},""" +
-        f""""trigram_rows":${arr(_._13)},"kn3_scored_docs":${arr(_._14)},""" +
-        f""""kn3_train_secs":${arr(r => f"${r._15}%.3f")},""" +
-        f""""kn3_score_secs":${arr(r => f"${r._16}%.3f")},""" +
-        f""""kn3_train_slope":${logLogSlope(sizes, rows.map(_._15))}%.3f,""" +
-        f""""kn3_score_slope":${logLogSlope(sizes, rows.map(_._16))}%.3f,""" +
-        f""""gram5_rows":${arr(_._17)},""" +
-        f""""kn5_train_secs":${arr(r => f"${r._18}%.3f")},""" +
-        f""""kn5_train_slope":${logLogSlope(sizes, rows.map(_._18))}%.3f,""" +
-        f""""kn5_train_segment_slopes":${segmentSlopesJson(sizes, rows.map(_._18))},""" +
-        f""""sf":"$sfDir"}"""
-    try java.nio.file.Files.write(java.nio.file.Paths.get("bench_scale_lm.json"),
-      (line + "\n").getBytes("UTF-8"))
-    catch { case e: Throwable =>
-      System.err.println(s"[bench] bench_scale_lm.json: ${e.getMessage}") }
-    println(line)
+    Record.metric("lm_bpe_scale").put("reps", c.reps).put("bpe_merges", 16)
+      .cols(pts, "sizes", "docs", "vocab", "bigram_rows", "context_rows", "scored_docs",
+        "encoded_tokens")
+      .secs(pts, "lm_train_secs", "lm_score_secs", "bpe_train_secs", "bpe_encode_secs")
+      .slope("lm_train_slope", pts, "lm_train_secs")
+      .slope("lm_score_slope", pts, "lm_score_secs")
+      .slope("bpe_train_slope", pts, "bpe_train_secs")
+      .slope("bpe_encode_slope", pts, "bpe_encode_secs")
+      .segmentSlopes("lm_train_segment_slopes", pts, "lm_train_secs")
+      .cols(pts, "trigram_rows", "kn3_scored_docs")
+      .secs(pts, "kn3_train_secs", "kn3_score_secs")
+      .slope("kn3_train_slope", pts, "kn3_train_secs")
+      .slope("kn3_score_slope", pts, "kn3_score_secs")
+      .cols(pts, "gram5_rows").secs(pts, "kn5_train_secs")
+      .slope("kn5_train_slope", pts, "kn5_train_secs")
+      .segmentSlopes("kn5_train_segment_slopes", pts, "kn5_train_secs")
   }
 
-  /** BM25 SERVING-economics harness — `SPARK_GRAFT_SCALE_BM25` →
-    * `bench_scale_bm25.json`, the retrieval twin of the IVF
+  /** BM25 SERVING-economics harness, the retrieval twin of the IVF
     * partition-pruning harness: the claim is that the persisted
     * term-sorted layout ([[graft.operators.TextIndex.write]]) turns a
     * query's literal `isin` predicate into row-group skipping, so a
     * serve READS only the query terms' slices of the postings while an
     * UNSORTED layout of the same rows reads essentially the whole
-    * index. Ladder: plain re-id'd 1×–8× replicas; per size, the index
+    * index. Ladder: plain re-id'd 1×–16× replicas; per size, the index
     * is built and persisted BOTH ways (untimed — build-once), a fixed
     * 4-term query is served from each via the self-contained
     * read-then-score path, and the task-metrics input bytes are
@@ -1357,31 +1337,13 @@ object Bench {
     * copies match identically). The sorted/unsorted read ratio is the
     * artifact's claim column; wall secs ride as context (sub-second
     * absolutes at bench scale). */
-  private def scaleBm25Serving(spark: SparkSession, sfDir: String,
-                               dropState: () => Unit): Unit = {
-    // listener + work dir bracketed like the sibling harnesses: removed/
-    // deleted even when a require aborts the ladder mid-run
-    val listener = new TaskMetricsListener
-    spark.sparkContext.addSparkListener(listener)
-    val work = java.nio.file.Files.createTempDirectory("bm25-scale").toString
-    try scaleBm25Body(spark, sfDir, dropState, listener, work)
-    finally {
-      spark.sparkContext.removeSparkListener(listener)
-      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(work))
-    }
-  }
-
-  private def scaleBm25Body(spark: SparkSession, sfDir: String,
-                            dropState: () => Unit,
-                            listener: TaskMetricsListener,
-                            work: String): Unit = {
-    import org.apache.spark.sql.functions._
+  private def scaleBm25Serving(c: Ctx): Record = withWork("bm25-scale") { work =>
     import graft.operators.TextIndex
-    val docs = spark.read.parquet(s"$sfDir/documents.parquet")
-      .select("doc_id", "text")
-    val idSpan = docs.agg(max("doc_id")).head().getLong(0) + 1
+    val spark = c.spark
+    val docs = c.docs
+    val span = idSpan(docs, "doc_id")
     def plainReplica(k: Int) = docs.select(
-      (col("doc_id") + lit(k * idSpan)).as("doc_id"), col("text"))
+      (col("doc_id") + lit(k * span)).as("doc_id"), col("text"))
     // two serve shapes: a COMMON 4-term query (the 31-term synthetic
     // vocabulary makes it match ~98% of docs — pruning can only shed
     // the other terms' postings, ~the honest worst case) and a RARE
@@ -1392,14 +1354,6 @@ object Bench {
     // 16x point (r15 verdict stretch): bm25 top-k serving is one of the
     // three heaviest families — extend the ladder
     val sizes = Seq(1, 2, 4, 8, 16)
-    val reps = repsFromEnv()
-    val mb = 1024.0 * 1024.0
-    def dirBytes(p: String): Long = {
-      def walk(f: java.io.File): Long =
-        if (f.isFile) f.length
-        else Option(f.listFiles).getOrElse(Array.empty).map(walk).sum
-      walk(new java.io.File(p))
-    }
     // the unsorted CONTROL layout: identical rows, no term clustering —
     // row-group stats then cover the full term range in every file and
     // nothing skips. Emitted as ONE committed epoch (postings/docfreq
@@ -1413,23 +1367,20 @@ object Bench {
       spark.createDataFrame(Seq((ix.nDocs, ix.totalDl))).toDF("n_docs", "total_dl")
         .write.mode("overwrite").parquet(s"$path/meta/epoch=e0")
     }
-    var matched = 0L; var sumMatched = 0L
-    def serve(path: String, q: String): (Double, Double) = { // (median secs, MB read)
-      val runs = (0 until reps).map { _ =>
-        dropState()
-        listener.reset()
-        val t0 = System.nanoTime()
-        val r = TextIndex.bm25(TextIndex.read(spark, path), "doc_id", q)
-          .agg(count(lit(1)), sum("n_matched"), sum("score")).head()
-        val secs = (System.nanoTime() - t0) / 1e9
-        Thread.sleep(150) // listener bus settle, as in the span harness
-        matched = r.getLong(0); sumMatched = r.getLong(1)
-        (secs, listener.inputBytes.get / mb)
-      }
-      (runs.map(_._1).sorted.apply(reps / 2), runs.map(_._2).sorted.apply(reps / 2))
+    // (matched docs, Σ n_matched) per serve, with its secs and read MB
+    def serve(path: String, q: String) = c.timed {
+      val r = TextIndex.bm25(TextIndex.read(spark, path), "doc_id", q)
+        .agg(count(lit(1)), sum("n_matched"), sum("score")).head()
+      (r.getLong(0), r.getLong(1))
     }
-    val rows = sizes.map { n =>
-      val corpus = (0 until n).map(plainReplica).reduce(_ unionByName _)
+    // PHRASE serve over the positional postings: adjacency reads only
+    // the phrase terms' slices (positions included) from the sorted
+    // layout — the pruning claim extended to the positional schema
+    def servePhrase(path: String) = c.timed(TextIndex.bm25Phrase(
+        TextIndex.read(spark, path), "doc_id", "hash join")
+      .agg(count(lit(1)), coalesce(sum("n_occurrences"), lit(0L))).head().getLong(0))
+    val pts = sizes.map { n =>
+      val corpus = replicas(n)(plainReplica)
       val ix = TextIndex.build(corpus, "doc_id", "text")
       val sorted = s"$work/sorted$n"; val unsorted = s"$work/unsorted$n"
       TextIndex.write(ix, sorted)
@@ -1438,47 +1389,29 @@ object Bench {
       // — BEFORE any serve: serve()'s dropState unpersists ix's
       // checkpointed postings, after which ix is no longer computable
       TextIndex.writeTopK(ix, s"$work/topk$n")
-      val diskMb = dirBytes(s"$sorted/postings") / mb
-      val (sSecs, sMb) = serve(sorted, query)
-      val (m1, sm1) = (matched, sumMatched)
-      val (uSecs, uMb) = serve(unsorted, query)
-      require(matched == m1 && sumMatched == sm1,
-        s"layouts must serve the same answer at ${n}x: $matched/$sumMatched vs $m1/$sm1")
-      val (_, rareSortedMb) = serve(sorted, rareQuery)
-      val rareM = matched
-      val (_, rareUnsortedMb) = serve(unsorted, rareQuery)
-      require(matched == rareM, s"rare-query layout answers diverge at ${n}x")
-      // PHRASE serve over the positional postings: adjacency reads only
-      // the phrase terms' slices (positions included) from the sorted
-      // layout — the pruning claim extended to the positional schema
-      def servePhrase(path: String): (Long, Double) = {
-        val runs = (0 until reps).map { _ =>
-          dropState()
-          listener.reset()
-          val r = TextIndex.bm25Phrase(TextIndex.read(spark, path),
-              "doc_id", "hash join")
-            .agg(count(lit(1)), coalesce(sum("n_occurrences"), lit(0L))).head()
-          Thread.sleep(150)
-          (r.getLong(0), listener.inputBytes.get / mb)
-        }
-        (runs.head._1, runs.map(_._2).sorted.apply(reps / 2))
-      }
-      val (phraseM, phraseSortedMb) = servePhrase(sorted)
-      val (phraseMu, phraseUnsortedMb) = servePhrase(unsorted)
-      require(phraseM == phraseMu,
-        s"phrase layout answers diverge at ${n}x: $phraseM vs $phraseMu")
-      dropState()
-      (n, m1, sm1, diskMb, sMb, uMb, sSecs, uSecs, rareM, rareSortedMb,
-        rareUnsortedMb, phraseM, phraseSortedMb, phraseUnsortedMb)
+      val diskMb = treeBytes(new java.io.File(s"$sorted/postings")) / MB
+      val s = serve(sorted, query)
+      val u = serve(unsorted, query)
+      require(u.last == s.last,
+        s"layouts must serve the same answer at ${n}x: ${u.last} vs ${s.last}")
+      val rareS = serve(sorted, rareQuery)
+      val rareU = serve(unsorted, rareQuery)
+      require(rareU.last._1 == rareS.last._1, s"rare-query layout answers diverge at ${n}x")
+      val phraseS = servePhrase(sorted)
+      val phraseU = servePhrase(unsorted)
+      require(phraseS.last == phraseU.last,
+        s"phrase layout answers diverge at ${n}x: ${phraseS.last} vs ${phraseU.last}")
+      c.drop()
+      Point("sizes" -> n, "matched_docs" -> s.last._1, "sum_matched" -> s.last._2,
+        "postings_disk_mb" -> diskMb, "read_sorted_mb" -> s.io.inputMb,
+        "read_unsorted_mb" -> u.io.inputMb, "serve_sorted_secs" -> s.secs,
+        "serve_unsorted_secs" -> u.secs, "rare_matched_docs" -> rareS.last._1,
+        "rare_read_sorted_mb" -> rareS.io.inputMb, "rare_read_unsorted_mb" -> rareU.io.inputMb,
+        "phrase_matched_docs" -> phraseS.last, "phrase_read_sorted_mb" -> phraseS.io.inputMb,
+        "phrase_read_unsorted_mb" -> phraseU.io.inputMb)
     }
-    val base = rows.head
-    rows.foreach { r =>
-      require(r._2 == base._2 * r._1 && r._3 == base._3 * r._1 &&
-        r._9 == base._9 * r._1 && r._12 == base._12 * r._1,
-        s"matched docs must be replica-linear at ${r._1}x: " +
-          s"(${r._2},${r._3},${r._9},${r._12}) vs 1x " +
-          s"(${base._2},${base._3},${base._9},${base._12})")
-    }
+    requireLinear(pts, "matched docs must be replica-linear",
+      "matched_docs", "sum_matched", "rare_matched_docs", "phrase_matched_docs")
     // BATCH-SERVE economics at the largest ladder size: N queries scored
     // in ONE bm25Batch pass vs N sequential single-query serves of the
     // same strings — the decontamination claim ("N eval phrases ≠ N
@@ -1490,28 +1423,12 @@ object Bench {
     val qdf = spark.createDataFrame(
         batchQueries.zipWithIndex.map { case (q, i) => (i.toLong, q) })
       .toDF("query_id", "query")
-    var batchRows = 0L
-    val batchSecs = (0 until reps).map { _ =>
-      dropState()
-      val t0 = System.nanoTime()
-      val r = TextIndex.bm25Batch(TextIndex.read(spark, largest), "doc_id",
-        qdf, "query_id", "query").agg(count(lit(1))).head()
-      batchRows = r.getLong(0)
-      (System.nanoTime() - t0) / 1e9
-    }.sorted.apply(reps / 2)
-    var singleRows = 0L
-    val sumSingleSecs = (0 until reps).map { _ =>
-      dropState()
-      singleRows = 0L
-      val t0 = System.nanoTime()
-      batchQueries.foreach { q =>
-        val ix = TextIndex.read(spark, largest)
-        singleRows += TextIndex.bm25(ix, "doc_id", q).count()
-      }
-      (System.nanoTime() - t0) / 1e9
-    }.sorted.apply(reps / 2)
-    require(batchRows == singleRows,
-      s"batch serve must score exactly the per-query rows: $batchRows vs $singleRows")
+    val batch = c.timed(TextIndex.bm25Batch(TextIndex.read(spark, largest), "doc_id",
+      qdf, "query_id", "query").agg(count(lit(1))).head().getLong(0))
+    val single = c.timed(batchQueries.map(q =>
+      TextIndex.bm25(TextIndex.read(spark, largest), "doc_id", q).count()).sum)
+    require(batch.last == single.last,
+      s"batch serve must score exactly the per-query rows: ${batch.last} vs ${single.last}")
     // TOP-K serving economics — the block-max claim as measured fact.
     // Claim columns are PHASE VOLUMES (TopKServeDiag row counts), the
     // span-harness discipline: at this corpus size parquet row-group /
@@ -1537,8 +1454,9 @@ object Bench {
     // context. Every point is cross-checked EXACT against exhaustive
     // scoring + the same rounded k-cut, so no volume win can come
     // from a wrong answer.
-    def r6(c: org.apache.spark.sql.Column) =
-      floor(c * 1000000.0 + 0.5) / 1000000.0
+    val topkK = 10
+    val singleTerm = "spark"
+    def r6(x: Column) = floor(x * 1000000.0 + 0.5) / 1000000.0
     def topkRows(path: String, q: String, k: Int): Seq[(Long, Double)] =
       TextIndex.bm25TopK(TextIndex.readTopK(spark, path), "doc_id", q, k)
         .select(col("doc_id"), r6(col("score")).as("s"))
@@ -1548,88 +1466,58 @@ object Bench {
         .orderBy(r6(col("score")).desc, col("doc_id")).limit(k)
         .select(col("doc_id"), r6(col("score")).as("s"))
         .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
-    // (median secs, kept, total, candidates, essential terms) of a
-    // diagnosed serve — `essential` is the MaxScore split's claim
-    // column: on the uniform-idf 4-term shape it must drop below the
-    // query's term count, which is exactly what makes kept < total
+    def requireExact(n: Int, k: Int): Unit =
+      for (q <- Seq(query, singleTerm))
+        require(topkRows(s"$work/topk$n", q, k) == exhaustiveRows(s"$work/sorted$n", q, k),
+          s"top-k pruned serve diverges from exhaustive at ${n}x, k=$k for '$q'")
+    // one diagnosed serve — `essential_terms` is the MaxScore split's
+    // claim column: on the uniform-idf 4-term shape it must drop below
+    // the query's term count, which is exactly what makes kept < total
     // there (the WAND block test alone keeps everything on that shape)
-    def serveTopK(path: String, q: String, k: Int): (Double, Long, Long, Long, Int, String) = {
-      var d: TextIndex.TopKServeDiag = null
-      val secs = (0 until reps).map { _ =>
-        dropState()
-        val t0 = System.nanoTime()
-        val (df, dd) = TextIndex.bm25TopKDiag(
-          TextIndex.readTopK(spark, path), "doc_id", q, k)
-        df.collect(); d = dd
-        (System.nanoTime() - t0) / 1e9
-      }.sorted.apply(reps / 2)
-      (secs, d.keptPostings, d.totalPostings, d.nCandidates, d.nEssential,
-        d.servedBy)
+    def serveTopK(n: Int, q: String, k: Int): Point = {
+      val t = c.timed {
+        val (df, d) = TextIndex.bm25TopKDiag(
+          TextIndex.readTopK(spark, s"$work/topk$n"), "doc_id", q, k)
+        df.collect(); d
+      }
+      Point("secs" -> t.secs, "kept_postings" -> t.last.keptPostings,
+        "total_postings" -> t.last.totalPostings, "candidates" -> t.last.nCandidates,
+        "essential_terms" -> t.last.nEssential, "served_by" -> t.last.servedBy)
     }
-    val topkK = 10
-    val singleTerm = "spark"
-    val topkPerSize = sizes.map { n =>
-      for (q <- Seq(query, singleTerm))
-        require(topkRows(s"$work/topk$n", q, topkK) ==
-          exhaustiveRows(s"$work/sorted$n", q, topkK),
-          s"top-k pruned serve diverges from exhaustive at ${n}x for '$q'")
-      val c4 = serveTopK(s"$work/topk$n", query, topkK)
-      val s1 = serveTopK(s"$work/topk$n", singleTerm, topkK)
-      (n, c4, s1)
-    }
-    val kSweep = Seq(5, 10, 25, 50, 100).map { k =>
-      val largestTopk = s"$work/topk${sizes.last}"
-      for (q <- Seq(query, singleTerm))
-        require(topkRows(largestTopk, q, k) ==
-          exhaustiveRows(s"$work/sorted${sizes.last}", q, k),
-          s"top-k pruned serve diverges from exhaustive at k=$k for '$q'")
-      (k, serveTopK(largestTopk, query, k), serveTopK(largestTopk, singleTerm, k))
-    }
-    type R = (Int, Long, Long, Double, Double, Double, Double, Double,
-      Long, Double, Double, Long, Double, Double)
-    def arr[T](f: R => T): String = jsonArr(rows)(f)
-    val line =
-      f"""{"metric":"bm25_serving_scale","reps":$reps,"query_terms":4,""" +
-        f""""sizes":${arr(_._1)},"matched_docs":${arr(_._2)},""" +
-        f""""sum_matched":${arr(_._3)},""" +
-        f""""postings_disk_mb":${arr(r => f"${r._4}%.2f")},""" +
-        f""""read_sorted_mb":${arr(r => f"${r._5}%.2f")},""" +
-        f""""read_unsorted_mb":${arr(r => f"${r._6}%.2f")},""" +
-        f""""serve_sorted_secs":${arr(r => f"${r._7}%.3f")},""" +
-        f""""serve_unsorted_secs":${arr(r => f"${r._8}%.3f")},""" +
-        f""""rare_matched_docs":${arr(_._9)},""" +
-        f""""rare_read_sorted_mb":${arr(r => f"${r._10}%.2f")},""" +
-        f""""rare_read_unsorted_mb":${arr(r => f"${r._11}%.2f")},""" +
-        f""""phrase_matched_docs":${arr(_._12)},""" +
-        f""""phrase_read_sorted_mb":${arr(r => f"${r._13}%.2f")},""" +
-        f""""phrase_read_unsorted_mb":${arr(r => f"${r._14}%.2f")},""" +
-        f""""batch":{"n_queries":${batchQueries.size},"scored_rows":$batchRows,""" +
-        f""""batch_secs":$batchSecs%.3f,"sum_single_secs":$sumSingleSecs%.3f},""" +
-        f""""topk":{"k":$topkK,"exact_vs_exhaustive":true,""" +
-        f""""sizes":${jsonArr(topkPerSize)(_._1)},""" +
-        f""""common4":{"secs":${jsonArr(topkPerSize)(r => f"${r._2._1}%.3f")},""" +
-        f""""kept_postings":${jsonArr(topkPerSize)(_._2._2)},""" +
-        f""""total_postings":${jsonArr(topkPerSize)(_._2._3)},""" +
-        f""""candidates":${jsonArr(topkPerSize)(_._2._4)},""" +
-        f""""essential_terms":${jsonArr(topkPerSize)(_._2._5)}},""" +
-        f""""single":{"secs":${jsonArr(topkPerSize)(r => f"${r._3._1}%.3f")},""" +
-        f""""kept_postings":${jsonArr(topkPerSize)(_._3._2)},""" +
-        f""""total_postings":${jsonArr(topkPerSize)(_._3._3)},""" +
-        f""""candidates":${jsonArr(topkPerSize)(_._3._4)}},""" +
-        f""""by_k":{"ks":${jsonArr(kSweep)(_._1)},""" +
-        f""""common4_kept":${jsonArr(kSweep)(_._2._2)},""" +
-        f""""common4_candidates":${jsonArr(kSweep)(_._2._4)},""" +
-        f""""common4_essential":${jsonArr(kSweep)(_._2._5)},""" +
-        f""""single_kept":${jsonArr(kSweep)(_._3._2)},""" +
-        f""""single_candidates":${jsonArr(kSweep)(_._3._4)},""" +
-        f""""common4_served_by":${jsonArr(kSweep)(r => "\"" + r._2._6 + "\"")},""" +
-        f""""single_served_by":${jsonArr(kSweep)(r => "\"" + r._3._6 + "\"")}}},""" +
-        f""""sf":"$sfDir"}"""
-    try java.nio.file.Files.write(java.nio.file.Paths.get("bench_scale_bm25.json"),
-      (line + "\n").getBytes("UTF-8"))
-    catch { case e: Throwable =>
-      System.err.println(s"[bench] bench_scale_bm25.json: ${e.getMessage}") }
-    println(line)
+    val (common4, single1) = sizes.map { n =>
+      requireExact(n, topkK)
+      (serveTopK(n, query, topkK), serveTopK(n, singleTerm, topkK))
+    }.unzip
+    val ks = Seq(5, 10, 25, 50, 100)
+    val (common4ByK, singleByK) = ks.map { k =>
+      requireExact(sizes.last, k)
+      (serveTopK(sizes.last, query, k), serveTopK(sizes.last, singleTerm, k))
+    }.unzip
+    def byName(pts: Seq[Point], k: String) = pts.map(_(k))
+    Record.metric("bm25_serving_scale").put("reps", c.reps).put("query_terms", 4)
+      .cols(pts, "sizes", "matched_docs", "sum_matched")
+      .mb(pts, "postings_disk_mb", "read_sorted_mb", "read_unsorted_mb")
+      .secs(pts, "serve_sorted_secs", "serve_unsorted_secs")
+      .cols(pts, "rare_matched_docs").mb(pts, "rare_read_sorted_mb", "rare_read_unsorted_mb")
+      .cols(pts, "phrase_matched_docs")
+      .mb(pts, "phrase_read_sorted_mb", "phrase_read_unsorted_mb")
+      .put("batch", new Record().put("n_queries", batchQueries.size)
+        .put("scored_rows", batch.last).num("batch_secs", batch.secs)
+        .num("sum_single_secs", single.secs))
+      .put("topk", new Record().put("k", topkK).put("exact_vs_exhaustive", true)
+        .put("sizes", sizes)
+        .put("common4", new Record().secs(common4, "secs")
+          .cols(common4, "kept_postings", "total_postings", "candidates", "essential_terms"))
+        .put("single", new Record().secs(single1, "secs")
+          .cols(single1, "kept_postings", "total_postings", "candidates"))
+        .put("by_k", new Record().put("ks", ks)
+          .put("common4_kept", byName(common4ByK, "kept_postings"))
+          .put("common4_candidates", byName(common4ByK, "candidates"))
+          .put("common4_essential", byName(common4ByK, "essential_terms"))
+          .put("single_kept", byName(singleByK, "kept_postings"))
+          .put("single_candidates", byName(singleByK, "candidates"))
+          .put("common4_served_by", byName(common4ByK, "served_by"))
+          .put("single_served_by", byName(singleByK, "served_by"))))
   }
 
   /** Span-index SERVING scale + lifecycle harness — the evidence behind
@@ -1668,15 +1556,13 @@ object Bench {
     * level, kept unchanged. Build/bucketing/sketching stay untimed by
     * design — each layout's point is moving recurring serve-time work to
     * one-time build-time, and `compact_secs` is that one-time cost for
-    * the compactor. Writes `bench_scale_span_index.json`. */
-  private def scaleSpanIndexServing(spark: SparkSession, sfDir: String,
-                                    dropState: () => Unit): Unit = {
-    import org.apache.spark.sql.functions._
+    * the compactor. */
+  private def scaleSpanIndexServing(c: Ctx): Record = withWork("spanix-scale") { work =>
     import graft.operators.Dedup
-    val docs = spark.read.parquet(s"$sfDir/documents.parquet")
-      .select("doc_id", "text")
-    val idSpan = docs.agg(max("doc_id")).head().getLong(0) + 1
-    def replica(k: Int) = rotatedReplica(docs, idSpan, k)
+    val spark = c.spark
+    val docs = c.docs
+    val span = idSpan(docs, "doc_id")
+    def replica(k: Int) = rotatedReplica(docs, span, k)
     // fixed batch, constant work at every corpus size: half re-id'd
     // COPIES of base docs (every span indexed → indexed_frac 1 → gated),
     // half rotation-9 fresh docs — 9 is outside 0..8 (the ladder rungs
@@ -1686,50 +1572,22 @@ object Bench {
     // letters-only-vocabulary assumption (a k ≡ some-rung mod 10 choice
     // — the former 777 — would share digit-only grams with that rung)
     val batch = replica(0).filter(pmod(col("doc_id"), lit(20)) === 0)
-      .select((col("doc_id") + lit(100L * idSpan)).as("doc_id"), col("text"))
-      .unionByName(rotatedReplica(docs, idSpan, 9)
+      .select((col("doc_id") + lit(100L * span)).as("doc_id"), col("text"))
+      .unionByName(rotatedReplica(docs, span, 9)
         .filter(pmod(col("doc_id"), lit(20)) === 10)
-        .select((col("doc_id") + lit(200L * idSpan)).as("doc_id"), col("text")))
-    val reps = repsFromEnv()
+        .select((col("doc_id") + lit(200L * span)).as("doc_id"), col("text")))
     val buckets = 32
-    val listener = new TaskMetricsListener
-    spark.sparkContext.addSparkListener(listener)
-    val work = java.nio.file.Files.createTempDirectory("spanix-scale").toString
-    val mb = 1024.0 * 1024.0
-    var kept = 0L; var shuffleMb = 0.0
-    def median(serve: () => Long): (Double, Double) = {
-      val ts = (0 until reps).map { _ =>
-        dropState()
-        listener.reset()
-        val t0 = System.nanoTime()
-        kept = serve()
-        val secs = (System.nanoTime() - t0) / 1e9
-        // async listener bus: settle before reading, or the tail tasks'
-        // shuffle bytes land after the next rep's reset()
-        Thread.sleep(300)
-        shuffleMb = listener.shuffleWrite.get / mb
-        secs
-      }.sorted
-      (ts(ts.size / 2), shuffleMb)
-    }
-    def tableFiles(t: String): Int = {
-      val loc = new java.io.File(new java.net.URI(spark.sessionState.catalog
-        .getTableMetadata(spark.sessionState.sqlParser.parseTableIdentifier(t))
-        .location.toString))
-      Option(loc.listFiles()).getOrElse(Array.empty)
-        .count(f => f.isFile && !f.getName.startsWith("_") &&
-          !f.getName.startsWith("."))
-    }
     val sizes = Seq(1, 2, 4, 8)
+    val life = "spanix_lifecycle"
     try {
       // untimed warmup: codegen + JIT over base-size flat serving
       Dedup.buildSpanIndex(replica(0), "doc_id", "text", n = 8)
         .write.mode("overwrite").parquet(s"$work/warm")
       Dedup.filterAgainstSpanIndex(batch, spark.read.parquet(s"$work/warm"),
         "doc_id", "text").count()
-      dropState()
-      val rows = sizes.map { n =>
-        val corpus = (0 until n).map(replica).reduce(_ union _)
+      c.drop()
+      val pts = sizes.map { n =>
+        val corpus = replicas(n)(replica)
         val nDocs = corpus.count()
         // every layout persisted/built OUTSIDE the timed window — the
         // serving contract, and a fair comparison (nothing serves from
@@ -1751,110 +1609,77 @@ object Bench {
         val width = math.max(1 << 16,
           java.lang.Long.highestOneBit(math.max(1L, 2 * spans - 1)) << 1).toInt
         val sketch = Dedup.spanSketchFromIndex(flat, width = width)
-        val (flatSecs, flatShuffle) = median(() =>
-          Dedup.filterAgainstSpanIndex(batch, flat, "doc_id", "text").count())
-        val keptFlat = kept
-        val (bucketSecs, bucketShuffle) = median(() =>
+        val flatT = c.timed(Dedup.filterAgainstSpanIndex(batch, flat, "doc_id", "text").count())
+        val bucketT = c.timed(
           Dedup.filterAgainstBucketedSpanIndex(batch, table, "doc_id", "text").count())
-        require(kept == keptFlat,
-          s"bucketed serving disagrees with flat at ${n}x: $kept vs $keptFlat")
-        val (sketchSecs, sketchShuffle) = median(() =>
+        require(bucketT.last == flatT.last,
+          s"bucketed serving disagrees with flat at ${n}x: ${bucketT.last} vs ${flatT.last}")
+        val sketchT = c.timed(
           Dedup.filterAgainstSpanSketch(batch, sketch, "doc_id", "text").count())
-        require(kept <= keptFlat,
-          s"sketch kept MORE than exact at ${n}x ($kept vs $keptFlat) - " +
+        require(sketchT.last <= flatT.last,
+          s"sketch kept MORE than exact at ${n}x (${sketchT.last} vs ${flatT.last}) - " +
             "an undercounting estimate, which CMS forbids")
-        val keptSketch = kept
         // allowSaturated: this control EXISTS to measure the saturation
         // point the production guard refuses
         val keptSketchFixed = Dedup.filterAgainstSpanSketch(batch,
           Dedup.spanSketchFromIndex(flat), "doc_id", "text",
           allowSaturated = true).count()
-        spark.sql(s"DROP TABLE IF EXISTS ${table}_spans")
-        spark.sql(s"DROP TABLE IF EXISTS ${table}_meta")
-        dropState()
-        (n, nDocs, spans, keptFlat, keptSketch, flatSecs, bucketSecs,
-          sketchSecs, flatShuffle, bucketShuffle, sketchShuffle,
-          width, keptSketchFixed)
+        dropTables(spark, table, "spans", "meta")
+        c.drop()
+        Point("sizes" -> n, "docs" -> nDocs, "index_spans" -> spans,
+          "kept_exact" -> flatT.last, "kept_sketch" -> sketchT.last,
+          "serve_flat_secs" -> flatT.secs, "serve_bucketed_secs" -> bucketT.secs,
+          "serve_sketch_secs" -> sketchT.secs,
+          "serve_flat_shuffle_mb" -> flatT.io.shuffleMb,
+          "serve_bucketed_shuffle_mb" -> bucketT.io.shuffleMb,
+          "serve_sketch_shuffle_mb" -> sketchT.io.shuffleMb, "sketch_width" -> width,
+          "sketch_mb" -> width.toLong * 4 * 8 / MB, "kept_sketch_fixed_w16" -> keptSketchFixed)
       }
-      val kept0 = rows.head._4
-      rows.foreach(r => require(r._4 == kept0,
-        s"replica isolation violated: kept ${r._4} at ${r._1}x vs $kept0 at 1x"))
+      val kept0 = pts.head.l("kept_exact")
+      pts.foreach(p => require(p.l("kept_exact") == kept0,
+        s"replica isolation violated: kept ${p("kept_exact")} at ${p("sizes")}x vs $kept0 at 1x"))
 
       // lifecycle: append growth + compaction on the base-size layout
-      val table = "spanix_lifecycle"
       Dedup.writeSpanIndex(
-        Dedup.buildSpanIndex(docs, "doc_id", "text", n = 8), table,
-        buckets = buckets)
-      def serveLife(): (Double, Double) = median(() =>
-        Dedup.filterAgainstBucketedSpanIndex(batch, table, "doc_id", "text").count())
-      serveLife() // untimed warmup of the lifecycle table's scan
-      val lifeKept0 = kept
-      val appendCounts = Seq(0, 2, 4, 8)
+        Dedup.buildSpanIndex(docs, "doc_id", "text", n = 8), life, buckets = buckets)
+      def serveLife() = c.timed(
+        Dedup.filterAgainstBucketedSpanIndex(batch, life, "doc_id", "text").count())
+      val lifeKept0 = serveLife().last // untimed warmup of the lifecycle table's scan
       var appended = 0
-      val life = appendCounts.map { target =>
+      val rungs = Seq(0, 2, 4, 8).map { target =>
         while (appended < target) {
           appended += 1
-          Dedup.appendToSpanIndex(replica(appended), table, "doc_id", "text")
+          Dedup.appendToSpanIndex(replica(appended), life, "doc_id", "text")
         }
-        val (secs, _) = serveLife()
-        require(kept == lifeKept0,
+        val t = serveLife()
+        require(t.last == lifeKept0,
           s"appends of unrelated content changed the kept set at $target: " +
-            s"$kept vs $lifeKept0")
-        (target, tableFiles(s"${table}_spans"), secs, kept)
+            s"${t.last} vs $lifeKept0")
+        Point("appends" -> target, "files_spans" -> tableFiles(spark, s"${life}_spans"),
+          "serve_secs" -> t.secs, "kept" -> t.last)
       }
-      val tC = System.nanoTime()
-      Dedup.compactSpanIndex(spark, table)
-      val compactSecs = (System.nanoTime() - tC) / 1e9
-      val postFiles = tableFiles(s"${table}_spans")
-      val (postSecs, _) = serveLife()
-      require(kept == lifeKept0,
-        s"compaction changed the kept set: $kept vs $lifeKept0")
-      spark.sql(s"DROP TABLE IF EXISTS ${table}_spans")
-      spark.sql(s"DROP TABLE IF EXISTS ${table}_meta")
-
-      type R = (Int, Long, Long, Long, Long, Double, Double, Double,
-        Double, Double, Double, Int, Long)
-      def arr[T](f: R => T): String = jsonArr(rows)(f)
-      type L = (Int, Int, Double, Long)
-      def larr[T](f: L => T): String = jsonArr(life)(f)
-      // a no-shuffle serve legitimately records 0 MB; floor before the
-      // log-log fit so the sketch column can't put NaN in the artifact
-      def shuffleSlope(ys: Seq[Double]): Double =
-        logLogSlope(sizes, ys.map(math.max(_, 0.01)))
-      val line =
-        f"""{"metric":"span_index_serve_scale","reps":$reps,"n":8,"buckets":$buckets,""" +
-          f""""sizes":${arr(_._1)},"docs":${arr(_._2)},"index_spans":${arr(_._3)},""" +
-          f""""kept_exact":${arr(_._4)},"kept_sketch":${arr(_._5)},""" +
-          f""""serve_flat_secs":${arr(r => f"${r._6}%.3f")},""" +
-          f""""serve_bucketed_secs":${arr(r => f"${r._7}%.3f")},""" +
-          f""""serve_sketch_secs":${arr(r => f"${r._8}%.3f")},""" +
-          f""""serve_flat_shuffle_mb":${arr(r => f"${r._9}%.2f")},""" +
-          f""""serve_bucketed_shuffle_mb":${arr(r => f"${r._10}%.2f")},""" +
-          f""""serve_sketch_shuffle_mb":${arr(r => f"${r._11}%.2f")},""" +
-          f""""sketch_width":${arr(_._12)},""" +
-          f""""sketch_mb":${arr(r => f"${r._12.toLong * 4 * 8 / mb}%.2f")},""" +
-          f""""kept_sketch_fixed_w16":${arr(_._13)},""" +
-          f""""shuffle_slope_flat":${shuffleSlope(rows.map(_._9))}%.3f,""" +
-          f""""shuffle_slope_bucketed":${shuffleSlope(rows.map(_._10))}%.3f,""" +
-          f""""lifecycle":{"appends":${larr(_._1)},"files_spans":${larr(_._2)},""" +
-          f""""serve_secs":${larr(r => f"${r._3}%.3f")},"kept":${larr(_._4)},""" +
-          f""""compact_secs":$compactSecs%.3f,"files_spans_after":$postFiles,""" +
-          f""""serve_secs_after":$postSecs%.3f,"kept_after":$kept},"sf":"$sfDir"}"""
-      try java.nio.file.Files.write(
-        java.nio.file.Paths.get("bench_scale_span_index.json"),
-        (line + "\n").getBytes("UTF-8"))
-      catch { case e: Throwable =>
-        System.err.println(s"[bench] bench_scale_span_index.json: ${e.getMessage}") }
-      println(line)
+      val (_, compactSecs) = clock(Dedup.compactSpanIndex(spark, life))
+      val postFiles = tableFiles(spark, s"${life}_spans")
+      val post = serveLife()
+      require(post.last == lifeKept0,
+        s"compaction changed the kept set: ${post.last} vs $lifeKept0")
+      Record.metric("span_index_serve_scale").put("reps", c.reps).put("n", 8)
+        .put("buckets", buckets)
+        .cols(pts, "sizes", "docs", "index_spans", "kept_exact", "kept_sketch")
+        .secs(pts, "serve_flat_secs", "serve_bucketed_secs", "serve_sketch_secs")
+        .mb(pts, "serve_flat_shuffle_mb", "serve_bucketed_shuffle_mb", "serve_sketch_shuffle_mb")
+        .cols(pts, "sketch_width").mb(pts, "sketch_mb").cols(pts, "kept_sketch_fixed_w16")
+        // a no-shuffle serve legitimately records 0 MB; floor before the
+        // log-log fit so the sketch column can't put NaN in the artifact
+        .slope("shuffle_slope_flat", pts, "serve_flat_shuffle_mb", floor = 0.01)
+        .slope("shuffle_slope_bucketed", pts, "serve_bucketed_shuffle_mb", floor = 0.01)
+        .put("lifecycle", new Record().cols(rungs, "appends", "files_spans")
+          .secs(rungs, "serve_secs").cols(rungs, "kept")
+          .num("compact_secs", compactSecs).put("files_spans_after", postFiles)
+          .num("serve_secs_after", post.secs).put("kept_after", post.last))
     } finally {
-      spark.sparkContext.removeSparkListener(listener)
-      sizes.foreach { n =>
-        spark.sql(s"DROP TABLE IF EXISTS spanix_scale_${n}_spans")
-        spark.sql(s"DROP TABLE IF EXISTS spanix_scale_${n}_meta")
-      }
-      spark.sql("DROP TABLE IF EXISTS spanix_lifecycle_spans")
-      spark.sql("DROP TABLE IF EXISTS spanix_lifecycle_meta")
-      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(work))
+      sizes.foreach(n => dropTables(spark, s"spanix_scale_$n", "spans", "meta"))
+      dropTables(spark, life, "spans", "meta")
     }
   }
 
@@ -1870,90 +1695,51 @@ object Bench {
     * doubles as an end-to-end correctness check of append+compact under
     * load. `compact_secs` is reported once — the one-time cost a
     * deployment pays to stop the per-serve file tax, ~one read+write of
-    * the index tables, never the corpus text. Writes
-    * `bench_scale_compact.json`. */
-  private def scaleCompaction(spark: SparkSession, sfDir: String,
-                              dropState: () => Unit): Unit = {
-    import org.apache.spark.sql.functions._
+    * the index tables, never the corpus text. */
+  private def scaleCompaction(c: Ctx): Record = {
     import graft.operators.Dedup
-    val docs = spark.read.parquet(s"$sfDir/documents.parquet")
-      .select("doc_id", "text")
-    val idSpan = docs.agg(max("doc_id")).head().getLong(0) + 1
+    val spark = c.spark
+    val docs = c.docs
+    val span = idSpan(docs, "doc_id")
     // fixed served batch: near-dups of the BASE corpus only — appended
     // replicas are shingle-rotated, so they never enter its hit set
     val batch = docs.filter(pmod(col("doc_id"), lit(10)) === 0)
-      .select((col("doc_id") + lit(100L * idSpan)).as("doc_id"),
+      .select((col("doc_id") + lit(100L * span)).as("doc_id"),
         concat(col("text"), lit(" extra tail words appended here")).as("text"))
-    val reps = repsFromEnv()
     val table = "ix_compact_scale"
     val buckets = 32
-    def tableFiles(t: String): Int = {
-      val loc = new java.io.File(new java.net.URI(spark.sessionState.catalog
-        .getTableMetadata(spark.sessionState.sqlParser.parseTableIdentifier(t))
-        .location.toString))
-      Option(loc.listFiles()).getOrElse(Array.empty)
-        .count(f => f.isFile && !f.getName.startsWith("_") &&
-          !f.getName.startsWith("."))
-    }
-    var hits = 0L
-    def serveMedian(): Double = {
-      val ts = (0 until reps).map { _ =>
-        dropState()
-        val t0 = System.nanoTime()
-        hits = Dedup.dedupAgainstBandedIndex(batch, table, "doc_id", "text",
-          minJaccard = 0.5).count()
-        (System.nanoTime() - t0) / 1e9
-      }.sorted
-      ts(ts.size / 2)
-    }
+    def serve() = c.timed(Dedup.dedupAgainstBandedIndex(batch, table, "doc_id", "text",
+      minJaccard = 0.5).count())
     try {
       Dedup.writeBandedIndex(
         Dedup.buildDedupIndex(docs, "doc_id", "text"), table, buckets = buckets)
-      serveMedian() // untimed warmup: codegen + JIT + catalog init
-      val hits0 = hits
-      val appendCounts = Seq(0, 2, 4, 8)
+      val hits0 = serve().last // untimed warmup: codegen + JIT + catalog init
       var appended = 0
-      val pre = appendCounts.map { target =>
+      val rungs = Seq(0, 2, 4, 8).map { target =>
         while (appended < target) {
           appended += 1
-          Dedup.appendToBandedIndex(rotatedReplica(docs, idSpan, appended),
+          Dedup.appendToBandedIndex(rotatedReplica(docs, span, appended),
             table, "doc_id", "text")
         }
-        val row = (target, tableFiles(s"${table}_bands"),
-          tableFiles(s"${table}_sigs"), serveMedian(), hits)
-        require(hits == hits0,
-          s"appends of unrelated content changed the hit set at $target: $hits vs $hits0")
-        row
+        val filesBands = tableFiles(spark, s"${table}_bands")
+        val filesSigs = tableFiles(spark, s"${table}_sigs")
+        val t = serve()
+        require(t.last == hits0,
+          s"appends of unrelated content changed the hit set at $target: ${t.last} vs $hits0")
+        Point("appends" -> target, "files_bands" -> filesBands, "files_sigs" -> filesSigs,
+          "serve_secs" -> t.secs, "hits" -> t.last)
       }
-      val tC = System.nanoTime()
-      Dedup.compactBandedIndex(spark, table)
-      val compactSecs = (System.nanoTime() - tC) / 1e9
-      val postFilesBands = tableFiles(s"${table}_bands")
-      val postFilesSigs = tableFiles(s"${table}_sigs")
-      val postSecs = serveMedian()
-      require(hits == hits0,
-        s"compaction changed the hit set: $hits vs $hits0")
-      type R = (Int, Int, Int, Double, Long)
-      def arr[T](f: R => T): String = jsonArr(pre)(f)
-      val line =
-        f"""{"metric":"banded_index_compaction","reps":$reps,"buckets":$buckets,""" +
-          f""""appends":${arr(_._1)},"files_bands":${arr(_._2)},""" +
-          f""""files_sigs":${arr(_._3)},""" +
-          f""""serve_secs":${arr(r => f"${r._4}%.3f")},"hits":${arr(_._5)},""" +
-          f""""compact_secs":$compactSecs%.3f,""" +
-          f""""files_bands_after":$postFilesBands,"files_sigs_after":$postFilesSigs,""" +
-          f""""serve_secs_after":$postSecs%.3f,"hits_after":$hits,"sf":"$sfDir"}"""
-      try java.nio.file.Files.write(
-        java.nio.file.Paths.get("bench_scale_compact.json"),
-        (line + "\n").getBytes("UTF-8"))
-      catch { case e: Throwable =>
-        System.err.println(s"[bench] bench_scale_compact.json: ${e.getMessage}") }
-      println(line)
-    } finally {
-      spark.sql(s"DROP TABLE IF EXISTS ${table}_bands")
-      spark.sql(s"DROP TABLE IF EXISTS ${table}_sigs")
-      spark.sql(s"DROP TABLE IF EXISTS ${table}_meta")
-    }
+      val (_, compactSecs) = clock(Dedup.compactBandedIndex(spark, table))
+      val postFilesBands = tableFiles(spark, s"${table}_bands")
+      val postFilesSigs = tableFiles(spark, s"${table}_sigs")
+      val post = serve()
+      require(post.last == hits0, s"compaction changed the hit set: ${post.last} vs $hits0")
+      Record.metric("banded_index_compaction").put("reps", c.reps).put("buckets", buckets)
+        .cols(rungs, "appends", "files_bands", "files_sigs").secs(rungs, "serve_secs")
+        .cols(rungs, "hits").num("compact_secs", compactSecs)
+        .put("files_bands_after", postFilesBands).put("files_sigs_after", postFilesSigs)
+        .num("serve_secs_after", post.secs).put("hits_after", post.last)
+    } finally dropTables(spark, table, "bands", "sigs", "meta")
   }
 
   /** Dedup-index SERVING scale harness — the evidence behind the bucketed
@@ -1971,34 +1757,26 @@ object Bench {
     * that overhead, i.e. exactly the regime the layout exists for. Build
     * work (signatures, banding, bucketing) is untimed by design: the
     * layout's point is moving recurring serve-time work to one-time
-    * build-time. Writes `bench_scale_index.json`. */
-  private def scaleSlopeIndex(spark: SparkSession, sfDir: String,
-                              dropState: () => Unit): Unit = {
-    import org.apache.spark.sql.functions._
+    * build-time. */
+  private def scaleSlopeIndex(c: Ctx): Record = withWork("ix-scale") { work =>
     import graft.operators.Dedup
-    val docs = spark.read.parquet(s"$sfDir/documents.parquet")
-      .select("doc_id", "text")
-    val idSpan = docs.agg(max("doc_id")).head().getLong(0) + 1
-    def replica(k: Int) = rotatedReplica(docs, idSpan, k)
+    val spark = c.spark
+    val docs = c.docs
+    val span = idSpan(docs, "doc_id")
+    def replica(k: Int) = rotatedReplica(docs, span, k)
     // fixed batch: 1/10th of replica 0, re-id'd with a tail appended —
     // near-dups of their originals, constant work across corpus sizes
     val batch = replica(0).filter(pmod(col("doc_id"), lit(10)) === 0)
-      .select((col("doc_id") + lit(100L * idSpan)).as("doc_id"),
+      .select((col("doc_id") + lit(100L * span)).as("doc_id"),
         concat(col("text"), lit(" extra tail words appended here")).as("text"))
-    val reps = repsFromEnv()
-    val sizes = Seq(1, 2, 4, 8)
-    val listener = new TaskMetricsListener
-    spark.sparkContext.addSparkListener(listener)
-    val work = java.nio.file.Files.createTempDirectory("ix-scale").toString
-    val mb = 1024.0 * 1024.0
     // untimed warmup
     Dedup.buildDedupIndex(replica(0), "doc_id", "text")
       .write.mode("overwrite").parquet(s"$work/warm")
     Dedup.dedupAgainstIndex(batch, spark.read.parquet(s"$work/warm"),
       "doc_id", "text", minJaccard = 0.5).count()
-    dropState()
-    val rows = sizes.map { n =>
-      val corpus = (0 until n).map(replica).reduce(_ union _)
+    c.drop()
+    val pts = Seq(1, 2, 4, 8).map { n =>
+      val corpus = replicas(n)(replica)
       val nDocs = corpus.count()
       // both layouts persisted to DISK — the serving contract (and a fair
       // comparison: neither side gets to serve from executor memory)
@@ -2007,121 +1785,72 @@ object Bench {
       val index = spark.read.parquet(s"$work/flat_$n")
       val table = s"ix_scale_$n"
       Dedup.writeBandedIndex(index, table, buckets = 32)
-      var hits = 0L; var shuffleMb = 0.0
-      def median(serve: () => Long): (Double, Double) = {
-        val ts = (0 until reps).map { _ =>
-          dropState()
-          listener.reset()
-          val t0 = System.nanoTime()
-          hits = serve()
-          val secs = (System.nanoTime() - t0) / 1e9
-          // the listener bus is async: settle before reading, or the last
-          // tasks' shuffle bytes land after reset() and corrupt BOTH reps
-          Thread.sleep(300)
-          shuffleMb = listener.shuffleWrite.get / mb
-          secs
-        }.sorted
-        (ts(ts.size / 2), shuffleMb)
-      }
-      val (flatSecs, flatShuffle) = median(() => Dedup.dedupAgainstIndex(
+      val flat = c.timed(Dedup.dedupAgainstIndex(
         batch, index, "doc_id", "text", minJaccard = 0.5).count())
-      val hitsFlat = hits
-      val (bucketSecs, bucketShuffle) = median(() => Dedup.dedupAgainstBandedIndex(
+      val bucketed = c.timed(Dedup.dedupAgainstBandedIndex(
         batch, table, "doc_id", "text", minJaccard = 0.5).count())
-      spark.sql(s"DROP TABLE IF EXISTS ${table}_bands")
-      spark.sql(s"DROP TABLE IF EXISTS ${table}_sigs")
-      spark.sql(s"DROP TABLE IF EXISTS ${table}_meta")
-      dropState()
-      (n, nDocs, hitsFlat, hits, flatSecs, bucketSecs, flatShuffle, bucketShuffle)
+      dropTables(spark, table, "bands", "sigs", "meta")
+      c.drop()
+      Point("sizes" -> n, "docs" -> nDocs, "hits_flat" -> flat.last,
+        "hits_bucketed" -> bucketed.last, "serve_flat_secs" -> flat.secs,
+        "serve_bucketed_secs" -> bucketed.secs, "serve_flat_shuffle_mb" -> flat.io.shuffleMb,
+        "serve_bucketed_shuffle_mb" -> bucketed.io.shuffleMb)
     }
-    spark.sparkContext.removeSparkListener(listener)
-    // the indexes on disk served their purpose; don't leak 15x-corpus of
-    // parquet into /tmp per run
-    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(work))
-    type R = (Int, Long, Long, Long, Double, Double, Double, Double)
-    def arr[T](f: R => T): String = jsonArr(rows)(f)
-    // a fully-broadcast serve can legitimately record 0 MB, and
-    // log(0) would put NaN in the artifact — floor at 0.01 MB for the fit
-    def shuffleSlope(ys: Seq[Double]): Double =
-      logLogSlope(sizes, ys.map(math.max(_, 0.01)))
-    val line =
-      f"""{"metric":"dedup_index_serve_scale","reps":$reps,"sizes":${arr(_._1)},""" +
-        f""""docs":${arr(_._2)},"hits_flat":${arr(_._3)},"hits_bucketed":${arr(_._4)},""" +
-        f""""serve_flat_secs":${arr(r => f"${r._5}%.3f")},""" +
-        f""""serve_bucketed_secs":${arr(r => f"${r._6}%.3f")},""" +
-        f""""serve_flat_shuffle_mb":${arr(r => f"${r._7}%.2f")},""" +
-        f""""serve_bucketed_shuffle_mb":${arr(r => f"${r._8}%.2f")},""" +
-        f""""shuffle_slope_flat":${shuffleSlope(rows.map(_._7))}%.3f,""" +
-        f""""shuffle_slope_bucketed":${shuffleSlope(rows.map(_._8))}%.3f,"sf":"$sfDir"}"""
-    try java.nio.file.Files.write(java.nio.file.Paths.get("bench_scale_index.json"),
-      (line + "\n").getBytes("UTF-8"))
-    catch { case e: Throwable => System.err.println(s"[bench] bench_scale_index.json: ${e.getMessage}") }
-    println(line)
+    Record.metric("dedup_index_serve_scale").put("reps", c.reps)
+      .cols(pts, "sizes", "docs", "hits_flat", "hits_bucketed")
+      .secs(pts, "serve_flat_secs", "serve_bucketed_secs")
+      .mb(pts, "serve_flat_shuffle_mb", "serve_bucketed_shuffle_mb")
+      // a fully-broadcast serve can legitimately record 0 MB, and
+      // log(0) would put NaN in the artifact — floor at 0.01 MB for the fit
+      .slope("shuffle_slope_flat", pts, "serve_flat_shuffle_mb", floor = 0.01)
+      .slope("shuffle_slope_bucketed", pts, "serve_bucketed_shuffle_mb", floor = 0.01)
   }
 
   /** SimHash scale-slope harness — the saturation-mitigation evidence:
-    * replicate the documents corpus k× (per-replica character rotation,
-    * as in [[scaleSlope]]) and band at 8 so the 2⁸-value chunk space is
-    * saturated at bench scale — the same regime the production 4×16
-    * geometry hits past ~65k docs, reachable here. At each size the
-    * PLAIN pinned-width path and the length-PARTITIONED path
-    * ([[graft.operators.Dedup.simhashPairsPartitioned]]) are timed and
-    * their raw candidate volumes (pre-verify band-join rows, the actual
-    * cost driver) recorded untimed. Expected shape: plain candidates grow
-    * ~n² once n ≫ 2^width and its time slope trends toward 2; the
-    * partition divides the quadratic coefficient by the populated
-    * length-bucket factor, deferring the takeover — while the pair sets
-    * stay identical. Writes `bench_scale_simhash.json`. */
-  private def scaleSlopeSimhash(spark: SparkSession, sfDir: String,
-                                dropState: () => Unit): Unit = {
-    import org.apache.spark.sql.functions._
+    * replicate the documents corpus k× ([[rotatedReplica]]) and band at 8
+    * so the 2⁸-value chunk space is saturated at bench scale — the same
+    * regime the production 4×16 geometry hits past ~65k docs, reachable
+    * here. At each size the PLAIN pinned-width path and the
+    * length-PARTITIONED path
+    * ([[graft.operators.Dedup.simhashPairsPartitioned]]) are timed once
+    * each and their raw candidate volumes (pre-verify band-join rows, the
+    * actual cost driver) recorded untimed. Expected shape: plain
+    * candidates grow ~n² once n ≫ 2^width and its time slope trends
+    * toward 2; the partition divides the quadratic coefficient by the
+    * populated length-bucket factor, deferring the takeover — while the
+    * pair sets stay identical. */
+  private def scaleSlopeSimhash(c: Ctx): Record = {
     import graft.operators.Dedup
-    val docs = spark.read.parquet(s"$sfDir/documents.parquet")
-      .select("doc_id", "text")
-    val idSpan = docs.agg(max("doc_id")).head().getLong(0) + 1
-    def replica(k: Int) = rotatedReplica(docs, idSpan, k)
+    val docs = c.docs
+    val span = idSpan(docs, "doc_id")
+    def replica(k: Int) = rotatedReplica(docs, span, k)
     val bands = 8; val bucketWidth = 10L
-    val sizes = Seq(1, 2, 4, 8)
     Dedup.simhashPairs(Dedup.simhash(replica(0), "doc_id", "text"),
       maxHamming = 3, bands = bands).count() // untimed warmup
-    dropState()
-    val rows = sizes.map { n =>
-      val corpus = (0 until n).map(replica).reduce(_ union _)
+    c.drop()
+    val pts = Seq(1, 2, 4, 8).map { n =>
+      val corpus = replicas(n)(replica)
       val nDocs = corpus.count()
       def h = Dedup.simhashWithTokenCount(corpus, "doc_id", "text")
-      dropState()
-      val t0 = System.nanoTime()
-      val nPlain = Dedup.simhashPairs(h.select("sh_id", "simhash"),
-        maxHamming = 3, bands = bands).count()
-      val plainSecs = (System.nanoTime() - t0) / 1e9
-      dropState()
-      val t1 = System.nanoTime()
-      val nPart = Dedup.simhashPairsPartitioned(h, "n_tokens", bucketWidth,
-        maxHamming = 3, bands = bands).count()
-      val partSecs = (System.nanoTime() - t1) / 1e9
-      dropState()
+      c.drop()
+      val (nPlain, plainSecs) = clock(Dedup.simhashPairs(h.select("sh_id", "simhash"),
+        maxHamming = 3, bands = bands).count())
+      c.drop()
+      val (nPart, partSecs) = clock(Dedup.simhashPairsPartitioned(h, "n_tokens",
+        bucketWidth, maxHamming = 3, bands = bands).count())
+      c.drop()
       // candidate volumes, untimed — the attribution for the slopes above
-      val candPlain = Dedup.simhashBandJoin(h.select("sh_id", "simhash"),
-        bands, None).count()
-      val candPart = Dedup.simhashBandJoin(h, bands,
-        Some(("n_tokens", bucketWidth))).count()
-      dropState()
-      (n, nDocs, nPlain, nPart, plainSecs, partSecs, candPlain, candPart)
+      val candPlain = Dedup.simhashBandJoin(h.select("sh_id", "simhash"), bands, None).count()
+      val candPart = Dedup.simhashBandJoin(h, bands, Some(("n_tokens", bucketWidth))).count()
+      c.drop()
+      Point("sizes" -> n, "docs" -> nDocs, "pairs_plain" -> nPlain, "pairs_part" -> nPart,
+        "cand_plain" -> candPlain, "cand_part" -> candPart,
+        "secs_plain" -> plainSecs, "secs_part" -> partSecs)
     }
-    def arr[T](f: ((Int, Long, Long, Long, Double, Double, Long, Long)) => T): String =
-      jsonArr(rows)(f)
-    val line =
-      f"""{"metric":"simhash_scale_slope","bands":$bands,"bucket_width":$bucketWidth,""" +
-        f""""sizes":${arr(_._1)},"docs":${arr(_._2)},""" +
-        f""""pairs_plain":${arr(_._3)},"pairs_part":${arr(_._4)},""" +
-        f""""cand_plain":${arr(_._7)},"cand_part":${arr(_._8)},""" +
-        f""""secs_plain":${arr(r => f"${r._5}%.3f")},"secs_part":${arr(r => f"${r._6}%.3f")},""" +
-        f""""slope_plain":${logLogSlope(sizes, rows.map(_._5))}%.3f,""" +
-        f""""slope_part":${logLogSlope(sizes, rows.map(_._6))}%.3f,"sf":"$sfDir"}"""
-    try java.nio.file.Files.write(java.nio.file.Paths.get("bench_scale_simhash.json"),
-      (line + "\n").getBytes("UTF-8"))
-    catch { case e: Throwable => System.err.println(s"[bench] bench_scale_simhash.json: ${e.getMessage}") }
-    println(line)
+    Record.metric("simhash_scale_slope").put("bands", bands).put("bucket_width", bucketWidth)
+      .cols(pts, "sizes", "docs", "pairs_plain", "pairs_part", "cand_plain", "cand_part")
+      .secs(pts, "secs_plain", "secs_part")
+      .slope("slope_plain", pts, "secs_plain").slope("slope_part", pts, "secs_part")
   }
 
   /** k-means fit scale harness — the evidence behind the SAMPLED-seeding
@@ -2132,117 +1861,61 @@ object Bench {
     * front and its share GREW with the corpus. A log-log slope near 1
     * (and flat segment slopes) is the claim; seeding reverting to
     * corpus-proportional work would push it visibly above 1 at the small
-    * sizes where Lloyd doesn't yet dominate. Corpus = per-replica
-    * sign-flipped embeddings (distinct well-spread vectors, same norms;
-    * replica 0 = identity). Writes `bench_scale_kmeans.json`. */
-  private def scaleSlopeKmeans(spark: SparkSession, sfDir: String,
-                               dropState: () => Unit): Unit = {
-    import org.apache.spark.sql.functions._
+    * sizes where Lloyd doesn't yet dominate. Corpus = [[signFlipped]]
+    * embeddings (distinct well-spread vectors, same norms). */
+  private def scaleSlopeKmeans(c: Ctx): Record = {
     import graft.operators.Similarity
-    val base = spark.read.parquet(s"$sfDir/embeddings.parquet")
-      .select("vec_id", "embedding")
-    val idSpan = base.agg(max("vec_id")).head().getLong(0) + 1
-    def replica(k: Int) = {
-      val signs =
-        if (k == 0) transform(sequence(lit(1), lit(64)), _ => lit(1.0))
-        else transform(sequence(lit(1), lit(64)),
-          i => when(pmod(xxhash64(lit(k), i), lit(2)) === 0, 1.0).otherwise(-1.0))
-      base.select((col("vec_id") + lit(k * idSpan)).as("vec_id"),
-        zip_with(col("embedding").cast("array<double>"), signs,
-          (x, s) => x * s).as("embedding"))
-    }
-    val sizes = Seq(1, 2, 4, 8, 16)
-    val reps = repsFromEnv()
+    val base = c.embeddings
+    val span = idSpan(base, "vec_id")
+    def replica(k: Int) = signFlipped(base, k, span)
     Similarity.kmeansFit(replica(0), "vec_id", "embedding", k = 8, iters = 3)
-    dropState()
-    val rows = sizes.map { n =>
-      val corpus = (0 until n).map(replica).reduce(_ unionByName _)
+    c.drop()
+    val pts = Seq(1, 2, 4, 8, 16).map { n =>
+      val corpus = replicas(n)(replica)
       val nVecs = corpus.count()
-      val times = (0 until reps).map { _ =>
-        dropState()
-        val t0 = System.nanoTime()
-        Similarity.kmeansFit(corpus, "vec_id", "embedding", k = 8, iters = 3)
-        (System.nanoTime() - t0) / 1e9
-      }.sorted
-      dropState()
-      (n, nVecs, times(times.size / 2), times.head, times.last)
+      val t = c.timed(Similarity.kmeansFit(corpus, "vec_id", "embedding", k = 8, iters = 3))
+      c.drop()
+      Point("sizes" -> n, "vecs" -> nVecs).spread("secs", t)
     }
-    def arr[T](f: ((Int, Long, Double, Double, Double)) => T): String =
-      jsonArr(rows)(f)
-    val meds = rows.map(_._3)
-    val line =
-      f"""{"metric":"kmeans_fit_scale_slope","reps":$reps,"k":8,"iters":3,""" +
-        f""""sizes":${arr(_._1)},"vecs":${arr(_._2)},""" +
-        f""""secs":${arr(r => f"${r._3}%.3f")},""" +
-        f""""secs_min":${arr(r => f"${r._4}%.3f")},"secs_max":${arr(r => f"${r._5}%.3f")},""" +
-        f""""slope":${logLogSlope(sizes, meds)}%.3f,""" +
-        f""""segment_slopes":${segmentSlopesJson(sizes, meds)},"sf":"$sfDir"}"""
-    try java.nio.file.Files.write(java.nio.file.Paths.get("bench_scale_kmeans.json"),
-      (line + "\n").getBytes("UTF-8"))
-    catch { case e: Throwable => System.err.println(s"[bench] bench_scale_kmeans.json: ${e.getMessage}") }
-    println(line)
+    Record.metric("kmeans_fit_scale_slope").put("reps", c.reps).put("k", 8).put("iters", 3)
+      .cols(pts, "sizes", "vecs").spread(pts, "secs")
+      .slope("slope", pts, "secs").segmentSlopes("segment_slopes", pts, "secs")
   }
 
   /** OPQ composition size ladder — the learned `OPQ,IVF,PQ` layout's
-    * missing ECONOMICS artifact beside its recall evidence
+    * ECONOMICS artifact beside its recall evidence
     * (bench_scale_recall.json `pq_dial.opq`): quantizers trained ONCE on
     * the 1× corpus and FIXED across the ladder, then at each size the
     * whole corpus is rotated + residual-encoded + written partitioned
     * (`encode_secs` — must grow linearly: encoding is one projection +
     * ADC-coding pass per row, no cross-row term) and a FIXED 5-query
-    * batch is served partition-pruned (`serve_secs` / `pruned_input_mb`
+    * batch is served partition-pruned (`serve_secs` / `serve_input_mb`
     * — the probed cells hold only the replica-0 region the queries live
     * in, so the pruned read must stay ~FLAT while the index grows 16×
     * past it; sign-flipped replicas land in other cells, the
-    * bench_scale_ivf.json construction). `bytes_per_vec` rides along
+    * bench_scale_ivf.json construction). `disk_bytes_per_vec` rides along
     * (8 B payload/vec at m=8; disk includes ids + cell + epoch columns),
-    * matching the IVF/PQ memory-economics convention. Writes
-    * `bench_scale_opq.json`. */
-  private def scaleSlopeOpq(spark: SparkSession, sfDir: String,
-                            dropState: () => Unit): Unit = {
-    import org.apache.spark.sql.functions._
+    * matching the IVF/PQ memory-economics convention. */
+  private def scaleSlopeOpq(c: Ctx): Record = withWork("opq-scale") { work =>
     import graft.operators.Similarity
-    val listener = new TaskMetricsListener
-    spark.sparkContext.addSparkListener(listener)
-    val mb = 1024.0 * 1024.0
-    val base = spark.read.parquet(s"$sfDir/embeddings.parquet")
-      .select("vec_id", "embedding")
-    val idSpan = base.agg(max("vec_id")).head().getLong(0) + 1
-    def replica(k: Int) = {
-      val signs =
-        if (k == 0) transform(sequence(lit(1), lit(64)), _ => lit(1.0))
-        else transform(sequence(lit(1), lit(64)),
-          i => when(pmod(xxhash64(lit(k), i), lit(2)) === 0, 1.0).otherwise(-1.0))
-      base.select((col("vec_id") + lit(k * idSpan)).as("vec_id"),
-        zip_with(col("embedding").cast("array<double>"), signs,
-          (x, s) => x * s).as("embedding"))
-    }
-    val sizes = Seq(1, 2, 4, 8, 16)
-    val reps = repsFromEnv()
-    val work = java.nio.file.Files.createTempDirectory("opq-scale").toString
-    def dirBytes(d: java.io.File): Long =
-      Option(d.listFiles()).getOrElse(Array.empty).map(f =>
-        if (f.isDirectory) dirBytes(f)
-        else if (f.getName.endsWith(".parquet")) f.length else 0L).sum
+    val base = c.embeddings
+    val span = idSpan(base, "vec_id")
+    def replica(k: Int) = signFlipped(base, k, span)
+    def rotated(df: DataFrame, rot: Array[Array[Double]]) = df
+      .select(col("vec_id"), col("embedding").cast("array<double>").as("__v"))
+      .select(col("vec_id"), Similarity.rotateExpr(col("__v"), rot).as("__rotv"))
     // quantizers trained once at 1x and fixed: the ladder isolates
     // encode + serve, never training (trained-quantizer reuse across
     // corpus growth is exactly the deployment steady state the
     // drift-gated refresh owns the exception to)
     val (rot, _) = Similarity.trainOpq(replica(0), "vec_id", "embedding",
       m = 8, ksub = 16, iters = 2, opqIters = 1)
-    val rotated0 = replica(0)
-      .select(col("vec_id"), col("embedding").cast("array<double>").as("__v"))
-      .select(col("vec_id"), Similarity.rotateExpr(col("__v"), rot).as("__rotv"))
-    val cents = Similarity.kmeansFit(rotated0, "vec_id", "__rotv",
-      k = 32, iters = 2)
+    val rotated0 = rotated(replica(0), rot)
+    val cents = Similarity.kmeansFit(rotated0, "vec_id", "__rotv", k = 32, iters = 2)
     val cb = Similarity.trainPqResidual(rotated0, "vec_id", "__rotv", cents,
       m = 8, ksub = 16, iters = 2)
     val queries = base.filter(col("vec_id") < 5)
-    val qCells = Similarity.withProbeLabels(
-        queries
-          .select(col("vec_id"), col("embedding").cast("array<double>").as("__v"))
-          .select(col("vec_id"), Similarity.rotateExpr(col("__v"), rot).as("__rotv")),
-        "__rotv", cents, nprobe = 2)
+    val qCells = Similarity.withProbeLabels(rotated(queries, rot), "__rotv", cents, nprobe = 2)
       .select("coarse").distinct().collect().map(_.get(0))
     // UNTIMED 1x warmup of BOTH timed bodies (the kmeans harness /
     // main-bench discipline): without it the 1x point pays classloading
@@ -2250,64 +1923,37 @@ object Bench {
     // DECREASING — a JIT artifact masquerading as (im)scaling. Measured
     // r18: unwarmed reps=3 gave encode 8.7 s at 1x vs 4.5 s at 16x
     // (slope −0.29, nonsense); warmed, the sizes order correctly.
-    locally {
-      val wpath = s"$work/opq_warmup"
-      Similarity.writeLearnedOpqIndex(replica(0), "vec_id", "embedding",
-        wpath, rot, cents, cb)
-      Similarity.serveOpqIndex(wpath, replica(0), queries,
-        "vec_id", "embedding", k = 5, nprobe = 2).count()
-      dropState()
-    }
-    val rows = sizes.map { n =>
-      val corpus = (0 until n).map(replica).reduce(_ unionByName _)
+    Similarity.writeLearnedOpqIndex(replica(0), "vec_id", "embedding",
+      s"$work/opq_warmup", rot, cents, cb)
+    Similarity.serveOpqIndex(s"$work/opq_warmup", replica(0), queries,
+      "vec_id", "embedding", k = 5, nprobe = 2).count()
+    c.drop()
+    val pts = Seq(1, 2, 4, 8, 16).map { n =>
+      val corpus = replicas(n)(replica)
       val nVecs = corpus.count()
       val path = s"$work/opq_$n"
       // ENCODE: rotate + residual-code + partitioned write, one build per
       // size (a rebuild per rep would only re-measure the committer)
-      dropState()
-      val t0 = System.nanoTime()
-      Similarity.writeLearnedOpqIndex(corpus, "vec_id", "embedding", path,
-        rot, cents, cb)
-      val encodeSecs = (System.nanoTime() - t0) / 1e9
-      val indexMb = dirBytes(new java.io.File(path)) / mb
-      val probedMb = qCells
-        .map(c => dirBytes(new java.io.File(s"$path/coarse=$c"))).sum / mb
-      var hits = 0L
-      val recs = (0 until reps).map { _ =>
-        dropState()
-        listener.reset()
-        val s0 = System.nanoTime()
-        hits = Similarity.serveOpqIndex(path, corpus, queries,
-          "vec_id", "embedding", k = 5, nprobe = 2).count()
-        val secs = (System.nanoTime() - s0) / 1e9
-        Thread.sleep(300) // let the async listener bus settle
-        (secs, listener.inputBytes.get / mb)
-      }.sortBy(_._1)
-      val (serveSecs, serveInputMb) = recs(recs.size / 2)
-      require(hits == 25, s"expected 5 queries x top-5 at ${n}x, got $hits")
-      dropState()
-      (n, nVecs, encodeSecs, indexMb, probedMb, serveSecs, serveInputMb,
-        dirBytes(new java.io.File(path)).toDouble / nVecs)
+      c.drop()
+      val (_, encodeSecs) = clock(Similarity.writeLearnedOpqIndex(corpus, "vec_id",
+        "embedding", path, rot, cents, cb))
+      val indexMb = parquetBytes(path) / MB
+      val probedMb = qCells.map(q => parquetBytes(s"$path/coarse=$q")).sum / MB
+      val serve = c.timed(Similarity.serveOpqIndex(path, corpus, queries,
+        "vec_id", "embedding", k = 5, nprobe = 2).count())
+      require(serve.last == 25, s"expected 5 queries x top-5 at ${n}x, got ${serve.last}")
+      c.drop()
+      Point("sizes" -> n, "vecs" -> nVecs, "encode_secs" -> encodeSecs,
+        "index_mb" -> indexMb, "probed_index_mb" -> probedMb, "serve_secs" -> serve.secs,
+        "serve_input_mb" -> serve.io.inputMb,
+        "disk_bytes_per_vec" -> parquetBytes(path).toDouble / nVecs)
     }
-    spark.sparkContext.removeSparkListener(listener)
-    type R = (Int, Long, Double, Double, Double, Double, Double, Double)
-    def arr[T](f: R => T): String = jsonArr(rows)(f)
-    val encodes = rows.map(_._3)
-    val line =
-      f"""{"metric":"opq_scale_ladder","reps":$reps,"k":32,"nprobe":2,""" +
-        f""""m":8,"ksub":16,"payload_bytes_per_vec":8,""" +
-        f""""sizes":${arr(_._1)},"vecs":${arr(_._2)},""" +
-        f""""encode_secs":${arr(r => f"${r._3}%.3f")},""" +
-        f""""encode_slope":${logLogSlope(sizes, encodes)}%.3f,""" +
-        f""""index_mb":${arr(r => f"${r._4}%.2f")},""" +
-        f""""probed_index_mb":${arr(r => f"${r._5}%.2f")},""" +
-        f""""serve_secs":${arr(r => f"${r._6}%.3f")},""" +
-        f""""serve_input_mb":${arr(r => f"${r._7}%.2f")},""" +
-        f""""disk_bytes_per_vec":${arr(r => f"${r._8}%.1f")},"sf":"$sfDir"}"""
-    try java.nio.file.Files.write(java.nio.file.Paths.get("bench_scale_opq.json"),
-      (line + "\n").getBytes("UTF-8"))
-    catch { case e: Throwable => System.err.println(s"[bench] bench_scale_opq.json: ${e.getMessage}") }
-    println(line)
+    Record.metric("opq_scale_ladder").put("reps", c.reps).put("k", 32).put("nprobe", 2)
+      .put("m", 8).put("ksub", 16).put("payload_bytes_per_vec", 8)
+      .cols(pts, "sizes", "vecs").secs(pts, "encode_secs")
+      .slope("encode_slope", pts, "encode_secs")
+      .mb(pts, "index_mb", "probed_index_mb").secs(pts, "serve_secs")
+      .mb(pts, "serve_input_mb").fmt("%.1f", pts, "disk_bytes_per_vec")
   }
 
   /** IVF partition-pruned serving harness — the claim that the
@@ -2326,39 +1972,23 @@ object Bench {
     * sizes) and are reported as context, not the claim — the same
     * honesty posture as bench_scale_index.json. Hit sets are asserted
     * identical every size — pruning is exact, not a recall trade.
-    * Writes `bench_scale_ivf.json`. */
-  private def scaleSlopeIvf(spark: SparkSession, sfDir: String,
-                            dropState: () => Unit): Unit = {
-    import org.apache.spark.sql.functions._
+    *
+    * `memory_per_vector`: at the largest ladder size the same labeled
+    * corpus is persisted as fp32 vectors, int8 codes (+ scale), PQ codes
+    * (m = 8 × ksub = 16, 8 bytes of payload) and residual-PQ codes, with
+    * both the THEORETICAL payload bytes/vector (what an in-memory serving
+    * tier holds) and the measured parquet bytes/vector (disk, encoding
+    * overheads included). PQ's 32× vs fp32 / 9× vs int8 is what fits a
+    * billion-vector resident set into executor memory. */
+  private def scaleSlopeIvf(c: Ctx): Record = withWork("ivf-scale") { work =>
     import graft.operators.Similarity
-    val listener = new TaskMetricsListener
-    spark.sparkContext.addSparkListener(listener)
-    val mb = 1024.0 * 1024.0
-    val base = spark.read.parquet(s"$sfDir/embeddings.parquet")
-      .select("vec_id", "embedding")
-    val idSpan = base.agg(max("vec_id")).head().getLong(0) + 1
-    def replica(k: Int) = {
-      val signs =
-        if (k == 0) transform(sequence(lit(1), lit(64)), _ => lit(1.0))
-        else transform(sequence(lit(1), lit(64)),
-          i => when(pmod(xxhash64(lit(k), i), lit(2)) === 0, 1.0).otherwise(-1.0))
-      base.select((col("vec_id") + lit(k * idSpan)).as("vec_id"),
-        zip_with(col("embedding").cast("array<double>"), signs,
-          (x, s) => x * s).as("embedding"))
-    }
+    val spark = c.spark
+    val base = c.embeddings
+    val span = idSpan(base, "vec_id")
+    def replica(k: Int) = signFlipped(base, k, span)
     val sizes = Seq(1, 2, 4, 8, 16)
-    val reps = repsFromEnv()
-    val work = java.nio.file.Files.createTempDirectory("ivf-scale").toString
-    def fileCount(d: java.io.File): Int =
-      Option(d.listFiles()).getOrElse(Array.empty).map(f =>
-        if (f.isDirectory) fileCount(f)
-        else if (f.getName.endsWith(".parquet")) 1 else 0).sum
-    def dirBytes(d: java.io.File): Long =
-      Option(d.listFiles()).getOrElse(Array.empty).map(f =>
-        if (f.isDirectory) dirBytes(f)
-        else if (f.getName.endsWith(".parquet")) f.length else 0L).sum
-    val rows = sizes.map { n =>
-      val corpus = (0 until n).map(replica).reduce(_ unionByName _)
+    val pts = sizes.map { n =>
+      val corpus = replicas(n)(replica)
       val nVecs = corpus.count()
       // index build is UNTIMED — the build-once/serve-many split is the
       // design; serving is what must stay corpus-size-independent. k=32
@@ -2366,8 +1996,7 @@ object Bench {
       // diversity (the deployed regime — thousands of cells, small
       // batches); the 5-query batch lives in the replica-0 region, so its
       // probed cells stay put while the index grows past them
-      val cents = Similarity.kmeansFit(corpus, "vec_id", "embedding",
-        k = 32, iters = 2)
+      val cents = Similarity.kmeansFit(corpus, "vec_id", "embedding", k = 32, iters = 2)
       val labeled = Similarity.withCoarseLabel(corpus, "embedding", cents)
       val path = s"$work/ivf_$n"
       Similarity.writeIvfIndex(
@@ -2376,67 +2005,32 @@ object Bench {
       val queries = Similarity.withProbeLabels(
         base.filter(col("vec_id") < 5), "embedding", cents, nprobe = 2)
       val cellsProbed = queries.select("coarse").distinct().collect().map(_.get(0))
-      val probedCells = cellsProbed.length.toLong
-      val totalFiles = fileCount(new java.io.File(path))
-      val probedFiles = cellsProbed
-        .map(c => fileCount(new java.io.File(s"$path/coarse=$c"))).sum
-      val totalMb = dirBytes(new java.io.File(path)) / mb
-      val probedMb = cellsProbed
-        .map(c => dirBytes(new java.io.File(s"$path/coarse=$c"))).sum / mb
-      var hitsPruned = 0L; var hitsFull = 0L
-      // the median-TIME rep carries BOTH reported columns, so secs and
-      // input MB describe the same run (bytes from the last rep could
-      // disagree with the median time)
-      def median(serve: () => Long): (Double, Double) = {
-        val recs = (0 until reps).map { _ =>
-          dropState()
-          listener.reset()
-          val t0 = System.nanoTime()
-          serve()
-          val secs = (System.nanoTime() - t0) / 1e9
-          Thread.sleep(300) // let the async listener bus settle
-          (secs, listener.inputBytes.get / mb)
-        }.sortBy(_._1)
-        recs(recs.size / 2)
-      }
-      val (prunedSecs, prunedMb) = median(() => {
-        hitsPruned = Similarity.ivfTopKQuantizedPruned(path, labeled, queries,
-          "vec_id", "embedding", "coarse", k = 5).count()
-        hitsPruned
-      })
-      val (fullSecs, fullMb) = median(() => {
-        hitsFull = Similarity.ivfTopKQuantized(spark.read.parquet(path),
-          labeled, queries, "vec_id", "embedding", "coarse", 5, 4).count()
-        hitsFull
-      })
-      require(hitsPruned == hitsFull,
-        s"pruned serving changed the answer at $n x: $hitsPruned vs $hitsFull")
-      dropState()
-      (n, nVecs, probedCells, probedFiles, totalFiles, probedMb, totalMb,
-        prunedSecs, fullSecs, prunedMb, fullMb)
+      val pruned = c.timed(Similarity.ivfTopKQuantizedPruned(path, labeled, queries,
+        "vec_id", "embedding", "coarse", k = 5).count())
+      val full = c.timed(Similarity.ivfTopKQuantized(spark.read.parquet(path),
+        labeled, queries, "vec_id", "embedding", "coarse", 5, 4).count())
+      require(pruned.last == full.last,
+        s"pruned serving changed the answer at $n x: ${pruned.last} vs ${full.last}")
+      c.drop()
+      Point("sizes" -> n, "vecs" -> nVecs, "probed_cells" -> cellsProbed.length.toLong,
+        "probed_files" -> cellsProbed.map(q => parquetFiles(s"$path/coarse=$q")).sum,
+        "index_files" -> parquetFiles(path),
+        "probed_index_mb" -> cellsProbed.map(q => parquetBytes(s"$path/coarse=$q")).sum / MB,
+        "index_mb" -> parquetBytes(path) / MB, "pruned_secs" -> pruned.secs,
+        "full_secs" -> full.secs, "pruned_input_mb" -> pruned.io.inputMb,
+        "full_input_mb" -> full.io.inputMb)
     }
-    spark.sparkContext.removeSparkListener(listener)
-    // MEMORY-PER-VECTOR economics at the largest ladder size: the same
-    // labeled corpus persisted three ways — fp32 vectors, int8 codes
-    // (+ scale), and PQ codes (m = 8 × ksub = 16, 8 bytes of payload) —
-    // with both the THEORETICAL payload bytes/vector (what an in-memory
-    // serving tier holds) and the measured parquet bytes/vector (disk,
-    // encoding overheads included). PQ's 32× vs fp32 / 9× vs int8 is
-    // what fits a billion-vector resident set into executor memory.
     val memVec = {
-      val n = sizes.last
-      val corpus = (0 until n).map(replica).reduce(_ unionByName _)
+      val corpus = replicas(sizes.last)(replica)
       val nVecs = corpus.count()
-      val cents = Similarity.kmeansFit(corpus, "vec_id", "embedding",
-        k = 32, iters = 2)
+      val cents = Similarity.kmeansFit(corpus, "vec_id", "embedding", k = 32, iters = 2)
       val labeled = Similarity.withCoarseLabel(corpus, "embedding", cents)
         .select(col("vec_id"), col("coarse"),
           col("embedding").cast("array<float>").as("embedding"))
       labeled.write.mode("overwrite").parquet(s"$work/mem_fp32")
       Similarity.buildQuantizedIndex(labeled, "vec_id", "embedding", "coarse")
         .write.mode("overwrite").parquet(s"$work/mem_int8")
-      val cb = Similarity.trainPq(labeled, "vec_id", "embedding",
-        m = 8, ksub = 16, iters = 2)
+      val cb = Similarity.trainPq(labeled, "vec_id", "embedding", m = 8, ksub = 16, iters = 2)
       Similarity.buildPqIndex(labeled, "vec_id", "embedding", "coarse", cb)
         .write.mode("overwrite").parquet(s"$work/mem_pq")
       // the residual twin at IDENTICAL geometry: same bytes/vector (the
@@ -2446,54 +2040,38 @@ object Bench {
       // deterministic (seeded fits), also spec-pinned at sf0.001
       val cbRes = Similarity.trainPqResidual(labeled, "vec_id", "embedding",
         cents, m = 8, ksub = 16, iters = 2)
-      Similarity.buildPqIndexResidual(labeled, "vec_id", "embedding",
-          cents, cbRes)
+      Similarity.buildPqIndexResidual(labeled, "vec_id", "embedding", cents, cbRes)
         .write.mode("overwrite").parquet(s"$work/mem_pq_res")
       val centLit = typedlit(cents.map(_.toSeq).toSeq)
       val resFrame = labeled.withColumn("__res",
         zip_with(col("embedding").cast("array<double>"),
           element_at(centLit, col("coarse").cast("int") + 1), (a, b) => a - b))
-      def distortion(df: org.apache.spark.sql.DataFrame, vcol: String,
-                     cbX: Similarity.PqCodebooks): Double =
+      def distortion(df: DataFrame, vcol: String, cbX: Similarity.PqCodebooks): Double =
         Similarity.encodePq(df, vcol, cbX)
           .select(graft.functions.Adc.lookup(
-            graft.functions.Adc.table(col(vcol).cast("array<double>"),
-              cbX.codebooks),
+            graft.functions.Adc.table(col(vcol).cast("array<double>"), cbX.codebooks),
             col("pq_codes").cast("array<int>"), cbX.m, cbX.ksub).as("d"))
           .agg(avg(col("d"))).head().getDouble(0)
       val dPq = distortion(labeled, "embedding", cb)
       val dRes = distortion(resFrame, "__res", cbRes)
       require(dRes < dPq,
-        f"residual codebooks must cut reconstruction error at identical " +
-          f"geometry: residual $dRes%.4f vs raw $dPq%.4f")
-      def perVec(dir: String): Double =
-        dirBytes(new java.io.File(s"$work/$dir")).toDouble / nVecs
-      f""""memory_per_vector":{"n_vecs":$nVecs,"dims":64,""" +
-        f""""payload_bytes":{"fp32":256,"int8":72,"pq":8,"pq_res":8},""" +
-        f""""disk_bytes":{"fp32":${perVec("mem_fp32")}%.1f,""" +
-        f""""int8":${perVec("mem_int8")}%.1f,"pq":${perVec("mem_pq")}%.1f,""" +
-        f""""pq_res":${perVec("mem_pq_res")}%.1f},""" +
-        f""""pq_vs_fp32":32.0,"pq_vs_int8":9.0,""" +
-        f""""distortion":{"pq":$dPq%.5f,"pq_res":$dRes%.5f,""" +
-        f""""res_vs_pq":${dRes / dPq}%.3f}}"""
+        "residual codebooks must cut reconstruction error at identical geometry: " +
+          s"residual ${Record.fmt("%.4f", dRes)} vs raw ${Record.fmt("%.4f", dPq)}")
+      def perVec(dir: String) = parquetBytes(s"$work/$dir").toDouble / nVecs
+      new Record().put("n_vecs", nVecs).put("dims", 64)
+        .put("payload_bytes", new Record().put("fp32", 256).put("int8", 72).put("pq", 8)
+          .put("pq_res", 8))
+        .put("disk_bytes", Seq("fp32", "int8", "pq", "pq_res").foldLeft(new Record())(
+          (r, k) => r.num(k, perVec(s"mem_$k"), "%.1f")))
+        .num("pq_vs_fp32", 32.0, "%.1f").num("pq_vs_int8", 9.0, "%.1f")
+        .put("distortion", new Record().num("pq", dPq, "%.5f").num("pq_res", dRes, "%.5f")
+          .num("res_vs_pq", dRes / dPq))
     }
-    type R = (Int, Long, Long, Int, Int, Double, Double, Double, Double, Double, Double)
-    def arr[T](f: R => T): String = jsonArr(rows)(f)
-    val line =
-      f"""{"metric":"ivf_pruned_serving","reps":$reps,"k":32,"nprobe":2,$memVec,""" +
-        f""""sizes":${arr(_._1)},"vecs":${arr(_._2)},""" +
-        f""""probed_cells":${arr(_._3)},"probed_files":${arr(_._4)},""" +
-        f""""index_files":${arr(_._5)},""" +
-        f""""probed_index_mb":${arr(r => f"${r._6}%.2f")},""" +
-        f""""index_mb":${arr(r => f"${r._7}%.2f")},""" +
-        f""""pruned_secs":${arr(r => f"${r._8}%.3f")},""" +
-        f""""full_secs":${arr(r => f"${r._9}%.3f")},""" +
-        f""""pruned_input_mb":${arr(r => f"${r._10}%.2f")},""" +
-        f""""full_input_mb":${arr(r => f"${r._11}%.2f")},"sf":"$sfDir"}"""
-    try java.nio.file.Files.write(java.nio.file.Paths.get("bench_scale_ivf.json"),
-      (line + "\n").getBytes("UTF-8"))
-    catch { case e: Throwable => System.err.println(s"[bench] bench_scale_ivf.json: ${e.getMessage}") }
-    println(line)
+    Record.metric("ivf_pruned_serving").put("reps", c.reps).put("k", 32).put("nprobe", 2)
+      .put("memory_per_vector", memVec)
+      .cols(pts, "sizes", "vecs", "probed_cells", "probed_files", "index_files")
+      .mb(pts, "probed_index_mb", "index_mb").secs(pts, "pruned_secs", "full_secs")
+      .mb(pts, "pruned_input_mb", "full_input_mb")
   }
 
   /** Learned-IVF INGEST lifecycle harness — the evidence behind
@@ -2511,96 +2089,51 @@ object Bench {
     * artifact doubles as an end-to-end correctness check of
     * append+compact under load. `compact_secs` is the one-time cost a
     * deployment pays to stop the per-serve file tax — one read+write of
-    * already-quantized rows, never a re-embed/re-label/re-quantize.
-    * Writes `bench_scale_ivf_lifecycle.json`. */
-  private def scaleIvfLifecycle(spark: SparkSession, sfDir: String,
-                                dropState: () => Unit): Unit = {
-    import org.apache.spark.sql.functions._
+    * already-quantized rows, never a re-embed/re-label/re-quantize. */
+  private def scaleIvfLifecycle(c: Ctx): Record = withWork("ivf-lifecycle") { work =>
     import graft.operators.Similarity
-    val base = spark.read.parquet(s"$sfDir/embeddings.parquet")
-      .select("vec_id", "embedding")
-    val idSpan = base.agg(max("vec_id")).head().getLong(0) + 1
-    def replica(k: Int) = {
-      val signs =
-        if (k == 0) transform(sequence(lit(1), lit(64)), _ => lit(1.0))
-        else transform(sequence(lit(1), lit(64)),
-          i => when(pmod(xxhash64(lit(k), i), lit(2)) === 0, 1.0).otherwise(-1.0))
-      base.select((col("vec_id") + lit(k * idSpan)).as("vec_id"),
-        zip_with(col("embedding").cast("array<double>"), signs,
-          (x, s) => (x * s).cast("float")).as("embedding"))
-    }
-    val reps = repsFromEnv()
-    val path = java.nio.file.Files.createTempDirectory("ivf-lifecycle")
-      .toString + "/ix"
-    val cents = Similarity.kmeansFit(replica(0), "vec_id", "embedding",
-      k = 32, iters = 2)
-    Similarity.writeLearnedIvfIndex(replica(0), "vec_id", "embedding",
-      path, cents)
+    val base = c.embeddings
+    val span = idSpan(base, "vec_id")
+    def replica(k: Int) = signFlipped(base, k, span)
+      .withColumn("embedding", col("embedding").cast("array<float>"))
+    val path = s"$work/ix"
+    val cents = Similarity.kmeansFit(replica(0), "vec_id", "embedding", k = 32, iters = 2)
+    Similarity.writeLearnedIvfIndex(replica(0), "vec_id", "embedding", path, cents)
     val queries = base.filter(col("vec_id") < 5)
     val probedCells = Similarity.withProbeLabels(queries, "embedding", cents,
       nprobe = 2).select("coarse").distinct().collect().map(_.getInt(0))
-    def fileCount(d: java.io.File): Int =
-      Option(d.listFiles()).getOrElse(Array.empty).map(f =>
-        if (f.isDirectory) fileCount(f)
-        else if (f.getName.endsWith(".parquet")) 1 else 0).sum
-    def probedFilesMax: Int = probedCells
-      .map(c => fileCount(new java.io.File(s"$path/coarse=$c"))).max
+    def probedFilesMax: Int = probedCells.map(q => parquetFiles(s"$path/coarse=$q")).max
     var corpus = replica(0)
-    var served: Set[(Long, Long, Int)] = Set.empty
-    def serveMedian(): Double = {
-      val ts = (0 until reps).map { _ =>
-        dropState()
-        val t0 = System.nanoTime()
-        served = Similarity.serveIvfIndex(path, corpus, queries,
-            "vec_id", "embedding", k = 5, nprobe = 2).collect()
-          .map(r => (r.getLong(0), r.getLong(1), r.getInt(3))).toSet
-        (System.nanoTime() - t0) / 1e9
-      }.sorted
-      ts(ts.size / 2)
-    }
-    serveMedian() // untimed warmup: codegen + JIT + committer init
-    val appendCounts = Seq(0, 2, 4, 8)
+    def serve() = c.timed(Similarity.serveIvfIndex(path, corpus, queries,
+        "vec_id", "embedding", k = 5, nprobe = 2).collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getInt(3))).toSet)
+    serve() // untimed warmup: codegen + JIT + committer init
     var appended = 0
-    val pre = appendCounts.map { target =>
+    val rungs = Seq(0, 2, 4, 8).map { target =>
       while (appended < target) {
         appended += 1
         val batch = replica(appended)
         Similarity.appendToIvfIndex(batch, path, "vec_id", "embedding")
         corpus = corpus.unionByName(batch)
       }
-      val row = (target, probedFilesMax, fileCount(new java.io.File(path)),
-        serveMedian(), served.size)
-      require(served.size == 25,
-        s"expected 5 queries x top-5 at $target appends, got ${served.size}")
-      row
+      val filesMax = probedFilesMax
+      val files = parquetFiles(path)
+      val t = serve()
+      require(t.last.size == 25,
+        s"expected 5 queries x top-5 at $target appends, got ${t.last.size}")
+      Point("appends" -> target, "probed_cell_files_max" -> filesMax,
+        "index_files" -> files, "serve_secs" -> t.secs, "hits" -> t.last.size, "served" -> t.last)
     }
-    val preCompactServed = served
-    val tC = System.nanoTime()
-    Similarity.compactIvfIndex(spark, path, "vec_id")
-    val compactSecs = (System.nanoTime() - tC) / 1e9
+    val (_, compactSecs) = clock(Similarity.compactIvfIndex(c.spark, path, "vec_id"))
     val postFilesMax = probedFilesMax
-    val postFiles = fileCount(new java.io.File(path))
-    val postSecs = serveMedian()
-    require(served == preCompactServed,
-      "compaction changed the served set")
-    type R = (Int, Int, Int, Double, Int)
-    def arr[T](f: R => T): String = jsonArr(pre)(f)
-    val line =
-      f"""{"metric":"ivf_ingest_lifecycle","reps":$reps,"k":32,"nprobe":2,""" +
-        f""""appends":${arr(_._1)},"probed_cell_files_max":${arr(_._2)},""" +
-        f""""index_files":${arr(_._3)},""" +
-        f""""serve_secs":${arr(r => f"${r._4}%.3f")},"hits":${arr(_._5)},""" +
-        f""""compact_secs":$compactSecs%.3f,""" +
-        f""""probed_cell_files_max_after":$postFilesMax,""" +
-        f""""index_files_after":$postFiles,""" +
-        f""""serve_secs_after":$postSecs%.3f,"hits_after":${served.size},""" +
-        f""""sf":"$sfDir"}"""
-    try java.nio.file.Files.write(
-      java.nio.file.Paths.get("bench_scale_ivf_lifecycle.json"),
-      (line + "\n").getBytes("UTF-8"))
-    catch { case e: Throwable =>
-      System.err.println(s"[bench] bench_scale_ivf_lifecycle.json: ${e.getMessage}") }
-    println(line)
+    val postFiles = parquetFiles(path)
+    val post = serve()
+    require(post.last == rungs.last("served"), "compaction changed the served set")
+    Record.metric("ivf_ingest_lifecycle").put("reps", c.reps).put("k", 32).put("nprobe", 2)
+      .cols(rungs, "appends", "probed_cell_files_max", "index_files")
+      .secs(rungs, "serve_secs").cols(rungs, "hits").num("compact_secs", compactSecs)
+      .put("probed_cell_files_max_after", postFilesMax).put("index_files_after", postFiles)
+      .num("serve_secs_after", post.secs).put("hits_after", post.last.size)
   }
 
   /** Recall-vs-nprobe harness — the IVF recall dial MEASURED, not
@@ -2636,14 +2169,10 @@ object Bench {
     * codes vs int8's 72 — so the recall COST of the further 9×
     * compression is an artifact fact beside the int8 curve it trades
     * against (recall deterministic, seeded fits). */
-  private def scaleRecallNprobe(spark: SparkSession, sfDir: String,
-                                dropState: () => Unit): Unit = {
-    import org.apache.spark.sql.functions._
+  private def scaleRecallNprobe(c: Ctx): Record = {
     import graft.operators.Similarity
-    val uniform = spark.read.parquet(s"$sfDir/embeddings.parquet")
-      .select("vec_id", "embedding")
+    val uniform = c.embeddings
     val nVecs = uniform.count()
-    val reps = repsFromEnv()
     val kCells = 32
     val topK = 10
     val probes = Seq(1, 2, 4, 8, kCells)
@@ -2662,99 +2191,82 @@ object Bench {
       zip_with(
         element_at(centers, pmod(col("vec_id"), lit(kCells)).cast("int") + 1),
         col("embedding"),
-        (c, e) => (c * lit(1.0 - eps) + e * lit(eps)).cast("float"))
+        (ce, e) => (ce * lit(1.0 - eps) + e * lit(eps)).cast("float"))
         .as("embedding"))
-    def pairs(df: org.apache.spark.sql.DataFrame): Set[(Long, Long)] =
+    def pairs(df: DataFrame): Set[(Long, Long)] =
       df.select("query_id", "nn_id").collect()
         .map(r => (r.getLong(0), r.getLong(1))).toSet
-    def medianSecs(serve: () => Long): Double = {
-      val ts = (0 until reps).map { _ =>
-        dropState()
-        val t0 = System.nanoTime()
-        serve()
-        (System.nanoTime() - t0) / 1e9
-      }.sorted
-      ts(ts.size / 2)
-    }
+    def recall(got: Set[(Long, Long)], exact: Set[(Long, Long)]): Double =
+      got.intersect(exact).size.toDouble / exact.size
     /** One corpus's full curve: build+index untimed, exact baseline,
-      * then the probes ladder. Returns (exactSecs, per-probe int8 rows,
+      * then the probes ladder. Returns (exactSecs, per-probe int8 points,
       * per-probe residual-PQ recall). */
-    def curve(corpus: org.apache.spark.sql.DataFrame, tag: String)
-        : (Double, Seq[(Int, Double, Double)], Seq[(Int, Double)]) = {
-      // planted vectors are derived per-read; materialize once so index
-      // build, exact baseline and every serve see identical bytes
-      // without recomputing the blend per pass
-      val frozen = java.nio.file.Files
-        .createTempDirectory(s"ivf-recall-$tag").toString
-      corpus.write.mode("overwrite").parquet(s"$frozen/corpus")
-      val c = spark.read.parquet(s"$frozen/corpus")
-      val queries = c.filter(col("vec_id") < 100)
-      val path = s"$frozen/ix"
-      val cents = Similarity.kmeansFit(c, "vec_id", "embedding",
-        k = kCells, iters = 3)
-      Similarity.writeLearnedIvfIndex(c, "vec_id", "embedding", path, cents)
-      // the residual-PQ twin of the same corpus at the same cells: the
-      // 8-byte-code serving tier's recall ladder beside int8's, so the
-      // recall COST of the extra 9x compression is an artifact fact
-      // (recall is deterministic — seeded fits — and is the claim; the
-      // int8 ladder's secs already carry the timing context)
-      val pqPath = s"$frozen/pqix"
-      Similarity.writeLearnedPqIndex(c, "vec_id", "embedding", pqPath, cents,
-        Similarity.trainPqResidual(c, "vec_id", "embedding", cents,
-          m = 8, ksub = 16, iters = 3))
-      val exactDf = Similarity.bruteForceTopK(c, queries, "vec_id",
-        "embedding", topK)
-      val exactSecs = medianSecs(() => exactDf.count())
-      val exact = pairs(exactDf)
-      val rows = probes.map { np =>
-        def served = Similarity.serveIvfIndex(path, c, queries,
-          "vec_id", "embedding", k = topK, nprobe = np)
-        // untimed warmup PER POINT: every nprobe is a distinct plan
-        // (different slice literal + probed-cell list), so each pays its
-        // own analysis + codegen. Even so, the FIRST point reads
-        // ~0.3-0.5 s slow whatever its nprobe (verified by reversing the
-        // probe order: the slowdown follows the position, not the
-        // parameter — host/JVM settling at sub-second absolutes), so
-        // secs are context; the recall columns, deterministic, carry
-        // the claim.
-        served.count()
-        val secs = medianSecs(() => served.count())
-        val got = pairs(served)
-        (np, got.intersect(exact).size.toDouble / exact.size, secs)
+    def curve(corpus: DataFrame, tag: String): (Double, Seq[Point], Seq[Double]) =
+      withWork(s"ivf-recall-$tag") { frozen =>
+        // planted vectors are derived per-read; materialize once so index
+        // build, exact baseline and every serve see identical bytes
+        // without recomputing the blend per pass
+        corpus.write.mode("overwrite").parquet(s"$frozen/corpus")
+        val cf = c.spark.read.parquet(s"$frozen/corpus")
+        val queries = cf.filter(col("vec_id") < 100)
+        val path = s"$frozen/ix"
+        val cents = Similarity.kmeansFit(cf, "vec_id", "embedding", k = kCells, iters = 3)
+        Similarity.writeLearnedIvfIndex(cf, "vec_id", "embedding", path, cents)
+        // the residual-PQ twin of the same corpus at the same cells: the
+        // 8-byte-code serving tier's recall ladder beside int8's, so the
+        // recall COST of the extra 9x compression is an artifact fact
+        // (recall is deterministic — seeded fits — and is the claim; the
+        // int8 ladder's secs already carry the timing context)
+        val pqPath = s"$frozen/pqix"
+        Similarity.writeLearnedPqIndex(cf, "vec_id", "embedding", pqPath, cents,
+          Similarity.trainPqResidual(cf, "vec_id", "embedding", cents,
+            m = 8, ksub = 16, iters = 3))
+        val exactDf = Similarity.bruteForceTopK(cf, queries, "vec_id", "embedding", topK)
+        val exactSecs = c.timed(exactDf.count()).secs
+        val exact = pairs(exactDf)
+        val rows = probes.map { np =>
+          def served = Similarity.serveIvfIndex(path, cf, queries,
+            "vec_id", "embedding", k = topK, nprobe = np)
+          // untimed warmup PER POINT: every nprobe is a distinct plan
+          // (different slice literal + probed-cell list), so each pays its
+          // own analysis + codegen. Even so, the FIRST point reads
+          // ~0.3-0.5 s slow whatever its nprobe (verified by reversing the
+          // probe order: the slowdown follows the position, not the
+          // parameter — host/JVM settling at sub-second absolutes), so
+          // secs are context; the recall columns, deterministic, carry
+          // the claim.
+          served.count()
+          val secs = c.timed(served.count()).secs
+          Point("nprobe" -> np, "recall" -> recall(pairs(served), exact), "secs" -> secs)
+        }
+        // near-monotonicity, with slack: at a FIXED candidateFactor a true
+        // neighbor inside its own cell's shortlist at nprobe=1 can be
+        // evicted from the global shortlist at nprobe=k by spurious
+        // high-approx-cosine candidates from other cells, so strict recall
+        // monotonicity is not algorithmically guaranteed — the require
+        // catches gross inversions (a broken serve), not shortlist jitter
+        require(rows.last.d("recall") >= rows.head.d("recall") - 0.05,
+          s"[$tag] probing every cell must not recall (materially) less " +
+            s"than one cell: ${rows.map(_.cols)}")
+        val pqRecall = probes.map(np => recall(pairs(Similarity.servePqIndex(pqPath, cf,
+          queries, "vec_id", "embedding", k = topK, nprobe = np)), exact))
+        (exactSecs, rows, pqRecall)
       }
-      // near-monotonicity, with slack: at a FIXED candidateFactor a true
-      // neighbor inside its own cell's shortlist at nprobe=1 can be
-      // evicted from the global shortlist at nprobe=k by spurious
-      // high-approx-cosine candidates from other cells, so strict recall
-      // monotonicity is not algorithmically guaranteed — the require
-      // catches gross inversions (a broken serve), not shortlist jitter
-      val byProbe = rows.map(r => r._1 -> r._2).toMap
-      require(byProbe(kCells) >= byProbe(1) - 0.05,
-        s"[$tag] probing every cell must not recall (materially) less " +
-          s"than one cell: $rows")
-      val pqRows = probes.map { np =>
-        val got = pairs(Similarity.servePqIndex(pqPath, c, queries,
-          "vec_id", "embedding", k = topK, nprobe = np))
-        (np, got.intersect(exact).size.toDouble / exact.size)
-      }
-      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(frozen))
-      (exactSecs, rows, pqRows)
-    }
-    val (exactSecs, rows, pqRows) = curve(uniform, "uniform")
-    val (plantedExactSecs, plantedRows, plantedPqRows) = curve(planted, "planted")
+    val (exactSecs, rows, pqRecall) = curve(uniform, "uniform")
+    val (plantedExactSecs, plantedRows, plantedPqRecall) = curve(planted, "planted")
     // the cross-corpus claim: cluster structure is what low-nprobe
     // serving feeds on — at nprobe=1 the planted corpus must beat the
     // uniform one outright (0.175 vs ~1.0 at the committed geometry)
-    require(plantedRows.head._2 > rows.head._2,
+    require(plantedRows.head.d("recall") > rows.head.d("recall"),
       s"planted clusters did not lift nprobe=1 recall: " +
-        s"planted ${plantedRows.head._2} vs uniform ${rows.head._2}")
+        s"planted ${plantedRows.head("recall")} vs uniform ${rows.head("recall")}")
     // gross-breakage pin for the 8-byte tier: on the clustered corpus
     // residual-PQ must stay NEAR the int8 curve (0.932 vs 1.0 at the
     // committed geometry — the measured cost of the further 9×
     // compression); a collapse means the residual encode or the ADC
     // shortlist broke, not that the trade moved
-    require(plantedPqRows.head._2 >= 0.8,
-      s"clustered-corpus residual-PQ recall collapsed: $plantedPqRows")
+    require(plantedPqRecall.head >= 0.8,
+      s"clustered-corpus residual-PQ recall collapsed: $plantedPqRecall")
     // PQ DIAL (r14 verdict stretch #7): the m / candidateFactor sweep
     // that turns the unstructured corpus's honest-but-low PQ recall
     // into a DIAL the serving API can cite — more code bytes (m) and a
@@ -2763,29 +2275,27 @@ object Bench {
     // geometry (m=8, cf=4). Recall is deterministic (seeded fits), so
     // the points are claims, not weather.
     val dialNprobe = 8
-    val dialDir = java.nio.file.Files.createTempDirectory("pq-dial").toString
     val dQueries = uniform.filter(col("vec_id") < 100)
-    val dCents = Similarity.kmeansFit(uniform, "vec_id", "embedding",
-      k = kCells, iters = 3)
+    val dCents = Similarity.kmeansFit(uniform, "vec_id", "embedding", k = kCells, iters = 3)
     val dExact = pairs(Similarity.bruteForceTopK(uniform, dQueries,
       "vec_id", "embedding", topK))
-    val dial = Seq(4, 8, 16).flatMap { m =>
-      val p = s"$dialDir/ix_m$m"
-      Similarity.writeLearnedPqIndex(uniform, "vec_id", "embedding", p, dCents,
-        Similarity.trainPqResidual(uniform, "vec_id", "embedding", dCents,
-          m = m, ksub = 16, iters = 3))
-      Seq(4, 16).map { cf =>
-        val got = pairs(Similarity.servePqIndex(p, uniform, dQueries,
-          "vec_id", "embedding", k = topK, nprobe = dialNprobe,
-          candidateFactor = cf))
-        (m, cf, got.intersect(dExact).size.toDouble / dExact.size)
+    val dial = withWork("pq-dial") { dialDir =>
+      Seq(4, 8, 16).flatMap { m =>
+        val p = s"$dialDir/ix_m$m"
+        Similarity.writeLearnedPqIndex(uniform, "vec_id", "embedding", p, dCents,
+          Similarity.trainPqResidual(uniform, "vec_id", "embedding", dCents,
+            m = m, ksub = 16, iters = 3))
+        Seq(4, 16).map { cf =>
+          Point("m" -> m, "cf" -> cf, "recall" -> recall(pairs(Similarity.servePqIndex(
+            p, uniform, dQueries, "vec_id", "embedding", k = topK, nprobe = dialNprobe,
+            candidateFactor = cf)), dExact))
+        }
       }
     }
-    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dialDir))
     // gross-breakage pin: the dial must point the right way — the
     // largest geometry cannot recall less than the smallest
-    require(dial.last._3 >= dial.head._3 - 0.02,
-      s"PQ dial inverted (m=16/cf=16 under m=4/cf=4): $dial")
+    require(dial.last.d("recall") >= dial.head.d("recall") - 0.02,
+      s"PQ dial inverted (m=16/cf=16 under m=4/cf=4): ${dial.map(_.cols)}")
     // OPQ vs plain PQ at EQUAL bytes/vec (r15 verdict #1): the learned
     // rotation's measured recall lift on the unstructured corpus, same
     // m × cf sweep. The quantizer is ISOLATED — one cell, exhaustive
@@ -2795,66 +2305,41 @@ object Bench {
     val oneCell = uniform.withColumn("part", lit(0))
     val oneQ = dQueries.withColumn("part", lit(0))
     val opqDial = Seq(4, 8, 16).flatMap { m =>
-      val cbP = Similarity.trainPq(uniform, "vec_id", "embedding",
-        m = m, ksub = 16, iters = 3)
+      val cbP = Similarity.trainPq(uniform, "vec_id", "embedding", m = m, ksub = 16, iters = 3)
       val (rotO, cbO) = Similarity.trainOpq(uniform, "vec_id", "embedding",
         m = m, ksub = 16, iters = 3, opqIters = 2)
-      val ixP = Similarity.buildPqIndex(oneCell, "vec_id", "embedding",
-        "part", cbP)
-      val ixO = Similarity.buildOpqIndex(oneCell, "vec_id", "embedding",
-        "part", rotO, cbO)
+      val ixP = Similarity.buildPqIndex(oneCell, "vec_id", "embedding", "part", cbP)
+      val ixO = Similarity.buildOpqIndex(oneCell, "vec_id", "embedding", "part", rotO, cbO)
       Seq(4, 16).map { cf =>
-        val rP = pairs(Similarity.ivfTopKPq(ixP, uniform, oneQ, "vec_id",
-          "embedding", "part", cbP, topK, cf))
-          .intersect(dExact).size.toDouble / dExact.size
-        val rO = pairs(Similarity.ivfTopKOpq(ixO, uniform, oneQ, "vec_id",
-          "embedding", "part", rotO, cbO, topK, cf))
-          .intersect(dExact).size.toDouble / dExact.size
-        (m, cf, rP, rO)
+        Point("m" -> m, "cf" -> cf,
+          "recall_pq" -> recall(pairs(Similarity.ivfTopKPq(ixP, uniform, oneQ, "vec_id",
+            "embedding", "part", cbP, topK, cf)), dExact),
+          "recall_opq" -> recall(pairs(Similarity.ivfTopKOpq(ixO, uniform, oneQ, "vec_id",
+            "embedding", "part", rotO, cbO, topK, cf)), dExact))
       }
     }
     // gross-breakage pin: on average the rotation must not LOSE recall
     // at equal bytes/vec (the artifact carries the per-point lifts)
-    require(opqDial.map(_._4).sum >= opqDial.map(_._3).sum - 0.02 * opqDial.size,
-      s"OPQ under plain PQ at equal bytes/vec: $opqDial")
-    type R = (Int, Double, Double)
-    def arr[T](f: R => T): String = jsonArr(rows)(f)
-    def parr[T](f: R => T): String = jsonArr(plantedRows)(f)
-    val line =
-      f"""{"metric":"ivf_recall_nprobe","reps":$reps,"k":$kCells,""" +
-        f""""topk":$topK,"n_queries":100,"vecs":$nVecs,""" +
-        f""""candidate_factor":4,"nprobe":${arr(_._1)},""" +
-        f""""recall":${arr(r => f"${r._2}%.4f")},""" +
-        f""""secs":${arr(r => f"${r._3}%.3f")},""" +
-        f""""exact_secs":$exactSecs%.3f,""" +
-        f""""planted_eps":$eps%.2f,""" +
-        f""""planted_recall":${parr(r => f"${r._2}%.4f")},""" +
-        f""""planted_secs":${parr(r => f"${r._3}%.3f")},""" +
-        f""""planted_exact_secs":$plantedExactSecs%.3f,""" +
-        f""""pq_recall":${jsonArr(pqRows)(r => f"${r._2}%.4f")},""" +
-        f""""planted_pq_recall":${jsonArr(plantedPqRows)(r => f"${r._2}%.4f")},""" +
-        f""""pq_dial":{"nprobe":$dialNprobe,"m":${jsonArr(dial)(_._1)},""" +
-        f""""cf":${jsonArr(dial)(_._2)},""" +
-        f""""bytes_per_vec":${jsonArr(dial)(_._1)},""" +
-        f""""recall":${jsonArr(dial)(r => f"${r._3}%.4f")},""" +
-        f""""opq":{"m":${jsonArr(opqDial)(_._1)},""" +
-        f""""cf":${jsonArr(opqDial)(_._2)},""" +
-        f""""recall_pq":${jsonArr(opqDial)(r => f"${r._3}%.4f")},""" +
-        f""""recall_opq":${jsonArr(opqDial)(r => f"${r._4}%.4f")}}},""" +
-        f""""sf":"$sfDir"}"""
-    try java.nio.file.Files.write(
-      java.nio.file.Paths.get("bench_scale_recall.json"),
-      (line + "\n").getBytes("UTF-8"))
-    catch { case e: Throwable =>
-      System.err.println(s"[bench] bench_scale_recall.json: ${e.getMessage}") }
-    println(line)
+    require(opqDial.map(_.d("recall_opq")).sum >=
+      opqDial.map(_.d("recall_pq")).sum - 0.02 * opqDial.size,
+      s"OPQ under plain PQ at equal bytes/vec: ${opqDial.map(_.cols)}")
+    Record.metric("ivf_recall_nprobe").put("reps", c.reps).put("k", kCells)
+      .put("topk", topK).put("n_queries", 100).put("vecs", nVecs).put("candidate_factor", 4)
+      .cols(rows, "nprobe").fmt("%.4f", rows, "recall").secs(rows, "secs")
+      .num("exact_secs", exactSecs).num("planted_eps", eps, "%.2f")
+      .nums("planted_recall", plantedRows.map(_.d("recall")), "%.4f")
+      .nums("planted_secs", plantedRows.map(_.d("secs")))
+      .num("planted_exact_secs", plantedExactSecs)
+      .nums("pq_recall", pqRecall, "%.4f").nums("planted_pq_recall", plantedPqRecall, "%.4f")
+      .put("pq_dial", new Record().put("nprobe", dialNprobe).cols(dial, "m", "cf")
+        .put("bytes_per_vec", dial.map(_("m"))).fmt("%.4f", dial, "recall")
+        .put("opq", new Record().cols(opqDial, "m", "cf")
+          .fmt("%.4f", opqDial, "recall_pq", "recall_opq")))
   }
 
-  /** Streaming semantic-curation scale harness —
-    * `SPARK_GRAFT_SCALE_CURATE_STREAM` → `bench_scale_curate_stream
-    * .json`: the batch capstone has a measured slope
-    * (bench_scale_curate.json); this measures the STREAMING capstone
-    * ([[graft.streaming.StreamingCurate.idempotentCurateSemanticSink]])
+  /** Streaming semantic-curation scale harness: the batch capstone has a
+    * measured slope (bench_scale_curate.json); this measures the STREAMING
+    * capstone ([[graft.streaming.StreamingCurate.idempotentCurateSemanticSink]])
     * — micro-batch throughput and gate-state growth at 1×–8×, the r15
     * verdict's ask. Per size: the documents corpus replicated k×
     * ([[rotatedReplica]] text, embeddings attached by `orig_id mod
@@ -2866,39 +2351,33 @@ object Bench {
     * rows, kept-set state rows and on-disk MB — state growth is the
     * scale claim (bounded by admitted rows, cell-partitioned reads),
     * throughput the cost claim. */
-  private def scaleCurateStream(spark: SparkSession, sfDir: String,
-                                dropState: () => Unit): Unit = {
-    import org.apache.spark.sql.functions._
+  private def scaleCurateStream(c: Ctx): Record = {
     import graft.operators.Similarity
     import graft.streaming.{SemDedupIngest, StreamingCurate}
-    val docs = spark.read.parquet(s"$sfDir/documents.parquet")
-      .select("doc_id", "text")
-    val embs = spark.read.parquet(s"$sfDir/embeddings.parquet")
-      .select("vec_id", "embedding")
+    val spark = c.spark
+    val docs = c.docs
+    val embs = c.embeddings
     val nVecs = embs.count()
     val dims = embs.select(size(col("embedding"))).head().getInt(0)
-    val idSpan = docs.agg(max("doc_id")).head().getLong(0) + 1
+    val span = idSpan(docs, "doc_id")
     def replica(r: Int) = {
       val shift = (r * 7) % dims // de-correlate embeddings across replicas
       val emb =
         if (shift == 0) col("embedding")
         else concat(slice(col("embedding"), shift + 1, dims - shift),
           slice(col("embedding"), 1, shift))
-      rotatedReplica(docs, idSpan, r)
-        .withColumn("vec_id", pmod(col("doc_id") - lit(r * idSpan), lit(nVecs)))
+      rotatedReplica(docs, span, r)
+        .withColumn("vec_id", pmod(col("doc_id") - lit(r * span), lit(nVecs)))
         .join(embs, "vec_id")
         .select(col("doc_id"), col("text"), emb.as("embedding"))
     }
     val bloom = StreamingCurate.evalShingleBloom(
       docs.filter(pmod(col("doc_id"), lit(97)) === 0), "doc_id", "text")
-    val cents = Similarity.kmeansFit(embs, "vec_id", "embedding",
-      k = 8, iters = 3)
-    val sizes = Seq(1, 2, 4, 8)
-    val reps = repsFromEnv()
+    val cents = Similarity.kmeansFit(embs, "vec_id", "embedding", k = 8, iters = 3)
     val nBatches = 4
-    def drain(corpus: org.apache.spark.sql.DataFrame)
-        : (Double, Long, Long, Double) = {
-      val root = java.nio.file.Files.createTempDirectory("curate-stream")
+    // (secs, admitted rows, state rows, state MB) of one drain; only
+    // processAllAvailable is timed
+    def drain(corpus: DataFrame): (Double, Long, Long, Double) = withWork("curate-stream") { root =>
       val landing = s"$root/landing"
       corpus.repartition(nBatches).write.parquet(landing)
       val statePath = s"$root/gate"
@@ -2910,146 +2389,36 @@ object Bench {
         .option("maxFilesPerTrigger", 1).parquet(landing)
         .writeStream.option("checkpointLocation", s"$root/ckpt")
         .foreachBatch(sink).start()
-      val t0 = System.nanoTime()
-      q.processAllAvailable()
-      val secs = (System.nanoTime() - t0) / 1e9
+      val (_, secs) = clock(q.processAllAvailable())
       q.stop()
       val admitted = spark.read.parquet(s"$root/out").count()
       val stateRows = SemDedupIngest.keptSet(spark, statePath).count()
-      def walk(f: java.io.File): Long =
-        if (f.isFile) f.length
-        else Option(f.listFiles).map(_.map(walk).sum).getOrElse(0L)
-      val stateMb = walk(new java.io.File(statePath)) / 1e6
-      org.apache.commons.io.FileUtils.deleteQuietly(root.toFile)
-      (secs, admitted, stateRows, stateMb)
+      (secs, admitted, stateRows, treeBytes(new java.io.File(statePath)) / 1e6)
     }
     drain(replica(0)) // untimed warmup: codegen + stream-machinery init
-    dropState()
-    val rows = sizes.map { n =>
-      val corpus = (0 until n).map(replica).reduce(_ union _)
+    c.drop()
+    val pts = Seq(1, 2, 4, 8).map { n =>
+      val corpus = replicas(n)(replica)
       val nDocs = corpus.count()
-      val runs = (0 until reps).map { _ => dropState(); drain(corpus) }
-      val med = runs.sortBy(_._1).apply(reps / 2)
+      val runs = (0 until c.reps).map { _ => c.drop(); drain(corpus) }
+      val (secs, admitted, stateRows, stateMb) = runs.sortBy(_._1).apply(c.reps / 2)
       // admitted / state are deterministic across reps — assert, don't avg
-      require(runs.map(_._2).distinct.size == 1 &&
-        runs.map(_._3).distinct.size == 1,
+      require(runs.map(_._2).distinct.size == 1 && runs.map(_._3).distinct.size == 1,
         s"streaming curate nondeterministic at ${n}x: $runs")
-      (n, nDocs, med._1, nDocs / med._1, med._2, med._3, med._4)
+      Point("sizes" -> n, "docs" -> nDocs, "secs" -> secs, "rows_per_sec" -> nDocs / secs,
+        "admitted" -> admitted, "state_rows" -> stateRows, "state_mb" -> stateMb)
     }
-    type R = (Int, Long, Double, Double, Long, Long, Double)
-    def arr[T](f: R => T): String = jsonArr(rows)(f)
-    val meds = rows.map(_._3)
-    val line =
-      f"""{"metric":"curate_stream_scale","reps":$reps,"batches":$nBatches,""" +
-        f""""min_cosine":0.95,"sizes":${arr(_._1)},"docs":${arr(_._2)},""" +
-        f""""secs":${arr(r => f"${r._3}%.3f")},""" +
-        f""""rows_per_sec":${arr(r => f"${r._4}%.1f")},""" +
-        f""""admitted":${arr(_._5)},"state_rows":${arr(_._6)},""" +
-        f""""state_mb":${arr(r => f"${r._7}%.2f")},""" +
-        f""""slope_secs":${logLogSlope(sizes, meds)}%.3f,""" +
-        f""""segment_slopes":${segmentSlopesJson(sizes, meds)},"sf":"$sfDir"}"""
-    try java.nio.file.Files.write(
-      java.nio.file.Paths.get("bench_scale_curate_stream.json"),
-      (line + "\n").getBytes("UTF-8"))
-    catch { case e: Throwable =>
-      System.err.println(s"[bench] bench_scale_curate_stream.json: ${e.getMessage}") }
-    println(line)
+    Record.metric("curate_stream_scale").put("reps", c.reps).put("batches", nBatches)
+      .num("min_cosine", 0.95, "%.2f").cols(pts, "sizes", "docs").secs(pts, "secs")
+      .fmt("%.1f", pts, "rows_per_sec").cols(pts, "admitted", "state_rows")
+      .mb(pts, "state_mb").slope("slope_secs", pts, "secs")
+      .segmentSlopes("segment_slopes", pts, "secs")
   }
 
-  /** LSH scale-slope harness: replicate the documents corpus k× with a
-    * per-replica bijective character rotation (within-replica near-dup
-    * structure preserved exactly; cross-replica shingle overlap destroyed,
-    * so pair counts grow LINEARLY in k) and time the full LSH dedup at
-    * each size. Reports log-log slopes: near 1 = the candidate-generate-
-    * verify claim holds; near 2 = something quadratic crept in. */
-  private def scaleSlope(spark: SparkSession, sfDir: String,
-                         dropState: () => Unit): Unit = {
-    import org.apache.spark.sql.functions._
-    import graft.operators.Dedup
-    val docs = spark.read.parquet(s"$sfDir/documents.parquet")
-      .select("doc_id", "text")
-    val idSpan = docs.agg(max("doc_id")).head().getLong(0) + 1
-    def replica(k: Int) = rotatedReplica(docs, idSpan, k)
-    val sizes = Seq(1, 2, 4, 8, 16)
-    val reps = repsFromEnv()
-    // untimed warmup: codegen + JIT + shuffle-machinery init, so the 1×
-    // point isn't inflated by first-run costs and slopes aren't skewed
-    Dedup.duplicateClusters(Dedup.minhashDuplicates(
-      Dedup.hashedWordShingles(replica(0), "doc_id", "text"), 0.8)).count()
-    dropState()
-    val rows = sizes.map { n =>
-      // NOT checkpointed: dropState() between timings would evict the
-      // blocks mid-use; the union-of-translates re-scan is linear in n and
-      // identical across both timed runs, so slopes are unaffected
-      val corpus = (0 until n).map(replica).reduce(_ union _)
-      val nDocs = corpus.count()
-      def sh = Dedup.hashedWordShingles(corpus, "doc_id", "text")
-      var nPairs = 0L
-      val pairTimes = (0 until reps).map { _ =>
-        dropState()
-        val t0 = System.nanoTime()
-        nPairs = Dedup.minhashDuplicates(sh, 0.8).count()
-        (System.nanoTime() - t0) / 1e9
-      }.sorted
-      var nClusters = 0L; var ccRounds = 0
-      var ccTrace = Seq.empty[Long]
-      val e2eTimes = (0 until reps).map { _ =>
-        dropState()
-        val t1 = System.nanoTime()
-        val (clusters, r, trace) = Dedup.duplicateClustersWithTrace(
-          Dedup.minhashDuplicates(sh, 0.8))
-        nClusters = clusters.count()
-        ccRounds = r; ccTrace = trace
-        (System.nanoTime() - t1) / 1e9
-      }.sorted
-      // the trace must CONTRACT monotonically to the star edge set —
-      // an intermediate blow-up would be the hidden quadratic the
-      // rounds-flat headline could mask
-      ccTrace.sliding(2).foreach {
-        case Seq(a, b) => require(b <= a,
-          s"CC edge volume grew mid-alternation at ${n}x: $ccTrace")
-        case _ =>
-      }
-      dropState()
-      (n, nDocs, nPairs, nClusters,
-        pairTimes(pairTimes.size / 2), pairTimes.head, pairTimes.last,
-        e2eTimes(e2eTimes.size / 2), e2eTimes.head, e2eTimes.last, ccRounds,
-        ccTrace)
-    }
-    type R = (Int, Long, Long, Long, Double, Double, Double, Double, Double,
-      Double, Int, Seq[Long])
-    def slope(ys: Seq[Double]): Double = logLogSlope(sizes, ys)
-    def arr[T](f: R => T): String = jsonArr(rows)(f)
-    // cc_rounds: large/small-star rounds to the fixed point per size — the
-    // empirical side of the O(log n) convergence claim (flat-ish growth
-    // across 16× replicas, never proportional to size). cc_edge_trace
-    // pins the per-round EDGE VOLUME alongside (monotone contraction to
-    // the star set, require-checked above): rounds staying flat while an
-    // intermediate round ballooned would be a hidden quadratic — the
-    // trace makes that unconstructable silently.
-    val line =
-      f"""{"metric":"lsh_scale_slope","reps":$reps,"sizes":${arr(_._1)},"docs":${arr(_._2)},""" +
-        f""""pairs":${arr(_._3)},"clusters":${arr(_._4)},""" +
-        f""""pair_secs":${arr(r => f"${r._5}%.3f")},""" +
-        f""""pair_secs_min":${arr(r => f"${r._6}%.3f")},"pair_secs_max":${arr(r => f"${r._7}%.3f")},""" +
-        f""""e2e_secs":${arr(r => f"${r._8}%.3f")},""" +
-        f""""e2e_secs_min":${arr(r => f"${r._9}%.3f")},"e2e_secs_max":${arr(r => f"${r._10}%.3f")},""" +
-        f""""cc_rounds":${arr(_._11)},""" +
-        f""""cc_edge_trace":${arr(_._12.mkString("[", ",", "]"))},""" +
-        f""""slope_pairs":${slope(rows.map(_._5))}%.3f,""" +
-        f""""slope_e2e":${slope(rows.map(_._8))}%.3f,""" +
-        f""""segment_slopes_pairs":${segmentSlopesJson(sizes, rows.map(_._5))},""" +
-        f""""segment_slopes_e2e":${segmentSlopesJson(sizes, rows.map(_._8))},"sf":"$sfDir"}"""
-    try java.nio.file.Files.write(java.nio.file.Paths.get("bench_scale.json"),
-      (line + "\n").getBytes("UTF-8"))
-    catch { case e: Throwable => System.err.println(s"[bench] bench_scale.json: ${e.getMessage}") }
-    println(line)
-  }
-
-  /** Quality-classifier TRAIN/SERVE economics — `SPARK_GRAFT_SCALE_QC` →
-    * `bench_scale_qc.json`. Two claims measured per size (plain re-id'd
-    * 1–8× replicas of the documents table, labels from the heuristic
-    * gate exactly as q_quality_classifier distills them):
+  /** Quality-classifier TRAIN/SERVE economics. Two claims measured per
+    * size (plain re-id'd 1–8× replicas of the documents table, labels
+    * from the heuristic gate exactly as q_quality_classifier distills
+    * them):
     *  - TRAIN cost is linear in the corpus (each GD step is one margin
     *    probe pass + one explode/aggregate pass, both single scans), and
     *    the driver's footprint stays CONSTANT — the gradient collect is
@@ -3061,95 +2430,51 @@ object Bench {
     * shifted id) serves the IDENTICAL integer margin as its base — the
     * hashing/scoring path is content-deterministic by construction, so
     * any drift is a bug, not weather. */
-  private def scaleQualityClassifier(spark: SparkSession, sfDir: String,
-                                     dropState: () => Unit): Unit = {
-    import org.apache.spark.sql.functions._
+  private def scaleQualityClassifier(c: Ctx): Record = {
     import graft.operators.{TextAnalysis, TextClassifier}
-    val listener = new TaskMetricsListener
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      val docs = spark.read.parquet(s"$sfDir/documents.parquet")
-        .select("doc_id", "text")
-      val idSpan = docs.agg(max("doc_id")).head().getLong(0) + 1
-      val labeled = TextAnalysis.withQuality(docs, "text")
-        .select(col("doc_id"), col("text"),
-          (col("quality_score") >= 0.5).cast("int").as("label"))
-      def replica(k: Int) = labeled.select(
-        (col("doc_id") + lit(k * idSpan)).as("doc_id"), col("text"), col("label"))
-      val sizes = Seq(1, 2, 4, 8)
-      val reps = repsFromEnv()
-      val mb = 1024.0 * 1024.0
-      val dim = 1 << 16
-      val rows = sizes.map { n =>
-        val corpus = (0 until n).map(replica).reduce(_ unionByName _)
-          .persist()
-        val nDocs = corpus.count()
-        var model: TextClassifier.Model = null
-        val trainSecs = (0 until reps).map { _ =>
-          dropState()
-          corpus.count() // re-materialize the persisted input, untimed
-          val t0 = System.nanoTime()
-          model = TextClassifier.train(corpus, "text", "label",
-            dim = dim, iters = 8, lr = 0.5)
-          (System.nanoTime() - t0) / 1e9
-        }.sorted.apply(reps / 2)
-        val q = model.quantize
-        val nNonzero = q.qweights.count(_ != 0L)
-        var servedRows = 0L
-        val (serveSecs, serveShuffleMb) = {
-          val runs = (0 until reps).map { _ =>
-            dropState()
-            corpus.count()
-            listener.reset()
-            val t0 = System.nanoTime()
-            servedRows = TextClassifier.score(corpus, "doc_id", "text", q).count()
-            val s = (System.nanoTime() - t0) / 1e9
-            Thread.sleep(150)
-            (s, listener.shuffleWrite.get / mb)
-          }
-          (runs.map(_._1).sorted.apply(reps / 2),
-            runs.map(_._2).sorted.apply(reps / 2))
-        }
-        require(servedRows == nDocs, s"serve must score every row at ${n}x")
-        // REQUIRED exact: replica copies serve identical margins — join
-        // each copy to its base by id offset, compare integer margins
-        if (n > 1) {
-          val scored = TextClassifier.score(corpus, "doc_id", "text", q)
-            .select(col("doc_id"), col("margin_q"))
-          val base = scored.filter(col("doc_id") < idSpan)
-            .select(col("doc_id").as("bid"), col("margin_q").as("bm"))
-          val drift = scored.filter(col("doc_id") >= idSpan)
-            .withColumn("bid", pmod(col("doc_id"), lit(idSpan)))
-            .join(base, "bid")
-            .filter(col("margin_q") =!= col("bm")).count()
-          require(drift == 0,
-            s"replica copies served $drift diverging margins at ${n}x")
-        }
-        corpus.unpersist()
-        (n, nDocs, trainSecs, nNonzero, serveSecs, servedRows, serveShuffleMb)
+    val docs = c.docs
+    val span = idSpan(docs, "doc_id")
+    val labeled = TextAnalysis.withQuality(docs, "text")
+      .select(col("doc_id"), col("text"),
+        (col("quality_score") >= 0.5).cast("int").as("label"))
+    def replica(k: Int) = labeled.select(
+      (col("doc_id") + lit(k * span)).as("doc_id"), col("text"), col("label"))
+    val dim = 1 << 16
+    val pts = Seq(1, 2, 4, 8).map { n =>
+      val corpus = replicas(n)(replica).persist()
+      val nDocs = corpus.count()
+      // each rep re-materializes the persisted input, untimed
+      val train = c.timedAfter(corpus.count())(TextClassifier.train(corpus, "text", "label",
+        dim = dim, iters = 8, lr = 0.5))
+      val q = train.last.quantize
+      val serve = c.timedAfter(corpus.count())(
+        TextClassifier.score(corpus, "doc_id", "text", q).count())
+      require(serve.last == nDocs, s"serve must score every row at ${n}x")
+      // REQUIRED exact: replica copies serve identical margins — join
+      // each copy to its base by id offset, compare integer margins
+      if (n > 1) {
+        val scored = TextClassifier.score(corpus, "doc_id", "text", q)
+          .select(col("doc_id"), col("margin_q"))
+        val base = scored.filter(col("doc_id") < span)
+          .select(col("doc_id").as("bid"), col("margin_q").as("bm"))
+        val drift = scored.filter(col("doc_id") >= span)
+          .withColumn("bid", pmod(col("doc_id"), lit(span)))
+          .join(base, "bid")
+          .filter(col("margin_q") =!= col("bm")).count()
+        require(drift == 0, s"replica copies served $drift diverging margins at ${n}x")
       }
-      def arr(f: ((Int, Long, Double, Int, Double, Long, Double)) => Any) =
-        jsonArr(rows)(f)
-      val line =
-        f"""{"metric":"qc_scale","reps":$reps,"dim":$dim,"iters":8,""" +
-          f""""sizes":${arr(_._1)},"docs":${arr(_._2)},""" +
-          f""""train_secs":${arr(r => f"${r._3}%.3f")},""" +
-          f""""nonzero_weights":${arr(_._4)},""" +
-          f""""serve_secs":${arr(r => f"${r._5}%.3f")},""" +
-          f""""served_rows":${arr(_._6)},""" +
-          f""""serve_shuffle_mb":${arr(r => f"${r._7}%.2f")},""" +
-          f""""slope_train":${logLogSlope(sizes, rows.map(_._3))}%.3f,""" +
-          f""""slope_serve":${logLogSlope(sizes, rows.map(_._5))}%.3f,"sf":"$sfDir"}"""
-      try java.nio.file.Files.write(java.nio.file.Paths.get("bench_scale_qc.json"),
-        (line + "\n").getBytes("UTF-8"))
-      catch { case e: Throwable =>
-        System.err.println(s"[bench] bench_scale_qc.json: ${e.getMessage}") }
-      println(line)
-    } finally spark.sparkContext.removeSparkListener(listener)
+      corpus.unpersist()
+      Point("sizes" -> n, "docs" -> nDocs, "train_secs" -> train.secs,
+        "nonzero_weights" -> q.qweights.count(_ != 0L), "serve_secs" -> serve.secs,
+        "served_rows" -> serve.last, "serve_shuffle_mb" -> serve.io.shuffleMb)
+    }
+    Record.metric("qc_scale").put("reps", c.reps).put("dim", dim).put("iters", 8)
+      .cols(pts, "sizes", "docs").secs(pts, "train_secs").cols(pts, "nonzero_weights")
+      .secs(pts, "serve_secs").cols(pts, "served_rows").mb(pts, "serve_shuffle_mb")
+      .slope("slope_train", pts, "train_secs").slope("slope_serve", pts, "serve_secs")
   }
 
-  /** Multimodal-dedup economics — `SPARK_GRAFT_SCALE_MM` →
-    * `bench_scale_multimodal.json`. The narrow-pass claim measured: the
+  /** Multimodal-dedup economics. The narrow-pass claim measured: the
     * decode+hash pass reads the full payload bytes but emits 8 BYTES PER
     * ASSET (hash rows), so the banded pairing downstream scales on the
     * hash table alone, never the payloads. Per size (1–4× synthetic
@@ -3163,132 +2488,88 @@ object Bench {
     * hashes and banding are id-deterministic, so each ladder size's pair
     * SET must CONTAIN the previous size's (the prefix ids are the same
     * assets) — a vanished pair means nondeterminism, which is a bug. */
-  private def scaleMultimodalDedup(spark: SparkSession, sfDir: String,
-                                   dropState: () => Unit): Unit = {
-    import org.apache.spark.sql.functions._
+  private def scaleMultimodalDedup(c: Ctx): Record = withWork("mm-scale") { work =>
     import graft.operators.{Dedup, Multimodal}
-    val listener = new TaskMetricsListener
-    spark.sparkContext.addSparkListener(listener)
-    val work = java.nio.file.Files.createTempDirectory("mm-scale").toString
-    try {
-      val perReplica = 2000L
-      val sizes = Seq(1, 2, 4)
-      val reps = repsFromEnv()
-      val mb = 1024.0 * 1024.0
-      def dirBytes(p: String): Long = {
-        def walk(f: java.io.File): Long =
-          if (f.isFile) f.length
-          else Option(f.listFiles).getOrElse(Array.empty).map(walk).sum
-        walk(new java.io.File(p))
+    val spark = c.spark
+    val perReplica = 2000L
+    val kinds = Seq("img", "pcm", "vid")
+    // persisted corpora per size, synthesis untimed (the q_image_dedup
+    // discipline: the measured body is decode+hash, not byte-building).
+    // One measurement shape per modality — image, audio, and (r18)
+    // video, whose hash pass decodes only the SAMPLED frames per clip.
+    def buildCorpus(n: Int, kind: String): String = {
+      val path = s"$work/$kind$n"
+      val ids = spark.range(n * perReplica).toDF("doc_id")
+      val (payload, mime) = kind match {
+        case "img" => (SparkEntry.synthImagePayload(col("doc_id")), "image/bmp")
+        case "pcm" => (SparkEntry.synthAudioPayload(col("doc_id")), "audio/pcm-u8")
+        case _ => (SparkEntry.synthVideoPayload(col("doc_id")), "video/x-graft-bmpseq")
       }
-      // persisted corpora per size, synthesis untimed (the q_image_dedup
-      // discipline: the measured body is decode+hash, not byte-building).
-      // One measurement shape per modality — image, audio, and (r18)
-      // video, whose hash pass decodes only the SAMPLED frames per clip.
-      case class Mod(diskMb: Double, secs: Double, readMb: Double,
-                     hashes: Long, pairs: Set[(Long, Long)])
-      def buildCorpus(n: Int, kind: String): String = {
-        val path = s"$work/$kind$n"
-        val ids = spark.range(n * perReplica).toDF("doc_id")
-        val (payload, mime) = kind match {
-          case "img" => (SparkEntry.synthImagePayload(col("doc_id")), "image/bmp")
-          case "pcm" => (SparkEntry.synthAudioPayload(col("doc_id")), "audio/pcm-u8")
-          case _ => (SparkEntry.synthVideoPayload(col("doc_id")), "video/x-graft-bmpseq")
-        }
-        val base = Multimodal.toAssets(
-          ids.select(col("doc_id"), payload.as("pl")), "doc_id", "pl", mime)
-        val planted = base.filter(pmod(col("asset_id"), lit(5)) === 0)
-        val copies = (kind match {
-          case "img" => Multimodal.resizeImages(planted, 128, 96)
-          case "pcm" => Multimodal.resamplePcm(planted, 3000, gain = 0.5)
-          case _ => Multimodal.transcodeVideo(planted,
-            Multimodal.VideoSampleFrames, 96, 72)
-        }).select((col("asset_id") + lit(PlantOffset)).as("asset_id"),
-          col("content"), col("meta"))
-        base.unionByName(copies).write.mode("overwrite").parquet(path)
-        path
-      }
-      def measure(n: Int, kind: String): Mod = {
-        val path = buildCorpus(n, kind)
-        def hashed(assets: org.apache.spark.sql.DataFrame) = kind match {
-          case "img" => Multimodal.imageDHash(assets)
-          case "pcm" => Multimodal.audioFingerprints(assets)
-          case _ => Multimodal.videoDHash(assets)
-        }
-        val runs = (0 until reps).map { _ =>
-          dropState()
-          listener.reset()
-          val t0 = System.nanoTime()
-          val nHashes = hashed(spark.read.parquet(path)).count()
-          val s = (System.nanoTime() - t0) / 1e9
-          Thread.sleep(150)
-          (s, listener.inputBytes.get / mb, nHashes)
-        }
-        val pairs = (kind match {
-          case "img" => Dedup.imageNearDupPairs(spark.read.parquet(path))
-          case "pcm" => Dedup.audioNearDupPairs(spark.read.parquet(path))
-          case _ => Dedup.videoNearDupPairs(spark.read.parquet(path))
-        }).select("id_a", "id_b").collect()
-          .map(r => (r.getLong(0), r.getLong(1))).toSet
-        dropState()
-        Mod(dirBytes(path) / mb,
-          runs.map(_._1).sorted.apply(reps / 2),
-          runs.map(_._2).sorted.apply(reps / 2),
-          runs.head._3, pairs)
-      }
-      val kinds = Seq("img", "pcm", "vid")
-      val rows = sizes.map { n =>
-        (n, n * perReplica, kinds.map(k => k -> measure(n, k)).toMap)
-      }
-      // REQUIRED exact: id-determinism makes the ladder's pair sets
-      // prefix-monotone — a pair found at size k must be found at every
-      // larger size (same ids, same hashes, same bands)
-      rows.sliding(2).foreach {
-        case Seq(a, b) => kinds.foreach { k =>
-          require(a._3(k).pairs.subsetOf(b._3(k).pairs),
-            s"$k pair set regressed ${a._1}x -> ${b._1}x: " +
-              s"${(a._3(k).pairs -- b._3(k).pairs).take(3)}")
-        }
-        case _ =>
-      }
-      def plants(s: Set[(Long, Long)]): Long =
-        s.count { case (x, y) => y - x == PlantOffset }.toLong
-      def others(s: Set[(Long, Long)]): Long = s.size - plants(s)
-      def recall(s: Set[(Long, Long)], n: Int): Double =
-        plants(s).toDouble / (n * perReplica / 5).toDouble
-      def arr(f: ((Int, Long, Map[String, Mod])) => Any) = jsonArr(rows)(f)
-      def block(k: String, tag: String): String =
-        f""""${tag}_disk_mb":${arr(r => f"${r._3(k).diskMb}%.2f")},""" +
-          f""""${tag}_hash_secs":${arr(r => f"${r._3(k).secs}%.3f")},""" +
-          f""""${tag}_read_mb":${arr(r => f"${r._3(k).readMb}%.2f")},""" +
-          f""""${tag}_hashes":${arr(_._3(k).hashes)},""" +
-          f""""${tag}_plant_pairs":${arr(r => plants(r._3(k).pairs))},""" +
-          f""""${tag}_other_pairs":${arr(r => others(r._3(k).pairs))},""" +
-          f""""${tag}_plant_recall":${arr(r => f"${recall(r._3(k).pairs, r._1)}%.3f")},"""
-      val line =
-        f"""{"metric":"multimodal_scale","reps":$reps,"per_replica":$perReplica,""" +
-          f""""sizes":${arr(_._1)},"assets_base":${arr(_._2)},""" +
-          block("img", "img") + block("pcm", "pcm") + block("vid", "vid") +
-          f""""slope_img_hash":${logLogSlope(sizes, rows.map(_._3("img").secs))}%.3f,""" +
-          f""""slope_pcm_hash":${logLogSlope(sizes, rows.map(_._3("pcm").secs))}%.3f,""" +
-          f""""slope_vid_hash":${logLogSlope(sizes, rows.map(_._3("vid").secs))}%.3f,"sf":"$sfDir"}"""
-      try java.nio.file.Files.write(
-        java.nio.file.Paths.get("bench_scale_multimodal.json"),
-        (line + "\n").getBytes("UTF-8"))
-      catch { case e: Throwable =>
-        System.err.println(s"[bench] bench_scale_multimodal.json: ${e.getMessage}") }
-      println(line)
-    } finally {
-      spark.sparkContext.removeSparkListener(listener)
-      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(work))
+      val base = Multimodal.toAssets(
+        ids.select(col("doc_id"), payload.as("pl")), "doc_id", "pl", mime)
+      val planted = base.filter(pmod(col("asset_id"), lit(5)) === 0)
+      val copies = (kind match {
+        case "img" => Multimodal.resizeImages(planted, 128, 96)
+        case "pcm" => Multimodal.resamplePcm(planted, 3000, gain = 0.5)
+        case _ => Multimodal.transcodeVideo(planted,
+          Multimodal.VideoSampleFrames, 96, 72)
+      }).select((col("asset_id") + lit(PlantOffset)).as("asset_id"),
+        col("content"), col("meta"))
+      base.unionByName(copies).write.mode("overwrite").parquet(path)
+      path
     }
+    // one modality at one size: its point columns and its pair set
+    def measure(n: Int, kind: String): (Seq[(String, Any)], Set[(Long, Long)]) = {
+      val path = buildCorpus(n, kind)
+      val hash = c.timed((kind match {
+        case "img" => Multimodal.imageDHash(spark.read.parquet(path))
+        case "pcm" => Multimodal.audioFingerprints(spark.read.parquet(path))
+        case _ => Multimodal.videoDHash(spark.read.parquet(path))
+      }).count())
+      val pairs = (kind match {
+        case "img" => Dedup.imageNearDupPairs(spark.read.parquet(path))
+        case "pcm" => Dedup.audioNearDupPairs(spark.read.parquet(path))
+        case _ => Dedup.videoNearDupPairs(spark.read.parquet(path))
+      }).select("id_a", "id_b").collect()
+        .map(r => (r.getLong(0), r.getLong(1))).toSet
+      c.drop()
+      val plants = pairs.count { case (x, y) => y - x == PlantOffset }.toLong
+      (Seq(s"${kind}_disk_mb" -> treeBytes(new java.io.File(path)) / MB,
+        s"${kind}_hash_secs" -> hash.secs, s"${kind}_read_mb" -> hash.io.inputMb,
+        s"${kind}_hashes" -> hash.last, s"${kind}_plant_pairs" -> plants,
+        s"${kind}_other_pairs" -> (pairs.size - plants),
+        s"${kind}_plant_recall" -> plants.toDouble / (n * perReplica / 5).toDouble), pairs)
+    }
+    val ladder = Seq(1, 2, 4).map { n =>
+      val byKind = kinds.map(measure(n, _))
+      (Point("sizes" -> n, "assets_base" -> n * perReplica) ++ (byKind.flatMap(_._1): _*),
+        kinds.zip(byKind.map(_._2)).toMap)
+    }
+    // REQUIRED exact: id-determinism makes the ladder's pair sets
+    // prefix-monotone — a pair found at size k must be found at every
+    // larger size (same ids, same hashes, same bands)
+    ladder.sliding(2).foreach {
+      case Seq((a, pa), (b, pb)) => kinds.foreach { k =>
+        require(pa(k).subsetOf(pb(k)),
+          s"$k pair set regressed ${a("sizes")}x -> ${b("sizes")}x: " +
+            s"${(pa(k) -- pb(k)).take(3)}")
+      }
+      case _ =>
+    }
+    val pts = ladder.map(_._1)
+    val blocks = kinds.foldLeft(Record.metric("multimodal_scale").put("reps", c.reps)
+        .put("per_replica", perReplica).cols(pts, "sizes", "assets_base")) { (r, k) =>
+      r.mb(pts, s"${k}_disk_mb").secs(pts, s"${k}_hash_secs").mb(pts, s"${k}_read_mb")
+        .cols(pts, s"${k}_hashes", s"${k}_plant_pairs", s"${k}_other_pairs")
+        .fmt("%.3f", pts, s"${k}_plant_recall")
+    }
+    kinds.foldLeft(blocks)((r, k) => r.slope(s"slope_${k}_hash", pts, s"${k}_hash_secs"))
   }
 
   /** Shared plant-copy id offset for the multimodal scale corpora. */
   private val PlantOffset = 10000000L
 
-  /** CONCURRENT-serving harness — `SPARK_GRAFT_SCALE_CONCURRENT` →
-    * `bench_scale_concurrent.json`. Every other number in the suite is
+  /** CONCURRENT-serving harness. Every other number in the suite is
     * serialized query-at-a-time; a production cluster serves many
     * queries AT ONCE on one long-lived session. The claim under test:
     * the persisted-layout serve paths (BM25, IVF/PQ/OPQ, pruned LM) are
@@ -3298,37 +2579,29 @@ object Bench {
     * single query's latency degrades unboundedly (p95 stays within a
     * small factor of its solo median).
     *
-    * Method: one FAIR-scheduler session (each query thread gets its own
-    * pool, so no job-level FIFO convoy — undeclared pools share fairly
-    * with weight 1); the 8 serve queries prewarm serially (persisted
-    * layouts + codegen, untimed), then `rounds` SERIAL rounds (each
-    * query once, back-to-back — the warm solo baseline) and `rounds`
-    * CONCURRENT rounds (all 8 launched simultaneously from 8 threads
-    * behind a start latch, each timed to its own finish; wall = latch
-    * release → last finish). Caches stay WARM throughout (that is the
-    * serving scenario — the cold-build cost is measured elsewhere);
-    * between rounds only a GC settle runs, off every timed window.
-    * Row counts are pinned to the prewarm answer on every timed run, so
-    * no concurrency win can come from a wrong or short-circuited
-    * answer. p50/p95 are nearest-rank over `rounds` samples (default 8
-    * — p95 ≈ max at that depth; raise SPARK_GRAFT_CONC_ROUNDS for a
-    * finer tail).
+    * Method: one FAIR-scheduler session (the table entry's session conf;
+    * each query thread gets its own pool, so no job-level FIFO convoy —
+    * undeclared pools share fairly with weight 1); the 8 serve queries
+    * prewarm serially (persisted layouts + codegen, untimed), then
+    * `rounds` SERIAL rounds (each query once, back-to-back — the warm
+    * solo baseline) and `rounds` CONCURRENT rounds (all 8 launched
+    * simultaneously from 8 threads behind a start latch, each timed to
+    * its own finish; wall = latch release → last finish). Caches stay
+    * WARM throughout (that is the serving scenario — the cold-build cost
+    * is measured elsewhere); between rounds only a GC settle runs, off
+    * every timed window. Row counts are pinned to the prewarm answer on
+    * every timed run, so no concurrency win can come from a wrong or
+    * short-circuited answer. p50/p95 are nearest-rank over `rounds`
+    * samples (default 8 — p95 ≈ max at that depth; raise
+    * SPARK_GRAFT_CONC_ROUNDS for a finer tail).
     *
     * A final NOISY-NEIGHBOR section times one serve per family while the
     * kn5 train loops in a separate FAIR pool — the multi-tenant shape:
     * `under_train.slowdown_p50` is the fair-share latency tax an
     * interactive tenant pays next to a batch tenant. */
-  private def scaleConcurrentServing(spark0: SparkSession, sfDir: String,
-                                     cpus: String): Unit = {
-    spark0.stop()
-    SparkSession.clearActiveSession()
-    SparkSession.clearDefaultSession()
-    val spark = Sessions.local(cpus, Map("spark.scheduler.mode" -> "FAIR"))
-    try scaleConcurrentBody(spark, sfDir)
-    finally spark.stop()
-  }
-
-  private def scaleConcurrentBody(spark: SparkSession, sfDir: String): Unit = {
+  private def scaleConcurrentServing(c: Ctx): Record = {
+    val spark = c.spark
+    val sfDir = c.sfDir
     // the serving mix: one query per persisted-layout family, all
     // *_served twins (answered from an already-committed index/model —
     // no build work inside the timed body)
@@ -3346,28 +2619,24 @@ object Bench {
       fn(spark, sfDir).count(); n -> fn(spark, sfDir).count()
     }.toMap
     def settle(): Unit = { System.gc(); Thread.sleep(200) }
-    def timedCount(name: String, fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Double = {
-      val t0 = System.nanoTime()
-      val rows = fn(spark, sfDir).count()
-      val secs = (System.nanoTime() - t0) / 1e9
+    def timedCount(name: String, fn: (SparkSession, String) => DataFrame): Double = {
+      val (rows, secs) = clock(fn(spark, sfDir).count())
       require(rows == expectRows(name),
         s"$name answered $rows rows under load, expected ${expectRows(name)}")
       secs
     }
-    // SERIAL rounds: warm solo latencies, one round = all 8 back-to-back
-    val serialLat = collection.mutable.Map.empty[String, Vector[Double]]
+    def latencies() = collection.mutable.Map.empty[String, Vector[Double]]
       .withDefaultValue(Vector.empty)
+    // SERIAL rounds: warm solo latencies, one round = all 8 back-to-back
+    val serialLat = latencies()
     val serialWalls = (0 until rounds).map { _ =>
       settle()
-      val t0 = System.nanoTime()
-      fns.foreach { case (n, fn) => serialLat(n) = serialLat(n) :+ timedCount(n, fn) }
-      (System.nanoTime() - t0) / 1e9
+      clock(fns.foreach { case (n, fn) => serialLat(n) = serialLat(n) :+ timedCount(n, fn) })._2
     }
     // CONCURRENT rounds: all 8 in flight on the one session, each thread
     // in its own FAIR pool; a thread failure is recorded and rethrown
     // after join (never swallowed into a fake timing)
-    val concLat = collection.mutable.Map.empty[String, Vector[Double]]
-      .withDefaultValue(Vector.empty)
+    val concLat = latencies()
     val concWalls = (0 until rounds).map { _ =>
       settle()
       val start = new java.util.concurrent.CountDownLatch(1)
@@ -3382,10 +2651,7 @@ object Bench {
         }, s"conc-$n")
         t.start(); t
       }
-      val t0 = System.nanoTime()
-      start.countDown()
-      threads.foreach(_.join())
-      val wall = (System.nanoTime() - t0) / 1e9
+      val (_, wall) = clock { start.countDown(); threads.foreach(_.join()) }
       if (!errs.isEmpty) throw errs.peek()
       fns.foreach { case (n, _) => concLat(n) = concLat(n) :+ lats.get(n).doubleValue() }
       wall
@@ -3394,16 +2660,15 @@ object Bench {
       val s = xs.sorted
       s(math.min(s.size - 1, math.max(0, math.ceil(p * s.size).toInt - 1)))
     }
-    val perQuery = mix.map { n =>
+    val perQuery = mix.foldLeft(new Record()) { (r, n) =>
       val sp50 = pct(serialLat(n), 0.50)
-      val cp50 = pct(concLat(n), 0.50); val cp95 = pct(concLat(n), 0.95)
-      f""""$n":{"serial_p50":$sp50%.3f,"conc_p50":$cp50%.3f,""" +
-        f""""conc_p95":$cp95%.3f,"slowdown_p50":${cp50 / sp50}%.2f,""" +
-        f""""rows":${expectRows(n)}}"""
-    }.mkString("{", ",", "}")
+      val cp50 = pct(concLat(n), 0.50)
+      r.put(n, new Record().num("serial_p50", sp50).num("conc_p50", cp50)
+        .num("conc_p95", pct(concLat(n), 0.95)).num("slowdown_p50", cp50 / sp50, "%.2f")
+        .put("rows", expectRows(n)))
+    }
     val serialSum = mix.map(n => pct(serialLat(n), 0.50)).sum
-    val sWall = pct(serialWalls, 0.50)
-    val cWall = pct(concWalls, 0.50); val cWall95 = pct(concWalls, 0.95)
+    val cWall = pct(concWalls, 0.50)
     // NOISY-NEIGHBOR section: one serve query per family timed while a
     // HEAVY TRAIN (the kn5 cascade — the suite's most expensive job) runs
     // uninterrupted in a different FAIR pool. The claim: fair sharing
@@ -3414,8 +2679,7 @@ object Bench {
     val nnMix = Seq("q_bm25_served", "q_ann_serve", "q_ann_opq_served",
       "q_lm_xent_served")
     val trainFn = SparkEntry.queries("q_lm_xent_kn5")
-    val nnLat = collection.mutable.Map.empty[String, Vector[Double]]
-      .withDefaultValue(Vector.empty)
+    val nnLat = latencies()
     (0 until rounds).foreach { _ =>
       settle()
       val stop = new java.util.concurrent.atomic.AtomicBoolean(false)
@@ -3430,31 +2694,24 @@ object Bench {
       }, "conc-train")
       trainer.start()
       Thread.sleep(300) // let the train actually occupy the pool first
-      nnMix.foreach { case n =>
+      nnMix.foreach { n =>
         spark.sparkContext.setLocalProperty("spark.scheduler.pool", "serve")
         nnLat(n) = nnLat(n) :+ timedCount(n, SparkEntry.queries(n))
       }
       stop.set(true); trainer.join()
     }
-    val underTrain = nnMix.map { n =>
+    val underTrain = nnMix.foldLeft(new Record()) { (r, n) =>
       val solo = pct(serialLat(n), 0.50)
-      val p50 = pct(nnLat(n), 0.50); val p95 = pct(nnLat(n), 0.95)
-      f""""$n":{"solo_p50":$solo%.3f,"under_train_p50":$p50%.3f,""" +
-        f""""under_train_p95":$p95%.3f,"slowdown_p50":${p50 / solo}%.2f}"""
-    }.mkString("{", ",", "}")
-    val line =
-      f"""{"metric":"concurrent_serving","n_concurrent":${mix.size},""" +
-        f""""rounds":$rounds,"scheduler":"FAIR","queries":$perQuery,""" +
-        f""""serial_sum_p50":$serialSum%.3f,"serial_wall_p50":$sWall%.3f,""" +
-        f""""concurrent_wall_p50":$cWall%.3f,"concurrent_wall_p95":$cWall95%.3f,""" +
-        f""""speedup_vs_serial_sum":${serialSum / cWall}%.2f,""" +
-        f""""under_train":{"neighbor":"q_lm_xent_kn5","queries":$underTrain},""" +
-        f""""sf":"$sfDir"}"""
-    try java.nio.file.Files.write(
-      java.nio.file.Paths.get("bench_scale_concurrent.json"),
-      (line + "\n").getBytes("UTF-8"))
-    catch { case e: Throwable =>
-      System.err.println(s"[bench] bench_scale_concurrent.json: ${e.getMessage}") }
-    println(line)
+      val p50 = pct(nnLat(n), 0.50)
+      r.put(n, new Record().num("solo_p50", solo).num("under_train_p50", p50)
+        .num("under_train_p95", pct(nnLat(n), 0.95)).num("slowdown_p50", p50 / solo, "%.2f"))
+    }
+    Record.metric("concurrent_serving").put("n_concurrent", mix.size).put("rounds", rounds)
+      .put("scheduler", "FAIR").put("queries", perQuery).num("serial_sum_p50", serialSum)
+      .num("serial_wall_p50", pct(serialWalls, 0.50)).num("concurrent_wall_p50", cWall)
+      .num("concurrent_wall_p95", pct(concWalls, 0.95))
+      .num("speedup_vs_serial_sum", serialSum / cWall, "%.2f")
+      .put("under_train", new Record().put("neighbor", "q_lm_xent_kn5")
+        .put("queries", underTrain))
   }
 }

@@ -665,7 +665,7 @@ class PlanSpec extends SparkSpec {
       def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit = queries.incrementAndGet()
       def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = queries.incrementAndGet()
     }
-    val drain = () => org.apache.spark.graft.ListenerBus.drain(spark.sparkContext)
+    val drain = () => org.apache.spark.sql.graft.ListenerBus.drain(spark.sparkContext)
     drain()
     spark.sparkContext.addSparkListener(jobListener)
     spark.listenerManager.register(queryListener)

@@ -1566,6 +1566,32 @@ class PropertySpec extends SparkSpec {
       }
     }
   }
+
+  test("jaccardPairs ≡ its former shingle-join form on distinct rows, " +
+    "minJaccard 0.0 included") {
+    import PropertySpec.jaccardPairsJoin
+    def bits(d: org.apache.spark.sql.DataFrame) = d.collect().toSeq.map(r =>
+      (r.getLong(0), r.getLong(1), java.lang.Double.doubleToRawLongBits(r.getDouble(2)))).sorted
+    val word = Gen.oneOf("alpha", "beta", "gamma", "delta", "eps", "zeta", "eta", "theta")
+    val base = Gen.listOfN(10, word)
+    val corpus = Gen.listOfN(3, base).flatMap(bs => Gen.listOfN(16, for {
+      b <- Gen.oneOf(bs); i <- Gen.chooseNum(0, 9); w <- word; keep <- Gen.chooseNum(4, 10)
+    } yield b.updated(i, w).take(keep).mkString(" ")))
+    forAll(corpus) { texts =>
+      // doc 16 shares no word with the others; doc 17 has no shingle
+      val docs = (texts.zipWithIndex.map { case (t, i) => (i.toLong, t) } ++
+        Seq((16L, "omega psi chi phi upsilon tau"), (17L, ""))).toDF("doc_id", "text")
+      for (sh <- Seq(Dedup.hashedWordShingles(docs, "doc_id", "text"),
+                     Dedup.wordShingles(docs, "doc_id", "text", 2))) {
+        assert(sh.count() == sh.distinct().count(), "the reference needs distinct rows")
+        for (minJ <- Seq(0.0, 0.3, 0.8)) {
+          val want = bits(jaccardPairsJoin(sh, minJ))
+          assert(bits(Dedup.jaccardPairs(sh, minJ)) == want, s"minJaccard $minJ")
+          if (minJ == 0.0) assert(want.exists(_._3 != java.lang.Double.doubleToRawLongBits(1.0)))
+        }
+      }
+    }
+  }
 }
 
 object PropertySpec {
@@ -1578,8 +1604,13 @@ object PropertySpec {
   def jaccardForJoin(pairs: DataFrame, sh: DataFrame): DataFrame = {
     val a = sh.select(col("sh_id").as("id_a"), col("shingle"))
     val b = sh.select(col("sh_id").as("id_b"), col("shingle"))
-    val inter = pairs.join(a, Seq("id_a")).join(b, Seq("id_b", "shingle"))
-      .groupBy("id_a", "id_b").agg(count(lit(1)).as("inter"))
+    attachJaccard(pairs.join(a, Seq("id_a")).join(b, Seq("id_b", "shingle"))
+      .groupBy("id_a", "id_b").agg(count(lit(1)).as("inter")), sh)
+  }
+
+  /** The old forms' shared tail: `|A∩B| / |A∪B|` with set sizes taken as
+    * row counts of `sh`. */
+  private def attachJaccard(inter: DataFrame, sh: DataFrame): DataFrame = {
     val sizes = sh.groupBy("sh_id").agg(count(lit(1)).as("sz"))
     inter
       .join(sizes.withColumnRenamed("sh_id", "id_a").withColumnRenamed("sz", "sz_a"), "id_a")
@@ -1587,6 +1618,18 @@ object PropertySpec {
       .withColumn("jaccard",
         col("inter").cast("double") / (col("sz_a") + col("sz_b") - col("inter")))
       .select("id_a", "id_b", "jaccard")
+  }
+
+  /** [[Dedup.jaccardPairs]] as it was before it deduplicated its input:
+    * the shingle self-join counts `|A∩B|`, set sizes are row counts. Exact
+    * on distinct `(id, shingle)` rows only. */
+  def jaccardPairsJoin(sh0: DataFrame, minJaccard: Double): DataFrame = {
+    val sh = sh0.localCheckpoint()
+    val a = sh.select(col("sh_id").as("id_a"), col("shingle"))
+    val b = sh.select(col("sh_id").as("id_b"), col("shingle"))
+    attachJaccard(a.join(b, Seq("shingle")).filter(col("id_a") < col("id_b"))
+      .groupBy("id_a", "id_b").agg(count(lit(1)).as("inter")), sh)
+      .filter(col("jaccard") >= minJaccard)
   }
 
   /** [[Dedup.minhashDuplicates]] as it was: the shingle rows checkpointed,

@@ -2923,6 +2923,19 @@ class TrainingOpsSpec extends SparkSpec {
       Seq((1L, 2L), (1L, 3L), (1L, 2L), (1L, 3L)).toDF("id_a", "id_b"), sh)) == once)
   }
 
+  test("jaccardPairs: one repeated id scores its duplicate at 1.0, not 2.0") {
+    val docs = Seq((1L, repText), (1L, repText), (2L, repText)).toDF("doc_id", "text")
+    assert(jaccards(Dedup.jaccardPairs(
+      Dedup.hashedWordShingles(docs, "doc_id", "text"), 0.8)) == Seq((1L, 2L, 1.0)))
+  }
+
+  test("jaccardPairs: two ids, each repeated with the same text, give one pair at 1.0") {
+    val docs = Seq((1L, repText), (1L, repText), (2L, repText), (2L, repText))
+      .toDF("doc_id", "text")
+    assert(jaccards(Dedup.jaccardPairs(
+      Dedup.hashedWordShingles(docs, "doc_id", "text"), 0.8)) == Seq((1L, 2L, 1.0)))
+  }
+
   test("redactPii: emails, IPv4s, phones replaced; counts audit the scrub") {
     val d = Seq(
       (1L, "mail a.user+tag@sub.example.co.uk or call 555-123-4567 from 10.0.0.1"),
