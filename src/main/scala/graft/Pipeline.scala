@@ -182,7 +182,7 @@ object Pipeline {
              maxSharedSpanFrac: Option[Double] = None,
              lmGate: Option[(LanguageModel.BigramLm, Double)] = None): DataFrame = {
     val dupLosers = Dedup.minhashDuplicates(
-        Dedup.hashedWordShingles(docs, idCol, textCol), minJaccard)
+        Dedup.shingleHashArrays(docs, idCol, textCol), minJaccard)
       .select(col("id_b").as(idCol))
     val kept = TextAnalysis.withQuality(
         Dedup.decontaminate(docs, evalDocs, idCol, textCol, shingleK), textCol)

@@ -400,7 +400,7 @@ object SparkEntry {
     * oracle-checked against the exact all-pairs SQL. */
   private def qDedupMinhash(s: SparkSession, dir: String): DataFrame =
     Dedup.minhashDuplicates(
-        Dedup.hashedWordShingles(tbl(s, dir, "documents"), "doc_id", "text"), 0.8)
+        Dedup.shingleHashArrays(tbl(s, dir, "documents"), "doc_id", "text"), 0.8)
       .withColumn("jaccard", rq(col("jaccard"), 6))
 
   /** Fixture parquet the DuckDB oracle reads back for q_dedup_simhash —
@@ -685,7 +685,7 @@ object SparkEntry {
       graft.functions.DotProduct.getClass,
       graft.functions.Exprs.getClass, graft.functions.HashedWeightSum.getClass,
       graft.functions.JpegDims.getClass, graft.functions.LshBandBuckets.getClass,
-      graft.functions.MinHashSignature.getClass,
+      graft.functions.MinHashSketch.getClass,
       graft.functions.NearestCentroid.getClass,
       graft.functions.PiiScan.getClass, graft.functions.QualityCounts.getClass,
       graft.functions.ShingleHashes.getClass, graft.functions.SimHash64.getClass,
@@ -698,7 +698,7 @@ object SparkEntry {
       classOf[graft.functions.HashedWeightSum],
       classOf[graft.functions.HashedWeightSumQ],
       classOf[graft.functions.JpegDims], classOf[graft.functions.LshBandBuckets],
-      classOf[graft.functions.MinHashSignature],
+      classOf[graft.functions.MinHashSketch],
       classOf[graft.functions.NearestCentroid],
       classOf[graft.functions.PiiScan], classOf[graft.functions.QualityCounts],
       classOf[graft.functions.ShingleHashes],
@@ -3406,7 +3406,7 @@ object SparkEntry {
   private def qCurate(s: SparkSession, dir: String): DataFrame = {
     val docs = tbl(s, dir, "documents")
     val dupLosers = Dedup.minhashDuplicates(
-        Dedup.hashedWordShingles(docs, "doc_id", "text"), 0.8)
+        Dedup.shingleHashArrays(docs, "doc_id", "text"), 0.8)
       .select(col("id_b").as("doc_id"))
     TextAnalysis.withQuality(docs, "text")
       .filter(col("quality_score") >= 0.5)
@@ -3428,7 +3428,7 @@ object SparkEntry {
   private def qCurateClassified(s: SparkSession, dir: String): DataFrame = {
     val docs = tbl(s, dir, "documents")
     val dupLosers = Dedup.minhashDuplicates(
-        Dedup.hashedWordShingles(docs, "doc_id", "text"), 0.8)
+        Dedup.shingleHashArrays(docs, "doc_id", "text"), 0.8)
       .select(col("id_b").as("doc_id"))
     TextClassifier.score(docs, "doc_id", "text", qcModel(s, dir))
       .filter(col("margin_q") >= 0)
@@ -3463,7 +3463,7 @@ object SparkEntry {
   private def qCurateLm(s: SparkSession, dir: String): DataFrame = {
     val docs = tbl(s, dir, "documents")
     val dupLosers = Dedup.minhashDuplicates(
-        Dedup.hashedWordShingles(docs, "doc_id", "text"), 0.8)
+        Dedup.shingleHashArrays(docs, "doc_id", "text"), 0.8)
       .select(col("id_b").as("doc_id"))
     LanguageModel.crossEntropy(docs, "doc_id", "text",
         LanguageModel.read(s, lmModelPath(s, dir)))
@@ -3486,7 +3486,7 @@ object SparkEntry {
     val evalSet = docs.filter(pmod(col("doc_id"), lit(97)) === 0)
     val train = docs.filter(pmod(col("doc_id"), lit(97)) =!= 0)
     val dupLosers = Dedup.minhashDuplicates(
-        Dedup.hashedWordShingles(docs, "doc_id", "text"), 0.8)
+        Dedup.shingleHashArrays(docs, "doc_id", "text"), 0.8)
       .select(col("id_b").as("doc_id"))
     val kept = TextAnalysis.withQuality(
         Dedup.decontaminate(train, evalSet, "doc_id", "text", 3), "text")
@@ -3609,7 +3609,7 @@ object SparkEntry {
     * generation is LSH banding, not the quadratic shingle self-join. */
   private[graft] def dedupClusterPairs(s: SparkSession, dir: String): DataFrame =
     Dedup.minhashDuplicates(
-      Dedup.hashedWordShingles(tbl(s, dir, "documents"), "doc_id", "text"), 0.8)
+      Dedup.shingleHashArrays(tbl(s, dir, "documents"), "doc_id", "text"), 0.8)
 
   /** TPC-H Q1 shape: the canonical wide aggregate (8 aggregates, 2 keys). */
   private def qTpchQ1(s: SparkSession, dir: String): DataFrame =

@@ -99,19 +99,26 @@ object TextAnalysis {
     * built-in forms (`size(filter(tokens, isin))`, `aggregate(tokens, …)`,
     * `length − length(regexp_replace)`); the columns divide them with the
     * same types and double operations, in the same order. Null text gives
-    * null features. */
+    * null features.
+    *
+    * The kernel runs once per row: its struct is unpacked by a `Generate`
+    * (`inline(array(counts))`), which a filter on the features cannot be
+    * pushed below. Plain field references would let a filter on
+    * `quality_score` be pushed below the projection and evaluate the
+    * kernel a second time. */
   def withQuality(df: DataFrame, textCol: String,
                   stopwords: Seq[String] = DefaultStopwords): DataFrame = {
     val t = col(textCol)
     val counts = graft.functions.QualityCounts.qualityCounts(t, stopwords)
-    val nTok = counts.getField("n_tokens")
-    df.withColumn("n_tokens", nTok)
-      .withColumn("punct_ratio",
-        counts.getField("punct_chars").cast("double") / greatest(length(t), lit(1)))
-      .withColumn("stopword_ratio",
-        counts.getField("n_stopwords").cast("double") / greatest(nTok, lit(1)))
-      .withColumn("mean_word_len",
-        counts.getField("token_chars").cast("double") / greatest(nTok, lit(1)))
+    // the struct's fields, in order, under names no input column uses
+    val names = Seq("__q_tokens", "__q_stopwords", "__q_token_chars", "__q_punct")
+    val Seq(nTok, nStop, tokenChars, punct) = names.map(col)
+    df.select(col("*"), inline(array(counts)).as(names))
+      .withColumn("n_tokens", nTok)
+      .withColumn("punct_ratio", punct.cast("double") / greatest(length(t), lit(1)))
+      .withColumn("stopword_ratio", nStop.cast("double") / greatest(nTok, lit(1)))
+      .withColumn("mean_word_len", tokenChars.cast("double") / greatest(nTok, lit(1)))
+      .drop(names: _*)
       .withColumn("quality_score",
         least(greatest(
           lit(0.4) * least(col("n_tokens").cast("double") / 64.0, lit(1.0)) +

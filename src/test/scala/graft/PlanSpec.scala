@@ -160,6 +160,93 @@ class PlanSpec extends SparkSpec {
     assert(shingleBroadcasts(q).nonEmpty, s"detector missed the shingle broadcast:\n$q")
   }
 
+  test("minhashDuplicates' per-document frame signs the shingle arrays: no " +
+    "Generate, no collect_set aggregate, no shuffle of shingle rows") {
+    import org.apache.spark.sql.execution.GenerateExec
+    import org.apache.spark.sql.execution.aggregate.ObjectHashAggregateExec
+    import org.apache.spark.sql.catalyst.expressions.aggregate.CollectSet
+    import org.apache.spark.sql.types.ArrayType
+    def generates(p: SparkPlan) = flatten(p).collect { case g: GenerateExec => g }
+    def collectSets(p: SparkPlan) = flatten(p).collect {
+      case a: ObjectHashAggregateExec
+          if a.aggregateExpressions.exists(_.aggregateFunction.isInstanceOf[CollectSet]) => a
+    }
+    // a shuffle whose rows carry one scalar shingle each
+    def shingleShuffles(p: SparkPlan) = flatten(p).collect {
+      case e: ShuffleExchangeLike if e.child.output.exists(a =>
+        a.name == "shingle" && !a.dataType.isInstanceOf[ArrayType]) => e
+    }
+    val docs = spark.read.parquet(s"$sf/documents.parquet")
+    // curate checkpoints this frame, so its plan is pinned on its own
+    val p = executed(operators.Dedup.minhashDocs(
+      operators.Dedup.shingleHashArrays(docs, "doc_id", "text"), 128))
+    assert(generates(p).isEmpty, s"Generate in the per-document frame:\n$p")
+    assert(collectSets(p).isEmpty, s"collect_set in the per-document frame:\n$p")
+    assert(shingleShuffles(p).isEmpty, s"shuffle of shingle rows:\n$p")
+    // detector sanity: the former frame (exploded rows, signature beside
+    // collect_set) trips the first two; shingle rows repartitioned by id trip the third
+    import org.apache.spark.sql.functions.{col, collect_set}
+    val rows = operators.Dedup.hashedWordShingles(docs, "doc_id", "text")
+    val old = executed(rows.groupBy("sh_id").agg(
+      graft.functions.MinHashSketch.minhashSignature(col("shingle"), 128).as("sig"),
+      collect_set(col("shingle")).as("shingle_set")))
+    assert(generates(old).nonEmpty && collectSets(old).nonEmpty, s"detector missed:\n$old")
+    assert(shingleShuffles(executed(rows.repartition(col("sh_id")))).nonEmpty)
+  }
+
+  test("hashedWordShingles evaluates shingle_hashes once per document") {
+    import org.apache.spark.sql.functions.{col, explode}
+    def shingleHashes(p: SparkPlan) =
+      flatten(p).flatMap(_.expressions.flatMap(_.collect {
+        case e: graft.functions.ShingleHashes => e
+      }))
+    val docs = spark.read.parquet(s"$sf/documents.parquet")
+    val p = executed(operators.Dedup.hashedWordShingles(docs, "doc_id", "text"))
+    assert(shingleHashes(p).size == 1, s"shingle_hashes in the shingling plan:\n$p")
+    // detector sanity: exploding the aliased array column lets Spark infer
+    // a size filter that is pushed below the alias and evaluates it again
+    val aliased = operators.Dedup.shingleHashArrays(docs, "doc_id", "text")
+      .select(col("sh_id"), explode(col("shingle")).as("shingle"))
+    assert(shingleHashes(executed(aliased)).size > 1, s"detector missed:\n$aliased")
+  }
+
+  test("lshCandidatePairs joins on one bigint key, the band hash") {
+    import org.apache.spark.sql.execution.joins.BaseJoinExec
+    import org.apache.spark.sql.functions.col
+    import org.apache.spark.sql.types.LongType
+    def joinKeys(p: SparkPlan) = flatten(p).collect {
+      case j: BaseJoinExec => j.leftKeys.map(_.dataType)
+    }
+    val docs = spark.read.parquet(s"$sf/documents.parquet")
+    val sigs = operators.Dedup.minhashSignatures(
+      operators.Dedup.shingleHashArrays(docs, "doc_id", "text")).localCheckpoint()
+    val p = executed(operators.Dedup.lshCandidatePairs(sigs, 32))
+    assert(joinKeys(p) == Seq(Seq(LongType)), s"candidate join keys:\n$p")
+    // detector sanity: the former (band, band_hash) join has two keys
+    val banded = operators.Dedup.bandedSignatures(sigs, 32, 128)
+    def side(id: String) = banded.select(col("band"), col("band_hash"), col("sh_id").as(id))
+    val old = executed(side("id_a").join(side("id_b"), Seq("band", "band_hash"))
+      .filter(col("id_a") < col("id_b")).select("id_a", "id_b").distinct())
+    assert(joinKeys(old).map(_.size) == Seq(2), s"detector missed:\n$old")
+  }
+
+  test("Pipeline.curate: quality_counts appears exactly once in the executed plan") {
+    import org.apache.spark.sql.functions.{col, lit, pmod}
+    def qualityCounts(p: SparkPlan) =
+      flatten(p).flatMap(_.expressions.flatMap(_.collect {
+        case q: graft.functions.QualityCounts => q
+      }))
+    val docs = spark.read.parquet(s"$sf/documents.parquet")
+    val evalDocs = docs.filter(pmod(col("doc_id"), lit(97)) === 0)
+    val p = executed(Pipeline.curate(docs, evalDocs))
+    assert(qualityCounts(p).size == 1, s"quality_counts in curate:\n$p")
+    // detector sanity: the field-reference form under the same filter
+    // evaluates the kernel in the pushed filter and again in the projection
+    val old = executed(PropertySpec.withQualityFields(docs, "text",
+      operators.TextAnalysis.DefaultStopwords).filter(col("quality_score") >= 0.5))
+    assert(qualityCounts(old).size > 1, s"detector missed:\n$old")
+  }
+
   test("q_topk: sort+limit fuse into TakeOrderedAndProject — no global sort") {
     val p = executed(SparkEntry.queries("q_topk")(spark, sf))
     assert(flatten(p).exists(

@@ -1349,29 +1349,48 @@ class PropertySpec extends SparkSpec {
     }
   }
 
-  test("MinHashSignature: the bigint fast path and the generic path ≡ " +
-    "min(xxhash64(shingle, seed i)) per seed") {
+  test("MinHashSketch: the bigint fast path and the generic path ≡ " +
+    "min(xxhash64(shingle, seed i)) per seed; the set ≡ sorted collect_set, " +
+    "fed rows or arrays") {
     import org.apache.spark.sql.catalyst.expressions.{XXH64, XxHash64, XxHash64Function}
     import org.apache.spark.sql.functions._
     import org.apache.spark.sql.graft.Bridge
     import org.apache.spark.sql.types.LongType
+    import graft.functions.MinHashSketch.{minhashSignature, minhashSketch}
     val numHashes = 16
     def perSeedMins(c: String) = array((0 until numHashes).map(i =>
       min(Bridge.column(XxHash64(Seq(Bridge.expression(col(c))), i.toLong)))): _*)
-    val gen = Gen.listOfN(80, Gen.zip(Gen.chooseNum(0L, 9L),
-      Gen.chooseNum(Long.MinValue, Long.MaxValue)))
+    val gen = Gen.listOfN(80, Gen.zip(Gen.chooseNum(0L, 9L), Gen.frequency(
+      12 -> Gen.chooseNum(Long.MinValue, Long.MaxValue).map(l => Option(l)),
+      1 -> Gen.const(None: Option[Long]))))
     forAll(gen) { rows =>
       rows.foreach { case (_, l) =>
-        (0 until numHashes).foreach(i =>
-          assert(XXH64.hashLong(l, i.toLong) == XxHash64Function.hash(l, LongType, i.toLong)))
+        l.foreach(l => (0 until numHashes).foreach(i =>
+          assert(XXH64.hashLong(l, i.toLong) == XxHash64Function.hash(l, LongType, i.toLong))))
       }
       val df = rows.toDF("sh_id", "shingle")
         .withColumn("shingle_s", col("shingle").cast("string"))
       for (c <- Seq("shingle", "shingle_s")) {
-        val got = df.groupBy("sh_id").agg(graft.functions.MinHashSignature
-          .minhashSignature(col(c), numHashes).as("sig"), perSeedMins(c).as("ref"))
-        got.collect().foreach(r =>
-          assert(r.getSeq[Long](1) == r.getSeq[Long](2), s"$c, doc ${r.getLong(0)}"))
+        // each id's rows as two arrays, which must union
+        val arrays = df.groupBy(col("sh_id"), pmod(hash(col(c)), lit(2)))
+          .agg(collect_list(col(c)).as("arr"))
+        val setElem = if (c == "shingle") col(c) else xxhash64(col(c))
+        val want = df.filter(col(c).isNotNull).groupBy("sh_id")
+          .agg(perSeedMins(c).as("sig"), array_sort(collect_set(setElem)).as("set"))
+          .collect().map(r => r.getLong(0) -> (r.getSeq[Long](1), r.getSeq[Long](2))).toMap
+        for ((frame, in) <- Seq(df -> c, arrays -> "arr")) {
+          val got = frame.groupBy("sh_id").agg(minhashSketch(col(in), numHashes).as("sk"),
+              minhashSignature(col(in), numHashes).as("sig"))
+            .select(col("sh_id"), col("sk.sig"), col("sk.shingle_set"), col("sig"))
+            .collect()
+          assert(got.length == rows.map(_._1).distinct.length)
+          got.foreach { r =>
+            val (sig, set) = want.getOrElse(r.getLong(0),
+              (Seq.fill(numHashes)(Long.MaxValue), Seq.empty[Long]))
+            assert(r.getSeq[Long](1) == sig && r.getSeq[Long](3) == sig, s"$c/$in, doc ${r.getLong(0)}")
+            assert(r.getSeq[Long](2) == set, s"$c/$in set, doc ${r.getLong(0)}")
+          }
+        }
       }
     }
   }
@@ -1567,6 +1586,78 @@ class PropertySpec extends SparkSpec {
     }
   }
 
+  test("minhashDuplicates (MinHashSketch, band_hash key) fed rows or arrays " +
+    "≡ the collect_set form and the shingle-join form bit for bit: repeated " +
+    "ids, null shingles, null/blank/short texts, two band geometries") {
+    import org.apache.spark.sql.functions._
+    import PropertySpec.{minhashDuplicatesCollectSet, minhashDuplicatesJoin}
+    def bits(d: org.apache.spark.sql.DataFrame) = d.collect().toSeq.map(r =>
+      (r.getLong(0), r.getLong(1), java.lang.Double.doubleToRawLongBits(r.getDouble(2)))).sorted
+    val word = Gen.oneOf("alpha", "beta", "gamma", "delta", "eps", "zeta", "eta", "theta")
+    val base = Gen.listOfN(10, word)
+    val corpus = Gen.listOfN(3, base).flatMap(bs => Gen.listOfN(16, for {
+      b <- Gen.oneOf(bs); i <- Gen.chooseNum(0, 9); w <- word; keep <- Gen.chooseNum(6, 10)
+    } yield b.updated(i, w).take(keep).mkString(" ")))
+    forAll(corpus, n = 3) { texts =>
+      // 16/17: null text; 18/19: blank; 20/21: shorter than k, equal;
+      // 22: two rows whose shingles union; 3 and 5 repeated as-is
+      val extra = Seq[(Long, String)]((16L, null), (17L, null), (18L, ""), (19L, "  \t "),
+        (20L, "alpha beta"), (21L, "alpha beta"), (22L, texts(0)), (22L, texts(1)),
+        (3L, texts(3)), (5L, texts(5)))
+      val docs = (texts.zipWithIndex.map { case (t, i) => (i.toLong, t) } ++ extra)
+        .toDF("doc_id", "text")
+      val hashedRows = Dedup.hashedWordShingles(docs, "doc_id", "text")
+      val stringRows = Dedup.wordShingles(docs, "doc_id", "text", 2)
+      // null shingles: on a document that has others, and on one (23) that has none
+      def withNulls(sh: org.apache.spark.sql.DataFrame) = sh.unionByName(
+        Seq(3L, 23L, 23L).toDF("sh_id").select(col("sh_id"),
+          lit(null).cast(sh.schema("shingle").dataType).as("shingle")))
+      // each id's rows as two arrays, which must union
+      def asArrays(sh: org.apache.spark.sql.DataFrame) =
+        sh.groupBy(col("sh_id"), pmod(hash(col("shingle")), lit(2)))
+          .agg(collect_list(col("shingle")).as("shingle"))
+      val hashedArrays = Dedup.shingleHashArrays(docs, "doc_id", "text")
+        .unionByName(Seq(3L, 24L).toDF("sh_id").select(col("sh_id"),
+          array(lit(null).cast("bigint")).as("shingle")))
+      for ((rows, arrayForms) <- Seq(
+             withNulls(hashedRows) -> Seq(hashedArrays, asArrays(withNulls(hashedRows))),
+             withNulls(stringRows) -> Seq(asArrays(withNulls(stringRows))))) {
+        val distinctRows = rows.filter(col("shingle").isNotNull).distinct()
+        for ((numHashes, bands) <- Seq((128, 32), (60, 12))) {
+          val want = bits(minhashDuplicatesCollectSet(rows, 0.3, numHashes, bands))
+          assert(want.nonEmpty && want.contains((20L, 21L, java.lang.Double.doubleToRawLongBits(1.0))))
+          assert(bits(minhashDuplicatesJoin(distinctRows, 0.3, numHashes, bands)) == want)
+          for (sh <- rows +: arrayForms)
+            assert(bits(Dedup.minhashDuplicates(sh, 0.3, numHashes, bands)) == want,
+              s"geometry ($numHashes, $bands), ${sh.schema("shingle").dataType}")
+        }
+      }
+    }
+  }
+
+  test("withQuality (one QualityCounts per row) ≡ its field-reference form " +
+    "bit for bit, schema and nullability included, under a quality filter") {
+    import org.apache.spark.sql.functions.col
+    import PropertySpec.withQualityFields
+    forAll(Gen.listOfN(60, rawText), n = 3) { texts =>
+      val df = textFrame(fixedTexts ++ texts).withColumn("n_tokens", col("id"))
+      for (sw <- Seq(TextAnalysis.DefaultStopwords, Seq("cat", "😀", ""))) {
+        val got = TextAnalysis.withQuality(df, "text", sw)
+        val want = withQualityFields(df, "text", sw)
+        assert(got.schema == want.schema)
+        def bits(d: org.apache.spark.sql.DataFrame) = d.orderBy("id").collect().toSeq
+          .map(_.toSeq.map {
+            case d: Double => java.lang.Double.doubleToRawLongBits(d)
+            case v => v
+          })
+        assert(bits(got) == bits(want))
+        assert(bits(want).exists(_(1) == null), "a null text is in the input")
+        val kept = bits(want.filter(col("quality_score") >= 0.5))
+        assert(bits(got.filter(col("quality_score") >= 0.5)) == kept)
+      }
+    }
+  }
+
   test("jaccardPairs ≡ its former shingle-join form on distinct rows, " +
     "minJaccard 0.0 included") {
     import PropertySpec.jaccardPairsJoin
@@ -1630,6 +1721,59 @@ object PropertySpec {
     attachJaccard(a.join(b, Seq("shingle")).filter(col("id_a") < col("id_b"))
       .groupBy("id_a", "id_b").agg(count(lit(1)).as("inter")), sh)
       .filter(col("jaccard") >= minJaccard)
+  }
+
+  /** [[Dedup.minhashDuplicates]] as it was before
+    * [[graft.functions.MinHashSketch]]: per-seed `min(xxhash64(shingle, i))`
+    * signatures (the values the former `MinHashSignature` aggregate
+    * computed), `collect_set` shingle sets, candidates from a self-join
+    * keyed on `(band, band_hash)`, and `size(array_intersect)` scoring. Set
+    * semantics: repeated rows count once, null shingles are no shingles. */
+  def minhashDuplicatesCollectSet(sh: DataFrame, minJaccard: Double,
+                                  numHashes: Int, bands: Int): DataFrame = {
+    import org.apache.spark.sql.catalyst.expressions.XxHash64
+    import org.apache.spark.sql.graft.Bridge
+    val s = col("shingle")
+    val docs = sh.groupBy("sh_id")
+      .agg(array((0 until numHashes).map(i => min(when(s.isNotNull,
+          Bridge.column(XxHash64(Seq(Bridge.expression(s)), i.toLong))))): _*).as("sig"),
+        collect_set(s).as("shingle_set"))
+      .withColumn("set_size", size(col("shingle_set")).cast("long"))
+      .localCheckpoint()
+    val banded = Dedup.bandedSignatures(docs, bands, numHashes)
+    def ids(side: String) =
+      banded.select(col("band"), col("band_hash"), col("sh_id").as(s"id_$side"))
+    def sets(side: String) = docs.select(col("sh_id").as(s"id_$side"),
+      col("shingle_set").as(s"set_$side"), col("set_size").as(s"sz_$side"))
+    ids("a").join(ids("b"), Seq("band", "band_hash"))
+      .filter(col("id_a") < col("id_b")).select("id_a", "id_b").distinct()
+      .join(sets("a"), "id_a").join(sets("b"), "id_b")
+      .withColumn("inter", size(array_intersect(col("set_a"), col("set_b"))).cast("long"))
+      .filter(col("inter") > 0)
+      .select(col("id_a"), col("id_b"),
+        (col("inter").cast("double") / (col("sz_a") + col("sz_b") - col("inter"))).as("jaccard"))
+      .filter(col("jaccard") >= minJaccard)
+  }
+
+  /** [[TextAnalysis.withQuality]] as it was before its `Generate`: every
+    * feature reads a field of the one `QualityCounts` column. */
+  def withQualityFields(df: DataFrame, textCol: String, stopwords: Seq[String]): DataFrame = {
+    val t = col(textCol)
+    val counts = graft.functions.QualityCounts.qualityCounts(t, stopwords)
+    val nTok = counts.getField("n_tokens")
+    df.withColumn("n_tokens", nTok)
+      .withColumn("punct_ratio",
+        counts.getField("punct_chars").cast("double") / greatest(length(t), lit(1)))
+      .withColumn("stopword_ratio",
+        counts.getField("n_stopwords").cast("double") / greatest(nTok, lit(1)))
+      .withColumn("mean_word_len",
+        counts.getField("token_chars").cast("double") / greatest(nTok, lit(1)))
+      .withColumn("quality_score",
+        least(greatest(
+          lit(0.4) * least(col("n_tokens").cast("double") / 64.0, lit(1.0)) +
+            lit(0.4) * least(col("stopword_ratio") * 4.0, lit(1.0)) +
+            lit(0.2) * (lit(1.0) - least(col("punct_ratio") * 5.0, lit(1.0))),
+          lit(0.0)), lit(1.0)))
   }
 
   /** [[Dedup.minhashDuplicates]] as it was: the shingle rows checkpointed,

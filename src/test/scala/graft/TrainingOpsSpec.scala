@@ -2912,6 +2912,35 @@ class TrainingOpsSpec extends SparkSpec {
       Dedup.hashedWordShingles(docs, "doc_id", "text"), 0.8)) == Seq((1L, 2L, 1.0)))
   }
 
+  test("minhashDuplicates over per-document shingle arrays: a repeated id's " +
+    "rows union; null, blank and empty documents never band") {
+    val docs = Seq((1L, repText), (2L, repText.take(30)), (2L, repText.drop(20)),
+      (3L, null), (4L, ""), (5L, "   "), (6L, null)).toDF("doc_id", "text")
+    val arrays = Dedup.shingleHashArrays(docs, "doc_id", "text")
+    assert(jaccards(Dedup.minhashDuplicates(arrays, 0.5)) ==
+      jaccards(Dedup.minhashDuplicates(Dedup.hashedWordShingles(docs, "doc_id", "text"), 0.5)))
+    assert(jaccards(Dedup.minhashDuplicates(arrays, 0.5)).map(p => (p._1, p._2)) == Seq((1L, 2L)))
+    // without the empty-array filter, 4 and 5 would sign as all Long.MaxValue and pair
+    assert(Dedup.lshCandidatePairs(Dedup.minhashSignatures(arrays), 32).collect()
+      .map(r => (r.getLong(0), r.getLong(1))).toSeq == Seq((1L, 2L)))
+  }
+
+  test("buildDedupIndex signs the shingle arrays as minhashSignatures signs " +
+    "the exploded rows, and drops null and blank documents") {
+    val docs = Seq((1L, repText), (2L, nearText), (3L, null), (4L, ""), (5L, " \t "))
+      .toDF("doc_id", "text")
+    val index = Dedup.buildDedupIndex(docs, "doc_id", "text")
+    def sigs(df: org.apache.spark.sql.DataFrame) =
+      df.select("sh_id", "sig").collect().map(r => r.getLong(0) -> r.getSeq[Long](1)).toMap
+    assert(sigs(index) ==
+      sigs(Dedup.minhashSignatures(Dedup.hashedWordShingles(docs, "doc_id", "text"))))
+    assert(sigs(index).keySet == Set(1L, 2L))
+    // a blank batch document finds no blank index document to match
+    val batch = Seq((10L, "  "), (11L, repText)).toDF("doc_id", "text")
+    assert(Dedup.dedupAgainstIndex(batch, index, "doc_id", "text").collect()
+      .map(r => (r.getLong(0), r.getLong(1))).toSeq == Seq((11L, 1L)))
+  }
+
   test("jaccardFor: pairs listed twice give one row per pair, scored over distinct shingles") {
     val sh = Dedup.hashedWordShingles(
       Seq((1L, repText), (2L, repText), (3L, nearText)).toDF("doc_id", "text"),
