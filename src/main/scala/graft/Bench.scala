@@ -153,7 +153,7 @@ object Bench {
           // that under-credited those families. Every curated band below
           // was re-based in the same commit (named cause: this switch +
           // the r20 noop-timed quiet medians); count()-era numbers remain
-          // in BENCH_r01..r19 / the r19 bench_full.json history.
+          // in history/BENCH_r01..r19 / the r19 bench_full.json history.
           noopSink(fn(spark, sfDir))
           val secs = (System.nanoTime() - t0) / 1e9
           // the listener bus is asynchronous: drain it, after the timer,
@@ -223,7 +223,7 @@ object Bench {
     // median cleared ~1 s without a curated band are banded from birth
     // here (q_text_fingerprint crossed the 2.5 s floor outright). The
     // count()-era bands and their per-band history live in git
-    // (r19 Bench.scala); count()-era numbers remain in BENCH_r01..r19.
+    // (r19 Bench.scala); count()-era numbers remain in history/BENCH_r01..r19.
     // Per-band comment = the r20 noop median the hi derives from.
     val expectedBands = Seq(
       "q_ann_delete" -> ((0.28, 2.14)), // r20 noop median 0.86
@@ -565,7 +565,7 @@ object Bench {
     // the separator underscores from query names — deterministically
     // reversible against the canonical query list (collision-checked
     // below; on a collision this level is skipped). "names":"nosep"
-    // marks the transformation in-band so a reader of BENCH_r{N}.json
+    // marks the transformation in-band so a reader of history/BENCH_r{N}.json
     // knows to match names separator-free; full names + full precision
     // stay in bench_full.json, the record of note.
     val noSep = results.map { case (k, v, _, _, _, _) =>

@@ -28,9 +28,11 @@ object Verify {
     // The 129 dumps are independent jobs: run a few concurrently so one
     // query's single-threaded tail (coalesce(1) write, driver-side model
     // load) back-fills the otherwise idle executors (guide §2.6 overlap).
-    // The per-JVM fixture caches are safe under this concurrency — every
-    // cache site goes through SparkEntry's per-key build lock. Default 4
-    // in-flight; SPARK_GRAFT_VERIFY_THREADS=1 restores the serial loop.
+    // The per-JVM fixtures are safe under this concurrency: every one is
+    // an entry of SparkEntry's FixtureRegistry, whose per-(name, dir)
+    // lock runs each build exactly once however many queries race to it.
+    // Default 4 in-flight; SPARK_GRAFT_VERIFY_THREADS=1 restores the
+    // serial loop.
     val nThreads = sys.env.getOrElse("SPARK_GRAFT_VERIFY_THREADS", "4").toInt
       .max(1)
     val pool = java.util.concurrent.Executors.newFixedThreadPool(nThreads)
@@ -52,8 +54,8 @@ object Verify {
     // whether this gate run served persisted fixtures or rebuilt them,
     // and under WHICH epoch (now a recipe-bytecode hash, so a recompile
     // that touches any recipe class rebuilds automatically)
-    System.err.println(s"[verify] fixtures: reused ${SparkEntry.fixtureReuses.get} " +
-      s"/ built ${SparkEntry.fixtureBuilds.get} @ epoch ${SparkEntry.FixtureEpoch}")
+    System.err.println(s"[verify] fixtures: reused ${SparkEntry.fixtures.reuses.get} " +
+      s"/ built ${SparkEntry.fixtures.builds.get} @ epoch ${SparkEntry.FixtureEpoch}")
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the
     // driver's json.load fail and silently zero the round's correctness.

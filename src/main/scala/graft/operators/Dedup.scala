@@ -386,32 +386,48 @@ object Dedup {
     require(buckets >= 1, s"buckets must be positive, got $buckets")
     val head = index.select(size(col("sig"))).limit(1).collect()
     require(head.nonEmpty, "writeBandedIndex: empty index")
-    val numHashes = head.head.getInt(0)
     val epoch = EpochLog.newEpoch()
-    // bucket-aligned repartition before EVERY bucketed write in this
-    // family (build, append, compact): the planner's implicit clustering
-    // for a bucketed save is AQE-adjustable, and at larger inputs AQE
-    // splits a heavy shuffle partition across tasks — each task then
-    // writes its own file per bucket, and the serve pays a per-file open
-    // tax that grows with input size. The explicit repartition (same
-    // murmur3-pmod assignment as bucketBy) is not AQE-adjustable: each
-    // task holds exactly one bucket's rows, one file per bucket per
-    // write, at every scale.
-    bandedSignatures(index, bands, numHashes)
-      .withColumn("bh", xxhash64(col("band"), col("band_hash")))
-      .withColumn("build_id", lit(epoch))
-      .repartition(buckets, col("bh"))
-      .write.mode("overwrite")
-      .bucketBy(buckets, "bh").sortBy("bh")
-      .saveAsTable(s"${name}_bands")
-    index.withColumn("n_bands", lit(bands))
-      .withColumn("build_id", lit(epoch))
-      .repartition(buckets, col("sh_id"))
-      .write.mode("overwrite")
-      .bucketBy(buckets, "sh_id").sortBy("sh_id")
-      .saveAsTable(s"${name}_sigs")
+    writeBandsAndSigs(sigBandRows(index, bands, head.head.getInt(0)), index,
+      name, bands, buckets, epoch, "overwrite")
     EpochLog.table(index.sparkSession, name).overwrite(epoch)
   }
+
+  /** A [[writeBandedIndex]] layout's band rows: [[bandedSignatures]]
+    * keyed by `bh`, one long over (band, band_hash). */
+  private def sigBandRows(sigs: DataFrame, bands: Int, numHashes: Int): DataFrame =
+    bandedSignatures(sigs, bands, numHashes)
+      .withColumn("bh", xxhash64(col("band"), col("band_hash")))
+
+  /** One epoch of a band-plus-sig layout ([[writeBandedIndex]],
+    * [[writeHashIndex]]), the body builds (`overwrite`) and appends
+    * (`append`) share: band rows bucketed by `bh`, the signatures or
+    * hashes bucketed by `sh_id` with the band count riding as
+    * `n_bands`. */
+  private def writeBandsAndSigs(bandRows: DataFrame, sigs: DataFrame,
+                                name: String, bands: Int, buckets: Int,
+                                epoch: Long, mode: String): Unit = {
+    writeBucketedEpoch(bandRows, s"${name}_bands", "bh", buckets, epoch, mode)
+    writeBucketedEpoch(sigs.withColumn("n_bands", lit(bands)), s"${name}_sigs",
+      "sh_id", buckets, epoch, mode)
+  }
+
+  /** `rows` stamped `build_id = epoch`, written to `table` bucketed and
+    * sorted by `key` — every bucketed write of the index families
+    * (build, append, compact). The bucket-aligned repartition comes
+    * first: the planner's implicit clustering for a bucketed save is
+    * AQE-adjustable, and at larger inputs AQE splits a heavy shuffle
+    * partition across tasks — each task then writes its own file per
+    * bucket, and the serve pays a per-file open tax that grows with input
+    * size. The explicit repartition (same murmur3-pmod assignment as
+    * bucketBy) is not AQE-adjustable: each task holds exactly one
+    * bucket's rows, one file per bucket per write, at every scale. */
+  private def writeBucketedEpoch(rows: DataFrame, table: String, key: String,
+                                 buckets: Int, epoch: Long, mode: String): Unit =
+    rows.withColumn("build_id", lit(epoch))
+      .repartition(buckets, col(key))
+      .write.mode(mode)
+      .bucketBy(buckets, key).sortBy(key)
+      .saveAsTable(table)
 
   /** Bucket count of an existing bucketed table, so appends write the
     * matching layout without the caller re-supplying it. */
@@ -481,21 +497,8 @@ object Dedup {
     // signatures feed both table writes — materialize once (~1 KB/doc)
     val newSigs = eagerCheckpoint(
       buildDedupIndex(newDocs, idCol, textCol, shingleK, numHashes))
-    // bucket-aligned repartition, same rationale as writeBandedIndex:
-    // exactly one new file per bucket per append, AQE cannot split it
-    bandedSignatures(newSigs, bands, numHashes)
-      .withColumn("bh", xxhash64(col("band"), col("band_hash")))
-      .withColumn("build_id", lit(epoch))
-      .repartition(buckets, col("bh"))
-      .write.mode("append")
-      .bucketBy(buckets, "bh").sortBy("bh")
-      .saveAsTable(s"${name}_bands")
-    newSigs.withColumn("n_bands", lit(bands))
-      .withColumn("build_id", lit(epoch))
-      .repartition(buckets, col("sh_id"))
-      .write.mode("append")
-      .bucketBy(buckets, "sh_id").sortBy("sh_id")
-      .saveAsTable(s"${name}_sigs")
+    writeBandsAndSigs(sigBandRows(newSigs, bands, numHashes), newSigs, name,
+      bands, buckets, epoch, "append")
     log.append(epoch, key)
   }
 
@@ -562,15 +565,9 @@ object Dedup {
       committedProbe(oldBands, s"${name}_bands")
       committedProbe(oldSigs, s"${name}_sigs")
       def mergeInto(files: Seq[String], table: String, keyCol: String): Unit =
-        log.liveRows(spark.read.parquet(files: _*), "sh_id", committed)
-          .withColumn("build_id", lit(epoch))
-          // bucket-aligned repartition (same murmur3-pmod assignment as the
-          // bucketBy below): each task holds exactly one bucket's rows, so
-          // the merged epoch lands as ~one file per bucket — the point
-          .repartition(buckets, col(keyCol))
-          .write.mode("append")
-          .bucketBy(buckets, keyCol).sortBy(keyCol)
-          .saveAsTable(table)
+        writeBucketedEpoch(
+          log.liveRows(spark.read.parquet(files: _*), "sh_id", committed),
+          table, keyCol, buckets, epoch, "append")
       mergeInto(oldBands, s"${name}_bands", "bh")
       mergeInto(oldSigs, s"${name}_sigs", "sh_id")
     }
@@ -607,8 +604,7 @@ object Dedup {
         "(crashed writeBandedIndex rebuild?) - re-run writeBandedIndex")
     val newSigs = eagerCheckpoint(
       buildDedupIndex(newDocs, idCol, textCol, shingleK, numHashes))
-    val nb = bandedSignatures(newSigs, bands, numHashes)
-      .withColumn("bh", xxhash64(col("band"), col("band_hash")))
+    val nb = sigBandRows(newSigs, bands, numHashes)
       .select(col("bh"), col("sh_id").as("new_id"))
     // the join key is EXACTLY the bucket column and nothing else: a
     // residual (band, band_hash) equality would be absorbed into the join
@@ -937,11 +933,14 @@ object Dedup {
     require(minDocs >= 2, s"minDocs must be >= 2, got $minDocs")
     // same tokenizer as the expression: split on \s+ minus empties
     val toks = filter(split(col(textCol), "\\s+"), t => length(t) > 0)
-    val prepared = docs.select(col(idCol).as("sh_id"), toks.as("__toks"),
-      graft.functions.ShingleHashesAll.shingleHashesAll(col(textCol), n)
-        .as("__grams"))
-    val grams = prepared.select(col("sh_id"),
-      posexplode(col("__grams")).as(Seq("pos", "gram")))
+    val prepared = docs.select(col(idCol).as("sh_id"), toks.as("__toks"))
+    // posexplode the kernel itself, not a column aliased to it: Spark
+    // infers `size(x) > 0 AND isnotnull(x)` below an explode of an
+    // attribute, and that filter, pushed through the alias, evaluates
+    // the kernel twice more per document
+    val grams = docs.select(col(idCol).as("sh_id"),
+      posexplode(graft.functions.ShingleHashesAll.shingleHashesAll(col(textCol), n))
+        .as(Seq("pos", "gram")))
     val dupGrams = grams.select("sh_id", "gram").distinct()
       .groupBy("gram").agg(count(lit(1)).as("nd"))
       .filter(col("nd") >= minDocs).select("gram")
@@ -1082,15 +1081,8 @@ object Dedup {
     val head = index.select("span_n").limit(1).collect()
     require(head.nonEmpty, "writeSpanIndex: empty index")
     val epoch = EpochLog.newEpoch()
-    // bucket-aligned repartition before the bucketed write, same
-    // rationale as writeBandedIndex: AQE must not split a heavy shuffle
-    // partition across tasks, or each task writes its own file per
-    // bucket and serving pays a per-file open tax that grows with input
-    index.withColumn("build_id", lit(epoch))
-      .repartition(buckets, col("shingle"))
-      .write.mode("overwrite")
-      .bucketBy(buckets, "shingle").sortBy("shingle")
-      .saveAsTable(s"${name}_spans")
+    writeBucketedEpoch(index, s"${name}_spans", "shingle", buckets, epoch,
+      "overwrite")
     EpochLog.table(index.sparkSession, name).overwrite(epoch)
   }
 
@@ -1141,12 +1133,8 @@ object Dedup {
     val n = head.head.getInt(0)
     val buckets = tableBuckets(spark, s"${name}_spans")
     val epoch = EpochLog.newEpoch()
-    buildSpanIndex(newDocs, idCol, textCol, n)
-      .withColumn("build_id", lit(epoch))
-      .repartition(buckets, col("shingle"))
-      .write.mode("append")
-      .bucketBy(buckets, "shingle").sortBy("shingle")
-      .saveAsTable(s"${name}_spans")
+    writeBucketedEpoch(buildSpanIndex(newDocs, idCol, textCol, n),
+      s"${name}_spans", "shingle", buckets, epoch, "append")
     log.append(epoch, key)
   }
 
@@ -1175,14 +1163,11 @@ object Dedup {
       // commit an EMPTY epoch and GC the sole copies of the data
       require(rows.select(lit(1)).limit(1).collect().nonEmpty,
         s"compactSpanIndex: no committed rows in ${name}_spans (crashed rebuild?) - re-run writeSpanIndex")
-      rows.groupBy("shingle", "span_n")
-        .agg(sum("span_docs").as("span_docs"))
-        .select(col("shingle"), col("span_docs"), col("span_n"))
-        .withColumn("build_id", lit(epoch))
-        .repartition(buckets, col("shingle"))
-        .write.mode("append")
-        .bucketBy(buckets, "shingle").sortBy("shingle")
-        .saveAsTable(s"${name}_spans")
+      writeBucketedEpoch(
+        rows.groupBy("shingle", "span_n")
+          .agg(sum("span_docs").as("span_docs"))
+          .select(col("shingle"), col("span_docs"), col("span_n")),
+        s"${name}_spans", "shingle", buckets, epoch, "append")
     }
   }
 
@@ -1887,8 +1872,9 @@ object Dedup {
     * collision rows bucketed AND sorted by `bh`, `<name>_sigs` = the
     * hashes themselves bucketed by `sh_id` with the band count riding as
     * `n_bands` (geometry-with-the-data, the `sig_k` rule), committed
-    * through the [[EpochLog]]. The bucket-aligned-repartition rationale
-    * is the [[writeBandedIndex]] one verbatim. Null hashes are
+    * through the [[EpochLog]]. Both families share one bucketed
+    * writer ([[writeBucketedEpoch]], which carries the bucket-aligned
+    * repartition and its rationale). Null hashes are
     * excluded (an unhashable asset cannot be a candidate); `hashes` is
     * materialized internally, so an expensive upstream (a decode pass)
     * runs once. */
@@ -1897,18 +1883,8 @@ object Dedup {
     require(buckets >= 1, s"buckets must be positive, got $buckets")
     val clean = cleanHashes(hashes)
     val epoch = EpochLog.newEpoch()
-    hashBandRows(clean, bands)
-      .withColumn("build_id", lit(epoch))
-      .repartition(buckets, col("bh"))
-      .write.mode("overwrite")
-      .bucketBy(buckets, "bh").sortBy("bh")
-      .saveAsTable(s"${name}_bands")
-    clean.withColumn("n_bands", lit(bands))
-      .withColumn("build_id", lit(epoch))
-      .repartition(buckets, col("sh_id"))
-      .write.mode("overwrite")
-      .bucketBy(buckets, "sh_id").sortBy("sh_id")
-      .saveAsTable(s"${name}_sigs")
+    writeBandsAndSigs(hashBandRows(clean, bands), clean, name, bands, buckets,
+      epoch, "overwrite")
     EpochLog.table(hashes.sparkSession, name).overwrite(epoch)
   }
 
@@ -1943,18 +1919,8 @@ object Dedup {
     val buckets = tableBuckets(spark, s"${name}_sigs")
     val epoch = EpochLog.newEpoch()
     val clean = cleanHashes(newHashes)
-    hashBandRows(clean, bands)
-      .withColumn("build_id", lit(epoch))
-      .repartition(buckets, col("bh"))
-      .write.mode("append")
-      .bucketBy(buckets, "bh").sortBy("bh")
-      .saveAsTable(s"${name}_bands")
-    clean.withColumn("n_bands", lit(bands))
-      .withColumn("build_id", lit(epoch))
-      .repartition(buckets, col("sh_id"))
-      .write.mode("append")
-      .bucketBy(buckets, "sh_id").sortBy("sh_id")
-      .saveAsTable(s"${name}_sigs")
+    writeBandsAndSigs(hashBandRows(clean, bands), clean, name, bands, buckets,
+      epoch, "append")
     log.append(epoch, key)
   }
 

@@ -186,7 +186,7 @@ object LanguageModel {
     * staging projection because `__toks` is non-cheap and multiply
     * referenced (the [[Multimodal.toAssets]] `__dims` discipline).
     * `keep` columns (e.g. the doc id for scoring scans) ride along. */
-  private def ngramRows(docs: DataFrame, textCol: String, n: Int,
+  private[graft] def ngramRows(docs: DataFrame, textCol: String, n: Int,
                         alias: String, keep: Column*): DataFrame =
     docs.select(keep :+ TextAnalysis.tokens(col(textCol)).as("__toks"): _*)
       .select(keep :+ explode(ngramStructs(col("__toks"), n)).as(alias): _*)

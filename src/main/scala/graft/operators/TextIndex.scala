@@ -80,24 +80,7 @@ object TextIndex {
     * scalar pass stays a scan of `docs` (tokenless docs carry no
     * postings but ARE part of N and Σdl). */
   def build(docs: DataFrame, idCol: String, textCol: String): InvertedIndex = {
-    val toks = TextAnalysis.tokens(col(textCol))
-    // posexplode carries each token's 0-based offset, so the SAME
-    // groupBy that counts tf also collects the POSITION LIST
-    // (sort_array: collect_list order is partition-nondeterministic) —
-    // positions are per-doc facts, so the epoch algebra (id-disjoint
-    // additivity) is untouched, and bag-of-words serves never read the
-    // column (Catalyst prunes it out of the scan).
-    // The token ARRAY is projected once (`__toks`) and both `dl` and the
-    // explode read the projected column: the previous shape evaluated
-    // the regex tokenizer twice per document (once for size, once for
-    // the generator input) — the expensive expression in this scan.
-    val postings = Materialize.eagerCheckpoint(docs
-      .select(col(idCol), toks.as("__toks"))
-      .select(col(idCol), size(col("__toks")).as("dl"),
-        posexplode(col("__toks")).as(Seq("pos", "term")))
-      .groupBy(col(idCol), col("term"), col("dl"))
-      .agg(count(lit(1)).as("tf"),
-        sort_array(collect_list(col("pos"))).as("positions")))
+    val postings = Materialize.eagerCheckpoint(postingsOf(docs, idCol, textCol))
     val docFreq = postings.groupBy("term").agg(count(lit(1)).as("df"))
     // N is a plain row count (no tokenization); Σdl = Σ tf over the
     // already-materialized postings — every token lands in exactly one
@@ -108,6 +91,30 @@ object TextIndex {
     val totalDl = postings.agg(coalesce(sum("tf"), lit(0L))).head().getLong(0)
     InvertedIndex(postings, docFreq, nDocs, totalDl)
   }
+
+  /** [[build]]'s postings before materialization: one `(idCol, term,
+    * dl, tf, positions)` row per distinct term of each document.
+    * posexplode carries each token's 0-based offset, so the SAME
+    * groupBy that counts tf also collects the POSITION LIST
+    * (sort_array: collect_list order is partition-nondeterministic) —
+    * positions are per-doc facts, so the epoch algebra (id-disjoint
+    * additivity) is untouched, and bag-of-words serves never read the
+    * column (Catalyst prunes it out of the scan). */
+  private[graft] def postingsOf(docs: DataFrame, idCol: String,
+                                textCol: String): DataFrame =
+    // The token ARRAY is projected once (`__toks`) and both `dl` and the
+    // explode read the projected column, so the regex tokenizer runs
+    // once per document. The explode is OUTER, its padding rows dropped
+    // by the `term` filter: an inner explode of an attribute makes Spark
+    // infer `size(__toks) > 0 AND isnotnull(__toks)` and push it through
+    // the alias, which would run the tokenizer twice more per document.
+    docs.select(col(idCol), TextAnalysis.tokens(col(textCol)).as("__toks"))
+      .select(col(idCol), size(col("__toks")).as("dl"),
+        posexplode_outer(col("__toks")).as(Seq("pos", "term")))
+      .filter(col("term").isNotNull)
+      .groupBy(col(idCol), col("term"), col("dl"))
+      .agg(count(lit(1)).as("tf"),
+        sort_array(collect_list(col("pos"))).as("positions"))
 
   /** The "+1"-smoothed always-positive idf — ONE definition for every
     * serve form (single, phrase, batch): a smoothing change applied in

@@ -301,39 +301,30 @@ object Main {
       // resolve every required option before touching IO — bad args fail
       // fast instead of after a partial read
       val (metrics, acct, out) = (req(opt, "metrics"), req(opt, "accounting"), req(opt, "out"))
-      Pipeline.step2(spark, metrics, acct)
-        .write.mode("overwrite").option("compression", "zstd")
-        .parquet(out)
+      writeOut(Pipeline.step2(spark, metrics, acct), out)
 
     case Some("step3") =>
       val (opt, _) = parse(args.tail)
       val (in, out) = (req(opt, "in"), req(opt, "out"))
-      Pipeline.step3(spark.read.parquet(in))
-        .write.mode("overwrite").option("compression", "zstd")
-        .parquet(out)
+      writeOut(Pipeline.step3(spark.read.parquet(in)), out)
 
     case Some("compact") =>
       val (opt, flags) = parse(args.tail)
-      val trigger =
-        if (flags("once")) Trigger.AvailableNow()
-        else Trigger.ProcessingTime("5 seconds")
       val q = Compactor.start(spark, req(opt, "landing"), req(opt, "out"),
-        req(opt, "checkpoint"), Schemas.fresco, trigger)
+        req(opt, "checkpoint"), Schemas.fresco, trigger(flags))
       q.awaitTermination() // AvailableNow self-terminates after the drain
 
     case Some("curate") =>
       val (opt, _) = parse(args.tail)
       // resolve required options before touching IO (fail fast, like step2)
       val (in, evalIn, out) = (req(opt, "in"), req(opt, "eval"), req(opt, "out"))
-      Pipeline.curate(
+      writeOut(Pipeline.curate(
           spark.read.parquet(in), spark.read.parquet(evalIn),
           idCol = opt.getOrElse("id", "doc_id"),
           textCol = opt.getOrElse("text", "text"),
           minQuality = opt.getOrElse("quality", "0.5").toDouble,
           minJaccard = opt.getOrElse("jaccard", "0.8").toDouble,
-          shingleK = opt.getOrElse("shingle-k", "8").toInt)
-        .write.mode("overwrite").option("compression", "zstd")
-        .parquet(out)
+          shingleK = opt.getOrElse("shingle-k", "8").toInt), out)
 
     case Some("curate-stream") =>
       // the continuous flavor of `curate`: watch a landing dir of document
@@ -352,9 +343,6 @@ object Main {
       // file streaming sources need an explicit schema: snapshot it from
       // the landing dir's existing files (seed the dir before starting)
       val schema = spark.read.parquet(landing).schema
-      val trigger =
-        if (flags("once")) Trigger.AvailableNow()
-        else Trigger.ProcessingTime("5 seconds")
       val q = graft.streaming.StreamingCurate.curateStream(
           spark.readStream.schema(schema).parquet(landing),
           idCol, textCol, tsCol, bloom,
@@ -362,7 +350,7 @@ object Main {
           minQuality = opt.getOrElse("quality", "0.5").toDouble)
         .writeStream.format("parquet")
         .option("path", out).option("checkpointLocation", ckpt)
-        .outputMode("append").trigger(trigger).start()
+        .outputMode("append").trigger(trigger(flags)).start()
       q.awaitTermination() // AvailableNow self-terminates after the drain
 
     case Some("semgate-init") =>
@@ -391,9 +379,6 @@ object Main {
         spark.read.parquet(evalIn), idCol, textCol,
         k = opt.getOrElse("shingle-k", "8").toInt)
       val schema = spark.read.parquet(landing).schema
-      val trigger =
-        if (flags("once")) Trigger.AvailableNow()
-        else Trigger.ProcessingTime("5 seconds")
       val q = spark.readStream.schema(schema).parquet(landing)
         .writeStream
         .foreachBatch(graft.streaming.StreamingCurate
@@ -402,7 +387,7 @@ object Main {
             minCosine = opt.getOrElse("cosine", "0.95").toDouble,
             minQuality = opt.getOrElse("quality", "0.5").toDouble))
         .option("checkpointLocation", ckpt)
-        .trigger(trigger).start()
+        .trigger(trigger(flags)).start()
       q.awaitTermination()
 
     // the incremental-ingest loop as CLI: build the banded dedup index
@@ -457,12 +442,10 @@ object Main {
             s"--budgets expects group=tokens[,group=tokens...], got '$kv'")
         }
       }.toMap
-      graft.operators.TextAnalysis.sampleByTokenBudget(
+      writeOut(graft.operators.TextAnalysis.sampleByTokenBudget(
           spark.read.parquet(req(opt, "in")),
           opt.getOrElse("id", "doc_id"), opt.getOrElse("text", "text"),
-          opt.getOrElse("group", "source"), budgets)
-        .write.mode("overwrite").option("compression", "zstd")
-        .parquet(req(opt, "out"))
+          opt.getOrElse("group", "source"), budgets), req(opt, "out"))
 
     case Some("lm-train") =>
       // train a bigram reference LM and persist it (meta-last commit);
@@ -480,23 +463,19 @@ object Main {
 
     case Some("lm-score") =>
       val (opt, _) = parse(args.tail)
-      graft.operators.LanguageModel.crossEntropy(
+      writeOut(graft.operators.LanguageModel.crossEntropy(
           spark.read.parquet(req(opt, "in")),
           opt.getOrElse("id", "doc_id"), opt.getOrElse("text", "text"),
-          graft.operators.LanguageModel.read(spark, req(opt, "path")))
-        .write.mode("overwrite").option("compression", "zstd")
-        .parquet(req(opt, "out"))
+          graft.operators.LanguageModel.read(spark, req(opt, "path"))), req(opt, "out"))
 
     case Some("lm-filter") =>
       val (opt, flags) = parse(args.tail)
-      graft.operators.LanguageModel.filterByCrossEntropy(
+      writeOut(graft.operators.LanguageModel.filterByCrossEntropy(
           spark.read.parquet(req(opt, "in")),
           opt.getOrElse("id", "doc_id"), opt.getOrElse("text", "text"),
           graft.operators.LanguageModel.read(spark, req(opt, "path")),
           maxXent = req(opt, "max-xent").toDouble,
-          keepUnscored = !flags("drop-unscored"))
-        .write.mode("overwrite").option("compression", "zstd")
-        .parquet(req(opt, "out"))
+          keepUnscored = !flags("drop-unscored")), req(opt, "out"))
 
     case Some("bpe-train") =>
       val (opt, _) = parse(args.tail)
@@ -510,12 +489,10 @@ object Main {
 
     case Some("bpe-encode") =>
       val (opt, _) = parse(args.tail)
-      graft.operators.Bpe.encode(
+      writeOut(graft.operators.Bpe.encode(
           spark.read.parquet(req(opt, "in")),
           opt.getOrElse("id", "doc_id"), opt.getOrElse("text", "text"),
-          graft.operators.Bpe.readMerges(spark, req(opt, "path")))
-        .write.mode("overwrite").option("compression", "zstd")
-        .parquet(req(opt, "out"))
+          graft.operators.Bpe.readMerges(spark, req(opt, "path"))), req(opt, "out"))
 
     case Some("bm25-build") =>
       val (opt, _) = parse(args.tail)
@@ -579,48 +556,42 @@ object Main {
 
     case Some("bm25-topk") =>
       val (opt, _) = parse(args.tail)
-      graft.operators.TextIndex.bm25TopK(
+      writeOut(graft.operators.TextIndex.bm25TopK(
           graft.operators.TextIndex.readTopK(spark, req(opt, "path")),
           opt.getOrElse("id", "doc_id"), req(opt, "query"),
           k = opt.getOrElse("k", "10").toInt,
           k1 = opt.getOrElse("k1", "1.2").toDouble,
-          b = opt.getOrElse("b", "0.75").toDouble)
-        .write.mode("overwrite").option("compression", "zstd")
-        .parquet(req(opt, "out"))
+          b = opt.getOrElse("b", "0.75").toDouble), req(opt, "out"))
 
     case Some("bm25-search") =>
       val (opt, _) = parse(args.tail)
-      graft.operators.TextIndex.bm25(
+      writeOut(graft.operators.TextIndex.bm25(
           graft.operators.TextIndex.read(spark, req(opt, "path")),
           opt.getOrElse("id", "doc_id"), req(opt, "query"),
           k1 = opt.getOrElse("k1", "1.2").toDouble,
           b = opt.getOrElse("b", "0.75").toDouble)
         .orderBy(org.apache.spark.sql.functions.col("score").desc,
           org.apache.spark.sql.functions.col(opt.getOrElse("id", "doc_id")))
-        .limit(opt.getOrElse("topk", "20").toInt)
-        .write.mode("overwrite").option("compression", "zstd")
-        .parquet(req(opt, "out"))
+        .limit(opt.getOrElse("topk", "20").toInt), req(opt, "out"))
 
     case Some("bm25-phrase") =>
       // exact-phrase retrieval from the positional postings: every doc
       // containing the phrase verbatim, ranked by phrase-as-one-term BM25
       val (opt, _) = parse(args.tail)
-      graft.operators.TextIndex.bm25Phrase(
+      writeOut(graft.operators.TextIndex.bm25Phrase(
           graft.operators.TextIndex.read(spark, req(opt, "path")),
           opt.getOrElse("id", "doc_id"), req(opt, "phrase"),
           k1 = opt.getOrElse("k1", "1.2").toDouble,
           b = opt.getOrElse("b", "0.75").toDouble)
         .orderBy(org.apache.spark.sql.functions.col("score").desc,
           org.apache.spark.sql.functions.col(opt.getOrElse("id", "doc_id")))
-        .limit(opt.getOrElse("topk", "20").toInt)
-        .write.mode("overwrite").option("compression", "zstd")
-        .parquet(req(opt, "out"))
+        .limit(opt.getOrElse("topk", "20").toInt), req(opt, "out"))
 
     case Some("bm25-window") =>
       // near-verbatim decontamination: all query terms within --window
       // tokens of the first term, any order
       val (opt, _) = parse(args.tail)
-      graft.operators.TextIndex.bm25Window(
+      writeOut(graft.operators.TextIndex.bm25Window(
           graft.operators.TextIndex.read(spark, req(opt, "path")),
           opt.getOrElse("id", "doc_id"), req(opt, "query"),
           window = opt.getOrElse("window", "5").toInt,
@@ -628,9 +599,7 @@ object Main {
           b = opt.getOrElse("b", "0.75").toDouble)
         .orderBy(org.apache.spark.sql.functions.col("score").desc,
           org.apache.spark.sql.functions.col(opt.getOrElse("id", "doc_id")))
-        .limit(opt.getOrElse("topk", "20").toInt)
-        .write.mode("overwrite").option("compression", "zstd")
-        .parquet(req(opt, "out"))
+        .limit(opt.getOrElse("topk", "20").toInt), req(opt, "out"))
 
     case Some("decontaminate-phrase") =>
       // the eval-leakage gate: drop every training doc containing ANY of
@@ -638,16 +607,14 @@ object Main {
       // in one postings scan (the n-gram-overlap sibling is `curate`'s
       // Dedup.decontaminate; the near-verbatim dial is bm25-window)
       val (opt, flags) = parse(args.tail)
-      graft.operators.TextIndex.decontaminatePhrases(
+      writeOut(graft.operators.TextIndex.decontaminatePhrases(
           spark.read.parquet(req(opt, "in")),
           graft.operators.TextIndex.read(spark, req(opt, "path")),
           opt.getOrElse("id", "doc_id"),
           spark.read.parquet(req(opt, "phrases")),
           opt.getOrElse("phrase-id", "phrase_id"),
           opt.getOrElse("phrase-text", "phrase"),
-          pushdownTerms = !flags("no-pushdown"))
-        .write.mode("overwrite").option("compression", "zstd")
-        .parquet(req(opt, "out"))
+          pushdownTerms = !flags("no-pushdown")), req(opt, "out"))
 
     case Some("bm25-phrase-batch") =>
       // N eval phrases verified verbatim in one pass — the
@@ -655,7 +622,7 @@ object Main {
       // a huge phrase table through the distributed-materialization path
       // (the MaxPushdownUnits driver-collect guard names this flag)
       val (opt, flags) = parse(args.tail)
-      graft.operators.TextIndex.bm25PhraseBatch(
+      writeOut(graft.operators.TextIndex.bm25PhraseBatch(
           graft.operators.TextIndex.read(spark, req(opt, "path")),
           opt.getOrElse("id", "doc_id"),
           spark.read.parquet(req(opt, "phrases")),
@@ -663,16 +630,14 @@ object Main {
           opt.getOrElse("phrase-text", "phrase"),
           k1 = opt.getOrElse("k1", "1.2").toDouble,
           b = opt.getOrElse("b", "0.75").toDouble,
-          pushdownTerms = !flags("no-pushdown"))
-        .write.mode("overwrite").option("compression", "zstd")
-        .parquet(req(opt, "out"))
+          pushdownTerms = !flags("no-pushdown")), req(opt, "out"))
 
     case Some("bm25-batch") =>
       // the decontamination shape: a parquet TABLE of queries scored in
       // one pass over the index (full scored sets — batch callers apply
       // their own per-query cuts downstream); --no-pushdown as above
       val (opt, flags) = parse(args.tail)
-      graft.operators.TextIndex.bm25Batch(
+      writeOut(graft.operators.TextIndex.bm25Batch(
           graft.operators.TextIndex.read(spark, req(opt, "path")),
           opt.getOrElse("id", "doc_id"),
           spark.read.parquet(req(opt, "queries")),
@@ -680,42 +645,34 @@ object Main {
           opt.getOrElse("query-text", "query"),
           k1 = opt.getOrElse("k1", "1.2").toDouble,
           b = opt.getOrElse("b", "0.75").toDouble,
-          pushdownTerms = !flags("no-pushdown"))
-        .write.mode("overwrite").option("compression", "zstd")
-        .parquet(req(opt, "out"))
+          pushdownTerms = !flags("no-pushdown")), req(opt, "out"))
 
     case Some("span-index-build") =>
       val (opt, _) = parse(args.tail)
-      graft.operators.Dedup.buildSpanIndex(
+      writeOut(graft.operators.Dedup.buildSpanIndex(
           spark.read.parquet(req(opt, "in")),
           opt.getOrElse("id", "doc_id"), opt.getOrElse("text", "text"),
-          n = opt.getOrElse("span-n", "8").toInt)
-        .write.mode("overwrite").option("compression", "zstd")
-        .parquet(req(opt, "path"))
+          n = opt.getOrElse("span-n", "8").toInt), req(opt, "path"))
 
     case Some("span-index-merge") =>
       val (opt, _) = parse(args.tail)
       val (path, in, out) = (req(opt, "path"), req(opt, "in"), req(opt, "out"))
-      graft.operators.Dedup.mergeSpanIndexes(
+      writeOut(graft.operators.Dedup.mergeSpanIndexes(
           spark.read.parquet(path),
           graft.operators.Dedup.buildSpanIndex(
             spark.read.parquet(in),
             opt.getOrElse("id", "doc_id"), opt.getOrElse("text", "text"),
             // width read from the EXISTING index so the merged batch is
             // shingled consistently; mergeSpanIndexes re-checks
-            n = spark.read.parquet(path).select("span_n").head().getInt(0)))
-        .write.mode("overwrite").option("compression", "zstd")
-        .parquet(out)
+            n = spark.read.parquet(path).select("span_n").head().getInt(0))), out)
 
     case Some("span-index-filter") =>
       val (opt, _) = parse(args.tail)
-      graft.operators.Dedup.filterAgainstSpanIndex(
+      writeOut(graft.operators.Dedup.filterAgainstSpanIndex(
           spark.read.parquet(req(opt, "in")),
           spark.read.parquet(req(opt, "path")),
           opt.getOrElse("id", "doc_id"), opt.getOrElse("text", "text"),
-          maxIndexedFrac = opt.getOrElse("max-frac", "0.5").toDouble)
-        .write.mode("overwrite").option("compression", "zstd")
-        .parquet(req(opt, "out"))
+          maxIndexedFrac = opt.getOrElse("max-frac", "0.5").toDouble), req(opt, "out"))
 
     // the learned-ANN lifecycle as CLI: fit + build once, serve query
     // batches from the partition-pruned files, refresh on a cadence —
@@ -737,13 +694,11 @@ object Main {
       val (opt, _) = parse(args.tail)
       val (in, corpusIn, path, out) =
         (req(opt, "in"), req(opt, "corpus"), req(opt, "path"), req(opt, "out"))
-      graft.operators.Similarity.serveIvfIndex(path,
+      writeOut(graft.operators.Similarity.serveIvfIndex(path,
           spark.read.parquet(corpusIn), spark.read.parquet(in),
           opt.getOrElse("id", "vec_id"), opt.getOrElse("embedding", "embedding"),
           k = opt.getOrElse("topk", "10").toInt,
-          nprobe = opt.getOrElse("nprobe", "2").toInt)
-        .write.mode("overwrite").option("compression", "zstd")
-        .parquet(out)
+          nprobe = opt.getOrElse("nprobe", "2").toInt), out)
 
     case Some("ivf-refresh") =>
       val (opt, _) = parse(args.tail)
@@ -798,15 +753,12 @@ object Main {
       // file streaming sources need an explicit schema: snapshot it from
       // the landing dir's existing files (seed the dir before starting)
       val schema = spark.read.parquet(landing).schema
-      val trigger =
-        if (flags("once")) Trigger.AvailableNow()
-        else Trigger.ProcessingTime("5 seconds")
       val q = spark.readStream.schema(schema).parquet(landing)
         .writeStream
         .foreachBatch(graft.streaming.IvfIngest.sink(path,
           opt.getOrElse("id", "vec_id"), opt.getOrElse("embedding", "embedding")))
         .option("checkpointLocation", ckpt)
-        .trigger(trigger).start()
+        .trigger(trigger(flags)).start()
       q.awaitTermination() // AvailableNow self-terminates after the drain
 
     // learned residual IVF-PQ lifecycle: build (coarse fit + residual
@@ -866,14 +818,12 @@ object Main {
       val (opt, _) = parse(args.tail)
       val (in, corpusIn, path, out) =
         (req(opt, "in"), req(opt, "corpus"), req(opt, "path"), req(opt, "out"))
-      graft.operators.Similarity.serveOpqIndex(path,
+      writeOut(graft.operators.Similarity.serveOpqIndex(path,
           spark.read.parquet(corpusIn), spark.read.parquet(in),
           opt.getOrElse("id", "vec_id"), opt.getOrElse("embedding", "embedding"),
           k = opt.getOrElse("topk", "10").toInt,
           nprobe = opt.getOrElse("nprobe", "2").toInt,
-          candidateFactor = opt.getOrElse("factor", "4").toInt)
-        .write.mode("overwrite").option("compression", "zstd")
-        .parquet(out)
+          candidateFactor = opt.getOrElse("factor", "4").toInt), out)
 
     case Some("opq-append") =>
       val (opt, _) = parse(args.tail)
@@ -905,30 +855,25 @@ object Main {
       val (landing, path, ckpt) =
         (req(opt, "landing"), req(opt, "path"), req(opt, "checkpoint"))
       val schema = spark.read.parquet(landing).schema
-      val trigger =
-        if (flags("once")) Trigger.AvailableNow()
-        else Trigger.ProcessingTime("5 seconds")
       val q = spark.readStream.schema(schema).parquet(landing)
         .writeStream
         .foreachBatch(graft.streaming.IvfIngest.sink(path,
           opt.getOrElse("id", "vec_id"), opt.getOrElse("embedding", "embedding"),
           graft.streaming.IvfIngest.OpqLayout))
         .option("checkpointLocation", ckpt)
-        .trigger(trigger).start()
+        .trigger(trigger(flags)).start()
       q.awaitTermination()
 
     case Some("pq-query") =>
       val (opt, _) = parse(args.tail)
       val (in, corpusIn, path, out) =
         (req(opt, "in"), req(opt, "corpus"), req(opt, "path"), req(opt, "out"))
-      graft.operators.Similarity.servePqIndex(path,
+      writeOut(graft.operators.Similarity.servePqIndex(path,
           spark.read.parquet(corpusIn), spark.read.parquet(in),
           opt.getOrElse("id", "vec_id"), opt.getOrElse("embedding", "embedding"),
           k = opt.getOrElse("topk", "10").toInt,
           nprobe = opt.getOrElse("nprobe", "2").toInt,
-          candidateFactor = opt.getOrElse("factor", "4").toInt)
-        .write.mode("overwrite").option("compression", "zstd")
-        .parquet(out)
+          candidateFactor = opt.getOrElse("factor", "4").toInt), out)
 
     case Some("pq-refresh") =>
       val (opt, _) = parse(args.tail)
@@ -965,12 +910,10 @@ object Main {
     case Some("index-filter") =>
       val (opt, _) = parse(args.tail)
       val (in, name, out) = (req(opt, "in"), req(opt, "name"), req(opt, "out"))
-      graft.operators.Dedup.filterAgainstBandedIndex(
+      writeOut(graft.operators.Dedup.filterAgainstBandedIndex(
           spark.read.parquet(in), name,
           opt.getOrElse("id", "doc_id"), opt.getOrElse("text", "text"),
-          minJaccard = opt.getOrElse("jaccard", "0.8").toDouble)
-        .write.mode("overwrite").option("compression", "zstd")
-        .parquet(out)
+          minJaccard = opt.getOrElse("jaccard", "0.8").toDouble), out)
 
     case Some("quality-train") =>
       val (opt, _) = parse(args.tail)
@@ -993,11 +936,9 @@ object Main {
         spark.read.parquet(in), opt.getOrElse("id", "doc_id"),
         opt.getOrElse("text", "text"),
         graft.operators.TextClassifier.load(spark, path))
-      opt.get("threshold").map(_.toDouble)
+      writeOut(opt.get("threshold").map(_.toDouble)
         .fold(scored)(t =>
-          scored.filter(org.apache.spark.sql.functions.col("p") >= t))
-        .write.mode("overwrite").option("compression", "zstd")
-        .parquet(out)
+          scored.filter(org.apache.spark.sql.functions.col("p") >= t)), out)
 
     // multimodal hash-index lifecycle: persist 64-bit content hashes
     // (image dHash / audio fingerprint) in the banded serving layout,
@@ -1030,28 +971,23 @@ object Main {
 
     case Some("mm-index-pairs") =>
       val (opt, _) = parse(args.tail)
-      graft.operators.Dedup.pairsAgainstHashIndex(
+      writeOut(graft.operators.Dedup.pairsAgainstHashIndex(
           mmHashes(spark.read.parquet(req(opt, "in")), opt),
           req(opt, "name"),
           maxHamming = opt.getOrElse("hamming",
-            graft.operators.Dedup.MmMaxHamming.toString).toInt)
-        .write.mode("overwrite").option("compression", "zstd")
-        .parquet(req(opt, "out"))
+            graft.operators.Dedup.MmMaxHamming.toString).toInt), req(opt, "out"))
 
     case Some("mm-index-ingest") =>
       val (opt, flags) = parse(args.tail)
       val (landing, name, ckpt) =
         (req(opt, "landing"), req(opt, "name"), req(opt, "checkpoint"))
       val schema = spark.read.parquet(landing).schema
-      val trigger =
-        if (flags("once")) Trigger.AvailableNow()
-        else Trigger.ProcessingTime("5 seconds")
       val q = spark.readStream.schema(schema).parquet(landing)
         .writeStream
         .foreachBatch(graft.streaming.HashIndexIngest.sink(name,
           mmModality(opt)))
         .option("checkpointLocation", ckpt)
-        .trigger(trigger).start()
+        .trigger(trigger(flags)).start()
       q.awaitTermination() // AvailableNow self-terminates after the drain
 
     case Some("mm-keep") =>
@@ -1064,8 +1000,7 @@ object Main {
         case other => throw new IllegalArgumentException(
           s"unknown --modality $other (image|audio|video)\n$Usage")
       }
-      kept.write.mode("overwrite").option("compression", "zstd")
-        .parquet(req(opt, "out"))
+      writeOut(kept, req(opt, "out"))
 
     case other =>
       throw new IllegalArgumentException(
@@ -1092,6 +1027,16 @@ object Main {
       case other => throw new IllegalArgumentException(
         s"unknown --modality $other (image|audio|video)\n$Usage")
     }
+
+  /** A verb's result as zstd parquet at `path`, replacing what is there. */
+  private def writeOut(df: org.apache.spark.sql.DataFrame, path: String): Unit =
+    df.write.mode("overwrite").option("compression", "zstd").parquet(path)
+
+  /** `--once` drains the backlog and stops (AvailableNow); otherwise a
+    * micro-batch every 5 seconds until killed. */
+  private def trigger(flags: String => Boolean): Trigger =
+    if (flags("once")) Trigger.AvailableNow()
+    else Trigger.ProcessingTime("5 seconds")
 
   /** `--key value` options and bare `--flag` switches. */
   private def parse(args: Seq[String]): (Map[String, String], String => Boolean) = {

@@ -22,17 +22,17 @@ class FixtureEpochSpec extends org.scalatest.funsuite.AnyFunSuite {
     val dir = java.nio.file.Files.createTempDirectory("graft-epoch-spec")
     val marker = dir.resolve("_GRAFT_COMPLETE")
     // no marker at all: a crashed build must rebuild
-    assert(!SparkEntry.fixtureMarkerFresh(dir.toString))
+    assert(!SparkEntry.fixtures.markerFresh(dir.toString))
     // a marker from a PRIOR round's hand-bumped epoch (the exact
     // staleness the r19 verdict flagged): must NOT be served
     java.nio.file.Files.write(marker, "r19-1".getBytes("UTF-8"))
-    assert(!SparkEntry.fixtureMarkerFresh(dir.toString))
+    assert(!SparkEntry.fixtures.markerFresh(dir.toString))
     // a marker from any other bytecode hash (recipe changed, recompiled)
     java.nio.file.Files.write(marker,
       (SparkEntry.FixtureEpochSalt + "-" + "0" * 32).getBytes("UTF-8"))
-    assert(!SparkEntry.fixtureMarkerFresh(dir.toString))
+    assert(!SparkEntry.fixtures.markerFresh(dir.toString))
     // the current epoch: fresh, reuse allowed
     java.nio.file.Files.write(marker, SparkEntry.FixtureEpoch.getBytes("UTF-8"))
-    assert(SparkEntry.fixtureMarkerFresh(dir.toString))
+    assert(SparkEntry.fixtures.markerFresh(dir.toString))
   }
 }

@@ -210,6 +210,62 @@ class PlanSpec extends SparkSpec {
     assert(shingleHashes(executed(aliased)).size > 1, s"detector missed:\n$aliased")
   }
 
+  /** Instances of the kernel `isKernel` in the executed plan's operators. */
+  private def kernels(p: SparkPlan)(
+      isKernel: org.apache.spark.sql.catalyst.expressions.Expression => Boolean): Int =
+    flatten(p).map(_.expressions.map(_.collect { case e if isKernel(e) => e }.size).sum).sum
+
+  private def generators(p: SparkPlan): Int =
+    flatten(p).count(_.isInstanceOf[org.apache.spark.sql.execution.GenerateExec])
+
+  private def isGrams(e: org.apache.spark.sql.catalyst.expressions.Expression) =
+    e.isInstanceOf[graft.functions.ShingleHashesAll]
+  private def isSplit(e: org.apache.spark.sql.catalyst.expressions.Expression) =
+    e.isInstanceOf[org.apache.spark.sql.catalyst.expressions.StringSplit]
+
+  test("removeDuplicatedSpans evaluates shingle_hashes_all once per gram scan") {
+    import org.apache.spark.sql.functions.{col, posexplode}
+    val docs = spark.read.parquet(s"$sf/documents.parquet")
+    val p = executed(operators.Dedup.removeDuplicatedSpans(docs, "doc_id", "text"))
+    // the gram rows feed the doc-distinct count and the join back: two
+    // scans, one kernel each, and no kernel in a pushed filter
+    assert(generators(p) == 2 && kernels(p)(isGrams) == 2,
+      s"shingle_hashes_all in span removal:\n$p")
+    // detector sanity: the former shape posexploded a column aliased to
+    // the kernel, and the inferred size filter pushed below the alias
+    // evaluated it again
+    val old = executed(docs.select(col("doc_id").as("sh_id"),
+        graft.functions.ShingleHashesAll.shingleHashesAll(col("text"), 8).as("__grams"))
+      .select(col("sh_id"), posexplode(col("__grams")).as(Seq("pos", "gram"))))
+    assert(kernels(old)(isGrams) > generators(old), s"detector missed:\n$old")
+  }
+
+  test("TextIndex postings tokenize each document once") {
+    import org.apache.spark.sql.functions.{col, posexplode, size}
+    val docs = spark.read.parquet(s"$sf/documents.parquet")
+    val p = executed(operators.TextIndex.postingsOf(docs, "doc_id", "text"))
+    assert(kernels(p)(isSplit) == 1, s"tokenizer in the postings plan:\n$p")
+    // detector sanity: the former inner posexplode of the aliased token
+    // column
+    val old = executed(docs
+      .select(col("doc_id"), operators.TextAnalysis.tokens(col("text")).as("__toks"))
+      .select(col("doc_id"), size(col("__toks")).as("dl"),
+        posexplode(col("__toks")).as(Seq("pos", "term"))))
+    assert(kernels(old)(isSplit) > 1, s"detector missed:\n$old")
+  }
+
+  test("LanguageModel n-gram rows tokenize each document once") {
+    import org.apache.spark.sql.functions.col
+    // the explode's input is the n-gram expression over the token
+    // column, not the column itself, so Spark infers no filter from it
+    val docs = spark.read.parquet(s"$sf/documents.parquet")
+    for (n <- Seq(2, 5)) {
+      val p = executed(
+        operators.LanguageModel.ngramRows(docs, "text", n, "g", col("doc_id")))
+      assert(kernels(p)(isSplit) == 1, s"tokenizer in the order-$n gram plan:\n$p")
+    }
+  }
+
   test("lshCandidatePairs joins on one bigint key, the band hash") {
     import org.apache.spark.sql.execution.joins.BaseJoinExec
     import org.apache.spark.sql.functions.col
