@@ -1923,9 +1923,10 @@ object Bench {
     // DECREASING — a JIT artifact masquerading as (im)scaling. Measured
     // r18: unwarmed reps=3 gave encode 8.7 s at 1x vs 4.5 s at 16x
     // (slope −0.29, nonsense); warmed, the sizes order correctly.
-    Similarity.writeLearnedOpqIndex(replica(0), "vec_id", "embedding",
-      s"$work/opq_warmup", rot, cents, cb)
-    Similarity.serveOpqIndex(s"$work/opq_warmup", replica(0), queries,
+    val quantizer = Similarity.IvfQuantizer(cents, Some(cb), Some(rot))
+    Similarity.writeLearnedIndex(replica(0), "vec_id", "embedding",
+      s"$work/opq_warmup", quantizer)
+    Similarity.serveLearnedIndex(s"$work/opq_warmup", replica(0), queries,
       "vec_id", "embedding", k = 5, nprobe = 2).count()
     c.drop()
     val pts = Seq(1, 2, 4, 8, 16).map { n =>
@@ -1935,11 +1936,11 @@ object Bench {
       // ENCODE: rotate + residual-code + partitioned write, one build per
       // size (a rebuild per rep would only re-measure the committer)
       c.drop()
-      val (_, encodeSecs) = clock(Similarity.writeLearnedOpqIndex(corpus, "vec_id",
-        "embedding", path, rot, cents, cb))
+      val (_, encodeSecs) = clock(Similarity.writeLearnedIndex(corpus, "vec_id",
+        "embedding", path, quantizer))
       val indexMb = parquetBytes(path) / MB
       val probedMb = qCells.map(q => parquetBytes(s"$path/coarse=$q")).sum / MB
-      val serve = c.timed(Similarity.serveOpqIndex(path, corpus, queries,
+      val serve = c.timed(Similarity.serveLearnedIndex(path, corpus, queries,
         "vec_id", "embedding", k = 5, nprobe = 2).count())
       require(serve.last == 25, s"expected 5 queries x top-5 at ${n}x, got ${serve.last}")
       c.drop()
@@ -2075,8 +2076,8 @@ object Bench {
   }
 
   /** Learned-IVF INGEST lifecycle harness — the evidence behind
-    * [[graft.operators.Similarity.appendToIvfIndex]] /
-    * [[graft.operators.Similarity.compactIvfIndex]], the ANN counterpart
+    * [[graft.operators.Similarity.appendToLearnedIndex]] /
+    * [[graft.operators.Similarity.compactLearnedIndex]], the ANN counterpart
     * of `bench_scale_compact.json`: build the learned index once, grow it
     * through N ingest appends (sign-flipped replicas — new ids, new
     * regions of the sphere), and serve a FIXED query batch at increasing
@@ -2098,13 +2099,14 @@ object Bench {
       .withColumn("embedding", col("embedding").cast("array<float>"))
     val path = s"$work/ix"
     val cents = Similarity.kmeansFit(replica(0), "vec_id", "embedding", k = 32, iters = 2)
-    Similarity.writeLearnedIvfIndex(replica(0), "vec_id", "embedding", path, cents)
+    Similarity.writeLearnedIndex(replica(0), "vec_id", "embedding", path,
+      Similarity.IvfQuantizer(cents))
     val queries = base.filter(col("vec_id") < 5)
     val probedCells = Similarity.withProbeLabels(queries, "embedding", cents,
       nprobe = 2).select("coarse").distinct().collect().map(_.getInt(0))
     def probedFilesMax: Int = probedCells.map(q => parquetFiles(s"$path/coarse=$q")).max
     var corpus = replica(0)
-    def serve() = c.timed(Similarity.serveIvfIndex(path, corpus, queries,
+    def serve() = c.timed(Similarity.serveLearnedIndex(path, corpus, queries,
         "vec_id", "embedding", k = 5, nprobe = 2).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getInt(3))).toSet)
     serve() // untimed warmup: codegen + JIT + committer init
@@ -2113,7 +2115,7 @@ object Bench {
       while (appended < target) {
         appended += 1
         val batch = replica(appended)
-        Similarity.appendToIvfIndex(batch, path, "vec_id", "embedding")
+        Similarity.appendToLearnedIndex(batch, path, "vec_id", "embedding")
         corpus = corpus.unionByName(batch)
       }
       val filesMax = probedFilesMax
@@ -2124,7 +2126,7 @@ object Bench {
       Point("appends" -> target, "probed_cell_files_max" -> filesMax,
         "index_files" -> files, "serve_secs" -> t.secs, "hits" -> t.last.size, "served" -> t.last)
     }
-    val (_, compactSecs) = clock(Similarity.compactIvfIndex(c.spark, path, "vec_id"))
+    val (_, compactSecs) = clock(Similarity.compactLearnedIndex(c.spark, path, "vec_id"))
     val postFilesMax = probedFilesMax
     val postFiles = parquetFiles(path)
     val post = serve()
@@ -2138,7 +2140,7 @@ object Bench {
 
   /** Recall-vs-nprobe harness — the IVF recall dial MEASURED, not
     * asserted: a fixed query batch served from a [[Similarity
-    * .writeLearnedIvfIndex]] layout at nprobe = 1, 2, 4, 8 and 32
+    * .writeLearnedIndex]] int8 layout at nprobe = 1, 2, 4, 8 and 32
     * (= every cell), each scored for recall@10 against the exact
     * brute-force ranking and timed median-of-reps. The nprobe = k point
     * probes ALL cells, so its recall isolates the QUANTIZATION effect
@@ -2165,7 +2167,7 @@ object Bench {
     *
     * Each corpus also carries the RESIDUAL-PQ recall ladder
     * (`pq_recall` / `planted_pq_recall`): the same cells served from a
-    * [[graft.operators.Similarity.writeLearnedPqIndex]] layout — 8-byte
+    * [[graft.operators.Similarity.writeLearnedIndex]] residual-PQ layout — 8-byte
     * codes vs int8's 72 — so the recall COST of the further 9×
     * compression is an artifact fact beside the int8 curve it trades
     * against (recall deterministic, seeded fits). */
@@ -2211,21 +2213,22 @@ object Bench {
         val queries = cf.filter(col("vec_id") < 100)
         val path = s"$frozen/ix"
         val cents = Similarity.kmeansFit(cf, "vec_id", "embedding", k = kCells, iters = 3)
-        Similarity.writeLearnedIvfIndex(cf, "vec_id", "embedding", path, cents)
+        Similarity.writeLearnedIndex(cf, "vec_id", "embedding", path,
+          Similarity.IvfQuantizer(cents))
         // the residual-PQ twin of the same corpus at the same cells: the
         // 8-byte-code serving tier's recall ladder beside int8's, so the
         // recall COST of the extra 9x compression is an artifact fact
         // (recall is deterministic — seeded fits — and is the claim; the
         // int8 ladder's secs already carry the timing context)
         val pqPath = s"$frozen/pqix"
-        Similarity.writeLearnedPqIndex(cf, "vec_id", "embedding", pqPath, cents,
-          Similarity.trainPqResidual(cf, "vec_id", "embedding", cents,
-            m = 8, ksub = 16, iters = 3))
+        Similarity.writeLearnedIndex(cf, "vec_id", "embedding", pqPath,
+          Similarity.IvfQuantizer(cents, Some(Similarity.trainPqResidual(cf,
+            "vec_id", "embedding", cents, m = 8, ksub = 16, iters = 3))))
         val exactDf = Similarity.bruteForceTopK(cf, queries, "vec_id", "embedding", topK)
         val exactSecs = c.timed(exactDf.count()).secs
         val exact = pairs(exactDf)
         val rows = probes.map { np =>
-          def served = Similarity.serveIvfIndex(path, cf, queries,
+          def served = Similarity.serveLearnedIndex(path, cf, queries,
             "vec_id", "embedding", k = topK, nprobe = np)
           // untimed warmup PER POINT: every nprobe is a distinct plan
           // (different slice literal + probed-cell list), so each pays its
@@ -2248,7 +2251,7 @@ object Bench {
         require(rows.last.d("recall") >= rows.head.d("recall") - 0.05,
           s"[$tag] probing every cell must not recall (materially) less " +
             s"than one cell: ${rows.map(_.cols)}")
-        val pqRecall = probes.map(np => recall(pairs(Similarity.servePqIndex(pqPath, cf,
+        val pqRecall = probes.map(np => recall(pairs(Similarity.serveLearnedIndex(pqPath, cf,
           queries, "vec_id", "embedding", k = topK, nprobe = np)), exact))
         (exactSecs, rows, pqRecall)
       }
@@ -2282,11 +2285,11 @@ object Bench {
     val dial = withWork("pq-dial") { dialDir =>
       Seq(4, 8, 16).flatMap { m =>
         val p = s"$dialDir/ix_m$m"
-        Similarity.writeLearnedPqIndex(uniform, "vec_id", "embedding", p, dCents,
-          Similarity.trainPqResidual(uniform, "vec_id", "embedding", dCents,
-            m = m, ksub = 16, iters = 3))
+        Similarity.writeLearnedIndex(uniform, "vec_id", "embedding", p,
+          Similarity.IvfQuantizer(dCents, Some(Similarity.trainPqResidual(uniform,
+            "vec_id", "embedding", dCents, m = m, ksub = 16, iters = 3))))
         Seq(4, 16).map { cf =>
-          Point("m" -> m, "cf" -> cf, "recall" -> recall(pairs(Similarity.servePqIndex(
+          Point("m" -> m, "cf" -> cf, "recall" -> recall(pairs(Similarity.serveLearnedIndex(
             p, uniform, dQueries, "vec_id", "embedding", k = topK, nprobe = dialNprobe,
             candidateFactor = cf)), dExact))
         }

@@ -7,6 +7,7 @@ import java.util.concurrent.atomic.AtomicLong
 
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.types.StructField
 
 /** One table of every per-data-dir fixture [[SparkEntry]] builds: the
   * persisted corpora, models and serving layouts its queries read, and
@@ -19,7 +20,9 @@ import org.apache.spark.sql.functions.col
   *    epoch-stamped completion marker, so with `reuse` on a later JVM
   *    serves the files a completed build left instead of rebuilding;
   *  - [[tree]] applies that marker rule to a whole fixture tree that
-  *    describes one dir.
+  *    describes one dir;
+  *  - [[stored]] reads a store its caller wrote and [[stamp]]ed only
+  *    while the stamp is current.
   *
   * `epoch` is the recipe hash every marker records: a marker from any
   * other epoch reads as stale. `reuse` is read on every build, so a
@@ -96,6 +99,23 @@ final class FixtureRegistry(epoch: => String, reuse: => Boolean,
   /** True when `p` carries a marker of the current epoch. */
   def markerFresh(p: String): Boolean = fresh(new File(p, Marker), epoch)
 
+  /** A value persisted in stores a caller writes itself (the learned-model
+    * stores): `read` when every store carries a marker of the current
+    * epoch, else `fit`. A store from another epoch, or one written
+    * before stores were stamped, reads as absent, so a recipe change is
+    * refit instead of served from the old matrices. The writer calls
+    * [[stamp]] after each store completes. */
+  def stored[V](stores: String*)(fit: => V)(read: => V): V =
+    if (stores.forall(markerFresh)) read else fit
+
+  /** Marks the completed store at `p` with the current epoch. */
+  def stamp(p: String): Unit = writeMarker(new File(p, Marker), epoch)
+
+  private def writeMarker(marker: File, stamp: String): Unit = {
+    marker.getParentFile.mkdirs()
+    Files.write(marker.toPath, stamp.getBytes("UTF-8"))
+  }
+
   private def fresh(marker: File, stamp: String): Boolean =
     marker.exists() &&
       new String(Files.readAllBytes(marker.toPath), "UTF-8") == stamp
@@ -109,8 +129,7 @@ final class FixtureRegistry(epoch: => String, reuse: => Boolean,
     else {
       Files.deleteIfExists(marker.toPath)
       build
-      marker.getParentFile.mkdirs()
-      Files.write(marker.toPath, stamp.getBytes("UTF-8"))
+      writeMarker(marker, stamp)
       true
     }
 }
@@ -127,53 +146,48 @@ object FixtureRegistry {
       .digest(dir.getBytes("UTF-8")).map("%02x".format(_)).mkString
 }
 
-/** Row codecs for the learned-model stores: a store holds one dir's rows
-  * under a `dir` column, and a reader takes only that dir's rows. A
-  * store without `_SUCCESS` is a crashed dump and one without rows for
-  * the dir is corrupt; both fail loudly rather than let a caller refit a
-  * matrix that differs from the one the oracle fixtures were made from. */
+/** The learned-model stores: [[graft.operators.QuantizerTables]]' rows
+  * plus a `dir` column, one dir's rows per store, and a reader takes
+  * only that dir's rows. A store without `_SUCCESS` is a crashed dump
+  * and one without rows for the dir is corrupt; both fail loudly rather
+  * than let a caller refit a matrix that differs from the one the oracle
+  * fixtures were made from. */
 private[graft] object ModelStore {
+  import graft.operators.QuantizerTables
 
-  /** A matrix as `(idx, vec, dir)` rows, one per row vector. */
-  final case class Matrix(idx: String, vec: String) {
+  /** A matrix store: the codec's `(idx, vec)` rows plus `dir`. */
+  final case class Matrix(codec: QuantizerTables.Matrix) {
     def rows(s: SparkSession, m: Array[Array[Double]], dir: String): DataFrame =
-      s.createDataFrame(m.toSeq.zipWithIndex.map { case (r, i) => (i, r.toSeq, dir) })
-        .toDF(idx, vec, "dir")
+      codec.rows(s, m, Some(dir))
 
     def read(s: SparkSession, store: String, dir: String,
              who: String): Array[Array[Double]] =
-      storeRows(s, store, dir, who, idx, vec)
-        .sortBy(_.getInt(0)).map(_.getSeq[Double](1).toArray)
+      codec.decode(storeRows(s, store, dir, who, codec.fields))
   }
 
-  val Centroids = Matrix("cid", "centroid")
-  val Rotation = Matrix("i", "rowv")
+  val Centroids = Matrix(QuantizerTables.Centroids)
+  val Rotation = Matrix(QuantizerTables.Rotation)
 
-  /** PQ codebooks as `(j, c, centroid, dir)` rows: subspace j, centroid c. */
+  /** PQ codebooks: the codec's `(j, c, centroid)` rows plus `dir`. */
   object Codebooks {
+    private val codec = QuantizerTables.Codebooks
+
     def rows(s: SparkSession, cb: graft.operators.Similarity.PqCodebooks,
              dir: String): DataFrame =
-      s.createDataFrame(for (j <- cb.codebooks.indices; c <- cb.codebooks(j).indices)
-          yield (j, c, cb.codebooks(j)(c).toSeq, dir))
-        .toDF("j", "c", "centroid", "dir")
+      codec.rows(s, cb, Some(dir))
 
     def read(s: SparkSession, store: String, dir: String,
-             who: String): graft.operators.Similarity.PqCodebooks = {
-      val byJ = storeRows(s, store, dir, who, "j", "c", "centroid")
-        .groupBy(_.getInt(0))
-      graft.operators.Similarity.PqCodebooks((0 until byJ.size).toArray.map { j =>
-        byJ(j).sortBy(_.getInt(1)).map(_.getSeq[Double](2).toArray)
-      })
-    }
+             who: String): graft.operators.Similarity.PqCodebooks =
+      codec.decode(storeRows(s, store, dir, who, codec.fields))
   }
 
   private def storeRows(s: SparkSession, store: String, dir: String, who: String,
-                        cols: String*): Array[Row] = {
+                        fields: Seq[StructField]): Array[Row] = {
     require(new File(store, "_SUCCESS").exists(),
       s"$who: $store exists without _SUCCESS - crashed fixture dump; " +
         "re-run Verify (prepareOracleFixtures) for this dir")
     val rows = s.read.parquet(store).filter(col("dir") === dir)
-      .select(cols.map(col): _*).collect()
+      .select(fields.map(f => col(f.name)): _*).collect()
     require(rows.nonEmpty,
       s"$who: $store holds no rows for dir=$dir - corrupt fixture dump; " +
         "re-run Verify for this dir")

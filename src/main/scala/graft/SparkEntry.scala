@@ -621,6 +621,9 @@ object SparkEntry {
       classOf[FixtureRegistry], FixtureRegistry.getClass,
       ModelStore.getClass, classOf[ModelStore.Matrix],
       ModelStore.Codebooks.getClass,
+      graft.operators.QuantizerTables.getClass,
+      classOf[graft.operators.QuantizerTables.Matrix],
+      graft.operators.QuantizerTables.Codebooks.getClass,
       graft.operators.Bpe.getClass, graft.operators.Bucketing.getClass,
       graft.operators.Dedup.getClass, graft.operators.EpochLog.getClass,
       classOf[graft.operators.EpochLog],
@@ -687,8 +690,9 @@ object SparkEntry {
     fixtures.path(s"verify-fixtures/kmeans_ivf/$name", dir)
 
   /** Learned-IVF centroids for `dir`'s embeddings table: loaded from the
-    * matrix [[prepareOracleFixtures]] persisted (when present and dumped
-    * for the SAME dir), else fitted — then cached per JVM. The in-JVM
+    * matrix [[prepareOracleFixtures]] persisted (when present, dumped
+    * for the SAME dir and stamped with the current [[FixtureEpoch]]),
+    * else fitted — then cached per JVM. The in-JVM
     * cache guarantees fixture dump and query serve from the IDENTICAL
     * matrix within one session; the persisted matrix extends that
     * persist-once contract ACROSS JVMs — [[Similarity.kmeansFit]] is
@@ -699,16 +703,16 @@ object SparkEntry {
     * ignored for any other dir (a stale sf0.01 matrix must never label
     * an sf0.1 corpus). One subdirectory PER dir (not one overwritten
     * table): dumping fixtures for a second sf dir must never destroy the
-    * first's persisted matrix. A half-written dump fails LOUDLY
-    * ([[ModelStore]]) rather than silently refit a matrix different from
-    * the one the surviving label fixtures were induced by. */
+    * first's persisted matrix. A store from another epoch — or a
+    * half-written dump, which the overwrite left unstamped — reads as
+    * absent ([[FixtureRegistry.stored]]), so a recipe change is refit
+    * and re-dumped instead of re-dumping the old matrix. */
   private def kmeansCentroids(s: SparkSession, dir: String): Array[Array[Double]] =
     fixtures.memo("kmeans", dir) {
       val store = modelStore("centroids", dir)
-      if (!new java.io.File(store).exists())
-        Similarity.kmeansFit(tbl(s, dir, "embeddings"),
-          "vec_id", "embedding", k = 8, iters = 5)
-      else ModelStore.Centroids.read(s, store, dir, "kmeansCentroids")
+      fixtures.stored(store)(Similarity.kmeansFit(tbl(s, dir, "embeddings"),
+          "vec_id", "embedding", k = 8, iters = 5))(
+        ModelStore.Centroids.read(s, store, dir, "kmeansCentroids"))
     }
 
   /** PQ codebooks for `dir`'s embeddings (m = 8 subspaces × ksub = 16
@@ -722,10 +726,9 @@ object SparkEntry {
   private def pqCodebooks(s: SparkSession, dir: String): Similarity.PqCodebooks =
     fixtures.memo("pq", dir) {
       val store = modelStore("pq_store", dir)
-      if (!new java.io.File(store).exists())
-        Similarity.trainPq(tbl(s, dir, "embeddings"), "vec_id", "embedding",
-          m = 8, ksub = 16)
-      else ModelStore.Codebooks.read(s, store, dir, "pqCodebooks")
+      fixtures.stored(store)(Similarity.trainPq(tbl(s, dir, "embeddings"),
+          "vec_id", "embedding", m = 8, ksub = 16))(
+        ModelStore.Codebooks.read(s, store, dir, "pqCodebooks"))
     }
 
   /** RESIDUAL PQ codebooks for `dir`'s embeddings — [[pqCodebooks]]'
@@ -736,10 +739,9 @@ object SparkEntry {
   private def pqResCodebooks(s: SparkSession, dir: String): Similarity.PqCodebooks =
     fixtures.memo("pq-res", dir) {
       val store = modelStore("pq_res_store", dir)
-      if (!new java.io.File(store).exists())
-        Similarity.trainPqResidual(tbl(s, dir, "embeddings"), "vec_id",
-          "embedding", kmeansCentroids(s, dir), m = 8, ksub = 16)
-      else ModelStore.Codebooks.read(s, store, dir, "pqResCodebooks")
+      fixtures.stored(store)(Similarity.trainPqResidual(tbl(s, dir, "embeddings"),
+          "vec_id", "embedding", kmeansCentroids(s, dir), m = 8, ksub = 16))(
+        ModelStore.Codebooks.read(s, store, dir, "pqResCodebooks"))
     }
 
   /** The (index, new-batch) construction shared by q_dedup_index and its
@@ -830,18 +832,19 @@ object SparkEntry {
     * the [[kmeansCentroids]] matrix (the same matrix the q_ann_kmeans
     * fixture dumps — so the oracle's labels and this index's cells are
     * the same labels), quantizer riding with the index
-    * ([[Similarity.writeLearnedIvfIndex]]). Built once per JVM, outside
+    * ([[Similarity.writeLearnedIndex]]). Built once per JVM, outside
     * the timed body, like every other serving-layout cache here. */
   private def learnedIvfPath(s: SparkSession, dir: String): String =
     fixtures.layout("bench-ivf-learned", dir) { path =>
-      Similarity.writeLearnedIvfIndex(tbl(s, dir, "embeddings"),
-        "vec_id", "embedding", path, kmeansCentroids(s, dir))
+      Similarity.writeLearnedIndex(tbl(s, dir, "embeddings"),
+        "vec_id", "embedding", path,
+        Similarity.IvfQuantizer(kmeansCentroids(s, dir)))
     }
 
   /** [[learnedIvfPath]]'s INGEST twin: the same index CONTENT reached
     * through the lifecycle path — built over a third of the corpus, grown
     * to the rest through two epoch-committed [[Similarity
-    * .appendToIvfIndex]] calls. Appended rows are labeled by the index's
+    * .appendToLearnedIndex]] calls. Appended rows are labeled by the index's
     * riding quantizer — the same [[kmeansCentroids]] matrix the fixture
     * dumps — so build-then-append holds exactly the rows a full build
     * holds, and the same oracle applies. Built once per JVM, outside the
@@ -849,26 +852,27 @@ object SparkEntry {
   private def ingestIvfPath(s: SparkSession, dir: String): String =
     fixtures.layout("bench-ivf-ingest", dir) { path =>
       val e = tbl(s, dir, "embeddings")
-      Similarity.writeLearnedIvfIndex(
+      Similarity.writeLearnedIndex(
         e.filter(pmod(col("vec_id"), lit(3)) === 0),
-        "vec_id", "embedding", path, kmeansCentroids(s, dir))
-      Similarity.appendToIvfIndex(
+        "vec_id", "embedding", path,
+        Similarity.IvfQuantizer(kmeansCentroids(s, dir)))
+      Similarity.appendToLearnedIndex(
         e.filter(pmod(col("vec_id"), lit(3)) === 1), path, "vec_id", "embedding")
-      Similarity.appendToIvfIndex(
+      Similarity.appendToLearnedIndex(
         e.filter(pmod(col("vec_id"), lit(3)) === 2), path, "vec_id", "embedding")
     }
 
   /** [[learnedIvfPath]]'s DELETION twin: the full learned index with
-    * every 5th vector tombstoned out ([[Similarity.deleteFromIvfIndex]]
+    * every 5th vector tombstoned out ([[Similarity.deleteFromLearnedIndex]]
     * — ids only, no vectors, the takedown shape). Serving must answer as
     * if the deleted rows were never indexed, which is exactly what the
     * oracle replays (the fixture corpus filtered by the same predicate). */
   private def deletedIvfPath(s: SparkSession, dir: String): String =
     fixtures.layout("bench-ivf-deleted", dir) { path =>
       val e = tbl(s, dir, "embeddings")
-      Similarity.writeLearnedIvfIndex(e, "vec_id", "embedding", path,
-        kmeansCentroids(s, dir))
-      Similarity.deleteFromIvfIndex(
+      Similarity.writeLearnedIndex(e, "vec_id", "embedding", path,
+        Similarity.IvfQuantizer(kmeansCentroids(s, dir)))
+      Similarity.deleteFromLearnedIndex(
         e.filter(pmod(col("vec_id"), lit(5)) === 0).select("vec_id"),
         path, "vec_id")
     }
@@ -993,6 +997,7 @@ object SparkEntry {
       // only the Lloyd/Jacobi/Procrustes fits themselves are engine-bound
       def dumpModel(rows: DataFrame, store: String, flat: String): Unit = {
         rows.coalesce(1).write.mode("overwrite").parquet(modelStore(store, dir))
+        fixtures.stamp(modelStore(store, dir))
         rows.coalesce(1).write.mode("overwrite").parquet(s"$KmeansFixture/$flat")
       }
       dumpModel(ModelStore.Centroids.rows(s, cents, dir), "centroids", "centroids_flat")
@@ -1041,11 +1046,10 @@ object SparkEntry {
     fixtures.memo("opq", dir) {
       val rotStore = modelStore("opq_rot_store", dir)
       val cbStore = modelStore("opq_cb_store", dir)
-      if (!new java.io.File(rotStore).exists() || !new java.io.File(cbStore).exists())
-        Similarity.trainOpq(tbl(s, dir, "embeddings"), "vec_id", "embedding",
-          m = 8, ksub = 16)
-      else (ModelStore.Rotation.read(s, rotStore, dir, "opqModel"),
-        ModelStore.Codebooks.read(s, cbStore, dir, "opqModel"))
+      fixtures.stored(rotStore, cbStore)(Similarity.trainOpq(
+          tbl(s, dir, "embeddings"), "vec_id", "embedding", m = 8, ksub = 16))(
+        (ModelStore.Rotation.read(s, rotStore, dir, "opqModel"),
+          ModelStore.Codebooks.read(s, cbStore, dir, "opqModel")))
     }
 
   /** The ROTATED-SPACE residual quantizers for `dir`'s embeddings — the
@@ -1058,19 +1062,15 @@ object SparkEntry {
     fixtures.memo("opq-res", dir) {
       val centStore = modelStore("opq_res_cent_store", dir)
       val cbStore = modelStore("opq_res_cb_store", dir)
-      if (!new java.io.File(centStore).exists() || !new java.io.File(cbStore).exists()) {
-        val (rot, _) = opqModel(s, dir)
-        // cast staged in its own projection: rotateExpr re-evaluates its
-        // input once per output dimension (its documented contract)
-        val rotated = tbl(s, dir, "embeddings")
-          .select(col("vec_id"), col("embedding").cast("array<double>").as("__v"))
-          .select(col("vec_id"), Similarity.rotateExpr(col("__v"), rot).as("__rotv"))
-        val cents = Similarity.kmeansFit(rotated, "vec_id", "__rotv",
-          k = 8, iters = 5)
-        (cents, Similarity.trainPqResidual(rotated, "vec_id", "__rotv",
-          cents, m = 8, ksub = 16))
-      } else (ModelStore.Centroids.read(s, centStore, dir, "opqResModel"),
-        ModelStore.Codebooks.read(s, cbStore, dir, "opqResModel"))
+      fixtures.stored(centStore, cbStore) {
+        // the OPQ fit sequence past its rotation step, under opqModel's
+        // stored rotation
+        val q = Similarity.fitRotatedQuantizer(tbl(s, dir, "embeddings"),
+          "vec_id", "embedding", opqModel(s, dir)._1, k = 8, m = 8, ksub = 16,
+          iters = 5)
+        (q.centroids, q.codebooks.get)
+      }((ModelStore.Centroids.read(s, centStore, dir, "opqResModel"),
+        ModelStore.Codebooks.read(s, cbStore, dir, "opqResModel")))
     }
 
   /** On-disk LEARNED OPQ index for `dir`'s embeddings (the FAISS
@@ -1081,8 +1081,8 @@ object SparkEntry {
     fixtures.layout("q-ann-opq-learned", dir) { p =>
       val (rot, _) = opqModel(s, dir)
       val (cents, cb) = opqResModel(s, dir)
-      Similarity.writeLearnedOpqIndex(tbl(s, dir, "embeddings"), "vec_id",
-        "embedding", p, rot, cents, cb)
+      Similarity.writeLearnedIndex(tbl(s, dir, "embeddings"), "vec_id",
+        "embedding", p, Similarity.IvfQuantizer(cents, Some(cb), Some(rot)))
     }
 
   /** Incremental dedup serving: a new batch against the prebuilt MinHash
@@ -1907,9 +1907,9 @@ object SparkEntry {
   }
 
   /** The FULL OPQ composition under the hash gate — the learned
-    * `OPQ → IVF → residual-PQ` index ([[Similarity.writeLearnedOpqIndex]],
+    * `OPQ → IVF → residual-PQ` index ([[Similarity.writeLearnedIndex]],
     * FAISS's production factory shape) served end to end from its path
-    * ([[Similarity.serveOpqIndex]]): queries rotate once, multi-probe
+    * ([[Similarity.serveLearnedIndex]]): queries rotate once, multi-probe
     * their 2 nearest ROTATED-space cells partition-pruned into the
     * read, per-cell rotated residual ADC, exact re-score on ORIGINAL
     * vectors. The oracle re-derives EVERYTHING from the three dumped
@@ -1919,7 +1919,7 @@ object SparkEntry {
     * composition (not just its answer) sits under the gate. */
   private def qAnnOpqRes(s: SparkSession, dir: String): DataFrame = {
     val e = tbl(s, dir, "embeddings")
-    Similarity.serveOpqIndex(opqLearnedIndexPath(s, dir),
+    Similarity.serveLearnedIndex(opqLearnedIndexPath(s, dir),
         e, e.filter(col("vec_id") < 20), "vec_id", "embedding",
         k = 3, nprobe = 2, candidateFactor = 4)
       .withColumn("cosine", rq(col("cosine"), 6))
@@ -1969,25 +1969,26 @@ object SparkEntry {
   }
 
   /** On-disk LEARNED residual-PQ layout for `dir`
-    * ([[Similarity.writeLearnedPqIndex]]: codes partitioned by cell,
+    * ([[Similarity.writeLearnedIndex]]: codes partitioned by cell,
     * BOTH quantizers riding with the index, epoch-committed), built once
     * per JVM from the SAME persisted centroid matrix + residual
     * codebooks the oracle dumps replay. */
   private def pqLayoutPath(s: SparkSession, dir: String): String =
     fixtures.layout("q-ann-pq-layout", dir) { p =>
-      Similarity.writeLearnedPqIndex(tbl(s, dir, "embeddings"), "vec_id",
-        "embedding", p, kmeansCentroids(s, dir), pqResCodebooks(s, dir))
+      Similarity.writeLearnedIndex(tbl(s, dir, "embeddings"), "vec_id",
+        "embedding", p, Similarity.IvfQuantizer(kmeansCentroids(s, dir),
+          Some(pqResCodebooks(s, dir))))
     }
 
   /** [[qAnnPqRes]] answered from the PARTITION-PRUNED on-disk layout
-    * ([[Similarity.servePqIndex]]: quantizers loaded from the path,
+    * ([[Similarity.serveLearnedIndex]]: quantizers loaded from the path,
     * probed cells pruned into the file listing, committed-epoch filter)
     * under the SAME oracle — the layout changes which files are listed
     * and scanned, never the answer (pruning is exact: the ADC join is
     * on the cell). The PQ counterpart of q_ann_ivf_pruned. */
   private def qAnnPqResPruned(s: SparkSession, dir: String): DataFrame = {
     val e = tbl(s, dir, "embeddings")
-    Similarity.servePqIndex(pqLayoutPath(s, dir), e,
+    Similarity.serveLearnedIndex(pqLayoutPath(s, dir), e,
         e.filter(col("vec_id") < 20), "vec_id", "embedding", 3, nprobe = 2,
         candidateFactor = 4)
       .withColumn("cosine", rq(col("cosine"), 6))
@@ -2030,7 +2031,7 @@ object SparkEntry {
 
   /** The whole production ANN serving story in ONE call, under the same
     * oracle as q_ann_kmeans: learned quantizer (loaded FROM the index —
-    * [[Similarity.serveIvfIndex]] threads nothing), on-disk
+    * [[Similarity.serveLearnedIndex]] threads nothing), on-disk
     * partition-pruned layout, int8 stage-1 shortlist, exact re-scoring.
     * Every composition layer is separately oracle-checked (q_ann_kmeans:
     * learned cells; q_ann_ivf_q8: quantized shortlist; q_ann_ivf_pruned:
@@ -2040,13 +2041,13 @@ object SparkEntry {
     * fixture dumps, so cells and labels agree by construction. */
   private def qAnnServe(s: SparkSession, dir: String): DataFrame = {
     val e = tbl(s, dir, "embeddings")
-    Similarity.serveIvfIndex(learnedIvfPath(s, dir), e,
+    Similarity.serveLearnedIndex(learnedIvfPath(s, dir), e,
         e.filter(col("vec_id") < 20), "vec_id", "embedding", k = 3, nprobe = 2)
       .withColumn("cosine", rq(col("cosine"), 6))
   }
 
   /** q_ann_serve's INGEST-LIFECYCLE twin, same oracle: the served index
-    * was grown through [[Similarity.appendToIvfIndex]] (build over a
+    * was grown through [[Similarity.appendToLearnedIndex]] (build over a
     * third of the corpus, two epoch-committed appends for the rest —
     * [[ingestIvfPath]]) instead of built in one shot. Appends label with
     * the riding quantizer, so the grown index holds row-for-row what the
@@ -2055,13 +2056,13 @@ object SparkEntry {
     * replay that pins the build path's. */
   private def qAnnIngest(s: SparkSession, dir: String): DataFrame = {
     val e = tbl(s, dir, "embeddings")
-    Similarity.serveIvfIndex(ingestIvfPath(s, dir), e,
+    Similarity.serveLearnedIndex(ingestIvfPath(s, dir), e,
         e.filter(col("vec_id") < 20), "vec_id", "embedding", k = 3, nprobe = 2)
       .withColumn("cosine", rq(col("cosine"), 6))
   }
 
   /** q_ann_serve's DELETION twin: the index lost every 5th vector to a
-    * [[Similarity.deleteFromIvfIndex]] tombstone ([[deletedIvfPath]]),
+    * [[Similarity.deleteFromLearnedIndex]] tombstone ([[deletedIvfPath]]),
     * and serving must answer as if those rows were never indexed — the
     * oracle replays the cell-restricted ranking over the fixture corpus
     * MINUS the same ids. Deleted ids still QUERY (a query needn't be
@@ -2069,7 +2070,7 @@ object SparkEntry {
     * the correctness gate, like the append path before it. */
   private def qAnnDelete(s: SparkSession, dir: String): DataFrame = {
     val e = tbl(s, dir, "embeddings")
-    Similarity.serveIvfIndex(deletedIvfPath(s, dir), e,
+    Similarity.serveLearnedIndex(deletedIvfPath(s, dir), e,
         e.filter(col("vec_id") < 20), "vec_id", "embedding", k = 3, nprobe = 2)
       .withColumn("cosine", rq(col("cosine"), 6))
   }

@@ -504,7 +504,7 @@ object Dedup {
 
   /** DELETE docs from a [[writeBandedIndex]] layout without touching the
     * index tables — the takedown shape, mirroring
-    * [[graft.operators.Similarity.deleteFromIvfIndex]]: a removal request
+    * [[graft.operators.Similarity.deleteFromLearnedIndex]]: a removal request
     * arrives as IDS (no text needed — deletion never shingles), and at
     * scale rewriting the bucketed tables per request is the cost this
     * avoids. The ids land as epoch-scoped [[EpochLog]] tombstones.

@@ -811,49 +811,11 @@ object Similarity {
                         candidateFactor: Int = 4): DataFrame = {
     require(checkCentroids(centroids) == cb.dims,
       s"centroid dims ${centroids.head.length} != codebook dims ${cb.dims}")
-    pqResidualServe(index, corpus,
-      withProbeLabels(queries, embCol, centroids, nprobe),
-      idCol, embCol, centroids, cb, k, candidateFactor)
-  }
-
-  /** The shared residual-PQ serving tail: `probed` carries one row per
-    * (query, probed cell) — [[withProbeLabels]] output — and each row
-    * gets its own per-cell residual ADC table below the cell join.
-    * [[uniqueQueryVectors]] handles the probe fan-out on the re-score
-    * side (identical vector per id; conflicting vectors raise). */
-  private def pqResidualServe(index: DataFrame, corpus: DataFrame,
-                              probed: DataFrame, idCol: String,
-                              embCol: String,
-                              centroids: Array[Array[Double]],
-                              cb: PqCodebooks, k: Int,
-                              candidateFactor: Int): DataFrame = {
-    require(k >= 1, s"k must be positive, got $k")
-    require(candidateFactor >= 1,
-      s"candidateFactor must be positive, got $candidateFactor")
-    val q = probed
-      .select(col("coarse").as("part"), col(idCol).as("query_id"),
-        graft.functions.Adc.table(
-          residualExpr(guardedVec(embCol, cb.dims, "ivf_top_k_pq_residual"),
-            col("coarse"), centroids),
-          cb.codebooks).as("__adc_tab"))
-    val c = index.select(col("coarse").as("part"), col(idCol).as("nn_id"),
-      col("pq_codes"))
-    val adcR = floor(graft.functions.Adc.lookup(col("__adc_tab"),
-      col("pq_codes").cast("array<int>"), cb.m, cb.ksub) * 1000000.0
-      + 0.5) / 1000000.0
-    val w1 = org.apache.spark.sql.expressions.Window
-      .partitionBy("query_id").orderBy(col("__adc"), col("nn_id"))
-    val shortlist = q.join(c, Seq("part"))
-      .filter(col("query_id") =!= col("nn_id"))
-      .select(col("query_id"), col("nn_id"), adcR.as("__adc"))
-      .withColumn("r1", row_number().over(w1))
-      .filter(col("r1") <= k * candidateFactor)
-      .select("query_id", "nn_id").distinct() // probe fan-out dedup
-    val cx = withNorm(corpus, embCol)
-      .select(col(idCol).as("nn_id"), col("vec").as("cv"), col("norm").as("cn"))
-    rankTopK(shortlist
-      .join(uniqueQueryVectors(probed, idCol, embCol), "query_id")
-      .join(cx, "nn_id"), k)
+    adcTopK(index, corpus, withProbeLabels(queries, embCol, centroids, nprobe),
+      idCol, embCol, "coarse",
+      residualExpr(guardedVec(embCol, cb.dims, "ivf_top_k_pq_residual"),
+        col("coarse"), centroids),
+      cb, k, candidateFactor)
   }
 
   // ---------------------------------------------------------------------
@@ -1042,7 +1004,7 @@ object Similarity {
     * driver arithmetic per iteration — an offline train step, paid per
     * rebuild like every quantizer fit here. Returns `(rotation,
     * codebooks)`; both persist with the index (the serving side derives
-    * nothing, the [[writeLearnedPqIndex]] quantizer-mismatch
+    * nothing, the [[writeLearnedIndex]] quantizer-mismatch
     * discipline). */
   def trainOpq(df: DataFrame, idCol: String, embCol: String,
                m: Int = 8, ksub: Int = 16, iters: Int = 5,
@@ -1141,21 +1103,24 @@ object Similarity {
     * verbatim. */
   private def trainPqRotated(df: DataFrame, idCol: String, embCol: String,
                              rot: Array[Array[Double]], m: Int, ksub: Int,
-                             iters: Int): PqCodebooks = {
-    val d = rot.length
-    // guard staged in its own projection: rotateExpr re-evaluates its
-    // input once per output dimension
-    val rotated = df
-      .select(col(idCol), guardedVec(embCol, d, "train_opq").as("__gv"))
-      .select(col(idCol), rotateExpr(col("__gv"), rot).as("__rotv"))
-    trainPq(rotated, idCol, "__rotv", m, ksub, iters)
-  }
+                             iters: Int): PqCodebooks =
+    trainPq(withRotated(df.select(col(idCol), col(embCol)), embCol, rot,
+      "train_opq"), idCol, "__rotv", m, ksub, iters)
+
+  /** `df` plus `__rotv` = `rotation · v`: the guard is staged in its own
+    * projection (rotateExpr re-evaluates its input once per output
+    * dimension). */
+  private def withRotated(df: DataFrame, embCol: String,
+                          rotation: Array[Array[Double]], ctx: String): DataFrame =
+    df.withColumn("__gv", guardedVec(embCol, rotation.length, ctx))
+      .withColumn("__rotv", rotateExpr(col("__gv"), rotation))
+      .drop("__gv")
 
   /** The OPQ index: `(idCol, partCol, pq_codes)` where the codes
     * quantize the ROTATED vector — [[buildPqIndex]] behind the learned
     * rotation. The rotation must travel with the index (codes in a
     * rotated space are meaningless without R — the
-    * [[writeLearnedPqIndex]] quantizer-mismatch discipline). */
+    * [[writeLearnedIndex]] quantizer-mismatch discipline). */
   def buildOpqIndex(df: DataFrame, idCol: String, embCol: String,
                     partCol: String, rotation: Array[Array[Double]],
                     cb: PqCodebooks): DataFrame = {
@@ -1181,391 +1146,11 @@ object Similarity {
                  idCol: String, embCol: String, partCol: String,
                  rotation: Array[Array[Double]], cb: PqCodebooks, k: Int,
                  candidateFactor: Int = 4): DataFrame = {
-    require(k >= 1, s"k must be positive, got $k")
-    require(candidateFactor >= 1,
-      s"candidateFactor must be positive, got $candidateFactor")
     require(rotation.length == cb.dims && rotation.forall(_.length == cb.dims),
       s"rotation must be ${cb.dims}x${cb.dims} to match the codebooks")
-    val q = queries
-      .select(col(partCol).as("part"), col(idCol).as("query_id"),
-        guardedVec(embCol, cb.dims, "ivf_top_k_opq").as("__gv"))
-      .select(col("part"), col("query_id"),
-        graft.functions.Adc.table(rotateExpr(col("__gv"), rotation),
-          cb.codebooks).as("__adc_tab"))
-    val c = index.select(col(partCol).as("part"), col(idCol).as("nn_id"),
-      col("pq_codes"))
-    val adcR = floor(graft.functions.Adc.lookup(col("__adc_tab"),
-      col("pq_codes").cast("array<int>"), cb.m, cb.ksub) * 1000000.0
-      + 0.5) / 1000000.0
-    val w1 = org.apache.spark.sql.expressions.Window
-      .partitionBy("query_id").orderBy(col("__adc"), col("nn_id"))
-    val shortlist = q.join(c, Seq("part"))
-      .filter(col("query_id") =!= col("nn_id"))
-      .select(col("query_id"), col("nn_id"), adcR.as("__adc"))
-      .withColumn("r1", row_number().over(w1))
-      .filter(col("r1") <= k * candidateFactor)
-      .select("query_id", "nn_id").distinct()
-    val cx = withNorm(corpus, embCol)
-      .select(col(idCol).as("nn_id"), col("vec").as("cv"), col("norm").as("cn"))
-    rankTopK(shortlist
-      .join(uniqueQueryVectors(queries, idCol, embCol), "query_id")
-      .join(cx, "nn_id"), k)
-  }
-
-  /** The full production OPQ composition (FAISS's `OPQ..,IVF..,PQ..`
-    * factory string): rotate ([[rotateExpr]]) → coarse-assign in the
-    * ROTATED space → residual-encode with rotated-space codebooks →
-    * persist partitioned by cell with ALL THREE quantizers riding —
-    * `_rotation` + `_centroids` + `_pq_codebooks`, each under its own
-    * `_SUCCESS`, the [[EpochLog]] record written LAST. Serving
-    * ([[serveOpqIndex]]) derives everything from the path, so the
-    * rotated-codes-served-unrotated mismatch class — silently garbage
-    * distances — is unconstructable through this API (and
-    * [[loadPqQuantizers]] refuses an OPQ layout loudly, see there).
-    * `centroids` and `cb` must live in the ROTATED space (train them on
-    * `rotateExpr`-projected vectors — [[trainOpq]] supplies the
-    * rotation; the coarse fit and [[trainPqResidual]] run on the
-    * rotated column). */
-  def writeLearnedOpqIndex(corpus: DataFrame, idCol: String, embCol: String,
-                           path: String, rotation: Array[Array[Double]],
-                           centroids: Array[Array[Double]],
-                           cb: PqCodebooks): Unit = {
-    require(rotation.length == cb.dims && rotation.forall(_.length == cb.dims),
-      s"rotation must be ${cb.dims}x${cb.dims} to match the codebooks")
-    require(checkCentroids(centroids) == cb.dims,
-      s"centroid dims ${centroids.head.length} != codebook dims ${cb.dims}")
-    val epoch = EpochLog.newEpoch()
-    val rotated = corpus
-      .withColumn("__gv", guardedVec(embCol, cb.dims, "write_learned_opq_index"))
-      .select(col(idCol), rotateExpr(col("__gv"), rotation).as("__rotv"))
-    writeIvfIndex(
-      buildPqIndexResidual(rotated, idCol, "__rotv", centroids, cb)
-        .withColumn("build_id", lit(epoch)),
-      path, "coarse")
-    val spark = corpus.sparkSession
-    import spark.implicits._
-    centroids.zipWithIndex.map { case (c, i) => (i, c.toSeq) }.toSeq
-      .toDF("cid", "centroid").coalesce(1)
-      .write.mode("overwrite").parquet(s"$path/_centroids")
-    (for (j <- cb.codebooks.indices; c <- cb.codebooks(j).indices)
-        yield (j, c, cb.codebooks(j)(c).toSeq))
-      .toDF("j", "c", "centroid").coalesce(1)
-      .write.mode("overwrite").parquet(s"$path/_pq_codebooks")
-    rotation.zipWithIndex.map { case (r, i) => (i, r.toSeq) }.toSeq
-      .toDF("i", "rowv").coalesce(1)
-      .write.mode("overwrite").parquet(s"$path/_rotation")
-    EpochLog.directory(spark, path).overwrite(epoch)
-  }
-
-  /** All three riding quantizers of a [[writeLearnedOpqIndex]] path —
-    * refuses any missing commit marker loudly (a plain PQ layout has no
-    * `_rotation` and must be served by [[servePqIndex]], not silently
-    * treated as identity-rotated). */
-  def loadOpqQuantizers(spark: org.apache.spark.sql.SparkSession,
-                        path: String)
-      : (Array[Array[Double]], Array[Array[Double]], PqCodebooks) = {
-    EpochLog.requireMarker(spark, s"$path/_rotation", "load_opq_quantizers",
-      "no committed rotation at this path - a plain (unrotated) PQ " +
-        "layout is served by servePqIndex; an OPQ layout is built by " +
-        "writeLearnedOpqIndex")
-    val (cents, cb) = loadPqQuantizersAnyLayout(spark, path)
-    val rot = spark.read.parquet(s"$path/_rotation")
-      .orderBy("i").collect()
-      .map(r => r.getSeq[Double](r.fieldIndex("rowv")).toArray)
-    require(rot.nonEmpty, s"load_opq_quantizers: empty rotation table at $path")
-    require(rot.length == cb.dims && rot.forall(_.length == cb.dims),
-      s"load_opq_quantizers: rotation is ${rot.length}x" +
-        s"${rot.headOption.map(_.length).getOrElse(0)}, codebooks need " +
-        s"${cb.dims}x${cb.dims}")
-    (rot, cents, cb)
-  }
-
-  /** Serve a [[writeLearnedOpqIndex]] path end to end — [[servePqIndex]]
-    * behind the learned rotation: queries rotate ONCE (checkpointed, so
-    * the d² arithmetic runs once per query, not once per read), probe
-    * their `nprobe` nearest ROTATED-space cells (partition-pruned into
-    * the index read), the per-cell residual ADC runs entirely in the
-    * rotated space against the code payload, and the shortlist
-    * re-scores EXACT against `corpus`'s ORIGINAL full-precision vectors
-    * (R is orthogonal — the true cosine is rotation-invariant, and
-    * original-space scores stay bit-comparable across the ANN
-    * families). Same determinism contract (rounded ADC, ties to the
-    * lower id) and output `(query_id, nn_id, cosine, rank)`. */
-  def serveOpqIndex(indexPath: String, corpus: DataFrame, queries: DataFrame,
-                    idCol: String, embCol: String, k: Int, nprobe: Int = 2,
-                    candidateFactor: Int = 4): DataFrame = {
-    val spark = queries.sparkSession
-    val (rot, cents, cb) = loadOpqQuantizers(spark, indexPath)
-    val log = EpochLog.directory(spark, indexPath)
-    val committed = log.committed("serve_opq_index", "writeLearnedOpqIndex")
-    val rotatedQ = queries
-      .withColumn("__gv", guardedVec(embCol, cb.dims, "serve_opq_index"))
-      .withColumn("__rotv", rotateExpr(col("__gv"), rot))
-      .drop("__gv")
-    val probed = Materialize.eagerCheckpoint(
-      withProbeLabels(rotatedQ, "__rotv", cents, nprobe))
-    val cells = probed.select(col("coarse")).distinct().collect().map(_.get(0))
-    require(cells.nonEmpty, "serveOpqIndex: empty query batch")
-    val index = log.liveRows(spark.read.parquet(indexPath)
-      .filter(col("coarse").isin(cells.toSeq: _*)), idCol, committed)
-    opqResidualServe(index, corpus, probed, idCol, embCol, cents, cb, k,
-      candidateFactor)
-  }
-
-  /** [[pqResidualServe]] with the ADC side in the ROTATED space: the
-    * probed frame carries `__rotv` (the query's rotated vector — the
-    * per-cell residual and ADC table come from it) AND the ORIGINAL
-    * `embCol`, which feeds the exact re-score join. The index side's
-    * codes already live in the rotated space by construction. */
-  private def opqResidualServe(index: DataFrame, corpus: DataFrame,
-                               probed: DataFrame, idCol: String,
-                               embCol: String,
-                               centroids: Array[Array[Double]],
-                               cb: PqCodebooks, k: Int,
-                               candidateFactor: Int): DataFrame = {
-    require(k >= 1, s"k must be positive, got $k")
-    require(candidateFactor >= 1,
-      s"candidateFactor must be positive, got $candidateFactor")
-    val q = probed
-      .select(col("coarse").as("part"), col(idCol).as("query_id"),
-        graft.functions.Adc.table(
-          residualExpr(col("__rotv"), col("coarse"), centroids),
-          cb.codebooks).as("__adc_tab"))
-    val c = index.select(col("coarse").as("part"), col(idCol).as("nn_id"),
-      col("pq_codes"))
-    val adcR = floor(graft.functions.Adc.lookup(col("__adc_tab"),
-      col("pq_codes").cast("array<int>"), cb.m, cb.ksub) * 1000000.0
-      + 0.5) / 1000000.0
-    val w1 = org.apache.spark.sql.expressions.Window
-      .partitionBy("query_id").orderBy(col("__adc"), col("nn_id"))
-    val shortlist = q.join(c, Seq("part"))
-      .filter(col("query_id") =!= col("nn_id"))
-      .select(col("query_id"), col("nn_id"), adcR.as("__adc"))
-      .withColumn("r1", row_number().over(w1))
-      .filter(col("r1") <= k * candidateFactor)
-      .select("query_id", "nn_id").distinct() // probe fan-out dedup
-    val cx = withNorm(corpus, embCol)
-      .select(col(idCol).as("nn_id"), col("vec").as("cv"), col("norm").as("cn"))
-    rankTopK(shortlist
-      .join(uniqueQueryVectors(probed, idCol, embCol), "query_id")
-      .join(cx, "nn_id"), k)
-  }
-
-  /** Grow / take down / compact a [[writeLearnedOpqIndex]] layout: the
-    * epoch/tombstone protocol is payload-agnostic (see
-    * [[deleteFromPqIndex]]) — these validate the OPQ markers first so
-    * errors name the right rebuilder, then delegate; the append encodes
-    * new vectors with the index's OWN riding rotation + quantizers. */
-  def appendToOpqIndex(newRows: DataFrame, indexPath: String, idCol: String,
-                       embCol: String): Unit =
-    doOpqAppend(newRows, indexPath, idCol, embCol, key = None)
-
-  /** [[appendToIvfIndexIdempotent]] for the learned-OPQ composition:
-    * the same [[EpochLog]] keyed-retry protocol — a committed key no-ops
-    * and returns false, a crashed attempt's retry lands exactly once. */
-  def appendToOpqIndexIdempotent(newRows: DataFrame, indexPath: String,
-                                 idCol: String, embCol: String,
-                                 key: String): Boolean =
-    if (EpochLog.directory(newRows.sparkSession, indexPath)
-        .keyCommitted(key, "append_to_opq_index", "writeLearnedOpqIndex")) false
-    else { doOpqAppend(newRows, indexPath, idCol, embCol, Some(key)); true }
-
-  private def doOpqAppend(newRows: DataFrame, indexPath: String,
-                          idCol: String, embCol: String,
-                          key: Option[String]): Unit = {
-    val spark = newRows.sparkSession
-    val (rot, cents, cb) = loadOpqQuantizers(spark, indexPath)
-    val log = EpochLog.directory(spark, indexPath)
-    log.committed("append_to_opq_index", "writeLearnedOpqIndex")
-    val epoch = EpochLog.newEpoch()
-    val rotated = newRows
-      .withColumn("__gv", guardedVec(embCol, cb.dims, "append_to_opq_index"))
-      .select(col(idCol), rotateExpr(col("__gv"), rot).as("__rotv"))
-    buildPqIndexResidual(rotated, idCol, "__rotv", cents, cb)
-      .withColumn("build_id", lit(epoch))
-      .repartition(col("coarse"))
-      .write.mode("append").partitionBy("coarse").parquet(indexPath)
-    log.append(epoch, key)
-  }
-
-  /** See [[appendToOpqIndex]]. */
-  def deleteFromOpqIndex(ids: DataFrame, indexPath: String,
-                         idCol: String): Unit = {
-    loadOpqQuantizers(ids.sparkSession, indexPath)
-    deleteFromIvfIndex(ids, indexPath, idCol)
-  }
-
-  /** See [[appendToOpqIndex]]. */
-  def compactOpqIndex(spark: org.apache.spark.sql.SparkSession,
-                      indexPath: String, idCol: String): Unit = {
-    loadOpqQuantizers(spark, indexPath)
-    compactIvfIndex(spark, indexPath, idCol)
-  }
-
-  /** [[writeLearnedIvfIndex]]'s residual-PQ sibling: the corpus is
-    * labeled by its nearest centroid, residual-encoded
-    * ([[buildPqIndexResidual]]), written partitioned by the coarse cell,
-    * and BOTH quantizers ride with the index — `_centroids` (the coarse
-    * matrix) and `_pq_codebooks` (the per-subspace residual codebooks),
-    * each under its own `_SUCCESS`, with the [[EpochLog]] record written
-    * LAST. Serving ([[servePqIndex]]) derives everything from
-    * the path, so the quantizer-mismatch class — codes decoded against
-    * codebooks they were not built from, which produces silently
-    * garbage distances — is unconstructable through this API. A crash
-    * between the writes refuses loudly at load (all four markers
-    * required); rebuild-in-place makes the index unavailable-until-
-    * rerun, never wrong. Training stays the caller's step
-    * ([[trainPqResidual]]) — same division as [[writeLearnedIvfIndex]]
-    * taking its centroids. */
-  def writeLearnedPqIndex(corpus: DataFrame, idCol: String, embCol: String,
-                          path: String, centroids: Array[Array[Double]],
-                          cb: PqCodebooks): Unit = {
-    require(checkCentroids(centroids) == cb.dims,
-      s"centroid dims ${centroids.head.length} != codebook dims ${cb.dims}")
-    val epoch = EpochLog.newEpoch()
-    writeIvfIndex(
-      buildPqIndexResidual(corpus, idCol, embCol, centroids, cb)
-        .withColumn("build_id", lit(epoch)),
-      path, "coarse")
-    val spark = corpus.sparkSession
-    import spark.implicits._
-    centroids.zipWithIndex.map { case (c, i) => (i, c.toSeq) }.toSeq
-      .toDF("cid", "centroid")
-      .coalesce(1)
-      .write.mode("overwrite").parquet(s"$path/_centroids")
-    (for (j <- cb.codebooks.indices; c <- cb.codebooks(j).indices)
-        yield (j, c, cb.codebooks(j)(c).toSeq))
-      .toDF("j", "c", "centroid")
-      .coalesce(1)
-      .write.mode("overwrite").parquet(s"$path/_pq_codebooks")
-    EpochLog.directory(spark, path).overwrite(epoch)
-  }
-
-  /** Both riding quantizers of a [[writeLearnedPqIndex]] path. Refuses
-    * any missing commit marker loudly — a half-rebuilt layout must
-    * never serve. */
-  def loadPqQuantizers(spark: org.apache.spark.sql.SparkSession,
-                       path: String): (Array[Array[Double]], PqCodebooks) = {
-    // an OPQ layout's codes live in the ROTATED space: serving them
-    // through the unrotated path would compute silently-garbage ADC
-    // distances — the quantizer-mismatch class this family forbids
-    require(!EpochLog.hasMarker(spark, s"$path/_rotation"),
-      s"load_pq_quantizers: $path carries a committed _rotation - this is " +
-        "an OPQ layout (writeLearnedOpqIndex); serve it with serveOpqIndex")
-    loadPqQuantizersAnyLayout(spark, path)
-  }
-
-  /** The marker checks + table loads shared by the plain and OPQ
-    * loaders — the rotation policy lives in the callers. */
-  private def loadPqQuantizersAnyLayout(
-      spark: org.apache.spark.sql.SparkSession,
-      path: String): (Array[Array[Double]], PqCodebooks) = {
-    EpochLog.requireMarker(spark, path, "load_pq_quantizers",
-      "re-run writeLearnedPqIndex before serving")
-    EpochLog.requireMarker(spark, s"$path/_centroids", "load_pq_quantizers",
-      "the index data committed but its coarse quantizer did not - " +
-        "re-run writeLearnedPqIndex")
-    EpochLog.requireMarker(spark, s"$path/_pq_codebooks", "load_pq_quantizers",
-      "the index data committed but its residual codebooks did not - " +
-        "re-run writeLearnedPqIndex")
-    val cents = spark.read.parquet(s"$path/_centroids")
-      .orderBy("cid").collect()
-      .map(r => r.getSeq[Double](r.fieldIndex("centroid")).toArray)
-    require(cents.nonEmpty, s"load_pq_quantizers: empty centroid table at $path")
-    val rows = spark.read.parquet(s"$path/_pq_codebooks")
-      .select("j", "c", "centroid").collect()
-      .map(r => (r.getInt(0), r.getInt(1), r.getSeq[Double](2).toArray))
-    require(rows.nonEmpty, s"load_pq_quantizers: empty codebook table at $path")
-    val byJ = rows.groupBy(_._1)
-    (cents, PqCodebooks((0 until byJ.size).toArray.map { j =>
-      byJ(j).sortBy(_._2).map(_._3)
-    }))
-  }
-
-  /** Serve a [[writeLearnedPqIndex]] path end to end: both quantizers
-    * load from the index itself, queries fan out to their `nprobe`
-    * nearest cells, the probed cells are partition-pruned into the
-    * index read (only their files are listed and scanned — exact, not a
-    * recall trade: the ADC join is on the cell), rows filter to the
-    * committed epochs (a crashed [[appendToPqIndex]]'s orphans are
-    * invisible), the per-cell residual ADC shortlist runs on the code
-    * payload, and the shortlist re-scores exact against `corpus`'s
-    * full-precision vectors. The whole production IVF-PQ serving story
-    * in one call, nothing for the caller to keep consistent.
-    *
-    * RECALL GUIDANCE (measured, bench_scale_recall.json): on clustered
-    * corpora the committed m=8/ksub=16 geometry recalls ~0.93@10 at
-    * the default `candidateFactor` — near the int8 tier at 9× less
-    * memory. On UNSTRUCTURED (near-uniform) vectors 8 bytes over 64
-    * dims is honestly lossy (~0.44@10 probing every cell); the
-    * artifact's `pq_dial` table is the dial — more code bytes (m) and
-    * a deeper shortlist (`candidateFactor` 4 → 16) buy recall back at
-    * rescore cost — so pick the (m, candidateFactor) point from the
-    * measured ladder rather than guessing. */
-  def servePqIndex(indexPath: String, corpus: DataFrame, queries: DataFrame,
-                   idCol: String, embCol: String, k: Int, nprobe: Int = 2,
-                   candidateFactor: Int = 4): DataFrame = {
-    val spark = queries.sparkSession
-    val (cents, cb) = loadPqQuantizers(spark, indexPath)
-    val log = EpochLog.directory(spark, indexPath)
-    val committed = log.committed("serve_pq_index", "writeLearnedPqIndex")
-    // the probed frame is read twice (cells probe + serve); materialize
-    // so the k·dims labeling runs once — the ivfTopKQuantizedPruned
-    // rationale
-    val probed = Materialize.eagerCheckpoint(
-      withProbeLabels(queries, embCol, cents, nprobe))
-    val cells = probed.select(col("coarse")).distinct().collect().map(_.get(0))
-    require(cells.nonEmpty, "servePqIndex: empty query batch")
-    val index = log.liveRows(spark.read.parquet(indexPath)
-      .filter(col("coarse").isin(cells.toSeq: _*)), idCol, committed)
-    pqResidualServe(index, corpus, probed, idCol, embCol, cents, cb, k,
-      candidateFactor)
-  }
-
-  /** Takedown and compaction of a [[writeLearnedPqIndex]] layout: the
-    * epoch/tombstone protocol is PAYLOAD-AGNOSTIC — data rows are
-    * `(id, coarse, <payload>, build_id)` partitioned by cell whatever
-    * the payload, and [[deleteFromIvfIndex]] / [[compactIvfIndex]]
-    * operate purely on that protocol (tombstones by id, merge committed
-    * epochs by rewriting rows, never touching the payload or the
-    * quantizer sidecars) — so the PQ forms validate the PQ markers
-    * first (errors name the right rebuilder) and delegate. Compaction
-    * collects the crashed-append orphans and makes deletions physical,
-    * exactly as on the int8 layout. */
-  def deleteFromPqIndex(ids: DataFrame, indexPath: String,
-                        idCol: String): Unit = {
-    loadPqQuantizers(ids.sparkSession, indexPath)
-    deleteFromIvfIndex(ids, indexPath, idCol)
-  }
-
-  /** See [[deleteFromPqIndex]]. */
-  def compactPqIndex(spark: org.apache.spark.sql.SparkSession,
-                     indexPath: String, idCol: String): Unit = {
-    loadPqQuantizers(spark, indexPath)
-    compactIvfIndex(spark, indexPath, idCol)
-  }
-
-  /** Incremental growth of a [[writeLearnedPqIndex]] layout: encode the
-    * new vectors with the index's OWN riding quantizers and append them
-    * into the per-cell partitions under a fresh committed epoch — the
-    * [[appendToIvfIndex]] contract, residual-PQ payload, committed through
-    * the [[EpochLog]]. `newRows`
-    * must be NEW ids (the [[appendToIvfIndex]] precondition). Appended
-    * rows are consistent with the served layout by construction — codes
-    * come from the committed codebooks, labels from the committed
-    * centroids. */
-  def appendToPqIndex(newRows: DataFrame, indexPath: String, idCol: String,
-                      embCol: String): Unit = {
-    val spark = newRows.sparkSession
-    val (cents, cb) = loadPqQuantizers(spark, indexPath)
-    val log = EpochLog.directory(spark, indexPath)
-    log.committed("append_to_pq_index", "writeLearnedPqIndex")
-    val epoch = EpochLog.newEpoch()
-    buildPqIndexResidual(newRows, idCol, embCol, cents, cb)
-      .withColumn("build_id", lit(epoch))
-      .repartition(col("coarse"))
-      .write.mode("append").partitionBy("coarse").parquet(indexPath)
-    log.append(epoch)
+    adcTopK(index, corpus,
+      withRotated(queries, embCol, rotation, "ivf_top_k_opq"),
+      idCol, embCol, partCol, col("__rotv"), cb, k, candidateFactor)
   }
 
   // Asymmetric squared-L2 distance is served TABLE-DRIVEN (Jégou 2011
@@ -1600,48 +1185,27 @@ object Similarity {
       .select(col(idCol).as("query_id"), col("vec").as("qv"), col("norm").as("qn"))
   }
 
-  /** IVF top-k over a PQ index with exact re-scoring — [[
-    * ivfTopKQuantized]]'s product form. Stage 1 ranks each query's
-    * coarse cell by ASYMMETRIC distance to the code vectors (the
-    * resident set is `pq_codes` — 8 bytes/vector at the default
-    * geometry, the 32×-vs-fp32 memory story), TABLE-DRIVEN: the
-    * [[graft.functions.AdcTable]] precompute runs once per query row
-    * below the cell join and the pair loop is m lookups
-    * ([[graft.functions.AdcTableLookup]]) — and keeps the
-    * `k·candidateFactor` shortlist; stage 2 joins ONLY the shortlist
-    * back to the full-precision corpus vectors and returns the
-    * exact-cosine top k — quantization error affects which candidates
-    * are CONSIDERED, never the returned scores.
-    *
-    * DETERMINISM: the shortlist cut orders by the ADC distance ROUNDED
-    * to 6 decimals (ties to the lower id) — Σ-over-subspaces is
-    * aggregation-order-sensitive at the ulp, the same reason
-    * [[graft.operators.TextIndex.bm25TopK]] rounds its k-cut. Output
-    * contract matches the other top-k forms: `(query_id, nn_id,
-    * cosine, rank)`.
-    *
-    * A lazy [[buildPqIndex]] `index` is fine for a one-shot: the encode
-    * is the native [[graft.functions.NearestCentroid]] loop (cheap, and
-    * evaluated once per corpus row — the projection sits below the cell
-    * join). A deployment still persists the code table and serves from
-    * it ([[qAnnPqServed]]'s shape) so the corpus is encoded once, not
-    * once per query batch. */
-  def ivfTopKPq(index: DataFrame, corpus: DataFrame, queries: DataFrame,
-                idCol: String, embCol: String, partCol: String,
-                cb: PqCodebooks, k: Int,
-                candidateFactor: Int = 4): DataFrame = {
+  /** The ADC shortlist tail of every PQ serve: `adcInput` is the query
+    * vector the ADC table is built from (raw, rotated, or the residual to
+    * the row's probed cell), evaluated in a projection BELOW the cell
+    * join (the join's exchange is the materialization boundary), so the
+    * m·ksub·dsub arithmetic runs once per query row and the pair loop is
+    * m lookups — PlanSpec pins the shape. Candidates from all probed
+    * cells rank in ONE per-query shortlist by the ADC distance ROUNDED to
+    * 6 decimals, ties to the lower id (Σ-over-subspaces is
+    * aggregation-order-sensitive at the ulp, the reason
+    * [[graft.operators.TextIndex.bm25TopK]] rounds its k-cut too); the
+    * shortlist then re-scores exact against `corpus`'s full-precision
+    * vectors. */
+  private def adcTopK(index: DataFrame, corpus: DataFrame, queries: DataFrame,
+                      idCol: String, embCol: String, partCol: String,
+                      adcInput: Column, cb: PqCodebooks, k: Int,
+                      candidateFactor: Int): DataFrame = {
     require(k >= 1, s"k must be positive, got $k")
     require(candidateFactor >= 1,
       s"candidateFactor must be positive, got $candidateFactor")
-    // the per-query ADC table materializes in THIS projection, below
-    // the cell join (the join's exchange is the materialization
-    // boundary), so the m·ksub·dsub arithmetic runs once per query row
-    // and the pair loop is m lookups — PlanSpec pins the shape
-    val q = queries.select(col(partCol).as("part"),
-      col(idCol).as("query_id"),
-      graft.functions.Adc.table(
-        guardedVec(embCol, cb.dims, "ivf_top_k_pq"), cb.codebooks)
-        .as("__adc_tab"))
+    val q = queries.select(col(partCol).as("part"), col(idCol).as("query_id"),
+      graft.functions.Adc.table(adcInput, cb.codebooks).as("__adc_tab"))
     val c = index.select(col(partCol).as("part"), col(idCol).as("nn_id"),
       col("pq_codes"))
     val adcR = floor(graft.functions.Adc.lookup(col("__adc_tab"),
@@ -1661,6 +1225,35 @@ object Similarity {
       .join(uniqueQueryVectors(queries, idCol, embCol), "query_id")
       .join(cx, "nn_id"), k)
   }
+
+  /** IVF top-k over a PQ index with exact re-scoring — [[
+    * ivfTopKQuantized]]'s product form. Stage 1 ranks each query's
+    * coarse cell by ASYMMETRIC distance to the code vectors (the
+    * resident set is `pq_codes` — 8 bytes/vector at the default
+    * geometry, the 32×-vs-fp32 memory story), TABLE-DRIVEN: the
+    * [[graft.functions.AdcTable]] precompute runs once per query row
+    * below the cell join and the pair loop is m lookups
+    * ([[graft.functions.AdcTableLookup]]) — and keeps the
+    * `k·candidateFactor` shortlist; stage 2 joins ONLY the shortlist
+    * back to the full-precision corpus vectors and returns the
+    * exact-cosine top k — quantization error affects which candidates
+    * are CONSIDERED, never the returned scores.
+    *
+    * The rounded-ADC determinism contract is [[adcTopK]]'s; output
+    * matches the other top-k forms: `(query_id, nn_id, cosine, rank)`.
+    *
+    * A lazy [[buildPqIndex]] `index` is fine for a one-shot: the encode
+    * is the native [[graft.functions.NearestCentroid]] loop (cheap, and
+    * evaluated once per corpus row — the projection sits below the cell
+    * join). A deployment still persists the code table and serves from
+    * it ([[qAnnPqServed]]'s shape) so the corpus is encoded once, not
+    * once per query batch. */
+  def ivfTopKPq(index: DataFrame, corpus: DataFrame, queries: DataFrame,
+                idCol: String, embCol: String, partCol: String,
+                cb: PqCodebooks, k: Int,
+                candidateFactor: Int = 4): DataFrame =
+    adcTopK(index, corpus, queries, idCol, embCol, partCol,
+      guardedVec(embCol, cb.dims, "ivf_top_k_pq"), cb, k, candidateFactor)
 
   /** IVF top-k over the int8-quantized index with exact re-scoring — the
     * quantizer's product form. Stage 1 ranks each query's coarse partition
@@ -1711,13 +1304,13 @@ object Similarity {
     * Growth, for THIS plain layout: rebuild, deliberately — the labels
     * are caller-managed, so an append path here would let labels induced
     * by a different quantizer into the same directory with no way to
-    * tell. The LEARNED layout ([[writeLearnedIvfIndex]]), whose quantizer
+    * tell. The LEARNED layout ([[writeLearnedIndex]]), whose quantizer
     * rides with the index, does support incremental growth: per-batch
-    * [[appendToIvfIndex]] under the banded dedup index's epoch-commit
-    * machinery, labels always from the committed `_centroids` (consistent
-    * by construction), [[assignmentDrift]]-gated [[refreshIvfIndex]] as
-    * the re-train trigger, and [[compactIvfIndex]] to restore the file
-    * layout after N ingest cycles. */
+    * [[appendToLearnedIndex]] under the epoch-commit machinery, labels
+    * always from the committed centroids (consistent by construction),
+    * [[assignmentDrift]]-gated [[refreshLearnedIndex]] as the re-train
+    * trigger, and [[compactLearnedIndex]] to restore the file layout
+    * after N ingest cycles. */
   def writeIvfIndex(index: DataFrame, path: String, partCol: String): Unit =
     // repartition by the cell first: a plain partitionBy write emits one
     // file per cell per WRITING TASK — files/cell grows with the corpus
@@ -1752,37 +1345,29 @@ object Similarity {
   def ivfTopKQuantizedPruned(indexPath: String, corpus: DataFrame,
                              queries: DataFrame, idCol: String, embCol: String,
                              partCol: String, k: Int,
-                             candidateFactor: Int = 4): DataFrame =
-    ivfTopKQuantizedPrunedImpl(indexPath, corpus, queries, idCol, embCol,
-      partCol, k, candidateFactor, indexPrep = None)
-
-  /** [[ivfTopKQuantizedPruned]] plus an optional index-side prep step —
-    * the learned path's committed-epoch predicate and tombstone anti-join
-    * ([[serveIvfIndex]]), applied AFTER the partition-pruned read.
-    * Private: the plain [[writeIvfIndex]] layout has no epoch column or
-    * tombstones, so the prep is only meaningful (and only applied) on
-    * learned paths. */
-  private def ivfTopKQuantizedPrunedImpl(indexPath: String, corpus: DataFrame,
-                                         queries: DataFrame, idCol: String,
-                                         embCol: String, partCol: String,
-                                         k: Int, candidateFactor: Int,
-                                         indexPrep: Option[DataFrame => DataFrame])
-      : DataFrame = {
-    val spark = queries.sparkSession
-    EpochLog.requireMarker(spark, indexPath, "ivf_top_k_quantized_pruned",
-      "re-run writeIvfIndex before serving")
-    // the query frame is read THREE times per serve (cells probe, stage-1
-    // quantization, exact re-score) and a withProbeLabels frame carries
-    // the k·dims-HOF labeling in its plan — materialize once so the
-    // labeling runs once, not three times (the batch is the small side)
-    val q = Materialize.eagerCheckpoint(queries)
-    val cells = q.select(col(partCol)).distinct().collect().map(_.get(0))
-    require(cells.nonEmpty, "ivfTopKQuantizedPruned: empty query batch")
-    val pruned = spark.read.parquet(indexPath)
-      .filter(col(partCol).isin(cells.toSeq: _*))
-    val index = indexPrep.fold(pruned)(_(pruned))
+                             candidateFactor: Int = 4): DataFrame = {
+    EpochLog.requireMarker(queries.sparkSession, indexPath,
+      "ivf_top_k_quantized_pruned", "re-run writeIvfIndex before serving")
+    val (q, index) = probedCells(indexPath, queries, partCol,
+      "ivfTopKQuantizedPruned")
     ivfTopKQuantized(index, corpus, q, idCol, embCol, partCol, k,
       candidateFactor)
+  }
+
+  /** A probed query batch materialized once, and the index rows at
+    * `indexPath` of just its cells. The batch is read three times per
+    * serve (cells probe, stage-1 side, exact re-score) and a
+    * [[withProbeLabels]] frame carries the k·dims labeling in its plan,
+    * so the labeling runs once, not three times (the batch is the small
+    * side). The cell filter is a partition filter: unprobed cells' files
+    * are skipped at the listing. */
+  private def probedCells(indexPath: String, queries: DataFrame,
+                          partCol: String, who: String): (DataFrame, DataFrame) = {
+    val q = Materialize.eagerCheckpoint(queries)
+    val cells = q.select(col(partCol)).distinct().collect().map(_.get(0))
+    require(cells.nonEmpty, s"$who: empty query batch")
+    (q, queries.sparkSession.read.parquet(indexPath)
+      .filter(col(partCol).isin(cells.toSeq: _*)))
   }
 
   /** [[ivfTopKQuantized]] over a prebuilt [[buildQuantizedIndex]] frame
@@ -1814,367 +1399,430 @@ object Similarity {
       .select("query_id", "nn_id")
     val cx = withNorm(corpus, embCol)
       .select(col(idCol).as("nn_id"), col("vec").as("cv"), col("norm").as("cn"))
-    // one row per query id: a MULTI-PROBE query frame ([[withProbeLabels]])
-    // carries one row per probed cell; stage 1's per-part join is the fan-
-    // out and already meets each corpus row at most once, but re-joining
-    // the probed frame here by id alone would duplicate every shortlist
-    // row nprobe times and corrupt the rank window (duplicate pairs at
-    // ranks 1 and 2). Re-scoring needs each query ONCE — probe rows differ
-    // only in their cell label, never in the vector — and that contract is
-    // ENFORCED: a bare dropDuplicates would keep an ARBITRARY row, so a
-    // caller passing duplicate ids with genuinely different vectors would
-    // get a silently nondeterministic answer. Conflicting vectors (hash
-    // min ≠ max within an id group; same ~2⁻⁶⁴ collision posture as the
-    // library's other composite-hash arguments) raise instead.
-    val vq = xxhash64(col(embCol).cast("array<double>"))
-    val qx = withNorm(queries.groupBy(col(idCol))
-        .agg(first(col(embCol)).as(embCol),
-          (min(vq) =!= max(vq)).as("__conflict"))
-        .select(col(idCol),
-          when(col("__conflict"), raise_error(concat(
-            lit("ivf_top_k_quantized: conflicting vectors for duplicate query id "),
-            col(idCol).cast("string"),
-            lit(" - duplicate ids are only legal as the with_probe_labels " +
-              "fan-out (identical vector per id)"))))
-            .otherwise(col(embCol)).as(embCol)), embCol)
-      .select(col(idCol).as("query_id"), col("vec").as("qv"), col("norm").as("qn"))
-    // exact re-scoring + final ranking is EXACTLY the shared tail of the
-    // other top-k paths (its self-pair filter is a no-op here — stage 1
-    // already excluded them)
-    rankTopK(shortlist.join(qx, "query_id").join(cx, "nn_id"), k)
+    // one row per query id: a MULTI-PROBE query frame carries one row per
+    // probed cell, and re-joining it here by id alone would duplicate
+    // every shortlist row nprobe times and corrupt the rank window. Stage
+    // 1 already excluded self-pairs, so the shared tail's filter is a
+    // no-op here.
+    rankTopK(shortlist.join(uniqueQueryVectors(queries, idCol, embCol),
+      "query_id").join(cx, "nn_id"), k)
   }
 
-  /** Outcome of one [[refreshIvfIndex]] cycle: the measured drift fraction
-    * and whether it crossed the tolerance and triggered a rebuild. */
+  /** Outcome of one [[refreshLearnedIndex]] cycle: the measured drift
+    * fraction and whether it crossed the tolerance and triggered a
+    * rebuild. */
   final case class IvfRefresh(drift: Double, rebuilt: Boolean)
 
-  /** [[writeIvfIndex]] for the LEARNED quantizer, with the centroid matrix
-    * riding WITH the index: the corpus is labeled by its nearest centroid,
-    * int8-quantized, written partitioned by the `coarse` cell, and the
-    * centroids land beside the data under `_centroids` (underscore-
-    * prefixed, so the data read never sees them). The design principle is
-    * the banded dedup index's "geometry rides with the index": serving
-    * ([[serveIvfIndex]]) derives the quantizer FROM the index, so the
-    * mismatch class — probing yesterday's cells against labels induced by
-    * a different centroid matrix, which silently erodes recall — is
-    * unconstructable through this API. Callers thread nothing.
-    *
-    * Commit order is data first (the root `_SUCCESS`), then `_centroids`
-    * (its own `_SUCCESS`), then the [[EpochLog]] record LAST — and
-    * loading requires ALL the markers, so a crash between the writes
-    * refuses loudly instead of serving an index whose quantizer or commit
-    * record is missing or half-written. A crashed overwrite of a
-    * previously-committed path destroys that path's markers with it, so
-    * rebuild-in-place makes the index unavailable-until-rerun, never
-    * wrong; deployments that need the old index live during a rebuild
-    * write to a fresh path and swap a pointer.
-    *
-    * Epoch protocol: every row carries the `build_id` of the
-    * build/append that wrote it, and the directory [[EpochLog]] lists
-    * the committed ones (shared with [[appendToIvfIndex]] /
-    * [[compactIvfIndex]]). */
-  def writeLearnedIvfIndex(corpus: DataFrame, idCol: String, embCol: String,
-                           path: String,
-                           centroids: Array[Array[Double]]): Unit = {
-    checkCentroids(centroids)
+  // ---------------------------------------------------------------------
+  // THE LEARNED-IVF FAMILY — one on-disk protocol for three payloads.
+  // Data rows are `(id, coarse, <payload>, build_id)` partitioned by the
+  // coarse cell ([[writeIvfIndex]]'s pruned layout); the payload is int8
+  // codes (`q8`, `q8_scale`) or residual PQ codes (`pq_codes`, in the
+  // rotated space for OPQ). The quantizer rides beside the rows as
+  // sidecar tables ([[QuantizerTables]]), each under its own `_SUCCESS`,
+  // and the directory [[EpochLog]] commits the rows. Every entry point
+  // reads the quantizer — and with it the payload kind — from the path,
+  // so the quantizer-mismatch class (labels induced by another centroid
+  // matrix, codes decoded against codebooks they were not built from,
+  // rotated codes served unrotated: eroded recall or silently garbage
+  // distances) cannot be built through this API. Callers thread nothing.
+  //
+  // Crash story: [[EpochLog]]'s. A build writes the data, then each
+  // sidecar, then the commit record LAST ([[writeLearnedIndex]]); the
+  // data overwrite deletes the whole directory, record and sidecars
+  // included, so a crash anywhere in a rebuild leaves a path every entry
+  // point refuses (the loader's markers, or the missing record) —
+  // unavailable until re-run, never wrong. Deployments that need the old
+  // index live during a rebuild write a fresh path and swap a pointer.
+  // Single writer: do not append, delete, compact or refresh one path
+  // concurrently.
+  // ---------------------------------------------------------------------
+
+  /** Which quantizer a learned layout holds. */
+  sealed trait IvfKind
+  object IvfKind {
+    /** Coarse cells + int8 codes. */
+    case object Int8 extends IvfKind
+    /** Coarse cells + residual PQ codes (Jégou 2011 §V-C, FAISS `IVF,PQ`). */
+    case object Pq extends IvfKind
+    /** A learned rotation, then rotated-space cells + residual PQ codes
+      * (Ge et al. 2013, FAISS `OPQ,IVF,PQ`). */
+    case object Opq extends IvfKind
+  }
+
+  /** A learned layout's quantizer: the coarse centroids every kind has,
+    * the residual PQ codebooks of the PQ kinds, and the orthogonal
+    * rotation of OPQ — a rotation only ever rides with codebooks. The
+    * centroids and codebooks of a rotated quantizer live in the ROTATED
+    * space (fit them on rotated vectors: [[fitRotatedQuantizer]]). */
+  final case class IvfQuantizer(centroids: Array[Array[Double]],
+                                codebooks: Option[PqCodebooks] = None,
+                                rotation: Option[Array[Array[Double]]] = None) {
+    private val dims = checkCentroids(centroids)
+    codebooks.foreach(cb => require(cb.dims == dims,
+      s"centroid dims $dims != codebook dims ${cb.dims}"))
+    require(rotation.isEmpty || codebooks.isDefined,
+      "a rotation rides only with residual codebooks (the OPQ kind)")
+    rotation.foreach(r => require(r.length == dims && r.forall(_.length == dims),
+      s"rotation must be ${dims}x$dims to match the codebooks"))
+
+    def kind: IvfKind =
+      if (rotation.isDefined) IvfKind.Opq
+      else if (codebooks.isDefined) IvfKind.Pq
+      else IvfKind.Int8
+
+    /** `df` in this quantizer's space: `(df, embCol)` unrotated, else `df`
+      * plus `__rotv` = R·v. */
+    private[Similarity] def inSpace(df: DataFrame, embCol: String,
+                                    ctx: String): (DataFrame, String) =
+      rotation.fold((df, embCol))(r => (withRotated(df, embCol, r, ctx), "__rotv"))
+
+    /** `(idCol, coarse, payload)` index rows of `df`. */
+    private[Similarity] def encode(df: DataFrame, idCol: String, embCol: String,
+                                   ctx: String): DataFrame = codebooks match {
+      case None =>
+        buildQuantizedIndex(withCoarseLabel(df, embCol, centroids), idCol,
+          embCol, "coarse")
+      case Some(cb) =>
+        val (rows, v) = inSpace(df.select(col(idCol), col(embCol)), embCol, ctx)
+        buildPqIndexResidual(rows, idCol, v, centroids, cb)
+    }
+  }
+
+  private val Rebuilder = "writeLearnedIndex"
+
+  /** Persist a learned layout: the corpus encoded by `quantizer` and
+    * written partitioned by its coarse cell, then `_centroids`, then the
+    * quantizer's other sidecars (`_pq_codebooks`, then `_rotation`), then
+    * the [[EpochLog]] record LAST — every row carries the `build_id` of
+    * the build or append that wrote it, and the record lists the
+    * committed ones. */
+  def writeLearnedIndex(corpus: DataFrame, idCol: String, embCol: String,
+                        path: String, quantizer: IvfQuantizer): Unit = {
     val epoch = EpochLog.newEpoch()
-    writeIvfIndex(
-      buildQuantizedIndex(withCoarseLabel(corpus, embCol, centroids),
-        idCol, embCol, "coarse")
+    writeIvfIndex(quantizer.encode(corpus, idCol, embCol, "write_learned_index")
         .withColumn("build_id", lit(epoch)),
       path, "coarse")
     val spark = corpus.sparkSession
-    import spark.implicits._
-    centroids.zipWithIndex.map { case (c, i) => (i, c.toSeq) }.toSeq
-      .toDF("cid", "centroid")
-      .coalesce(1)
-      .write.mode("overwrite").parquet(s"$path/_centroids")
+    QuantizerTables.Centroids.write(spark, path, quantizer.centroids)
+    quantizer.codebooks.foreach(QuantizerTables.Codebooks.write(spark, path, _))
+    quantizer.rotation.foreach(QuantizerTables.Rotation.write(spark, path, _))
     // the commit record LAST, so its epoch has a complete quantizer too
     EpochLog.directory(spark, path).overwrite(epoch)
   }
 
-  /** Incremental GROWTH of a [[writeLearnedIvfIndex]] layout: label the
-    * new vectors with the index's OWN riding quantizer, int8-quantize
-    * them, and append them into the per-cell partition directories under
-    * a fresh committed epoch — the ingest-cycle shape. Without this, rows
-    * arriving between [[refreshIvfIndex]] cycles would be unservable
-    * until drift happens to cross the rebuild tolerance: the drift gate
-    * decides when the LAYOUT is re-learned, not when new data becomes
-    * visible. Labels come from the committed `_centroids`, so appended
-    * rows are consistent with the served layout by construction — the
-    * stale-quantizer mismatch class cannot be built through this path,
-    * and what ossification the frozen centroids do accumulate is exactly
-    * what [[assignmentDrift]] measures and [[refreshIvfIndex]] repairs.
-    *
-    * Crash story: [[EpochLog]]'s. Data files land first (one per touched
-    * cell — cell-hashed repartition, same small-files rationale as the
-    * build). Appends add one file per cell per call; [[compactIvfIndex]]
-    * restores ~one file per cell when the count warrants.
-    *
-    * `newRows` must be NEW ids: updating an already-indexed vector in
-    * place is a re-embedding concern (see the [[refreshIvfIndex]] drift
-    * caveat), and a duplicate id would serve BOTH versions. The
-    * precondition is enforced where it is free — [[compactIvfIndex]]
-    * reads every committed row anyway and raises on a duplicate id —
-    * not here, where it would cost a full index scan per append. */
-  def appendToIvfIndex(newRows: DataFrame, indexPath: String, idCol: String,
-                       embCol: String): Unit =
-    doIvfAppend(newRows, indexPath, idCol, embCol, key = None)
-
-  /** [[appendToIvfIndex]] keyed for AT-LEAST-ONCE callers (Structured
-    * Streaming's `foreachBatch` replays a batch id after a restart): if
-    * `key` is already committed the call is a NO-OP and returns false;
-    * otherwise the batch lands exactly once ([[EpochLog]]'s keyed-retry
-    * story — same contract as
-    * [[graft.streaming.StreamingCurate.writeBatchIdempotent]]). */
-  def appendToIvfIndexIdempotent(newRows: DataFrame, indexPath: String,
-                                 idCol: String, embCol: String,
-                                 key: String): Boolean =
-    if (EpochLog.directory(newRows.sparkSession, indexPath)
-        .keyCommitted(key, "append_to_ivf_index", "writeLearnedIvfIndex")) false
-    else { doIvfAppend(newRows, indexPath, idCol, embCol, Some(key)); true }
-
-  private def doIvfAppend(newRows: DataFrame, indexPath: String, idCol: String,
-                          embCol: String, key: Option[String]): Unit = {
-    val spark = newRows.sparkSession
-    val cents = loadIvfCentroids(spark, indexPath)
-    val log = EpochLog.directory(spark, indexPath)
-    // refuse a crashed-rebuild path BEFORE writing anything into it
-    log.committed("append_to_ivf_index", "writeLearnedIvfIndex")
-    val epoch = EpochLog.newEpoch()
-    buildQuantizedIndex(withCoarseLabel(newRows, embCol, cents),
-        idCol, embCol, "coarse")
-      .withColumn("build_id", lit(epoch))
-      .repartition(col("coarse"))
-      .write.mode("append").partitionBy("coarse").parquet(indexPath)
-    log.append(epoch, key)
+  /** The quantizer a [[writeLearnedIndex]] path holds, its kind read from
+    * the path: a `_pq_codebooks` sidecar makes it a PQ kind, a
+    * `_rotation` the OPQ kind. The data, `_centroids` and every sidecar
+    * present must carry their `_SUCCESS`; a missing one refuses loudly,
+    * naming `op` and the rebuilder. A crash before a sidecar's write
+    * began leaves no sidecar and no commit record, so every entry point
+    * (all of which require a committed epoch) refuses that state too. */
+  def loadLearnedIndex(spark: org.apache.spark.sql.SparkSession, path: String,
+                       op: String = "load_learned_index"): IvfQuantizer = {
+    EpochLog.requireMarker(spark, path, op, s"re-run $Rebuilder")
+    EpochLog.requireMarker(spark, QuantizerTables.Centroids.at(path), op,
+      s"the index data committed but its coarse quantizer did not - re-run " +
+        s"$Rebuilder (an index written by plain writeIvfIndex has no riding " +
+        "quantizer; serve it via ivfTopKQuantizedPruned with caller-managed " +
+        "labels instead)")
+    def sidecar[V](at: String, what: String)(read: => V): Option[V] =
+      if (!QuantizerTables.present(spark, at)) None
+      else {
+        EpochLog.requireMarker(spark, at, op, s"the index data committed " +
+          s"but its $what did not - re-run $Rebuilder")
+        Some(read)
+      }
+    val cb = sidecar(QuantizerTables.Codebooks.at(path), "residual codebooks")(
+      QuantizerTables.Codebooks.read(spark, path))
+    val rot = sidecar(QuantizerTables.Rotation.at(path), "rotation")(
+      QuantizerTables.Rotation.read(spark, path))
+    IvfQuantizer(QuantizerTables.Centroids.read(spark, path), cb, rot)
   }
 
-  /** COMPACTION of a [[writeLearnedIvfIndex]]+[[appendToIvfIndex]]
-    * layout: merge every committed epoch into ONE fresh epoch by
-    * rewriting the existing quantized rows — codes and labels are
-    * immutable and the quantizer is untouched, so compaction never
-    * re-embeds, re-labels, or re-quantizes anything. Restores ~one file
-    * per cell (cell-hashed repartition), so a pruned serve after N ingest
-    * cycles stops listing and opening N files per probed cell.
+  /** The quantizer, log and committed epochs of a learned path — refuses
+    * a half-written or never-committed path before any work is spent. */
+  private def openLearned(spark: org.apache.spark.sql.SparkSession,
+                          path: String, op: String)
+      : (IvfQuantizer, EpochLog, Seq[Long]) = {
+    val q = loadLearnedIndex(spark, path, op)
+    val log = EpochLog.directory(spark, path)
+    (q, log, log.committed(op, Rebuilder))
+  }
+
+  /** Serve a learned path end to end: queries move into the quantizer's
+    * space (OPQ rotates them once), fan out to their `nprobe` nearest
+    * cells ([[withProbeLabels]] — the recall dial), and the probed cells
+    * are partition-pruned into the index read (only their files are
+    * listed and scanned — exact, not a recall trade: the shortlist joins
+    * on the cell). Rows are the [[EpochLog]]'s live rows: committed
+    * epochs only (a crashed append's orphans are invisible), committed
+    * [[deleteFromLearnedIndex]] tombstones anti-joined out. The shortlist
+    * is the int8 code cosine ([[ivfTopKQuantized]]) or the per-cell
+    * residual ADC ([[adcTopK]]), re-scored EXACT against `corpus`'s
+    * original full-precision vectors — R is orthogonal, so scores stay
+    * bit-comparable across the kinds. Output `(query_id, nn_id, cosine,
+    * rank)`.
     *
-    * The swap is [[EpochLog.compact]] (snapshot → merge → recommit →
-    * GC, single-writer: do not compact concurrently with appends or a
-    * refresh rebuild), so compaction doubles as the garbage collector for
-    * crashed ingests.
+    * RECALL GUIDANCE (measured, bench_scale_recall.json): on clustered
+    * corpora the residual-PQ m=8/ksub=16 geometry recalls ~0.93@10 at
+    * the default `candidateFactor` — near the int8 tier at 9× less
+    * memory. On UNSTRUCTURED (near-uniform) vectors 8 bytes over 64
+    * dims is honestly lossy (~0.44@10 probing every cell); the
+    * artifact's `pq_dial` table is the dial — more code bytes (m) and
+    * a deeper shortlist (`candidateFactor` 4 → 16) buy recall back at
+    * rescore cost. */
+  def serveLearnedIndex(indexPath: String, corpus: DataFrame,
+                        queries: DataFrame, idCol: String, embCol: String,
+                        k: Int, nprobe: Int = 2,
+                        candidateFactor: Int = 4): DataFrame = {
+    val op = "serve_learned_index"
+    val spark = queries.sparkSession
+    val (quant, log, committed) = openLearned(spark, indexPath, op)
+    val (q, v) = quant.inSpace(queries, embCol, op)
+    val (probed, cells) = probedCells(indexPath,
+      withProbeLabels(q, v, quant.centroids, nprobe), "coarse",
+      "serveLearnedIndex")
+    val index = log.liveRows(cells, idCol, committed)
+    quant.codebooks match {
+      case None => ivfTopKQuantized(index, corpus, probed, idCol, embCol,
+        "coarse", k, candidateFactor)
+      case Some(cb) => adcTopK(index, corpus, probed, idCol, embCol, "coarse",
+        residualExpr(guardedVec(v, cb.dims, op), col("coarse"), quant.centroids),
+        cb, k, candidateFactor)
+    }
+  }
+
+  /** Incremental GROWTH of a learned layout: encode the new vectors with
+    * the index's OWN riding quantizer and append them into the per-cell
+    * partitions under a fresh committed epoch — new data is servable at
+    * once, while the drift gate ([[refreshLearnedIndex]]) decides when
+    * the layout is re-learned. Appended rows match the served layout by
+    * construction. One file lands per touched cell (cell-hashed
+    * repartition); [[compactLearnedIndex]] restores ~one per cell.
     *
-    * The merge validates the [[appendToIvfIndex]] id-uniqueness
-    * precondition — a duplicate id (the same row appended twice, or an
-    * in-place re-embed pushed through append) raises here, where the
-    * full read is already paid, instead of silently serving two versions
-    * of the row forever. [[deleteFromIvfIndex]] tombstones become
-    * PHYSICAL in the same pass: tombstoned rows are dropped from the
-    * merged epoch (before the uniqueness check, so delete-then-re-append
-    * compacts cleanly). */
-  def compactIvfIndex(spark: org.apache.spark.sql.SparkSession,
-                      indexPath: String, idCol: String): Unit = {
-    EpochLog.requireMarker(spark, indexPath, "compact_ivf_index",
-      "re-run writeLearnedIvfIndex before compacting")
+    * With a `key` the append is for AT-LEAST-ONCE callers (Structured
+    * Streaming's `foreachBatch` replays a batch id after a restart): a
+    * committed key no-ops and returns false, a crashed attempt's retry
+    * lands exactly once ([[EpochLog]]'s keyed-retry story). True when
+    * rows were appended.
+    *
+    * `newRows` must be NEW ids: a re-embedded row goes through
+    * [[deleteFromLearnedIndex]] + append, or a rebuild; a duplicate id
+    * would serve both versions. [[compactLearnedIndex]] enforces it,
+    * where the full read is already paid — not here, where it would cost
+    * a full index scan per append. */
+  def appendToLearnedIndex(newRows: DataFrame, indexPath: String,
+                           idCol: String, embCol: String,
+                           key: Option[String] = None): Boolean = {
+    val op = "append_to_learned_index"
+    val (quant, log, _) = openLearned(newRows.sparkSession, indexPath, op)
+    if (key.exists(log.keyCommitted(_, op, Rebuilder))) false
+    else {
+      val epoch = EpochLog.newEpoch()
+      quant.encode(newRows, idCol, embCol, op)
+        .withColumn("build_id", lit(epoch))
+        .repartition(col("coarse"))
+        .write.mode("append").partitionBy("coarse").parquet(indexPath)
+      log.append(epoch, key)
+      true
+    }
+  }
+
+  /** DELETE ids from a learned path without touching its files — the
+    * takedown shape: a removal request arrives as IDS, not vectors, and
+    * rewriting a cell's parquet per request is the cost this avoids.
+    * The ids become epoch-scoped [[EpochLog]] tombstones, so
+    * delete-then-re-append serves the re-added row;
+    * [[compactLearnedIndex]] makes the deletion PHYSICAL. Deleting an id
+    * that was never indexed is a harmless no-op. */
+  def deleteFromLearnedIndex(ids: DataFrame, indexPath: String,
+                             idCol: String): Unit = {
+    val op = "delete_from_learned_index"
+    loadLearnedIndex(ids.sparkSession, indexPath, op)
+    EpochLog.directory(ids.sparkSession, indexPath).tombstone(
+      ids.select(col(idCol)), op, Rebuilder)
+  }
+
+  /** COMPACTION of a learned layout: merge every committed epoch into ONE
+    * fresh epoch by rewriting the stored rows — payload, labels and
+    * sidecars untouched, nothing re-embedded or re-encoded. Restores ~one
+    * file per cell, so a pruned serve after N ingest cycles stops
+    * listing N files per probed cell. The swap is [[EpochLog.compact]]
+    * (snapshot → merge → recommit → GC), so compaction doubles as the
+    * garbage collector for crashed appends, and tombstoned rows are
+    * dropped from the merged epoch. The merge checks the append
+    * path's new-ids-only precondition after deletion is applied (so
+    * delete-then-re-append compacts cleanly) and raises on a duplicate
+    * id instead of serving two versions of a row forever. */
+  def compactLearnedIndex(spark: org.apache.spark.sql.SparkSession,
+                          indexPath: String, idCol: String): Unit = {
+    val op = "compact_learned_index"
+    loadLearnedIndex(spark, indexPath, op)
     val log = EpochLog.directory(spark, indexPath)
-    log.compact("compact_ivf_index", "writeLearnedIvfIndex", indexPath) {
-        (committed, epoch, snapshot) =>
+    log.compact(op, Rebuilder, indexPath) { (committed, epoch, snapshot) =>
       // data files live under the coarse=N partition directories
       val files = snapshot.head
-      require(files.nonEmpty,
-        s"compact_ivf_index: no data files under $indexPath (crashed " +
-          "rebuild?) - re-run writeLearnedIvfIndex")
+      require(files.nonEmpty, s"$op: no data files under $indexPath " +
+        s"(crashed rebuild?) - re-run $Rebuilder")
       // basePath recovers the coarse partition column from the directory
       // names of the explicit file list
       val committedRows = log.committedRows(
         spark.read.option("basePath", indexPath).parquet(files: _*), committed)
       require(committedRows.select(lit(1)).limit(1).collect().nonEmpty,
-        s"compact_ivf_index: no committed rows under $indexPath (crashed " +
-          "rebuild?) - re-run writeLearnedIvfIndex")
+        s"$op: no committed rows under $indexPath (crashed rebuild?) - " +
+          s"re-run $Rebuilder")
       val old = log.withoutTombstones(committedRows, idCol, committed)
-      // uniqueness is checked AFTER deletion is applied: delete-then-
-      // re-append is a legal lifecycle sequence, and the superseded
-      // (tombstoned) row must not read as a duplicate of its replacement
       val dup = old.groupBy(col(idCol)).count().filter(col("count") > 1)
         .select(col(idCol)).limit(1).collect()
       require(dup.isEmpty,
-        s"compact_ivf_index: duplicate id ${dup.headOption.map(_.get(0))
-          .getOrElse("")} across committed epochs - appendToIvfIndex is for " +
-          "NEW ids; re-embedded rows go through refreshIvfIndex (rebuild) " +
-          "or deleteFromIvfIndex + append")
+        s"$op: duplicate id ${dup.headOption.map(_.get(0)).getOrElse("")} " +
+          "across committed epochs - appendToLearnedIndex is for NEW ids; " +
+          "re-embedded rows go through refreshLearnedIndex (rebuild) or " +
+          "deleteFromLearnedIndex + append")
       old.withColumn("build_id", lit(epoch))
         .repartition(col("coarse"))
         .write.mode("append").partitionBy("coarse").parquet(indexPath)
     }
   }
 
-  /** The centroid matrix a [[writeLearnedIvfIndex]] path was built with
-    * (row index = cluster id = the `coarse` partition value). Requires
-    * both commit markers — the data's and `_centroids`' own — so a
-    * partially-written index is refused here, before any serve. */
-  def loadIvfCentroids(spark: org.apache.spark.sql.SparkSession,
-                       path: String): Array[Array[Double]] = {
-    EpochLog.requireMarker(spark, path, "load_ivf_centroids",
-      "re-run writeLearnedIvfIndex before serving")
-    EpochLog.requireMarker(spark, s"$path/_centroids", "load_ivf_centroids",
-      "the index data committed but its quantizer did not - re-run " +
-        "writeLearnedIvfIndex (an index written by plain writeIvfIndex " +
-        "has no riding quantizer; serve it via ivfTopKQuantizedPruned " +
-        "with caller-managed labels instead)")
-    val cents = spark.read.parquet(s"$path/_centroids")
-      .orderBy("cid").collect()
-      .map(r => r.getSeq[Double](r.fieldIndex("centroid")).toArray)
-    require(cents.nonEmpty, s"load_ivf_centroids: empty centroid table at $path")
-    cents
+  /** The fit sequence of each kind, shared by the build verbs and a
+    * refresh's rebuild: [[kmeansFit]] for the coarse cells; for the PQ
+    * kinds then [[trainPqResidual]] on those cells; for OPQ
+    * [[trainOpq]]'s rotation FIRST and both fits in the rotated space
+    * ([[fitRotatedQuantizer]]). `m`/`ksub` are the PQ geometry and
+    * `opqIters`/`sampleRows` the rotation's dials; a kind ignores the
+    * dials it has no use for. */
+  def fitIvfQuantizer(kind: IvfKind, corpus: DataFrame, idCol: String,
+                      embCol: String, k: Int, m: Int = 8, ksub: Int = 16,
+                      iters: Int = 5, opqIters: Int = 2,
+                      sampleRows: Int = 10000): IvfQuantizer = kind match {
+    case IvfKind.Opq =>
+      val (rot, _) = trainOpq(corpus, idCol, embCol, m = m, ksub = ksub,
+        iters = iters, opqIters = opqIters, sampleRows = sampleRows)
+      fitRotatedQuantizer(corpus, idCol, embCol, rot, k, m, ksub, iters)
+    case _ =>
+      fitOnCentroids(kind, corpus, idCol, embCol,
+        kmeansFit(corpus, idCol, embCol, k, iters), m, ksub, iters)
   }
 
-  /** Serve a [[writeLearnedIvfIndex]] path end to end: the quantizer is
-    * loaded from the index itself, queries fan out to their `nprobe`
-    * nearest cells ([[withProbeLabels]] — the recall dial), and the probed
-    * cells are partition-pruned into the read
-    * ([[ivfTopKQuantizedPruned]]: only their files are listed and
-    * scanned, int8 stage-1 ranking, exact re-scoring of the shortlist
-    * against `corpus`'s full-precision vectors). This is the whole
-    * production serving story in one call — learned quantizer, on-disk
-    * pruned layout, quantized shortlist, exact answer — with nothing for
-    * the caller to keep consistent: centroids, labels, and files all come
-    * from the one committed path. Rows are the [[EpochLog]]'s live rows:
-    * committed epochs only, committed [[deleteFromIvfIndex]] tombstones
-    * anti-joined out; a pre-epoch or half-rebuilt path refuses loudly. */
-  def serveIvfIndex(indexPath: String, corpus: DataFrame, queries: DataFrame,
-                    idCol: String, embCol: String, k: Int, nprobe: Int = 2,
-                    candidateFactor: Int = 4): DataFrame = {
-    val spark = queries.sparkSession
-    val cents = loadIvfCentroids(spark, indexPath)
-    val log = EpochLog.directory(spark, indexPath)
-    val committed = log.committed("serve_ivf_index", "writeLearnedIvfIndex")
-    ivfTopKQuantizedPrunedImpl(indexPath, corpus,
-      withProbeLabels(queries, embCol, cents, nprobe),
-      idCol, embCol, "coarse", k, candidateFactor,
-      indexPrep = Some(ix => log.liveRows(ix, idCol, committed)))
+  /** An unrotated kind's quantizer over given coarse `centroids`. */
+  private def fitOnCentroids(kind: IvfKind, corpus: DataFrame, idCol: String,
+                             embCol: String, centroids: Array[Array[Double]],
+                             m: Int, ksub: Int, iters: Int): IvfQuantizer =
+    IvfQuantizer(centroids,
+      if (kind == IvfKind.Int8) None
+      else Some(trainPqResidual(corpus, idCol, embCol, centroids, m, ksub, iters)))
+
+  /** The OPQ fit past its rotation step: the coarse cells and residual
+    * codebooks fit on `rotation · v`. */
+  private[graft] def fitRotatedQuantizer(corpus: DataFrame, idCol: String,
+                                         embCol: String,
+                                         rotation: Array[Array[Double]],
+                                         k: Int, m: Int, ksub: Int,
+                                         iters: Int): IvfQuantizer = {
+    val rotated = withRotated(corpus.select(col(idCol), col(embCol)), embCol,
+      rotation, "fit_ivf_quantizer")
+    val cents = kmeansFit(rotated, idCol, "__rotv", k, iters)
+    IvfQuantizer(cents,
+      Some(trainPqResidual(rotated, idCol, "__rotv", cents, m, ksub, iters)),
+      Some(rotation))
   }
 
-  /** DELETE ids from a [[writeLearnedIvfIndex]] path without touching the
-    * index files — the takedown shape: at 100 TB, physically rewriting a
-    * cell's parquet per removal request is the cost this operator exists
-    * to avoid, and a removal request arrives as IDS, not vectors (no
-    * embedding is needed — unlike appends, deletion never consults the
-    * quantizer). Writes the ids as epoch-scoped [[EpochLog]] tombstones,
-    * so delete-then-re-append serves the re-added row and the lifecycle's
-    * operations stay freely composable; [[compactIvfIndex]] makes the
-    * deletion PHYSICAL. Deleting an id that was never indexed is a
-    * harmless no-op, so callers need not pre-filter. */
-  def deleteFromIvfIndex(ids: DataFrame, indexPath: String,
-                         idCol: String): Unit =
-    EpochLog.directory(ids.sparkSession, indexPath).tombstone(
-      ids.select(col(idCol)), "delete_from_ivf_index", "writeLearnedIvfIndex")
-
-  /** One turn of the IVF growth cycle — the operator form of the
-    * [[writeIvfIndex]] growth policy ("rebuild deliberately on drift"):
-    * refit the quantizer on the CURRENT corpus ([[kmeansFit]]), measure
-    * [[assignmentDrift]] of the SERVED index's stored labels against the
-    * refit centroids (the share of indexed vectors a rebuild would move —
-    * the recall-erosion bound a stale layout carries), and rebuild via
-    * [[writeLearnedIvfIndex]] only past `driftTolerance`. Below it the
-    * index is untouched — the cycle's steady-state cost is the fit plus a
-    * bounded sample probe, never a write. `k = 0` (the default) keeps
-    * the served index's cell count, read from its riding quantizer — a
-    * scheduler's refresh loop cannot re-parameterize the index through a
-    * mismatched default.
+  /** One turn of the learned layout's growth cycle — "rebuild
+    * deliberately on drift": refit the coarse quantizer on the CURRENT
+    * corpus, measure [[assignmentDrift]] of the SERVED index's stored
+    * labels against it (the share of indexed vectors a rebuild would
+    * move — the recall-erosion bound a stale layout carries), and rebuild
+    * with the stored kind ([[fitIvfQuantizer]], then
+    * [[writeLearnedIndex]]) only past `driftTolerance`. Below it the
+    * index is untouched: the cycle's steady-state cost is the fit plus a
+    * bounded sample probe, never a write.
     *
-    * Drift is measured over rows present in BOTH the index and the
-    * current corpus (the stored label plus today's vector); corpus rows
-    * not yet indexed don't drift — they are absorbed by whichever layout
-    * wins — but they DO pull the refit centroids, which is exactly how
-    * growth manifests as drift. A disjoint index/corpus (nothing to
-    * sample) fails loudly rather than reading as "no drift".
+    * Drift is measured where the cells live: in the STORED rotation's
+    * space (no rotation step for the unrotated kinds). `k`, `m` and
+    * `ksub` = 0 keep the index's own cell count and PQ geometry, read
+    * from its riding quantizer, so a scheduler's loop cannot
+    * re-parameterize the index through a mismatched default (an explicit
+    * `k` that disagrees reads as heavy drift and rebuilds at the new
+    * granularity). A rebuild re-encodes the whole corpus: codes are
+    * derived data, cell-conditional, and patching them against moved
+    * centroids would decode them with codebooks they were not built
+    * from. The unrotated kinds rebuild on the drift fit's centroids when
+    * that fit saw the full corpus; OPQ retrains its rotation first (a
+    * drifted corpus has a drifted second moment), then refits.
     *
-    * Steady-state cost dial: by default the fresh fit scans the full
-    * corpus each Lloyd iteration; `fitSampleRows > 0` runs the
-    * drift-probe fit on a bounded md5 sample instead ([[fitInput]] —
-    * the no-op refresh then reads O(fitSampleRows + sampleRows) rows
-    * past the one sampling pass), while a triggered rebuild always
-    * refits on the full corpus.
+    * Drift counts committed, non-tombstoned rows present in both the
+    * index and `corpus`; corpus rows not yet indexed don't drift, but
+    * they pull the refit centroids, which is how growth shows as drift.
+    * A disjoint index/corpus fails loudly rather than reading as "no
+    * drift". Drift is a LAYOUT metric: it compares label identity, so an
+    * unchanged corpus reads 0.0 ([[kmeansFit]] is deterministic per
+    * corpus), a rigid translation of a whole cloud reads 0 (corpora that
+    * RE-EMBED in place should gate on update volume too), and a refit
+    * on a shifted corpus may renumber clusters, which reads as drift —
+    * conservative: a spurious trigger costs one rebuild.
     *
-    * Drift is a LAYOUT metric — it flags cell-membership change, not
-    * in-place mutation of already-indexed vectors. A rigid translation
-    * of a whole cloud reads as zero (membership is unchanged; relative
-    * geometry within the cell is preserved, so the stale stage-1 codes
-    * still rank its shortlist usably) even though the stored codes no
-    * longer approximate today's vectors. Corpora that RE-EMBED rows in
-    * place should gate the rebuild on update volume alongside drift —
-    * this operator measures where vectors sit relative to each other,
-    * not whether their bytes went stale.
-    *
-    * Drift compares label IDENTITY, and [[kmeansFit]] is deterministic
-    * per corpus — so an unchanged corpus always reads 0.0 (no thrash) —
-    * but a refit on a SHIFTED corpus may renumber clusters (seeding is
-    * farthest-first from the md5-minimal row; a large shift can reorder
-    * the picks), which reads as drift even where the cell boundaries
-    * merely relabeled. That errs conservative: a spurious trigger costs
-    * one rebuild, while serving never sees a mismatched quantizer — and
-    * a shift big enough to renumber a farthest-first seeding is big
-    * enough to warrant the rebuild it triggers.
-    * Returns the measured drift and whether a rebuild happened, so
-    * schedulers can log the trajectory and alert on thrash. */
-  def refreshIvfIndex(indexPath: String, corpus: DataFrame, idCol: String,
-                      embCol: String, k: Int = 0, iters: Int = 5,
-                      driftTolerance: Double = 0.1,
-                      sampleRows: Int = 10000,
-                      fitSampleRows: Int = 0): IvfRefresh = {
+    * `fitSampleRows > 0` runs the drift-probe fit on a bounded md5
+    * sample ([[fitInput]]); a triggered rebuild always refits on the
+    * full corpus. Returns the measured drift and whether a rebuild
+    * happened, so schedulers can log the trajectory. */
+  def refreshLearnedIndex(indexPath: String, corpus: DataFrame, idCol: String,
+                          embCol: String, k: Int = 0, m: Int = 0,
+                          ksub: Int = 0, iters: Int = 5, opqIters: Int = 2,
+                          driftTolerance: Double = 0.1,
+                          sampleRows: Int = 10000,
+                          fitSampleRows: Int = 0): IvfRefresh = {
     require(driftTolerance >= 0.0 && driftTolerance <= 1.0,
       s"driftTolerance must be in [0, 1], got $driftTolerance")
     require(k >= 0, s"k must be 0 (keep the index's cell count) or positive, got $k")
+    require(m >= 0 && ksub >= 0,
+      s"m/ksub must be 0 (keep the index's geometry) or positive, got m=$m ksub=$ksub")
+    val op = "refresh_learned_index"
     val spark = corpus.sparkSession
-    // the refresh contract only makes sense against a committed LEARNED
-    // index (stored labels + riding quantizer); this also refuses the
-    // crashed-rebuild states before any work is spent on a refit — and
-    // the stored matrix supplies the DEFAULT k, so a refresh cycle can
-    // never re-parameterize the index by accident (an explicit k that
-    // disagrees with the stored cell count is the deliberate form: it
-    // reads as heavy drift — renumbered labels — and rebuilds at the
-    // new granularity in one cycle)
-    val storedK = loadIvfCentroids(spark, indexPath).length
-    val log = EpochLog.directory(spark, indexPath)
-    val committed = log.committed("refresh_ivf_index", "writeLearnedIvfIndex")
-    val kEff = if (k == 0) storedK else k
-    val cents = kmeansFit(fitInput(corpus, idCol, embCol, fitSampleRows),
-      idCol, embCol, kEff, iters)
+    val (stored, log, committed) = openLearned(spark, indexPath, op)
+    val kEff = if (k == 0) stored.centroids.length else k
+    val (space, v) = stored.inSpace(corpus.select(col(idCol), col(embCol)),
+      embCol, op)
+    val cents = kmeansFit(fitInput(space, idCol, v, fitSampleRows), idCol, v,
+      kEff, iters)
     // committed, non-tombstoned rows only: a crashed append's orphan
     // labels must not leak into the drift sample any more than into a
     // serve, and a deleted row's stale label is not drift — it is gone
-    val stored = log.liveRows(spark.read.parquet(indexPath), idCol, committed)
+    val sampled = log.liveRows(spark.read.parquet(indexPath), idCol, committed)
       .select(col(idCol), col("coarse"))
-    val sampled = stored.join(corpus.select(col(idCol), col(embCol)),
-      Seq(idCol))
-    val drift = assignmentDrift(sampled, idCol, embCol, "coarse", cents,
-      sampleRows)
-    if (drift > driftTolerance) {
-      // the rare rebuild pays the FULL fit as before — the sampled fit
-      // is the cheap decision probe, never the layout a rebuild commits
-      val rebuildCents = if (fitSampleRows == 0) cents
-        else kmeansFit(corpus, idCol, embCol, kEff, iters)
-      writeLearnedIvfIndex(corpus, idCol, embCol, indexPath, rebuildCents)
+      .join(space, Seq(idCol))
+    val drift = assignmentDrift(sampled, idCol, v, "coarse", cents, sampleRows)
+    if (drift <= driftTolerance) IvfRefresh(drift, rebuilt = false)
+    else {
+      val mEff = if (m == 0) stored.codebooks.fold(0)(_.m) else m
+      val ksubEff = if (ksub == 0) stored.codebooks.fold(0)(_.ksub) else ksub
+      val fresh =
+        if (fitSampleRows == 0 && stored.rotation.isEmpty)
+          fitOnCentroids(stored.kind, corpus, idCol, embCol, cents, mEff,
+            ksubEff, iters)
+        else fitIvfQuantizer(stored.kind, corpus, idCol, embCol, kEff, mEff,
+          ksubEff, iters, opqIters, sampleRows)
+      writeLearnedIndex(corpus, idCol, embCol, indexPath, fresh)
       IvfRefresh(drift, rebuilt = true)
-    } else IvfRefresh(drift, rebuilt = false)
+    }
   }
 
-  /** The `fitSampleRows` dial shared by the refresh family: 0 = the fit
-    * scans the FULL corpus every Lloyd iteration (the historical
-    * behavior — an honest but expensive drift number: a scheduler
-    * running nightly no-op refreshes pays a full k-means each time to
-    * learn nothing changed); > 0 = the drift-probe's fresh fit runs on
-    * a bounded md5-prefix sample of the corpus (the [[kmeansFit]]
-    * seeding sample's own selection rule, materialized once so the
-    * Lloyd iterations never rescan the corpus). Deterministic per
-    * corpus, like everything downstream of it.
+  /** The `fitSampleRows` dial of [[refreshLearnedIndex]]: 0 = the fit
+    * scans the FULL corpus every Lloyd iteration (an honest but expensive
+    * drift number: a scheduler running nightly no-op refreshes pays a
+    * full k-means each time to learn nothing changed); > 0 = the
+    * drift-probe's fresh fit runs on a bounded md5-prefix sample of the
+    * corpus (the [[kmeansFit]] seeding sample's own selection rule,
+    * materialized once so the Lloyd iterations never rescan the corpus).
+    * Deterministic per corpus, like everything downstream of it.
     *
     * The trade is a small LABEL-NOISE FLOOR: the stored index was built
     * from a full fit, so a sampled refit's centroids sit slightly off
     * and a few boundary rows read as drifted even on an unchanged
     * corpus — size `driftTolerance` above that floor (well-separated
     * corpora read 0.0 either way; the spec pins decision agreement on a
-    * planted migration). A rebuild, once triggered, always refits on
-    * the full corpus. */
+    * planted migration). */
   private def fitInput(corpus: DataFrame, idCol: String, embCol: String,
                        fitSampleRows: Int): DataFrame = {
     require(fitSampleRows >= 0,
@@ -2186,129 +1834,5 @@ object Similarity {
           md5(col(idCol).cast("string").cast("binary")).as("__h"))
         .orderBy("__h").limit(fitSampleRows)
         .drop("__h"))
-  }
-
-  /** [[refreshIvfIndex]] for the residual-PQ layout — the drift
-    * lifecycle of the 8-byte serving tier. Drift is measured on the
-    * COARSE assignment (cell labels are what go stale as the corpus
-    * distribution moves; the residual codebooks are CONDITIONED on the
-    * centroids, so a coarse refit invalidates both quantizers at
-    * once), against a fresh fit at the index's own cell count unless
-    * `k` overrides. Above `driftTolerance` the rebuild retrains the
-    * residual codebooks on the new centroids (at the index's own
-    * m/ksub unless overridden) and RE-ENCODES the whole corpus via
-    * [[writeLearnedPqIndex]]. Re-encode is not an implementation
-    * shortcut, it is the only sound refresh: PQ codes are derived data
-    * — cell-conditional residual quantizations — and patching stored
-    * codes against moved centroids would decode them with codebooks
-    * they were not built from, exactly the silent-garbage-distance
-    * mismatch class this layout makes unconstructable. Below the
-    * tolerance nothing is touched and serving continues uninterrupted
-    * (the appends-encode-with-committed-quantizers invariant holds
-    * either way). Same single-writer discipline as every rebuild. */
-  def refreshPqIndex(indexPath: String, corpus: DataFrame, idCol: String,
-                     embCol: String, k: Int = 0, m: Int = 0, ksub: Int = 0,
-                     iters: Int = 5, driftTolerance: Double = 0.1,
-                     sampleRows: Int = 10000,
-                     fitSampleRows: Int = 0): IvfRefresh = {
-    require(driftTolerance >= 0.0 && driftTolerance <= 1.0,
-      s"driftTolerance must be in [0, 1], got $driftTolerance")
-    require(k >= 0, s"k must be 0 (keep the index's cell count) or positive, got $k")
-    require(m >= 0 && ksub >= 0,
-      s"m/ksub must be 0 (keep the index's geometry) or positive, got m=$m ksub=$ksub")
-    val spark = corpus.sparkSession
-    val (storedCents, storedCb) = loadPqQuantizers(spark, indexPath)
-    val log = EpochLog.directory(spark, indexPath)
-    val committed = log.committed("refresh_pq_index", "writeLearnedPqIndex")
-    val kEff = if (k == 0) storedCents.length else k
-    val cents = kmeansFit(fitInput(corpus, idCol, embCol, fitSampleRows),
-      idCol, embCol, kEff, iters)
-    val stored = log.liveRows(spark.read.parquet(indexPath), idCol, committed)
-      .select(col(idCol), col("coarse"))
-    val sampled = stored.join(corpus.select(col(idCol), col(embCol)),
-      Seq(idCol))
-    val drift = assignmentDrift(sampled, idCol, embCol, "coarse", cents,
-      sampleRows)
-    if (drift > driftTolerance) {
-      // rebuild refits on the FULL corpus (see fitInput) — the residual
-      // codebooks are conditioned on whichever centroids the layout
-      // commits, so both come from the same full fit
-      val rebuildCents = if (fitSampleRows == 0) cents
-        else kmeansFit(corpus, idCol, embCol, kEff, iters)
-      writeLearnedPqIndex(corpus, idCol, embCol, indexPath, rebuildCents,
-        trainPqResidual(corpus, idCol, embCol, rebuildCents,
-          m = if (m == 0) storedCb.codebooks.length else m,
-          ksub = if (ksub == 0) storedCb.codebooks.head.length else ksub,
-          iters = iters))
-      IvfRefresh(drift, rebuilt = true)
-    } else IvfRefresh(drift, rebuilt = false)
-  }
-
-  /** [[refreshPqIndex]] for a [[writeLearnedOpqIndex]] layout — the
-    * drift-gated rebuild cycle of the FULL composition. Drift is
-    * measured where the index's Voronoi cells live, the ROTATED space:
-    * the corpus is re-projected under the index's OWN riding rotation,
-    * a fresh coarse fit runs there, and [[assignmentDrift]] compares
-    * the stored cells against it over a bounded sample. Past tolerance
-    * the WHOLE quantizer stack retrains — rotation first
-    * ([[trainOpq]] at the index's PQ geometry; a drifted corpus has a
-    * drifted second-moment structure, so patching only the centroids
-    * under a stale rotation would rebuild on the wrong axes), then the
-    * rotated-space coarse + residual codebooks — and the corpus
-    * re-encodes from scratch (codes are derived data, the
-    * [[refreshPqIndex]] rule). Same cost note as the plain refresh:
-    * drift is measured against a FRESH fit, so a no-op refresh pays
-    * one rotated-space k-means — over the full corpus by default (the
-    * honest-drift maximum), or over a bounded md5 sample with
-    * `fitSampleRows` (see [[fitInput]]) so a scheduler's nightly no-op
-    * stays cheap. */
-  def refreshOpqIndex(indexPath: String, corpus: DataFrame, idCol: String,
-                      embCol: String, k: Int = 0, m: Int = 0, ksub: Int = 0,
-                      iters: Int = 5, opqIters: Int = 2,
-                      driftTolerance: Double = 0.1,
-                      sampleRows: Int = 10000,
-                      fitSampleRows: Int = 0): IvfRefresh = {
-    require(driftTolerance >= 0.0 && driftTolerance <= 1.0,
-      s"driftTolerance must be in [0, 1], got $driftTolerance")
-    require(k >= 0, s"k must be 0 (keep the index's cell count) or positive, got $k")
-    require(m >= 0 && ksub >= 0,
-      s"m/ksub must be 0 (keep the index's geometry) or positive, got m=$m ksub=$ksub")
-    val spark = corpus.sparkSession
-    val (storedRot, storedCents, storedCb) = loadOpqQuantizers(spark, indexPath)
-    val log = EpochLog.directory(spark, indexPath)
-    val committed = log.committed("refresh_opq_index", "writeLearnedOpqIndex")
-    // drift check in the STORED rotation's space: the stored cells are
-    // only comparable to a fresh fit under the same projection
-    val rotated = corpus
-      .withColumn("__gv", guardedVec(embCol, storedCb.dims, "refresh_opq_index"))
-      .select(col(idCol), rotateExpr(col("__gv"), storedRot).as("__rotv"))
-    // fitInput over the ROTATED frame: the sampled path pays one full
-    // rotation pass to draw the sample, then every Lloyd iteration runs
-    // on the bounded materialized rows
-    val cents = kmeansFit(fitInput(rotated, idCol, "__rotv", fitSampleRows),
-      idCol, "__rotv", if (k == 0) storedCents.length else k, iters)
-    val stored = log.liveRows(spark.read.parquet(indexPath), idCol, committed)
-      .select(col(idCol), col("coarse"))
-    val sampled = stored.join(rotated, Seq(idCol))
-    val drift = assignmentDrift(sampled, idCol, "__rotv", "coarse", cents,
-      sampleRows)
-    if (drift > driftTolerance) {
-      val mEff = if (m == 0) storedCb.codebooks.length else m
-      val ksubEff = if (ksub == 0) storedCb.codebooks.head.length else ksub
-      // sampleRows threads through: a caller who lowered it to stay
-      // under MaxSeedSampleBytes must not trip the guard on the
-      // rebuild path via trainOpq's own default
-      val (rot, _) = trainOpq(corpus, idCol, embCol, m = mEff, ksub = ksubEff,
-        iters = iters, opqIters = opqIters, sampleRows = sampleRows)
-      val rerotated = corpus
-        .withColumn("__gv", guardedVec(embCol, storedCb.dims, "refresh_opq_index"))
-        .select(col(idCol), rotateExpr(col("__gv"), rot).as("__rotv"))
-      val newCents = kmeansFit(rerotated, idCol, "__rotv",
-        if (k == 0) storedCents.length else k, iters)
-      writeLearnedOpqIndex(corpus, idCol, embCol, indexPath, rot, newCents,
-        trainPqResidual(rerotated, idCol, "__rotv", newCents,
-          m = mEff, ksub = ksubEff, iters = iters))
-      IvfRefresh(drift, rebuilt = true)
-    } else IvfRefresh(drift, rebuilt = false)
   }
 }

@@ -4,6 +4,8 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.streaming.Trigger
 
 import graft.{GraftExtensions, Pipeline}
+import graft.operators.Similarity
+import graft.operators.Similarity.IvfKind
 import graft.schemas.Schemas
 import graft.streaming.Compactor
 
@@ -49,34 +51,22 @@ import graft.streaming.Compactor
   *    grow it per ingest batch (epoch append, meta-last; or the
   *    whole-index staged-swap merge), fold epochs back periodically,
   *    and serve ranked searches from it.
-  *  - `ivf-build` / `ivf-query` / `ivf-append` / `ivf-refresh` /
-  *    `ivf-compact`: the learned-ANN index lifecycle
-  *    ([[graft.operators.Similarity.writeLearnedIvfIndex]] family) — fit +
-  *    quantize + write the partition-pruned index (the centroids ride
-  *    with it), serve query batches from it, append each ingest batch
-  *    under a committed epoch (servable immediately, labeled by the
-  *    riding quantizer), run the drift-gated refresh cycle on a cadence
-  *    (refit, measure [[graft.operators.Similarity.assignmentDrift]],
-  *    rebuild only past tolerance), and compact the per-append files when
-  *    the count warrants. `ivf-ingest` is the continuous form of the
-  *    append step: a landing-dir stream appended per micro-batch,
+  *  - `ivf-*`, `pq-*` and `opq-*`: the learned-ANN index lifecycle
+  *    ([[graft.operators.Similarity.writeLearnedIndex]] family), one
+  *    body per step for three quantizer kinds — int8 codes, residual
+  *    IVF-PQ codes, and the OPQ composition (a learned rotation, Ge et
+  *    al. 2013, with both quantizers fit in the rotated space). The
+  *    build verb picks the kind: it fits the quantizer and writes the
+  *    partition-pruned layout with the quantizer riding beside it. Every
+  *    other verb reads the kind from the path: `-query` serves a batch,
+  *    `-append` adds an ingest batch under a committed epoch (servable
+  *    at once, encoded by the riding quantizer), `-refresh` runs the
+  *    drift-gated cycle (refit, measure
+  *    [[graft.operators.Similarity.assignmentDrift]] in the stored
+  *    rotation's space, rebuild only past tolerance), `-delete`
+  *    tombstones ids, `-compact` folds the per-append files, and
+  *    `-ingest` appends a landing-dir stream per micro-batch,
   *    exactly-once ([[graft.streaming.IvfIngest]]).
-  *  - `opq-build` / `opq-query` / `opq-append` / `opq-refresh`: the OPQ
-  *    composition's lifecycle
-  *    ([[graft.operators.Similarity.writeLearnedOpqIndex]] family) —
-  *    learn the rotation (Ge et al. 2013), fit both residual quantizers
-  *    in the rotated space, persist all three with the index, serve
-  *    partition-pruned with exact original-space rescore, and run the
-  *    drift-gated refresh (measured in the stored rotation's space; a
-  *    rebuild retrains the rotation too).
-  *  - `pq-build` / `pq-query` / `pq-append` / `pq-compact` / `pq-delete`:
-  *    the learned residual IVF-PQ lifecycle
-  *    ([[graft.operators.Similarity.writeLearnedPqIndex]] family) — fit
-  *    the coarse quantizer, train per-subspace residual codebooks, write
-  *    the partition-pruned code layout (BOTH quantizers ride with it),
-  *    serve query batches (per-cell residual ADC shortlist + exact
-  *    rescore), grow/takedown/compact under the same epoch-commit and
-  *    tombstone protocol as the int8 index.
   *
   * Usage:
   * {{{
@@ -171,6 +161,9 @@ object Main {
       |          [--id doc_id] [--text text] [--max-frac 0.5]
       |  ivf-build   --in <embeddings-parquet> --path <dir>
       |          [--id vec_id] [--embedding embedding] [--k 32] [--iters 5]
+      |          (the learned-ANN family: a build verb picks the quantizer
+      |           kind - ivf int8, pq residual PQ, opq rotated residual
+      |           PQ; the other ivf-/pq-/opq- verbs read it from --path)
       |  ivf-query   --in <queries-parquet> --corpus <embeddings-parquet>
       |          --path <dir> --out <dir> [--id vec_id] [--embedding embedding]
       |          [--topk 10] [--nprobe 2]
@@ -188,9 +181,8 @@ object Main {
       |          [--id vec_id] [--embedding embedding] [--once]
       |  opq-ingest  --landing <dir> --path <dir> --checkpoint <dir>
       |          [--id vec_id] [--embedding embedding] [--once]
-      |          (ivf-ingest pointed at a learned-OPQ layout: the same
-      |           keyed exactly-once sink, rows rotate + encode under the
-      |           index's riding quantizers)
+      |          (ivf-ingest's keyed exactly-once sink: every learned path
+      |           reads its own quantizer, so both verbs serve every kind)
       |  opq-build   --in <embeddings-parquet> --path <dir>
       |          [--id vec_id] [--embedding embedding] [--k 32] [--m 8]
       |          [--ksub 16] [--iters 5] [--opqiters 2]
@@ -674,79 +666,88 @@ object Main {
           opt.getOrElse("id", "doc_id"), opt.getOrElse("text", "text"),
           maxIndexedFrac = opt.getOrElse("max-frac", "0.5").toDouble), req(opt, "out"))
 
-    // the learned-ANN lifecycle as CLI: fit + build once, serve query
-    // batches from the partition-pruned files, refresh on a cadence —
-    // the refresh is cheap below tolerance (a fit + a bounded sample
-    // probe, no write), and the quantizer rides with the index so the
-    // three commands can never disagree about centroids.
-    case Some("ivf-build") =>
+    // the learned-ANN lifecycle as CLI, one body per step for the three
+    // kinds (`ivf-` int8, `pq-` residual PQ, `opq-` rotated residual PQ).
+    // Only the build picks the kind; every other verb reads the quantizer
+    // — and so the kind — from the path, so the verbs of one path can
+    // never disagree about centroids. Each verb reads exactly its own
+    // flags.
+    case Some(verb @ ("ivf-build" | "pq-build" | "opq-build")) =>
       val (opt, _) = parse(args.tail)
       val (in, path) = (req(opt, "in"), req(opt, "path"))
       val corpus = spark.read.parquet(in)
       val (idCol, embCol) = (opt.getOrElse("id", "vec_id"),
         opt.getOrElse("embedding", "embedding"))
-      graft.operators.Similarity.writeLearnedIvfIndex(corpus, idCol, embCol,
-        path, graft.operators.Similarity.kmeansFit(corpus, idCol, embCol,
+      // OPQ trains the rotation FIRST (Ge et al. 2013), then the coarse
+      // and residual quantizers in the rotated space
+      Similarity.writeLearnedIndex(corpus, idCol, embCol, path,
+        Similarity.fitIvfQuantizer(ivfKind(verb), corpus, idCol, embCol,
           k = opt.getOrElse("k", "32").toInt,
-          iters = opt.getOrElse("iters", "5").toInt))
+          m = kindFlag(opt, verb, "m", 8, IvfKind.Pq, IvfKind.Opq),
+          ksub = kindFlag(opt, verb, "ksub", 16, IvfKind.Pq, IvfKind.Opq),
+          iters = opt.getOrElse("iters", "5").toInt,
+          opqIters = kindFlag(opt, verb, "opqiters", 2, IvfKind.Opq)))
 
-    case Some("ivf-query") =>
+    case Some(verb @ ("ivf-query" | "pq-query" | "opq-query")) =>
       val (opt, _) = parse(args.tail)
       val (in, corpusIn, path, out) =
         (req(opt, "in"), req(opt, "corpus"), req(opt, "path"), req(opt, "out"))
-      writeOut(graft.operators.Similarity.serveIvfIndex(path,
+      writeOut(Similarity.serveLearnedIndex(path,
           spark.read.parquet(corpusIn), spark.read.parquet(in),
           opt.getOrElse("id", "vec_id"), opt.getOrElse("embedding", "embedding"),
           k = opt.getOrElse("topk", "10").toInt,
-          nprobe = opt.getOrElse("nprobe", "2").toInt), out)
+          nprobe = opt.getOrElse("nprobe", "2").toInt,
+          // ivf-query has no --factor
+          candidateFactor = if (verb == "ivf-query") 4
+            else opt.getOrElse("factor", "4").toInt), out)
 
-    case Some("ivf-refresh") =>
+    // the drift-gated refresh: cheap below tolerance (a fit + a bounded
+    // sample probe, no write); --fitsample bounds the drift-probe's fit
+    case Some(verb @ ("ivf-refresh" | "pq-refresh" | "opq-refresh")) =>
       val (opt, _) = parse(args.tail)
       val (in, path) = (req(opt, "in"), req(opt, "path"))
-      val r = graft.operators.Similarity.refreshIvfIndex(path,
-        spark.read.parquet(in),
+      // defaults 0 = keep the index's own cell count and PQ geometry (an
+      // accidental mismatch would read as full drift and force a rebuild
+      // per cycle)
+      val r = Similarity.refreshLearnedIndex(path, spark.read.parquet(in),
         opt.getOrElse("id", "vec_id"), opt.getOrElse("embedding", "embedding"),
-        // default 0 = keep the index's own cell count (an accidental k
-        // mismatch would read as full drift and force a rebuild per cycle)
         k = opt.getOrElse("k", "0").toInt,
+        m = kindFlag(opt, verb, "m", 0, IvfKind.Pq, IvfKind.Opq),
+        ksub = kindFlag(opt, verb, "ksub", 0, IvfKind.Pq, IvfKind.Opq),
         iters = opt.getOrElse("iters", "5").toInt,
+        opqIters = kindFlag(opt, verb, "opqiters", 2, IvfKind.Opq),
         driftTolerance = opt.getOrElse("tolerance", "0.1").toDouble,
-        // 0 = full-corpus fit; a scheduler's nightly no-op cycle passes
-        // --fitsample to bound the drift-probe's k-means
         fitSampleRows = opt.getOrElse("fitsample", "0").toInt)
       // the one-line trajectory record a scheduler greps for
-      println(f"ivf-refresh: drift=${r.drift}%.4f rebuilt=${r.rebuilt}")
+      println(f"$verb: drift=${r.drift}%.4f rebuilt=${r.rebuilt}")
 
-    // the per-ingest-cycle step between refreshes: label the new vectors
+    // the per-ingest-cycle step between refreshes: encode the new vectors
     // with the index's own riding quantizer and append them under a fresh
-    // committed epoch — new data becomes servable immediately, the drift
-    // gate keeps deciding when the layout is re-learned
-    case Some("ivf-append") =>
+    // committed epoch — new data becomes servable immediately
+    case Some("ivf-append" | "pq-append" | "opq-append") =>
       val (opt, _) = parse(args.tail)
-      val (in, path) = (req(opt, "in"), req(opt, "path"))
-      graft.operators.Similarity.appendToIvfIndex(spark.read.parquet(in),
-        path, opt.getOrElse("id", "vec_id"),
+      Similarity.appendToLearnedIndex(spark.read.parquet(req(opt, "in")),
+        req(opt, "path"), opt.getOrElse("id", "vec_id"),
         opt.getOrElse("embedding", "embedding"))
 
-    case Some("ivf-compact") =>
+    case Some("ivf-compact" | "pq-compact") =>
       val (opt, _) = parse(args.tail)
-      graft.operators.Similarity.compactIvfIndex(spark, req(opt, "path"),
+      Similarity.compactLearnedIndex(spark, req(opt, "path"),
         opt.getOrElse("id", "vec_id"))
 
     // the takedown: ids (no vectors needed) tombstoned out of serving
-    // immediately; the next ivf-compact makes the removal physical
-    case Some("ivf-delete") =>
+    // immediately; the next compact makes the removal physical
+    case Some("ivf-delete" | "pq-delete") =>
       val (opt, _) = parse(args.tail)
-      graft.operators.Similarity.deleteFromIvfIndex(
-        spark.read.parquet(req(opt, "in")), req(opt, "path"),
-        opt.getOrElse("id", "vec_id"))
+      Similarity.deleteFromLearnedIndex(spark.read.parquet(req(opt, "in")),
+        req(opt, "path"), opt.getOrElse("id", "vec_id"))
 
     // continuous ANN-index maintenance: watch a landing dir of embedding
     // parquet, append each micro-batch to the served index exactly-once
     // (batch-id-keyed epochs — restarts and replays are no-ops). `--once`
-    // drains the backlog and exits; run ivf-refresh / ivf-compact on the
-    // batch cadence around a paused stream (single-writer).
-    case Some("ivf-ingest") =>
+    // drains the backlog and exits; run the refresh / compact verbs on
+    // the batch cadence around a paused stream (single-writer).
+    case Some("ivf-ingest" | "opq-ingest") =>
       val (opt, flags) = parse(args.tail)
       val (landing, path, ckpt) =
         (req(opt, "landing"), req(opt, "path"), req(opt, "checkpoint"))
@@ -760,152 +761,6 @@ object Main {
         .option("checkpointLocation", ckpt)
         .trigger(trigger(flags)).start()
       q.awaitTermination() // AvailableNow self-terminates after the drain
-
-    // learned residual IVF-PQ lifecycle: build (coarse fit + residual
-    // codebook train + epoch-committed layout), serve (partition-pruned,
-    // quantizers from the path), append (encode with the riding
-    // quantizers, fresh committed epoch)
-    case Some("pq-build") =>
-      val (opt, _) = parse(args.tail)
-      val (in, path) = (req(opt, "in"), req(opt, "path"))
-      val corpus = spark.read.parquet(in)
-      val (idCol, embCol) = (opt.getOrElse("id", "vec_id"),
-        opt.getOrElse("embedding", "embedding"))
-      val iters = opt.getOrElse("iters", "5").toInt
-      val cents = graft.operators.Similarity.kmeansFit(corpus, idCol, embCol,
-        k = opt.getOrElse("k", "32").toInt, iters = iters)
-      graft.operators.Similarity.writeLearnedPqIndex(corpus, idCol, embCol,
-        path, cents,
-        graft.operators.Similarity.trainPqResidual(corpus, idCol, embCol,
-          cents, m = opt.getOrElse("m", "8").toInt,
-          ksub = opt.getOrElse("ksub", "16").toInt, iters = iters))
-
-    // the OPQ composition's lifecycle (writeLearnedOpqIndex/serveOpqIndex
-    // /appendToOpqIndex): build trains the rotation FIRST (Ge et al.
-    // 2013 — eigenvalue allocation + Procrustes refinement), then the
-    // coarse and residual quantizers in the ROTATED space; all three
-    // ride with the index, so query/append derive everything from the
-    // path
-    case Some("opq-build") =>
-      val (opt, _) = parse(args.tail)
-      val (in, path) = (req(opt, "in"), req(opt, "path"))
-      val corpus = spark.read.parquet(in)
-      val (idCol, embCol) = (opt.getOrElse("id", "vec_id"),
-        opt.getOrElse("embedding", "embedding"))
-      val iters = opt.getOrElse("iters", "5").toInt
-      val m = opt.getOrElse("m", "8").toInt
-      val ksub = opt.getOrElse("ksub", "16").toInt
-      val (rot, _) = graft.operators.Similarity.trainOpq(corpus, idCol,
-        embCol, m = m, ksub = ksub, iters = iters,
-        opqIters = opt.getOrElse("opqiters", "2").toInt)
-      // cast staged in its own projection: rotateExpr re-evaluates its
-      // input once per output dimension (its documented contract)
-      val rotated = corpus
-        .select(org.apache.spark.sql.functions.col(idCol),
-          org.apache.spark.sql.functions.col(embCol).cast("array<double>")
-            .as("__v"))
-        .select(org.apache.spark.sql.functions.col(idCol),
-          graft.operators.Similarity.rotateExpr(
-            org.apache.spark.sql.functions.col("__v"), rot).as("__rotv"))
-      val cents = graft.operators.Similarity.kmeansFit(rotated, idCol,
-        "__rotv", k = opt.getOrElse("k", "32").toInt, iters = iters)
-      graft.operators.Similarity.writeLearnedOpqIndex(corpus, idCol, embCol,
-        path, rot, cents,
-        graft.operators.Similarity.trainPqResidual(rotated, idCol, "__rotv",
-          cents, m = m, ksub = ksub, iters = iters))
-
-    case Some("opq-query") =>
-      val (opt, _) = parse(args.tail)
-      val (in, corpusIn, path, out) =
-        (req(opt, "in"), req(opt, "corpus"), req(opt, "path"), req(opt, "out"))
-      writeOut(graft.operators.Similarity.serveOpqIndex(path,
-          spark.read.parquet(corpusIn), spark.read.parquet(in),
-          opt.getOrElse("id", "vec_id"), opt.getOrElse("embedding", "embedding"),
-          k = opt.getOrElse("topk", "10").toInt,
-          nprobe = opt.getOrElse("nprobe", "2").toInt,
-          candidateFactor = opt.getOrElse("factor", "4").toInt), out)
-
-    case Some("opq-append") =>
-      val (opt, _) = parse(args.tail)
-      graft.operators.Similarity.appendToOpqIndex(
-        spark.read.parquet(req(opt, "in")), req(opt, "path"),
-        opt.getOrElse("id", "vec_id"), opt.getOrElse("embedding", "embedding"))
-
-    case Some("opq-refresh") =>
-      val (opt, _) = parse(args.tail)
-      val r = graft.operators.Similarity.refreshOpqIndex(req(opt, "path"),
-        spark.read.parquet(req(opt, "in")),
-        opt.getOrElse("id", "vec_id"), opt.getOrElse("embedding", "embedding"),
-        k = opt.getOrElse("k", "0").toInt,
-        m = opt.getOrElse("m", "0").toInt,
-        ksub = opt.getOrElse("ksub", "0").toInt,
-        iters = opt.getOrElse("iters", "5").toInt,
-        opqIters = opt.getOrElse("opqiters", "2").toInt,
-        driftTolerance = opt.getOrElse("tolerance", "0.1").toDouble,
-        fitSampleRows = opt.getOrElse("fitsample", "0").toInt)
-      println(f"opq-refresh: drift=${r.drift}%.4f rebuilt=${r.rebuilt}")
-
-    // ivf-ingest for the OPQ composition: the same generalized sink
-    // (IvfIngest.sink over the layout family) pointed at a learned-OPQ
-    // path — streamed rows rotate + residual-encode under the index's
-    // riding quantizers, exactly-once under restarts via the batch-id
-    // epoch key
-    case Some("opq-ingest") =>
-      val (opt, flags) = parse(args.tail)
-      val (landing, path, ckpt) =
-        (req(opt, "landing"), req(opt, "path"), req(opt, "checkpoint"))
-      val schema = spark.read.parquet(landing).schema
-      val q = spark.readStream.schema(schema).parquet(landing)
-        .writeStream
-        .foreachBatch(graft.streaming.IvfIngest.sink(path,
-          opt.getOrElse("id", "vec_id"), opt.getOrElse("embedding", "embedding"),
-          graft.streaming.IvfIngest.OpqLayout))
-        .option("checkpointLocation", ckpt)
-        .trigger(trigger(flags)).start()
-      q.awaitTermination()
-
-    case Some("pq-query") =>
-      val (opt, _) = parse(args.tail)
-      val (in, corpusIn, path, out) =
-        (req(opt, "in"), req(opt, "corpus"), req(opt, "path"), req(opt, "out"))
-      writeOut(graft.operators.Similarity.servePqIndex(path,
-          spark.read.parquet(corpusIn), spark.read.parquet(in),
-          opt.getOrElse("id", "vec_id"), opt.getOrElse("embedding", "embedding"),
-          k = opt.getOrElse("topk", "10").toInt,
-          nprobe = opt.getOrElse("nprobe", "2").toInt,
-          candidateFactor = opt.getOrElse("factor", "4").toInt), out)
-
-    case Some("pq-refresh") =>
-      val (opt, _) = parse(args.tail)
-      val r = graft.operators.Similarity.refreshPqIndex(req(opt, "path"),
-        spark.read.parquet(req(opt, "in")),
-        opt.getOrElse("id", "vec_id"), opt.getOrElse("embedding", "embedding"),
-        // defaults 0 = keep the index's own cell count and PQ geometry
-        k = opt.getOrElse("k", "0").toInt,
-        m = opt.getOrElse("m", "0").toInt,
-        ksub = opt.getOrElse("ksub", "0").toInt,
-        iters = opt.getOrElse("iters", "5").toInt,
-        driftTolerance = opt.getOrElse("tolerance", "0.1").toDouble,
-        fitSampleRows = opt.getOrElse("fitsample", "0").toInt)
-      // the one-line trajectory record a scheduler greps for
-      println(f"pq-refresh: drift=${r.drift}%.4f rebuilt=${r.rebuilt}")
-
-    case Some("pq-append") =>
-      val (opt, _) = parse(args.tail)
-      graft.operators.Similarity.appendToPqIndex(
-        spark.read.parquet(req(opt, "in")), req(opt, "path"),
-        opt.getOrElse("id", "vec_id"), opt.getOrElse("embedding", "embedding"))
-
-    case Some("pq-compact") =>
-      val (opt, _) = parse(args.tail)
-      graft.operators.Similarity.compactPqIndex(spark, req(opt, "path"),
-        opt.getOrElse("id", "vec_id"))
-
-    case Some("pq-delete") =>
-      val (opt, _) = parse(args.tail)
-      graft.operators.Similarity.deleteFromPqIndex(
-        spark.read.parquet(req(opt, "in")), req(opt, "path"),
-        opt.getOrElse("id", "vec_id"))
 
     case Some("index-filter") =>
       val (opt, _) = parse(args.tail)
@@ -1034,6 +889,21 @@ object Main {
 
   /** `--once` drains the backlog and stops (AvailableNow); otherwise a
     * micro-batch every 5 seconds until killed. */
+  /** The learned-IVF kind an `ivf-`/`pq-`/`opq-` verb names. */
+  private def ivfKind(verb: String): IvfKind = verb.takeWhile(_ != '-') match {
+    case "ivf" => IvfKind.Int8
+    case "pq" => IvfKind.Pq
+    case "opq" => IvfKind.Opq
+  }
+
+  /** `--key` for a learned verb of one of `kinds`, else `default`: each
+    * verb reads exactly its own flags (the PQ geometry is the pq-/opq-
+    * verbs', the rotation's iterations the opq- verbs'). */
+  private def kindFlag(opt: Map[String, String], verb: String, key: String,
+                       default: Int, kinds: IvfKind*): Int =
+    if (kinds.contains(ivfKind(verb))) opt.getOrElse(key, default.toString).toInt
+    else default
+
   private def trigger(flags: String => Boolean): Trigger =
     if (flags("once")) Trigger.AvailableNow()
     else Trigger.ProcessingTime("5 seconds")

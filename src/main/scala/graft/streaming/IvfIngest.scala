@@ -5,23 +5,25 @@ import org.apache.spark.sql.DataFrame
 import graft.operators.Similarity
 
 /** Continuous ANN-index maintenance: a stream of new embedding rows kept
-  * servable in a [[graft.operators.Similarity.writeLearnedIvfIndex]]
-  * layout, exactly-once.
+  * servable in a learned layout
+  * ([[graft.operators.Similarity.writeLearnedIndex]], any kind),
+  * exactly-once.
   *
   * The topology is the ANN counterpart of the dedup side's lambda shape
   * ([[StreamingCurate]]): a landing stream feeds per-micro-batch
-  * [[graft.operators.Similarity.appendToIvfIndex]] calls (new rows become
-  * servable at the next batch boundary, labeled by the index's riding
-  * quantizer), while the BATCH cadence owns the layout — drift-gated
-  * [[graft.operators.Similarity.refreshIvfIndex]] re-learns it and
-  * [[graft.operators.Similarity.compactIvfIndex]] folds the per-append
-  * files back to ~one per cell. The index append cannot run in a
-  * continuous plan (it is a keyed side-effecting write, not a stream
-  * transform), so it lives in `foreachBatch` — which is AT-LEAST-once
-  * under query restarts, hence the batch-id idempotency key
-  * ([[graft.operators.Similarity.appendToIvfIndexIdempotent]]): a
-  * replayed batch reads as already-delivered and no-ops instead of
-  * serving its rows twice.
+  * [[graft.operators.Similarity.appendToLearnedIndex]] calls (new rows
+  * become servable at the next batch boundary, encoded by the index's
+  * riding quantizer — rotated first on an OPQ path, so streamed codes
+  * are indistinguishable from build-time codes), while the BATCH cadence
+  * owns the layout — drift-gated
+  * [[graft.operators.Similarity.refreshLearnedIndex]] re-learns it and
+  * [[graft.operators.Similarity.compactLearnedIndex]] folds the
+  * per-append files back to ~one per cell. The index append cannot run
+  * in a continuous plan (it is a keyed side-effecting write, not a
+  * stream transform), so it lives in `foreachBatch` — which is
+  * AT-LEAST-once under query restarts, hence the batch-id idempotency
+  * key: a replayed batch reads as already-delivered and no-ops instead
+  * of serving its rows twice.
   *
   * {{{
   * spark.readStream.schema(embSchema).parquet(landingDir)
@@ -33,51 +35,19 @@ import graft.operators.Similarity
   * }}}
   *
   * Single-writer discipline: pause the stream (or drain it) around a
-  * refresh rebuild or a compaction, exactly like batch appends.
-  *
-  * The sink generalizes over the learned-layout FAMILY ([[Layout]]):
-  * the same batch-id idempotency protocol serves the plain learned-IVF
-  * layout and the learned `OPQ,IVF,PQ` composition
-  * ([[graft.operators.Similarity.appendToOpqIndexIdempotent]] — streamed
-  * rows rotate under the index's riding rotation before encoding), so
-  * the exactly-once guarantee is a property of the protocol, not of one
-  * layout's append. */
+  * refresh rebuild or a compaction, exactly like batch appends. */
 object IvfIngest {
-
-  /** Which learned layout the sink appends into. The sink protocol is
-    * layout-agnostic (same `_epochs.key` idempotency, same empty-batch
-    * skip); only the append call differs — and each append derives its
-    * quantizers from the index path itself, so pointing a sink at the
-    * WRONG layout refuses loudly at the first batch (the loaders
-    * validate their own markers in both directions) instead of writing
-    * incompatible codes. */
-  sealed trait Layout
-  /** A [[graft.operators.Similarity.writeLearnedIvfIndex]] layout. */
-  case object IvfLayout extends Layout
-  /** A [[graft.operators.Similarity.writeLearnedOpqIndex]] composition —
-    * new rows are rotated by the index's riding rotation before
-    * residual-encoding, so streamed codes are indistinguishable from
-    * build-time codes. */
-  case object OpqLayout extends Layout
 
   /** The `foreachBatch` sink: append this micro-batch to the index under
     * its batch-id key. Empty batches are skipped without touching the
     * index (AvailableNow triggers emit them freely; an empty append would
-    * burn an epoch and a file listing for nothing). One sink over the
-    * layout family — `layout` picks the keyed append, everything else is
-    * shared. */
-  def sink(indexPath: String, idCol: String, embCol: String,
-           layout: Layout = IvfLayout): (DataFrame, Long) => Unit =
+    * burn an epoch and a file listing for nothing). */
+  def sink(indexPath: String, idCol: String,
+           embCol: String): (DataFrame, Long) => Unit =
     (batch, batchId) =>
       if (batch.limit(1).collect().nonEmpty) {
-        layout match {
-          case IvfLayout =>
-            Similarity.appendToIvfIndexIdempotent(batch, indexPath, idCol,
-              embCol, key = s"batch_$batchId")
-          case OpqLayout =>
-            Similarity.appendToOpqIndexIdempotent(batch, indexPath, idCol,
-              embCol, key = s"batch_$batchId")
-        }
+        Similarity.appendToLearnedIndex(batch, indexPath, idCol, embCol,
+          key = Some(s"batch_$batchId"))
         ()
       }
 }

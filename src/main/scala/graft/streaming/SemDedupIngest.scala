@@ -3,7 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.operators.{EpochLog, Similarity}
+import graft.operators.{EpochLog, QuantizerTables, Similarity}
 
 /** Streaming SEMANTIC-dedup gate — the ingest-time twin of
   * [[graft.operators.Similarity.semDedup]] (Abbas et al. 2023): every
@@ -16,7 +16,7 @@ import graft.operators.{EpochLog, Similarity}
   *
   * STATE is a persisted cell-partitioned kept-set layout composing the
   * learned-IVF protocol ([[graft.operators.Similarity
-  * .writeLearnedIvfIndex]]'s design): the centroid matrix rides at
+  * .writeLearnedIndex]]'s design): the centroid matrix rides at
   * `_centroids` (so batches are labeled by the SAME quantizer the kept
   * set was — the mismatch class is unconstructable), rows carry their
   * epoch `build_id` and land partitioned by `coarse`, and a directory
@@ -77,10 +77,7 @@ object SemDedupIngest {
       s"sem_dedup_ingest: $path is already initialized - re-initializing " +
         "would orphan its kept set under a live checkpoint; use a fresh " +
         "path (and replay the kept set) to change the quantizer")
-    import spark.implicits._
-    centroids.zipWithIndex.map { case (c, i) => (i, c.toSeq) }.toSeq
-      .toDF("cid", "centroid").coalesce(1)
-      .write.mode("overwrite").parquet(s"$path/_centroids")
+    QuantizerTables.Centroids.write(spark, path, centroids)
     log.overwrite()
   }
 
@@ -89,11 +86,9 @@ object SemDedupIngest {
 
   private def centroidsOf(spark: SparkSession,
                           path: String): Array[Array[Double]] = {
-    EpochLog.requireMarker(spark, s"$path/_centroids", Op,
+    EpochLog.requireMarker(spark, QuantizerTables.Centroids.at(path), Op,
       s"not an initialized gate state (or a crashed init); run $Init first")
-    val cents = spark.read.parquet(s"$path/_centroids")
-      .orderBy("cid").collect()
-      .map(r => r.getSeq[Double](r.fieldIndex("centroid")).toArray)
+    val cents = QuantizerTables.Centroids.read(spark, path)
     require(cents.nonEmpty, s"sem_dedup_ingest: empty centroid table at $path")
     cents
   }
@@ -121,7 +116,7 @@ object SemDedupIngest {
   /** Gate one batch idempotently under `key`: returns false (no-op) if
     * the key is already committed, true after landing the batch's
     * survivors as a fresh committed epoch. The exactly-once argument is
-    * [[graft.operators.Similarity.appendToIvfIndexIdempotent]]'s: a
+    * [[graft.operators.Similarity.appendToLearnedIndex]]'s keyed form: a
     * crashed attempt left only rows no committed epoch lists, and the
     * retry recomputes the SAME survivors (the kept set it gates against
     * is unchanged — orphans are invisible to it too). */

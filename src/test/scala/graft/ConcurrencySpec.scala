@@ -100,10 +100,10 @@ class ConcurrencySpec extends SparkSpec {
     val cents = Similarity.kmeansFit(base, "vec_id", "embedding", k = 2, iters = 4)
     val work = java.nio.file.Files.createTempDirectory("conc-ingest").toString
     val live = s"$work/live"
-    Similarity.writeLearnedIvfIndex(base, "vec_id", "embedding", live, cents)
+    Similarity.writeLearnedIndex(base, "vec_id", "embedding", live, Similarity.IvfQuantizer(cents))
     val queries = all.filter($"vec_id".between(40, 45))
     def serveKey(path: String): Set[(Long, Long, Int)] =
-      Similarity.serveIvfIndex(path, all, queries, "vec_id", "embedding",
+      Similarity.serveLearnedIndex(path, all, queries, "vec_id", "embedding",
           k = 3, nprobe = 2).collect()
         .map(r => (r.getLong(0), r.getLong(1), r.getInt(3))).toSet
     // the 5 committed prefix states, rebuilt serially on sibling paths
@@ -111,9 +111,9 @@ class ConcurrencySpec extends SparkSpec {
     // StreamingCurateSpec, so these are the valid snapshot answers)
     val expected: Seq[Set[(Long, Long, Int)]] = (0 to 4).map { p =>
       val dir = s"$work/prefix$p"
-      Similarity.writeLearnedIvfIndex(
+      Similarity.writeLearnedIndex(
         batches.take(p).foldLeft(base)(_ unionByName _),
-        "vec_id", "embedding", dir, cents)
+        "vec_id", "embedding", dir, Similarity.IvfQuantizer(cents))
       serveKey(dir)
     }
     val observed = new ConcurrentLinkedQueue[Set[(Long, Long, Int)]]
@@ -125,8 +125,8 @@ class ConcurrencySpec extends SparkSpec {
     }, "spec-race-server")
     val ingester = new Thread(() => {
       try batches.zipWithIndex.foreach { case (b, i) =>
-        Similarity.appendToIvfIndexIdempotent(b, live, "vec_id",
-          "embedding", key = s"race-batch-$i")
+        Similarity.appendToLearnedIndex(b, live, "vec_id",
+          "embedding", Some(s"race-batch-$i"))
         Thread.sleep(150) // give the server a window per state
       }
       catch { case e: Throwable => errs.add(e) }

@@ -241,6 +241,16 @@ class EpochLogSpec extends SparkSpec with org.scalatest.BeforeAndAfterAll {
 
   private def hashes(df: DataFrame) = Dedup.simhash(df, "doc_id", "text")
 
+  /** The learned-IVF family's three kinds, all on one code path. */
+  private val learnedKinds = Seq("ivf", "pq", "opq")
+  private def quantizer(kind: String): Similarity.IvfQuantizer = kind match {
+    case "ivf" => Similarity.IvfQuantizer(cents)
+    case "pq" => Similarity.IvfQuantizer(cents, Some(pqCb))
+    case "opq" => Similarity.IvfQuantizer(opqCents, Some(opqCb), Some(rot))
+  }
+  private def serveLearned(p: String): DataFrame =
+    Similarity.serveLearnedIndex(p, allVecs, queries, "vec_id", "embedding", 3)
+
   private val families = Seq(
     Family("banded", catalog = true, n => Seq(s"${n}_bands", s"${n}_sigs"),
       n => Dedup.writeBandedIndex(Dedup.buildDedupIndex(corpusDocs, "doc_id",
@@ -259,24 +269,13 @@ class EpochLogSpec extends SparkSpec with org.scalatest.BeforeAndAfterAll {
       n => Dedup.writeHashIndex(hashes(corpusDocs), n, buckets = 2),
       n => Dedup.pairsAgainstHashIndex(hashes(batchDocs), n),
       n => Dedup.appendToHashIndex(hashes(extraDocs), n),
-      Some(n => Dedup.compactHashIndex(spark, n))),
-    Family("ivf", catalog = false, p => Seq(p),
-      p => Similarity.writeLearnedIvfIndex(base, "vec_id", "embedding", p, cents),
-      p => Similarity.serveIvfIndex(p, allVecs, queries, "vec_id", "embedding", 3),
-      p => Similarity.appendToIvfIndex(more, p, "vec_id", "embedding"),
-      Some(p => Similarity.compactIvfIndex(spark, p, "vec_id"))),
-    Family("pq", catalog = false, p => Seq(p),
-      p => Similarity.writeLearnedPqIndex(base, "vec_id", "embedding", p,
-        cents, pqCb),
-      p => Similarity.servePqIndex(p, allVecs, queries, "vec_id", "embedding", 3),
-      p => Similarity.appendToPqIndex(more, p, "vec_id", "embedding"),
-      Some(p => Similarity.compactPqIndex(spark, p, "vec_id"))),
-    Family("opq", catalog = false, p => Seq(p),
-      p => Similarity.writeLearnedOpqIndex(base, "vec_id", "embedding", p,
-        rot, opqCents, opqCb),
-      p => Similarity.serveOpqIndex(p, allVecs, queries, "vec_id", "embedding", 3),
-      p => Similarity.appendToOpqIndex(more, p, "vec_id", "embedding"),
-      Some(p => Similarity.compactOpqIndex(spark, p, "vec_id"))),
+      Some(n => Dedup.compactHashIndex(spark, n)))) ++
+    learnedKinds.map(kind => Family(kind, catalog = false, p => Seq(p),
+      p => Similarity.writeLearnedIndex(base, "vec_id", "embedding", p,
+        quantizer(kind)),
+      serveLearned,
+      p => Similarity.appendToLearnedIndex(more, p, "vec_id", "embedding"),
+      Some(p => Similarity.compactLearnedIndex(spark, p, "vec_id")))) :+
     Family("semantic-dedup gate", catalog = false, p => Seq(p),
       p => {
         SemDedupIngest.init(spark, p, Array(Array(1.0, 0.0), Array(0.0, 1.0)))
@@ -286,7 +285,7 @@ class EpochLogSpec extends SparkSpec with org.scalatest.BeforeAndAfterAll {
       p => SemDedupIngest.keptSet(spark, p),
       p => SemDedupIngest.gateBatch(Seq((3L, Array(0.0, 1.0)))
         .toDF("vec_id", "embedding"), p, "vec_id", "embedding", 0.97, "b1"),
-      None))
+      None)
 
   private def multiset(df: DataFrame): Seq[String] =
     df.collect().map(_.toString).toSeq.sorted
@@ -365,15 +364,91 @@ class EpochLogSpec extends SparkSpec with org.scalatest.BeforeAndAfterAll {
     val p = java.nio.file.Files.createTempDirectory("graft-elog-never")
       .toString + "/ix"
     val rows = Seq((1L, Seq(1.0f, 0.0f))).toDF("vec_id", "embedding")
-    Seq[(String, String, () => Any)](
-      ("append_to_ivf_index", "writeLearnedIvfIndex", () =>
-        Similarity.appendToIvfIndexIdempotent(rows, p, "vec_id", "embedding", "k")),
-      ("append_to_opq_index", "writeLearnedOpqIndex", () =>
-        Similarity.appendToOpqIndexIdempotent(rows, p, "vec_id", "embedding", "k"))
-    ).foreach { case (op, rebuilder, call) =>
-      val m = intercept[IllegalArgumentException](call()).getMessage
-      assert(m.contains(s": $op: ") && m.contains(rebuilder), m)
-    }
+    // a never-built path has no kind yet: the one keyed append refuses
+    // for every kind alike
+    val m = intercept[IllegalArgumentException](
+      Similarity.appendToLearnedIndex(rows, p, "vec_id", "embedding",
+        Some("k"))).getMessage
+    assert(m.contains(": append_to_learned_index: ") &&
+      m.contains("writeLearnedIndex"), m)
     assert(!new java.io.File(p).exists(), "a refused append must write nothing")
+  }
+
+  // --- the learned-IVF family's crash cells, one table for its kinds ---
+  // (orphan invisibility and compaction GC are the family cells above)
+
+  private def learnedPath(tag: String): String =
+    java.nio.file.Files.createTempDirectory(s"graft-elog-$tag").toString + "/ix"
+
+  private def rmTree(f: java.io.File): Unit = {
+    Option(f.listFiles()).foreach(_.foreach(rmTree))
+    f.delete()
+  }
+
+  for (kind <- learnedKinds) {
+    test(s"$kind: a build cut after the data or after any sidecar is refused " +
+      "by serve, append and refresh, naming the rebuilder") {
+      val q = quantizer(kind)
+      // writeLearnedIndex's order: data, the sidecars, the record last
+      val sidecars = Seq("_centroids") ++ q.codebooks.map(_ => "_pq_codebooks") ++
+        q.rotation.map(_ => "_rotation")
+      for (cut <- 0 to sidecars.size) {
+        val p = learnedPath(s"cut-$kind-$cut")
+        Similarity.writeLearnedIndex(base, "vec_id", "embedding", p, q)
+        // what a crash after the data and `cut` sidecars leaves: the data
+        // overwrite deleted the rest, record included
+        (sidecars.drop(cut) :+ "_epochs").foreach(s => rmTree(new java.io.File(p, s)))
+        val files = EpochLog.directory(spark, p).dataFiles(p).toSet
+        Seq[(String, () => Any)](
+          "serve_learned_index" -> (() => serveLearned(p)),
+          "append_to_learned_index" -> (() =>
+            Similarity.appendToLearnedIndex(more, p, "vec_id", "embedding")),
+          "refresh_learned_index" -> (() =>
+            Similarity.refreshLearnedIndex(p, allVecs, "vec_id", "embedding"))
+        ).foreach { case (op, call) =>
+          val m = intercept[IllegalArgumentException](call()).getMessage
+          assert(m.contains(s"$op: ") && m.contains("writeLearnedIndex"),
+            s"cut after ${sidecars.take(cut)}: $m")
+        }
+        assert(EpochLog.directory(spark, p).dataFiles(p).toSet == files,
+          "a refused append must write nothing")
+      }
+    }
+
+    test(s"$kind: a rolled-back keyed append is invisible, and its retry " +
+      "lands exactly once") {
+      val p = learnedPath(s"retry-$kind")
+      Similarity.writeLearnedIndex(base, "vec_id", "embedding", p, quantizer(kind))
+      val served = multiset(serveLearned(p))
+      val record = spark.read.parquet(s"$p/_epochs")
+      val (rec, schema) = (record.collect(), record.schema)
+      assert(Similarity.appendToLearnedIndex(more, p, "vec_id", "embedding",
+        Some("b1")))
+      // roll the commit back: the state a crash between the rows and the
+      // commit leaves
+      spark.createDataFrame(spark.sparkContext.parallelize(rec.toSeq), schema)
+        .write.mode("overwrite").parquet(s"$p/_epochs")
+      assert(multiset(serveLearned(p)) == served,
+        "the rolled-back append must be invisible")
+      assert(Similarity.appendToLearnedIndex(more, p, "vec_id", "embedding",
+        Some("b1")), "the retry of an uncommitted key must land")
+      assert(!Similarity.appendToLearnedIndex(more, p, "vec_id", "embedding",
+        Some("b1")), "a committed key must no-op")
+      val log = EpochLog.directory(spark, p)
+      val live = log.liveRows(spark.read.parquet(p), "vec_id",
+        log.committed("op", "rebuild"))
+      assert(live.filter($"vec_id" >= 45).count() == 15 &&
+        live.groupBy("vec_id").count().filter($"count" > 1).isEmpty,
+        "each appended row must serve exactly once")
+      val rebuilt = learnedPath(s"retry-rb-$kind")
+      Similarity.writeLearnedIndex(allVecs, "vec_id", "embedding", rebuilt,
+        quantizer(kind))
+      assert(multiset(serveLearned(p)) == multiset(serveLearned(rebuilt)),
+        "the retried append must serve what a one-shot build serves")
+      // compaction raises on a duplicate id, and keys survive it
+      Similarity.compactLearnedIndex(spark, p, "vec_id")
+      assert(!Similarity.appendToLearnedIndex(more, p, "vec_id", "embedding",
+        Some("b1")), "a key committed before compaction must still no-op")
+    }
   }
 }

@@ -173,4 +173,36 @@ class FixtureRegistrySpec extends SparkSpec {
       ModelStore.Centroids.read(spark, mStore, dir, "kmeansCentroids"))
     assert(e2.getMessage.contains(s"kmeansCentroids: $mStore exists without _SUCCESS"))
   }
+
+  test("a model store stamped with another epoch, or not at all, is refit; " +
+    "a current one is read") {
+    val root = tmpRoot()
+    val dir = "/data/sf1"
+    val (rotStore, cbStore) = (s"$root/rot", s"$root/cb")
+    val persisted = Array(Array(1.0, 2.0), Array(3.0, 4.0))
+    val refit = Array(Array(5.0, 6.0))
+    Seq(rotStore, cbStore).foreach(st =>
+      ModelStore.Rotation.rows(spark, persisted, dir).coalesce(1).write.parquet(st))
+    var fits = 0
+    def load(reg: FixtureRegistry, stores: String*): Seq[Seq[Double]] =
+      reg.stored(stores: _*) { fits += 1; refit }(
+        ModelStore.Rotation.read(spark, stores.head, dir, "spec"))
+        .map(_.toSeq).toSeq
+    val current = registry(root, "e1")
+    // written before stores were stamped
+    assert(load(current, rotStore) == refit.map(_.toSeq).toSeq && fits == 1)
+    registry(root, "e0").stamp(rotStore)
+    assert(load(current, rotStore) == refit.map(_.toSeq).toSeq && fits == 2,
+      "a store of another epoch must be refit")
+    current.stamp(rotStore)
+    assert(load(current, rotStore) == persisted.map(_.toSeq).toSeq && fits == 2,
+      "a store of the current epoch must be read")
+    assert(load(registry(root, "e1", reuse = false), rotStore) ==
+      persisted.map(_.toSeq).toSeq, "model stores do not depend on layout reuse")
+    // a model held in two stores is read only when both are current
+    assert(load(current, rotStore, cbStore) == refit.map(_.toSeq).toSeq && fits == 3)
+    current.stamp(cbStore)
+    assert(load(current, rotStore, cbStore) == persisted.map(_.toSeq).toSeq &&
+      fits == 3)
+  }
 }

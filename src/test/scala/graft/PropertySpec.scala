@@ -519,40 +519,41 @@ class PropertySpec extends SparkSpec {
       val cents = Similarity.kmeansFit(df(base), "vec_id", "embedding",
         k = 3, iters = 3)
       val dir = java.nio.file.Files.createTempDirectory("ivf-prop").toString
-      Similarity.writeLearnedIvfIndex(df(base), "vec_id", "embedding", dir, cents)
+      Similarity.writeLearnedIndex(df(base), "vec_id", "embedding", dir,
+        Similarity.IvfQuantizer(cents))
       (1 to nOps).foreach { _ =>
         val roll = rnd.nextInt(10)
         if (roll < 4 || model.size < 10) {              // append fresh rows
           val batch = fresh(3 + rnd.nextInt(5))
-          Similarity.appendToIvfIndex(df(batch), dir, "vec_id", "embedding")
+          Similarity.appendToLearnedIndex(df(batch), dir, "vec_id", "embedding")
           model ++= batch
         } else if (roll < 6 && deletedPool.nonEmpty) {  // re-add a deleted id
           val id = deletedPool.remove(rnd.nextInt(deletedPool.size))
           val row = (id, vec((id % 3).toInt))
-          Similarity.appendToIvfIndex(df(Seq(row)), dir, "vec_id", "embedding")
+          Similarity.appendToLearnedIndex(df(Seq(row)), dir, "vec_id", "embedding")
           model += row
         } else if (roll < 8) {                          // delete a random subset
           val victims = rnd.shuffle(model.keys.toSeq).take(1 + rnd.nextInt(4))
-          Similarity.deleteFromIvfIndex(
+          Similarity.deleteFromLearnedIndex(
             victims.map(Tuple1(_)).toDF("vec_id"), dir, "vec_id")
           victims.foreach { id => model -= id; deletedPool += id }
         } else {                                        // compact mid-history
-          Similarity.compactIvfIndex(spark, dir, "vec_id")
+          Similarity.compactLearnedIndex(spark, dir, "vec_id")
         }
       }
       val corpus = df(model.toSeq)
       val queries = df(rnd.shuffle(model.toSeq).take(5))
-      def served(path: String) = Similarity.serveIvfIndex(path, corpus,
+      def served(path: String) = Similarity.serveLearnedIndex(path, corpus,
           queries, "vec_id", "embedding", k = 3, nprobe = 2)
         .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(3))).toSet
       val rebuilt = java.nio.file.Files.createTempDirectory("ivf-prop-rb").toString
-      Similarity.writeLearnedIvfIndex(corpus, "vec_id", "embedding",
-        rebuilt, cents)
+      Similarity.writeLearnedIndex(corpus, "vec_id", "embedding",
+        rebuilt, Similarity.IvfQuantizer(cents))
       assert(served(dir) == served(rebuilt),
         s"evolved index diverged from rebuild (seed=$seed, ops=$nOps)")
       // and the final compaction both preserves the answer and passes its
       // own uniqueness audit over the full random history
-      Similarity.compactIvfIndex(spark, dir, "vec_id")
+      Similarity.compactLearnedIndex(spark, dir, "vec_id")
       assert(served(dir) == served(rebuilt),
         s"post-compact serve diverged (seed=$seed, ops=$nOps)")
     }

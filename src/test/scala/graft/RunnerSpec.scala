@@ -535,7 +535,7 @@ class RunnerSpec extends SparkSpec {
   }
 
   test("OPQ CLI: opq-build → opq-query → opq-append — the rotated " +
-    "composition's deployment loop, wrong-loader refusal included") {
+    "composition's deployment loop, pq-query on the path ≡ opq-query") {
     import spark.implicits._
     val emb = "/root/testdata/sf0.001/embeddings.parquet"
     val ix = outDir("cli-opq-ix") + "/ix"
@@ -556,11 +556,14 @@ class RunnerSpec extends SparkSpec {
       == (0L until 6L).toSet, "every query must answer")
     assert(served.groupBy("query_id").count().select("count").as[Long]
       .collect().forall(_ == 3), "top-3 per query")
-    // an OPQ layout refuses the unrotated serving path loudly
-    intercept[IllegalArgumentException] {
-      Main.run(Seq("pq-query", "--in", queries, "--corpus", base,
-        "--path", ix, "--out", hits), spark)
-    }
+    // the path picks the quantizer: pq-query on an OPQ layout serves it
+    // rotated, row for row what opq-query serves
+    val viaPq = outDir("cli-opq-hits-pq")
+    Main.run(Seq("pq-query", "--in", queries, "--corpus", base, "--path", ix,
+      "--out", viaPq, "--topk", "3", "--nprobe", "2"), spark)
+    assert(spark.read.parquet(viaPq).collect().map(_.toString).sorted
+      .sameElements(served.collect().map(_.toString).sorted),
+      "pq-query on an OPQ path must serve exactly what opq-query serves")
     // append new ids: encoded with the riding rotation + quantizers,
     // servable immediately as rank-1 exact duplicates
     val extra = outDir("cli-opq-extra")

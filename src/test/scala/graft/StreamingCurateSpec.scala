@@ -432,7 +432,7 @@ class StreamingCurateSpec extends SparkSpec {
     val batch1 = mk(50 until 60)
     val cents = Similarity.kmeansFit(base, "vec_id", "embedding", k = 2, iters = 4)
     val dir = java.nio.file.Files.createTempDirectory("ivf-stream").toString
-    Similarity.writeLearnedIvfIndex(base, "vec_id", "embedding", dir, cents)
+    Similarity.writeLearnedIndex(base, "vec_id", "embedding", dir, Similarity.IvfQuantizer(cents))
     val in = MemoryStream[(Long, Seq[Float])]
     val q = in.toDF().toDF("vec_id", "embedding")
       .writeStream
@@ -450,18 +450,19 @@ class StreamingCurateSpec extends SparkSpec {
     val queries = all.filter($"vec_id" >= 40 && $"vec_id" < 46)
     def key(df: org.apache.spark.sql.DataFrame) = df.collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getInt(3))).toSet
-    val served = key(Similarity.serveIvfIndex(dir, all, queries,
+    val served = key(Similarity.serveLearnedIndex(dir, all, queries,
       "vec_id", "embedding", k = 3, nprobe = 2))
     val rebuilt = java.nio.file.Files.createTempDirectory("ivf-stream-rb").toString
-    Similarity.writeLearnedIvfIndex(all, "vec_id", "embedding", rebuilt, cents)
-    assert(served == key(Similarity.serveIvfIndex(rebuilt, all, queries,
+    Similarity.writeLearnedIndex(all, "vec_id", "embedding", rebuilt,
+      Similarity.IvfQuantizer(cents))
+    assert(served == key(Similarity.serveLearnedIndex(rebuilt, all, queries,
         "vec_id", "embedding", k = 3, nprobe = 2)),
       "streamed ingest must serve exactly what a batch rebuild serves")
     // the restart-retry shape: foreachBatch re-delivers a batch id with
     // the same rows — the keyed append reads as already-delivered
     IvfIngest.sink(dir, "vec_id", "embedding")(
       batch0.toDF("vec_id", "embedding"), 0L)
-    assert(key(Similarity.serveIvfIndex(dir, all, queries,
+    assert(key(Similarity.serveLearnedIndex(dir, all, queries,
         "vec_id", "embedding", k = 3, nprobe = 2)) == served,
       "a replayed batch must not change what serves")
     assert(spark.read.parquet(dir).groupBy("vec_id").count()
@@ -502,13 +503,12 @@ class StreamingCurateSpec extends SparkSpec {
     val cb = Similarity.trainPqResidual(rotated, "vec_id", "rv", cents,
       m = 2, ksub = 8, iters = 3)
     val dir = java.nio.file.Files.createTempDirectory("opq-stream").toString
-    Similarity.writeLearnedOpqIndex(base, "vec_id", "embedding", dir,
-      rot, cents, cb)
+    Similarity.writeLearnedIndex(base, "vec_id", "embedding", dir,
+      Similarity.IvfQuantizer(cents, Some(cb), Some(rot)))
     val in = MemoryStream[(Long, Seq[Float])]
     val q = in.toDF().toDF("vec_id", "embedding")
       .writeStream
-      .foreachBatch(IvfIngest.sink(dir, "vec_id", "embedding",
-        IvfIngest.OpqLayout))
+      .foreachBatch(IvfIngest.sink(dir, "vec_id", "embedding"))
       .start()
     in.addData(batch0: _*)
     q.processAllAvailable()
@@ -521,21 +521,21 @@ class StreamingCurateSpec extends SparkSpec {
     def key(df: org.apache.spark.sql.DataFrame) = df.collect()
       .map(r => (r.getAs[Long]("query_id"), r.getAs[Int]("rank"),
         r.getAs[Long]("nn_id"))).toSet
-    val served = key(Similarity.serveOpqIndex(dir, all, queries,
+    val served = key(Similarity.serveLearnedIndex(dir, all, queries,
       "vec_id", "embedding", k = 3, nprobe = 2))
     val rebuilt = java.nio.file.Files.createTempDirectory("opq-stream-rb").toString
-    Similarity.writeLearnedOpqIndex(all, "vec_id", "embedding", rebuilt,
-      rot, cents, cb)
-    assert(served == key(Similarity.serveOpqIndex(rebuilt, all, queries,
+    Similarity.writeLearnedIndex(all, "vec_id", "embedding", rebuilt,
+      Similarity.IvfQuantizer(cents, Some(cb), Some(rot)))
+    assert(served == key(Similarity.serveLearnedIndex(rebuilt, all, queries,
         "vec_id", "embedding", k = 3, nprobe = 2)),
       "streamed OPQ ingest must serve exactly what a batch rebuild serves")
     // restart-retry: a replayed batch id reads as already-delivered
-    assert(!Similarity.appendToOpqIndexIdempotent(
+    assert(!Similarity.appendToLearnedIndex(
       batch0.toDF("vec_id", "embedding"), dir, "vec_id", "embedding",
-      key = "batch_0"), "replayed key must no-op")
-    IvfIngest.sink(dir, "vec_id", "embedding", IvfIngest.OpqLayout)(
+      Some("batch_0")), "replayed key must no-op")
+    IvfIngest.sink(dir, "vec_id", "embedding")(
       batch0.toDF("vec_id", "embedding"), 0L)
-    assert(key(Similarity.serveOpqIndex(dir, all, queries,
+    assert(key(Similarity.serveLearnedIndex(dir, all, queries,
         "vec_id", "embedding", k = 3, nprobe = 2)) == served,
       "a replayed batch must not change what serves")
     assert(spark.read.parquet(dir).groupBy("vec_id").count()
@@ -543,7 +543,7 @@ class StreamingCurateSpec extends SparkSpec {
       "no row may be indexed twice")
     // empty batches never burn an epoch
     val epochs = spark.read.parquet(s"$dir/_epochs").count()
-    IvfIngest.sink(dir, "vec_id", "embedding", IvfIngest.OpqLayout)(
+    IvfIngest.sink(dir, "vec_id", "embedding")(
       base.filter($"vec_id" < 0), 99L)
     assert(spark.read.parquet(s"$dir/_epochs").count() == epochs,
       "an empty batch must not commit an epoch")

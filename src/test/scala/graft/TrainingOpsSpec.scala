@@ -631,7 +631,7 @@ class TrainingOpsSpec extends SparkSpec {
   }
 
   test("learned OPQ layout: identity rotation ≡ the plain learned-PQ " +
-    "layout bit-for-bit, wrong-loader refusals both ways, appends grow " +
+    "layout bit-for-bit, the path picks the quantizer kind, appends grow " +
     "the index with the riding quantizers") {
     val real = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
     val d = 64
@@ -647,39 +647,38 @@ class TrainingOpsSpec extends SparkSpec {
     // OPQ layout must serve bit-identically to the plain learned-PQ
     // layout built from the same quantizers (pins rotation application,
     // probe labeling, residual ADC and the rescore join end to end)
-    Similarity.writeLearnedOpqIndex(real, "vec_id", "embedding", opqPath,
-      eye, cents, cb)
-    Similarity.writeLearnedPqIndex(real, "vec_id", "embedding", pqPath,
-      cents, cb)
+    Similarity.writeLearnedIndex(real, "vec_id", "embedding", opqPath,
+      Similarity.IvfQuantizer(cents, Some(cb), Some(eye)))
+    Similarity.writeLearnedIndex(real, "vec_id", "embedding", pqPath,
+      Similarity.IvfQuantizer(cents, Some(cb)))
     val queries = real.filter($"vec_id" < 20)
     def rows(df: org.apache.spark.sql.DataFrame) = df.collect()
       .map(r => (r.getAs[Long]("query_id"), r.getAs[Int]("rank"),
         r.getAs[Long]("nn_id"), r.getAs[Double]("cosine"))).sortBy(t => (t._1, t._2))
-    val viaOpq = rows(Similarity.serveOpqIndex(opqPath, real, queries,
+    val viaOpq = rows(Similarity.serveLearnedIndex(opqPath, real, queries,
       "vec_id", "embedding", k = 3, nprobe = 2))
-    val viaPq = rows(Similarity.servePqIndex(pqPath, real, queries,
+    val viaPq = rows(Similarity.serveLearnedIndex(pqPath, real, queries,
       "vec_id", "embedding", k = 3, nprobe = 2))
     assert(viaOpq.sameElements(viaPq),
       "identity-rotation OPQ layout must serve bit-identically to plain PQ")
-    // wrong-loader refusals, BOTH directions — the quantizer-mismatch
-    // class must be unconstructable: a plain layout has no rotation, an
-    // OPQ layout's codes are meaningless unrotated
-    intercept[IllegalArgumentException] {
-      Similarity.serveOpqIndex(pqPath, real, queries, "vec_id", "embedding", 3)
-    }
-    intercept[IllegalArgumentException] {
-      Similarity.servePqIndex(opqPath, real, queries, "vec_id", "embedding", 3)
-    }
+    // the path picks the quantizer, so the quantizer-mismatch class is
+    // unconstructable: a plain layout loads without a rotation, an OPQ
+    // layout with its own, and no caller chooses which
+    val loadedPq = Similarity.loadLearnedIndex(spark, pqPath)
+    val loadedOpq = Similarity.loadLearnedIndex(spark, opqPath)
+    assert(loadedPq.kind == Similarity.IvfKind.Pq && loadedPq.rotation.isEmpty)
+    assert(loadedOpq.kind == Similarity.IvfKind.Opq &&
+      loadedOpq.rotation.get.map(_.toSeq).toSeq == eye.map(_.toSeq).toSeq)
     // append with the riding quantizers: a clone of vector 0 under a new
     // id must become vec 0's rank-1 neighbor (cosine 1)
     val v0 = real.filter($"vec_id" === 0)
       .select($"embedding").collect()(0).getSeq[Float](0)
-    Similarity.appendToOpqIndex(
+    Similarity.appendToLearnedIndex(
       Seq((90001L, v0)).toDF("vec_id", "embedding"), opqPath,
       "vec_id", "embedding")
     val corpusPlus = real.select($"vec_id", $"embedding")
       .unionByName(Seq((90001L, v0)).toDF("vec_id", "embedding"))
-    val after = rows(Similarity.serveOpqIndex(opqPath, corpusPlus,
+    val after = rows(Similarity.serveLearnedIndex(opqPath, corpusPlus,
       queries.filter($"vec_id" === 0), "vec_id", "embedding", k = 1, nprobe = 2))
     assert(after.head._3 == 90001L && math.abs(after.head._4 - 1.0) < 1e-9,
       s"appended clone must serve as the exact nearest neighbor: ${after.toSeq}")
@@ -778,12 +777,12 @@ class TrainingOpsSpec extends SparkSpec {
     val newRows = real.filter($"vec_id" % 2 =!= 0)
     val path = java.nio.file.Files
       .createTempDirectory("graft-pq-layout").toString + "/ix"
-    Similarity.writeLearnedPqIndex(oldRows, "vec_id", "embedding", path,
-      cents, cb)
+    Similarity.writeLearnedIndex(oldRows, "vec_id", "embedding", path,
+      Similarity.IvfQuantizer(cents, Some(cb)))
     // pruned, epoch-filtered, quantizers-from-the-path serving must be
     // BIT-identical to the inline frame path over the same rows (codes
     // are integers; pruning is exact — the ADC join is on the cell)
-    val served = asMap(Similarity.servePqIndex(path, real, queries,
+    val served = asMap(Similarity.serveLearnedIndex(path, real, queries,
       "vec_id", "embedding", 3, nprobe = 2, candidateFactor = 4))
     val inline = asMap(Similarity.ivfTopKPqResidual(
       Similarity.buildPqIndexResidual(oldRows, "vec_id", "embedding",
@@ -794,8 +793,8 @@ class TrainingOpsSpec extends SparkSpec {
       "layout serving must be bit-identical to the inline residual path")
     // append the other half under a fresh committed epoch: serving now
     // answers exactly as an inline index over the FULL corpus
-    Similarity.appendToPqIndex(newRows, path, "vec_id", "embedding")
-    val servedAll = asMap(Similarity.servePqIndex(path, real, queries,
+    Similarity.appendToLearnedIndex(newRows, path, "vec_id", "embedding")
+    val servedAll = asMap(Similarity.serveLearnedIndex(path, real, queries,
       "vec_id", "embedding", 3, nprobe = 2, candidateFactor = 4))
     val inlineAll = asMap(Similarity.ivfTopKPqResidual(
       Similarity.buildPqIndexResidual(real, "vec_id", "embedding", cents, cb),
@@ -811,21 +810,21 @@ class TrainingOpsSpec extends SparkSpec {
       .withColumn("build_id", lit(424242L))
       .repartition(col("coarse"))
       .write.mode("append").partitionBy("coarse").parquet(path)
-    assert(asMap(Similarity.servePqIndex(path, real, queries, "vec_id",
+    assert(asMap(Similarity.serveLearnedIndex(path, real, queries, "vec_id",
         "embedding", 3, nprobe = 2, candidateFactor = 4)) == servedAll,
       "orphan rows from a crashed append must not serve")
     // takedown: a tombstoned id stops serving as a neighbor immediately
     val victim = servedAll((0L, 1))._1
-    Similarity.deleteFromPqIndex(Seq(victim).toDF("vec_id"), path, "vec_id")
-    val afterDelete = asMap(Similarity.servePqIndex(path, real, queries,
+    Similarity.deleteFromLearnedIndex(Seq(victim).toDF("vec_id"), path, "vec_id")
+    val afterDelete = asMap(Similarity.serveLearnedIndex(path, real, queries,
       "vec_id", "embedding", 3, nprobe = 2, candidateFactor = 4))
     assert(!afterDelete.values.exists(_._1 == victim),
       s"tombstoned id $victim must not serve as a neighbor")
     // compaction: answers unchanged, the deletion and the orphans become
     // PHYSICAL (no uncommitted build_id, no tombstoned/orphan id left in
     // any data file), the quantizer sidecars survive
-    Similarity.compactPqIndex(spark, path, "vec_id")
-    assert(asMap(Similarity.servePqIndex(path, real, queries, "vec_id",
+    Similarity.compactLearnedIndex(spark, path, "vec_id")
+    assert(asMap(Similarity.serveLearnedIndex(path, real, queries, "vec_id",
         "embedding", 3, nprobe = 2, candidateFactor = 4)) == afterDelete,
       "serve after compaction must equal serve before")
     val survivors = spark.read.parquet(path)
@@ -836,7 +835,7 @@ class TrainingOpsSpec extends SparkSpec {
     // a half-committed layout refuses loudly: kill the codebook marker
     assert(new java.io.File(s"$path/_pq_codebooks/_SUCCESS").delete())
     val e = intercept[Exception] {
-      Similarity.servePqIndex(path, real, queries, "vec_id", "embedding", 3) }
+      Similarity.serveLearnedIndex(path, real, queries, "vec_id", "embedding", 3) }
     assert(messages(e).contains("residual codebooks did not"), messages(e))
   }
 
@@ -856,9 +855,10 @@ class TrainingOpsSpec extends SparkSpec {
       m = 4, ksub = 8, iters = 3)
     val dir = java.nio.file.Files
       .createTempDirectory("graft-pq-refresh").toString + "/ix"
-    Similarity.writeLearnedPqIndex(corpus, "vec_id", "embedding", dir, cents, cb)
+    Similarity.writeLearnedIndex(corpus, "vec_id", "embedding", dir,
+      Similarity.IvfQuantizer(cents, Some(cb)))
     // unchanged corpus: deterministic refit ⇒ zero drift, no rewrite
-    val r1 = Similarity.refreshPqIndex(dir, corpus, "vec_id", "embedding",
+    val r1 = Similarity.refreshLearnedIndex(dir, corpus, "vec_id", "embedding",
       iters = 4, driftTolerance = 0.05)
     assert(r1 == Similarity.IvfRefresh(0.0, rebuilt = false),
       s"an unchanged corpus must read zero drift and skip the rebuild: $r1")
@@ -868,20 +868,21 @@ class TrainingOpsSpec extends SparkSpec {
       val c = if (i % 3 == 2 && i < 30) centers(0) else centers(i % 3)
       (i.toLong, cloud(c))
     }.toDF("vec_id", "embedding")
-    val r2 = Similarity.refreshPqIndex(dir, shifted, "vec_id", "embedding",
+    val r2 = Similarity.refreshLearnedIndex(dir, shifted, "vec_id", "embedding",
       iters = 4, driftTolerance = 0.05)
     assert(r2.rebuilt && r2.drift >= 0.1,
       s"10/90 rows moved cells - drift must cross the 0.05 tolerance: $r2")
     // the rebuild kept the index's own PQ geometry and re-encoded: serving
     // is bit-identical to an inline residual index at the refit quantizers
-    val (newCents, newCb) = Similarity.loadPqQuantizers(spark, dir)
+    val reloaded = Similarity.loadLearnedIndex(spark, dir)
+    val (newCents, newCb) = (reloaded.centroids, reloaded.codebooks.get)
     assert(newCb.codebooks.length == 4 && newCb.codebooks.head.length == 8,
       "refresh must keep the index's own m/ksub geometry")
     val queries = shifted.filter($"vec_id" < 6)
     def asMap(df: org.apache.spark.sql.DataFrame) = df.collect()
       .map(r => (r.getAs[Long]("query_id"), r.getAs[Int]("rank")) ->
         ((r.getAs[Long]("nn_id"), r.getAs[Double]("cosine")))).toMap
-    val served = asMap(Similarity.servePqIndex(dir, shifted, queries,
+    val served = asMap(Similarity.serveLearnedIndex(dir, shifted, queries,
       "vec_id", "embedding", 3, nprobe = 2, candidateFactor = 4))
     val inline = asMap(Similarity.ivfTopKPqResidual(
       Similarity.buildPqIndexResidual(shifted, "vec_id", "embedding",
@@ -891,13 +892,13 @@ class TrainingOpsSpec extends SparkSpec {
     assert(served == inline,
       "post-refresh serving must answer from the refit quantizers, re-encoded")
     // the rebuild converged: a second refresh on the same corpus is clean
-    val r3 = Similarity.refreshPqIndex(dir, shifted, "vec_id", "embedding",
+    val r3 = Similarity.refreshLearnedIndex(dir, shifted, "vec_id", "embedding",
       iters = 4, driftTolerance = 0.05)
     assert(r3 == Similarity.IvfRefresh(0.0, rebuilt = false),
       s"refresh after rebuild must be a no-op: $r3")
-    intercept[IllegalArgumentException](Similarity.refreshPqIndex(dir,
+    intercept[IllegalArgumentException](Similarity.refreshLearnedIndex(dir,
       shifted, "vec_id", "embedding", driftTolerance = 1.5))
-    intercept[IllegalArgumentException](Similarity.refreshPqIndex(dir,
+    intercept[IllegalArgumentException](Similarity.refreshLearnedIndex(dir,
       shifted, "vec_id", "embedding", m = -1))
   }
 
@@ -917,7 +918,7 @@ class TrainingOpsSpec extends SparkSpec {
     val corpus = spark.read.parquet(s"$tmp/corpus")
     val cents = Similarity.kmeansFit(corpus, "vec_id", "embedding", k = 3, iters = 4)
     val dir = s"$tmp/ix"
-    Similarity.writeLearnedIvfIndex(corpus, "vec_id", "embedding", dir, cents)
+    Similarity.writeLearnedIndex(corpus, "vec_id", "embedding", dir, Similarity.IvfQuantizer(cents))
 
     def recordsRead(run: => Unit): Long = {
       import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
@@ -946,12 +947,12 @@ class TrainingOpsSpec extends SparkSpec {
     //    sampled fit pays one sampling pass then iterates on the
     //    bounded materialized rows — decisively fewer records at iters=8
     val fullReads = recordsRead {
-      val r = Similarity.refreshIvfIndex(dir, corpus, "vec_id", "embedding",
+      val r = Similarity.refreshLearnedIndex(dir, corpus, "vec_id", "embedding",
         iters = 8, driftTolerance = 0.05)
       assert(r == Similarity.IvfRefresh(0.0, rebuilt = false), s"$r")
     }
     val sampledReads = recordsRead {
-      val r = Similarity.refreshIvfIndex(dir, corpus, "vec_id", "embedding",
+      val r = Similarity.refreshLearnedIndex(dir, corpus, "vec_id", "embedding",
         iters = 8, driftTolerance = 0.05, fitSampleRows = 30)
       assert(r == Similarity.IvfRefresh(0.0, rebuilt = false),
         s"well-separated clouds must read zero drift under the sampled fit: $r")
@@ -967,26 +968,26 @@ class TrainingOpsSpec extends SparkSpec {
       (i.toLong, cloud(c))
     }.toDF("vec_id", "embedding").write.parquet(s"$tmp/shifted")
     val shifted = spark.read.parquet(s"$tmp/shifted")
-    val r2 = Similarity.refreshIvfIndex(dir, shifted, "vec_id", "embedding",
+    val r2 = Similarity.refreshLearnedIndex(dir, shifted, "vec_id", "embedding",
       iters = 4, driftTolerance = 0.05, fitSampleRows = 30)
     assert(r2.rebuilt && r2.drift >= 0.1,
       s"the sampled probe must still flag the 10/90 migration: $r2")
-    assert(Similarity.loadIvfCentroids(spark, dir).map(_.toSeq).toSeq ==
+    assert(Similarity.loadLearnedIndex(spark, dir).centroids.map(_.toSeq).toSeq ==
       Similarity.kmeansFit(shifted, "vec_id", "embedding", k = 3, iters = 4)
         .map(_.toSeq).toSeq,
       "a triggered rebuild must commit the full-corpus fit")
     // 3) post-rebuild the sampled cycle is clean again
-    val r3 = Similarity.refreshIvfIndex(dir, shifted, "vec_id", "embedding",
+    val r3 = Similarity.refreshLearnedIndex(dir, shifted, "vec_id", "embedding",
       iters = 4, driftTolerance = 0.05, fitSampleRows = 30)
     assert(r3 == Similarity.IvfRefresh(0.0, rebuilt = false), s"$r3")
     // 4) the dial exists on the whole refresh family: sampled no-ops on
     //    the residual-PQ and OPQ layouts read clean too
     val cb = Similarity.trainPqResidual(shifted, "vec_id", "embedding",
-      Similarity.loadIvfCentroids(spark, dir), m = 2, ksub = 8, iters = 3)
+      Similarity.loadLearnedIndex(spark, dir).centroids, m = 2, ksub = 8, iters = 3)
     val pqDir = s"$tmp/pq"
-    Similarity.writeLearnedPqIndex(shifted, "vec_id", "embedding", pqDir,
-      Similarity.loadIvfCentroids(spark, dir), cb)
-    val rPq = Similarity.refreshPqIndex(pqDir, shifted, "vec_id", "embedding",
+    Similarity.writeLearnedIndex(shifted, "vec_id", "embedding", pqDir,
+      Similarity.IvfQuantizer(Similarity.loadLearnedIndex(spark, dir).centroids, Some(cb)))
+    val rPq = Similarity.refreshLearnedIndex(pqDir, shifted, "vec_id", "embedding",
       iters = 4, driftTolerance = 0.05, fitSampleRows = 30)
     assert(rPq == Similarity.IvfRefresh(0.0, rebuilt = false), s"$rPq")
     val d = 6
@@ -998,12 +999,12 @@ class TrainingOpsSpec extends SparkSpec {
     val rotCb = Similarity.trainPqResidual(rotated, "vec_id", "rv", rotCents,
       m = 2, ksub = 8, iters = 3)
     val opqDir = s"$tmp/opq"
-    Similarity.writeLearnedOpqIndex(shifted, "vec_id", "embedding", opqDir,
-      rot, rotCents, rotCb)
-    val rOpq = Similarity.refreshOpqIndex(opqDir, shifted, "vec_id", "embedding",
+    Similarity.writeLearnedIndex(shifted, "vec_id", "embedding", opqDir,
+      Similarity.IvfQuantizer(rotCents, Some(rotCb), Some(rot)))
+    val rOpq = Similarity.refreshLearnedIndex(opqDir, shifted, "vec_id", "embedding",
       iters = 4, driftTolerance = 0.05, fitSampleRows = 30)
     assert(rOpq == Similarity.IvfRefresh(0.0, rebuilt = false), s"$rOpq")
-    intercept[IllegalArgumentException](Similarity.refreshIvfIndex(dir,
+    intercept[IllegalArgumentException](Similarity.refreshLearnedIndex(dir,
       shifted, "vec_id", "embedding", fitSampleRows = -1))
   }
 
@@ -1793,9 +1794,9 @@ class TrainingOpsSpec extends SparkSpec {
       .toDF("vec_id", "embedding")
     val cents = Similarity.kmeansFit(corpus, "vec_id", "embedding", k = 3, iters = 4)
     val dir = java.nio.file.Files.createTempDirectory("ivf-learned").toString
-    Similarity.writeLearnedIvfIndex(corpus, "vec_id", "embedding", dir, cents)
+    Similarity.writeLearnedIndex(corpus, "vec_id", "embedding", dir, Similarity.IvfQuantizer(cents))
     // the quantizer round-trips exactly (doubles, parquet, cid order)
-    assert(Similarity.loadIvfCentroids(spark, dir).map(_.toSeq).toSeq ==
+    assert(Similarity.loadLearnedIndex(spark, dir).centroids.map(_.toSeq).toSeq ==
       cents.map(_.toSeq).toSeq)
     // ...and the data read never sees the riding _centroids/_epochs
     // directories — only the data columns plus the epoch stamp
@@ -1805,7 +1806,7 @@ class TrainingOpsSpec extends SparkSpec {
     val queries = corpus.filter($"vec_id" < 9)
     def key(df: org.apache.spark.sql.DataFrame) = df.collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getInt(3))).toSet
-    val served = Similarity.serveIvfIndex(dir, corpus, queries,
+    val served = Similarity.serveLearnedIndex(dir, corpus, queries,
       "vec_id", "embedding", k = 3, nprobe = 2)
     val threaded = Similarity.ivfTopKQuantized(
       Similarity.buildQuantizedIndex(
@@ -1820,7 +1821,7 @@ class TrainingOpsSpec extends SparkSpec {
     val marker = new java.io.File(dir, "_SUCCESS")
     val mtime = marker.lastModified()
     // no k passed: the default derives it from the riding quantizer
-    val r1 = Similarity.refreshIvfIndex(dir, corpus, "vec_id", "embedding",
+    val r1 = Similarity.refreshLearnedIndex(dir, corpus, "vec_id", "embedding",
       iters = 4, driftTolerance = 0.05)
     assert(r1 == Similarity.IvfRefresh(0.0, rebuilt = false),
       s"an unchanged corpus must read zero drift and skip the rebuild: $r1")
@@ -1833,18 +1834,18 @@ class TrainingOpsSpec extends SparkSpec {
       val c = if (i % 3 == 2 && i < 30) centers(0) else centers(i % 3)
       (i.toLong, cloud(c))
     }.toDF("vec_id", "embedding")
-    val r2 = Similarity.refreshIvfIndex(dir, shifted, "vec_id", "embedding",
+    val r2 = Similarity.refreshLearnedIndex(dir, shifted, "vec_id", "embedding",
       k = 3, iters = 4, driftTolerance = 0.05)
     assert(r2.rebuilt && r2.drift >= 0.1,
       s"10/90 rows moved cells - drift must cross the 0.05 tolerance: $r2")
     // the rebuild converged: a second refresh on the same corpus is clean,
     // and serving now answers from the NEW quantizer
-    val r3 = Similarity.refreshIvfIndex(dir, shifted, "vec_id", "embedding",
+    val r3 = Similarity.refreshLearnedIndex(dir, shifted, "vec_id", "embedding",
       k = 3, iters = 4, driftTolerance = 0.05)
     assert(r3 == Similarity.IvfRefresh(0.0, rebuilt = false),
       s"refresh after rebuild must be a no-op: $r3")
     val cents2 = Similarity.kmeansFit(shifted, "vec_id", "embedding", k = 3, iters = 4)
-    assert(key(Similarity.serveIvfIndex(dir, shifted, shifted.filter($"vec_id" < 9),
+    assert(key(Similarity.serveLearnedIndex(dir, shifted, shifted.filter($"vec_id" < 9),
         "vec_id", "embedding", k = 3, nprobe = 2)) ==
       key(Similarity.ivfTopKQuantized(
         Similarity.buildQuantizedIndex(
@@ -1861,12 +1862,12 @@ class TrainingOpsSpec extends SparkSpec {
     assert(qMarker.exists(), "fixture assumes the committer's marker")
     assert(qMarker.delete())
     Seq(
-      () => Similarity.loadIvfCentroids(spark, dir),
-      () => Similarity.serveIvfIndex(dir, shifted, queries, "vec_id", "embedding", 3),
-      () => Similarity.refreshIvfIndex(dir, shifted, "vec_id", "embedding", 3)
+      () => Similarity.loadLearnedIndex(spark, dir).centroids,
+      () => Similarity.serveLearnedIndex(dir, shifted, queries, "vec_id", "embedding", 3),
+      () => Similarity.refreshLearnedIndex(dir, shifted, "vec_id", "embedding", 3)
     ).foreach { f =>
       assert(msgChain(intercept[IllegalArgumentException](f()))
-        .contains("writeLearnedIvfIndex"), "half-committed index must refuse")
+        .contains("writeLearnedIndex"), "half-committed index must refuse")
     }
     // an index written WITHOUT a riding quantizer refuses the
     // self-contained serve and names the caller-managed alternative
@@ -1877,7 +1878,7 @@ class TrainingOpsSpec extends SparkSpec {
         "vec_id", "embedding", "coarse"),
       plain, "coarse")
     assert(msgChain(intercept[IllegalArgumentException](
-        Similarity.serveIvfIndex(plain, corpus, queries, "vec_id", "embedding", 3)))
+        Similarity.serveLearnedIndex(plain, corpus, queries, "vec_id", "embedding", 3)))
       .contains("ivfTopKQuantizedPruned"))
   }
 
@@ -1898,7 +1899,7 @@ class TrainingOpsSpec extends SparkSpec {
     val all = base.union(batch1).union(batch2)
     val cents = Similarity.kmeansFit(base, "vec_id", "embedding", k = 3, iters = 4)
     val dir = java.nio.file.Files.createTempDirectory("ivf-ingest").toString
-    Similarity.writeLearnedIvfIndex(base, "vec_id", "embedding", dir, cents)
+    Similarity.writeLearnedIndex(base, "vec_id", "embedding", dir, Similarity.IvfQuantizer(cents))
     val queries = base.filter($"vec_id" < 9)
     def key(df: org.apache.spark.sql.DataFrame) = df.collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getInt(3))).toSet
@@ -1908,20 +1909,21 @@ class TrainingOpsSpec extends SparkSpec {
           !f.getName.startsWith("."))
     // THE GAP this lifecycle closes: rows arriving after the build are
     // unservable — candidates come from the index, not the corpus arg
-    val before = key(Similarity.serveIvfIndex(dir, all, queries,
+    val before = key(Similarity.serveLearnedIndex(dir, all, queries,
       "vec_id", "embedding", k = 3, nprobe = 2))
     assert(before.forall(_._2 < 60),
       "un-appended rows must not be served as neighbors")
-    Similarity.appendToIvfIndex(batch1, dir, "vec_id", "embedding")
-    Similarity.appendToIvfIndex(batch2, dir, "vec_id", "embedding")
+    Similarity.appendToLearnedIndex(batch1, dir, "vec_id", "embedding")
+    Similarity.appendToLearnedIndex(batch2, dir, "vec_id", "embedding")
     // serve-after-appends ≡ a full rebuild over the union with the SAME
     // quantizer (labels and codes are deterministic per vector, so the
     // two layouts hold identical rows)
     val rebuilt = java.nio.file.Files.createTempDirectory("ivf-rebuilt").toString
-    Similarity.writeLearnedIvfIndex(all, "vec_id", "embedding", rebuilt, cents)
-    val after = key(Similarity.serveIvfIndex(dir, all, queries,
+    Similarity.writeLearnedIndex(all, "vec_id", "embedding", rebuilt,
+      Similarity.IvfQuantizer(cents))
+    val after = key(Similarity.serveLearnedIndex(dir, all, queries,
       "vec_id", "embedding", k = 3, nprobe = 2))
-    assert(after == key(Similarity.serveIvfIndex(rebuilt, all, queries,
+    assert(after == key(Similarity.serveLearnedIndex(rebuilt, all, queries,
       "vec_id", "embedding", k = 3, nprobe = 2)),
       "serve after N appends must equal serve after a same-centroid rebuild")
     assert(after.exists(_._2 >= 60), "appended rows must now be servable")
@@ -1931,7 +1933,7 @@ class TrainingOpsSpec extends SparkSpec {
     // the committed-epoch predicate rides the SCAN, alongside the cell
     // partition filter — row-group stats skip uncommitted files; no
     // post-scan filter stage, no extra shuffle
-    val planned = Similarity.serveIvfIndex(dir, all, queries,
+    val planned = Similarity.serveLearnedIndex(dir, all, queries,
       "vec_id", "embedding", k = 3, nprobe = 2)
     planned.count()
     val phys = planned.queryExecution.executedPlan.toString
@@ -1948,13 +1950,13 @@ class TrainingOpsSpec extends SparkSpec {
       .withColumn("build_id", org.apache.spark.sql.functions.lit(123L))
       .repartition(org.apache.spark.sql.functions.col("coarse"))
       .write.mode("append").partitionBy("coarse").parquet(dir)
-    assert(key(Similarity.serveIvfIndex(dir, all, queries,
+    assert(key(Similarity.serveLearnedIndex(dir, all, queries,
         "vec_id", "embedding", k = 3, nprobe = 2)) == after,
       "a crashed append's orphan rows must not serve")
     // compaction: merges the committed epochs, GCs the orphans, restores
     // ~one file per cell, and serving is unchanged
-    Similarity.compactIvfIndex(spark, dir, "vec_id")
-    assert(key(Similarity.serveIvfIndex(dir, all, queries,
+    Similarity.compactLearnedIndex(spark, dir, "vec_id")
+    assert(key(Similarity.serveLearnedIndex(dir, all, queries,
         "vec_id", "embedding", k = 3, nprobe = 2)) == after,
       "serve after compaction must equal serve before")
     assert(spark.read.parquet(s"$dir/_epochs").count() == 1,
@@ -1966,9 +1968,9 @@ class TrainingOpsSpec extends SparkSpec {
     // the id-uniqueness precondition is enforced at compaction, where the
     // full read is already paid: a re-appended id raises instead of
     // serving two versions forever
-    Similarity.appendToIvfIndex(batch1.limit(3), dir, "vec_id", "embedding")
+    Similarity.appendToLearnedIndex(batch1.limit(3), dir, "vec_id", "embedding")
     assert(msgChain(intercept[IllegalArgumentException](
-        Similarity.compactIvfIndex(spark, dir, "vec_id")))
+        Similarity.compactLearnedIndex(spark, dir, "vec_id")))
       .contains("duplicate id"))
     // append refuses a path with no commit record (plain writeIvfIndex
     // layout) before writing anything into it
@@ -1979,8 +1981,8 @@ class TrainingOpsSpec extends SparkSpec {
         "vec_id", "embedding", "coarse"),
       plain, "coarse")
     assert(msgChain(intercept[IllegalArgumentException](
-        Similarity.appendToIvfIndex(batch1, plain, "vec_id", "embedding")))
-      .contains("writeLearnedIvfIndex"))
+        Similarity.appendToLearnedIndex(batch1, plain, "vec_id", "embedding")))
+      .contains("writeLearnedIndex"))
   }
 
   test("deleteFromIvfIndex: tombstoned rows stop serving, re-append wins, " +
@@ -1994,10 +1996,10 @@ class TrainingOpsSpec extends SparkSpec {
     val base = baseRows.toDF("vec_id", "embedding")
     val cents = Similarity.kmeansFit(base, "vec_id", "embedding", k = 3, iters = 4)
     val dir = java.nio.file.Files.createTempDirectory("ivf-del").toString
-    Similarity.writeLearnedIvfIndex(base, "vec_id", "embedding", dir, cents)
+    Similarity.writeLearnedIndex(base, "vec_id", "embedding", dir, Similarity.IvfQuantizer(cents))
     val queries = base.filter($"vec_id" < 9)
     def served(corpus: org.apache.spark.sql.DataFrame): Set[Long] =
-      Similarity.serveIvfIndex(dir, corpus, queries,
+      Similarity.serveLearnedIndex(dir, corpus, queries,
           "vec_id", "embedding", k = 3, nprobe = 2)
         .select("nn_id").collect().map(_.getLong(0)).toSet
     // the takedown: ids 30..39 must stop appearing as neighbors, and the
@@ -2005,15 +2007,15 @@ class TrainingOpsSpec extends SparkSpec {
     val victims = base.filter($"vec_id" >= 30 && $"vec_id" < 40)
     assert(served(base).exists(id => id >= 30 && id < 40),
       "fixture: victims should be serving before the delete")
-    Similarity.deleteFromIvfIndex(victims.select("vec_id"), dir, "vec_id")
+    Similarity.deleteFromLearnedIndex(victims.select("vec_id"), dir, "vec_id")
     val afterDelete = served(base)
     assert(!afterDelete.exists(id => id >= 30 && id < 40),
       "tombstoned rows must not serve")
     val survivors = base.filter($"vec_id" < 30 || $"vec_id" >= 40)
     val rebuilt = java.nio.file.Files.createTempDirectory("ivf-del-rb").toString
-    Similarity.writeLearnedIvfIndex(survivors, "vec_id", "embedding",
-      rebuilt, cents)
-    assert(afterDelete == Similarity.serveIvfIndex(rebuilt, base, queries,
+    Similarity.writeLearnedIndex(survivors, "vec_id", "embedding",
+      rebuilt, Similarity.IvfQuantizer(cents))
+    assert(afterDelete == Similarity.serveLearnedIndex(rebuilt, base, queries,
         "vec_id", "embedding", 3, 2)
         .select("nn_id").collect().map(_.getLong(0)).toSet,
       "serve-after-delete must equal a rebuild without the victims")
@@ -2031,21 +2033,21 @@ class TrainingOpsSpec extends SparkSpec {
     val readd = ((30L, baseRows(0)._2.map(_ + 0.01f)) +:
         (31 until 33).map(i => (i.toLong, cloud(centers(i % 3)))))
       .toDF("vec_id", "embedding")
-    Similarity.appendToIvfIndex(readd, dir, "vec_id", "embedding")
+    Similarity.appendToLearnedIndex(readd, dir, "vec_id", "embedding")
     val corpusReadd = survivors.union(readd)
     val afterReadd = served(corpusReadd)
     assert(afterReadd.contains(30L), "a re-appended id must serve again")
     val rebuiltReadd = java.nio.file.Files
       .createTempDirectory("ivf-del-rb2").toString
-    Similarity.writeLearnedIvfIndex(corpusReadd, "vec_id", "embedding",
-      rebuiltReadd, cents)
-    assert(afterReadd == Similarity.serveIvfIndex(rebuiltReadd, corpusReadd,
+    Similarity.writeLearnedIndex(corpusReadd, "vec_id", "embedding",
+      rebuiltReadd, Similarity.IvfQuantizer(cents))
+    assert(afterReadd == Similarity.serveLearnedIndex(rebuiltReadd, corpusReadd,
         queries, "vec_id", "embedding", 3, 2)
         .select("nn_id").collect().map(_.getLong(0)).toSet,
       "delete + re-append must equal a rebuild over the final corpus")
     // compaction: deletion becomes physical, tombstones GC'd, the
     // delete-then-re-append history compacts cleanly (no duplicate raise)
-    Similarity.compactIvfIndex(spark, dir, "vec_id")
+    Similarity.compactLearnedIndex(spark, dir, "vec_id")
     assert(served(corpusReadd) == afterReadd,
       "serve after compaction must equal serve before")
     assert(spark.read.parquet(dir)
@@ -2061,7 +2063,7 @@ class TrainingOpsSpec extends SparkSpec {
       "compaction must GC the tombstone files")
     // deleting on a plain (non-learned) layout refuses up front
     assert(msgChain(intercept[IllegalArgumentException](
-        Similarity.deleteFromIvfIndex(victims.select("vec_id"),
+        Similarity.deleteFromLearnedIndex(victims.select("vec_id"),
           java.nio.file.Files.createTempDirectory("ivf-del-plain").toString,
           "vec_id")))
       .contains("_SUCCESS"))
@@ -2081,19 +2083,19 @@ class TrainingOpsSpec extends SparkSpec {
     val b2 = mk(70 until 80)
     val cents = Similarity.kmeansFit(base, "vec_id", "embedding", k = 3, iters = 4)
     val dir = java.nio.file.Files.createTempDirectory("ivf-idem").toString
-    Similarity.writeLearnedIvfIndex(base, "vec_id", "embedding", dir, cents)
+    Similarity.writeLearnedIndex(base, "vec_id", "embedding", dir, Similarity.IvfQuantizer(cents))
     val queries = base.filter($"vec_id" < 9)
     def key(df: org.apache.spark.sql.DataFrame) = df.collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getInt(3))).toSet
     def serveAll(corpus: org.apache.spark.sql.DataFrame) =
-      key(Similarity.serveIvfIndex(dir, corpus, queries,
+      key(Similarity.serveLearnedIndex(dir, corpus, queries,
         "vec_id", "embedding", k = 3, nprobe = 2))
-    assert(Similarity.appendToIvfIndexIdempotent(b1, dir,
-      "vec_id", "embedding", "k1"), "first delivery must append")
+    assert(Similarity.appendToLearnedIndex(b1, dir,
+      "vec_id", "embedding", Some("k1")), "first delivery must append")
     val afterB1 = serveAll(base.union(b1))
     // the foreachBatch replay shape: same key, same rows — must no-op
-    assert(!Similarity.appendToIvfIndexIdempotent(b1, dir,
-      "vec_id", "embedding", "k1"), "a committed key must no-op")
+    assert(!Similarity.appendToLearnedIndex(b1, dir,
+      "vec_id", "embedding", Some("k1")), "a committed key must no-op")
     assert(serveAll(base.union(b1)) == afterB1,
       "a replayed batch must not change what serves")
     // a CRASHED first attempt (data landed, commit record did not): the
@@ -2105,24 +2107,24 @@ class TrainingOpsSpec extends SparkSpec {
       .withColumn("build_id", org.apache.spark.sql.functions.lit(999L))
       .repartition(org.apache.spark.sql.functions.col("coarse"))
       .write.mode("append").partitionBy("coarse").parquet(dir)
-    assert(Similarity.appendToIvfIndexIdempotent(b2, dir,
-      "vec_id", "embedding", "k2"), "an uncommitted key must retry")
+    assert(Similarity.appendToLearnedIndex(b2, dir,
+      "vec_id", "embedding", Some("k2")), "an uncommitted key must retry")
     val afterB2 = serveAll(base.union(b1).union(b2))
     val rebuilt = java.nio.file.Files.createTempDirectory("ivf-idem-rb").toString
-    Similarity.writeLearnedIvfIndex(base.union(b1).union(b2),
-      "vec_id", "embedding", rebuilt, cents)
-    assert(afterB2 == key(Similarity.serveIvfIndex(rebuilt,
+    Similarity.writeLearnedIndex(base.union(b1).union(b2),
+      "vec_id", "embedding", rebuilt, Similarity.IvfQuantizer(cents))
+    assert(afterB2 == key(Similarity.serveLearnedIndex(rebuilt,
         base.union(b1).union(b2), queries, "vec_id", "embedding", 3, 2)),
       "the retried batch must serve exactly once (== same-centroid rebuild)")
     // compaction folds the batches in but KEEPS their keys (re-pointed at
     // the merged epoch): a replay from before the compaction still reads
     // as already-delivered — and the orphan from the crashed attempt was
     // GC'd, so the uniqueness probe inside compact passes
-    Similarity.compactIvfIndex(spark, dir, "vec_id")
-    assert(!Similarity.appendToIvfIndexIdempotent(b1, dir,
-      "vec_id", "embedding", "k1"), "keys must survive compaction")
-    assert(!Similarity.appendToIvfIndexIdempotent(b2, dir,
-      "vec_id", "embedding", "k2"), "keys must survive compaction")
+    Similarity.compactLearnedIndex(spark, dir, "vec_id")
+    assert(!Similarity.appendToLearnedIndex(b1, dir,
+      "vec_id", "embedding", Some("k1")), "keys must survive compaction")
+    assert(!Similarity.appendToLearnedIndex(b2, dir,
+      "vec_id", "embedding", Some("k2")), "keys must survive compaction")
     assert(serveAll(base.union(b1).union(b2)) == afterB2,
       "serve after compaction must equal serve before")
   }
